@@ -4,9 +4,11 @@ Reference: ~70 ``CALL algo.*`` procedures under
 query/opencypher/procedures/algo/Algo*.java (PageRank, WCC, centralities,
 community detection, paths…).  The reference iterates over its CSR view in
 one JVM; the Spark re-expression is message-passing via join + groupBy
-per superstep, with localCheckpoint every few supersteps to truncate
-lineage.  This is the GraphX/Pregel shape expressed on DataFrames, which
-keeps AQE/broadcast available and scales out by partitioning on vertex id.
+per superstep.  graph/superstep.py owns each loop's persist / probe /
+release / truncate lifecycle (lineage.py says why truncation is a parquet
+round trip).  This is the GraphX/Pregel shape expressed on DataFrames,
+which keeps AQE/broadcast available and scales out by partitioning on
+vertex id.
 
 All algorithms take an ``edges`` DataFrame (src:long, dst:long
 [, weight:double]) and return vertex-keyed DataFrames.  Deterministic
@@ -19,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_CHECKPOINT_EVERY = 5
+from arcadedb_spark.graph.superstep import Supersteps
 
 
 def _vertices_of(edges: DataFrame) -> DataFrame:
@@ -63,26 +65,18 @@ def pagerank(
     e.count()  # materialize once
 
     ranks = verts.withColumn("rank", F.lit(1.0))
-    prev = None
-    for i in range(1, iterations + 1):
+    ss = Supersteps()
+    for _ in range(iterations):
         contribs = (
             e.join(ranks, e["src"] == ranks["vid"], "inner")
             .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
             .groupBy("vid")
             .agg(F.sum("c").alias("c"))
         )
-        # One action per superstep: persist the aggregated contributions and
-        # read the flowed-mass scalar off the materialized blocks, so the
-        # next iteration's lineage starts at this cache instead of replaying
-        # every superstep since the last truncation.
-        contribs = contribs.persist()
         # dangling mass = total rank − mass that flowed through edges
-        flowed = contribs.agg(F.sum("c")).collect()[0][0] or 0.0
-        if prev is not None:
-            prev.unpersist()
-        prev = contribs
+        flowed = ss.step(contribs, F.sum("c"))[0] or 0.0
         dangling = n - flowed  # total rank is kept at n
-        ranks = (
+        ranks = ss.carry(
             verts.join(contribs, "vid", "left")
             .select(
                 "vid",
@@ -93,13 +87,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if i % _CHECKPOINT_EVERY == 0:
-            ranks = ranks.truncate_plan()
-            prev.unpersist()
-            prev = None
-    if prev is not None:
-        ranks = ranks.truncate_plan()
-        prev.unpersist()
+    ranks = ss.finish(ranks)
     e.unpersist()
     verts.unpersist()
     return ranks
@@ -118,8 +106,8 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().repartition("src").cache()
     comp = _vertices_of(edges).withColumn("component", F.col("vid"))
-    prev = None
-    for i in range(1, max_iterations + 1):
+    ss = Supersteps()
+    for _ in range(max_iterations):
         neigh_min = (
             und.join(comp, und["src"] == comp["vid"], "inner")
             .select(F.col("dst").alias("vid"), F.col("component"))
@@ -127,33 +115,19 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
             .agg(F.min("component").alias("nc"))
         )
         # Carry the change flag in the frame (nc < component ⟺ least() picks
-        # nc) so convergence needs no extra self-join, and materialize each
-        # superstep once via persist + the flag aggregate.
-        stepped = (
-            comp.join(neigh_min, "vid", "left")
-            .select(
-                "vid",
-                F.least(F.col("component"), F.coalesce(F.col("nc"), F.col("component"))).alias(
-                    "component"
-                ),
-                (F.col("nc") < F.col("component")).alias("__chg"),
-            )
-            .persist()
+        # nc) so convergence needs no extra self-join.
+        stepped = comp.join(neigh_min, "vid", "left").select(
+            "vid",
+            F.least(F.col("component"), F.coalesce(F.col("nc"), F.col("component"))).alias(
+                "component"
+            ),
+            (F.col("nc") < F.col("component")).alias("__chg"),
         )
-        changed = stepped.agg(F.max("__chg")).collect()[0][0]
-        if prev is not None:
-            prev.unpersist()
-        prev = stepped
-        comp = stepped.select("vid", "component")
-        if i % _CHECKPOINT_EVERY == 0:
-            comp = comp.truncate_plan()
-            prev.unpersist()
-            prev = None
+        changed = ss.step(stepped, F.max("__chg"))[0]
+        comp = ss.carry(stepped.select("vid", "component"))
         if not changed:
             break
-    if prev is not None:
-        comp = comp.truncate_plan()
-        prev.unpersist()
+    comp = ss.finish(comp)
     und.unpersist()
     return comp
 
@@ -172,7 +146,7 @@ def shortest_paths(
     frontier = dist
     # traverse edges BACKWARD so distance is vid→landmark
     back = edges.select(F.col("dst").alias("from"), F.col("src").alias("to")).distinct().cache()
-    frontiers = []
+    ss = Supersteps(accumulating=True)
     for depth in range(1, max_depth + 1):
         nxt = (
             frontier.join(back, frontier["vid"] == back["from"], "inner")
@@ -187,24 +161,12 @@ def shortest_paths(
             seen,
             (nxt["vid"] == seen["__v2"]) & (nxt["landmark"] == seen["__l2"]),
             "left_anti",
-        ).persist()
-        # the emptiness probe doubles as the materializing action: one BFS
-        # level of work per level, every later level reads this cache
-        if nxt.count() == 0:
-            nxt.unpersist()
+        )
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        frontiers.append(nxt)
-        dist = dist.unionByName(nxt)
+        dist = ss.carry(dist.unionByName(nxt))
         frontier = nxt
-        if depth % _CHECKPOINT_EVERY == 0:
-            dist = dist.truncate_plan()
-            for f in frontiers[:-1]:
-                f.unpersist()
-            frontiers = frontiers[-1:]
-    if frontiers:
-        dist = dist.truncate_plan()
-        for f in frontiers:
-            f.unpersist()
+    dist = ss.finish(dist)
     back.unpersist()
     return dist
 
@@ -225,43 +187,28 @@ def dijkstra_sssp(
     e = e.cache()
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0.0)], "vid long, distance double")
-    prev = None
-    for i in range(1, max_iterations + 1):
+    ss = Supersteps()
+    for _ in range(max_iterations):
         relaxed = (
             e.join(dist, e["src"] == dist["vid"], "inner")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.min(F.col("distance") + F.col("w")).alias("__rd"))
         )
         # full-outer merge carries the improvement flag, so convergence
-        # needs no second join and the superstep materializes exactly once
-        stepped = (
-            dist.join(relaxed, "vid", "full")
-            .select(
-                "vid",
-                F.least(
-                    F.coalesce(F.col("distance"), F.col("__rd")),
-                    F.coalesce(F.col("__rd"), F.col("distance")),
-                ).alias("distance"),
-                (
-                    F.col("distance").isNull() | (F.col("__rd") < F.col("distance"))
-                ).alias("__chg"),
-            )
-            .persist()
+        # needs no second join
+        stepped = dist.join(relaxed, "vid", "full").select(
+            "vid",
+            F.least(
+                F.coalesce(F.col("distance"), F.col("__rd")),
+                F.coalesce(F.col("__rd"), F.col("distance")),
+            ).alias("distance"),
+            (F.col("distance").isNull() | (F.col("__rd") < F.col("distance"))).alias("__chg"),
         )
-        improved = stepped.agg(F.max("__chg")).collect()[0][0]
-        if prev is not None:
-            prev.unpersist()
-        prev = stepped
-        dist = stepped.select("vid", "distance")
-        if i % _CHECKPOINT_EVERY == 0:
-            dist = dist.truncate_plan()
-            prev.unpersist()
-            prev = None
+        improved = ss.step(stepped, F.max("__chg"))[0]
+        dist = ss.carry(stepped.select("vid", "distance"))
         if not improved:
             break
-    if prev is not None:
-        dist = dist.truncate_plan()
-        prev.unpersist()
+    dist = ss.finish(dist)
     e.unpersist()
     return dist
 
@@ -328,7 +275,8 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition("src").cache()
     labels = _vertices_of(edges).withColumn("label", F.col("vid"))
-    for i in range(1, iterations + 1):
+    ss = Supersteps()
+    for _ in range(iterations):
         counts = (
             und.join(labels, und["src"] == labels["vid"], "inner")
             .select(F.col("dst").alias("vid"), "label")
@@ -349,12 +297,12 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
             )
             .select("vid", F.col("__m.label").alias("new_label"))
         )
-        labels = (
+        labels = ss.carry(
             labels.join(best, "vid", "left")
             .select("vid", F.coalesce("new_label", "label").alias("label"))
         )
-        if i % _CHECKPOINT_EVERY == 0:
-            labels = labels.truncate_plan()
+    labels = ss.finish(labels)
+    und.unpersist()
     return labels
 
 
@@ -441,33 +389,19 @@ def k_core(edges: DataFrame, k: int, max_iterations: int = 50) -> DataFrame:
     # one count up front; per iteration only the NEW frame is counted (the
     # previous count is remembered), halving the actions per peel round
     n_alive = alive.count()
-    prev = None
-    for i in range(max_iterations):
+    ss = Supersteps()
+    for _ in range(max_iterations):
         cur = adj.join(alive.withColumnRenamed("v", "n"), "n", "left_semi").join(
             alive, "v", "left_semi"
         )
         deg = cur.groupBy("v").agg(F.count("*").alias("d"))
         nxt = deg.filter(F.col("d") >= k).select("v")
-        if i % _CHECKPOINT_EVERY == 0:
-            nxt = nxt.truncate_plan()
-            n_next = nxt.count()
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-        else:
-            nxt = nxt.persist()
-            n_next = nxt.count()
-            if prev is not None:
-                prev.unpersist()
-            prev = nxt
-        removed = n_alive - n_next
-        alive = nxt
-        n_alive = n_next
-        if removed == 0:
+        n_next = ss.step(nxt, F.count(F.lit(1)))[0]
+        alive = ss.carry(nxt)
+        if n_next == n_alive:
             break
-    if prev is not None:
-        alive = alive.truncate_plan()
-        prev.unpersist()
+        n_alive = n_next
+    alive = ss.finish(alive)
     adj.unpersist()
     return alive.select(F.col("v").alias("vid"))
 
@@ -478,28 +412,17 @@ def eigenvector_centrality(edges: DataFrame, iterations: int = 20) -> DataFrame:
     verts = _vertices_of(edges).cache()
     e = edges.select("src", "dst").distinct().repartition("dst").cache()
     x = verts.withColumn("x", F.lit(1.0))
-    prev = None
-    for i in range(1, iterations + 1):
+    ss = Supersteps()
+    for _ in range(iterations):
         nxt = (
             e.join(x, e["src"] == x["vid"], "inner")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("x").alias("x"))
         )
-        # persist the superstep and reuse the norm aggregate (the loop's own
-        # action) as its materializer — one superstep of work per iteration
-        nxt = verts.join(nxt, "vid", "left").fillna(0.0, ["x"]).persist()
-        norm = nxt.agg(F.max("x")).collect()[0][0] or 1.0
-        if prev is not None:
-            prev.unpersist()
-        prev = nxt
-        x = nxt.select("vid", (F.col("x") / F.lit(norm)).alias("x"))
-        if i % _CHECKPOINT_EVERY == 0:
-            x = x.truncate_plan()
-            prev.unpersist()
-            prev = None
-    if prev is not None:
-        x = x.truncate_plan()
-        prev.unpersist()
+        nxt = verts.join(nxt, "vid", "left").fillna(0.0, ["x"])
+        norm = ss.step(nxt, F.max("x"))[0] or 1.0
+        x = ss.carry(nxt.select("vid", (F.col("x") / F.lit(norm)).alias("x")))
+    x = ss.finish(x)
     e.unpersist()
     verts.unpersist()
     return x.select("vid", F.col("x").alias("centrality"))
@@ -513,23 +436,21 @@ def katz_centrality(
     verts = _vertices_of(edges).cache()
     e = edges.select("src", "dst").distinct().repartition("dst").cache()
     x = verts.withColumn("x", F.lit(beta))
-    for i in range(1, iterations + 1):
+    ss = Supersteps()
+    for _ in range(iterations):
         nxt = (
             e.join(x, e["src"] == x["vid"], "inner")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("x").alias("s"))
         )
-        x = (
+        x = ss.carry(
             verts.join(nxt, "vid", "left")
             .select(
                 "vid",
                 (F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(beta)).alias("x"),
             )
         )
-        if i % _CHECKPOINT_EVERY == 0:
-            x = x.truncate_plan()
-    if iterations % _CHECKPOINT_EVERY != 0:
-        x = x.truncate_plan()  # detach from the caches before releasing them
+    x = ss.finish(x)  # detach from the caches before releasing them
     e.unpersist()
     verts.unpersist()
     return x.select("vid", F.col("x").alias("centrality"))
@@ -603,45 +524,29 @@ def strongly_connected_components(
             .join(remaining.withColumnRenamed("vid", "dst"), "dst", "left_semi")
             .persist()
         )
-        # 1) forward max-color propagation to fixpoint.  Each superstep is
-        # persisted and materialized by the change-flag aggregate itself, so
-        # one action = one superstep of work; the flag (nc > color) replaces
-        # the former new-vs-old convergence self-join.
+        # 1) forward max-color propagation to fixpoint; the flag
+        # (nc > color) replaces a new-vs-old convergence self-join.
         color = remaining.withColumn("color", F.col("vid"))
-        color_prev = None
-        for i in range(max_inner):
+        ss = Supersteps()
+        for _ in range(max_inner):
             prop = (
                 e.join(color, e["src"] == color["vid"], "inner")
                 .groupBy(F.col("dst").alias("vid"))
                 .agg(F.max("color").alias("nc"))
             )
-            stepped = (
-                color.join(prop, "vid", "left")
-                .select(
-                    "vid",
-                    F.greatest(
-                        F.col("color"), F.coalesce(F.col("nc"), F.col("color"))
-                    ).alias("color"),
-                    (F.col("nc") > F.col("color")).alias("__chg"),
-                )
-                .persist()
+            stepped = color.join(prop, "vid", "left").select(
+                "vid",
+                F.greatest(F.col("color"), F.coalesce(F.col("nc"), F.col("color"))).alias(
+                    "color"
+                ),
+                (F.col("nc") > F.col("color")).alias("__chg"),
             )
-            changed = stepped.agg(F.max("__chg")).collect()[0][0]
-            if color_prev is not None:
-                color_prev.unpersist()
-            color_prev = stepped
-            color = stepped.select("vid", "color")
-            if (i + 1) % _CHECKPOINT_EVERY == 0:
-                color = color.truncate_plan()
-                color_prev.unpersist()
-                color_prev = None
+            changed = ss.step(stepped, F.max("__chg"))[0]
+            color = ss.carry(stepped.select("vid", "color"))
             if not changed:
                 break
-        if color_prev is not None:
-            # the backward phase probes `color` every level — pin it as a
-            # truncated frame and release the superstep cache
-            color = color.truncate_plan()
-            color_prev.unpersist()
+        # the backward phase probes `color` every level
+        color = ss.finish(color)
         # 2) backward reachability from each color root, within the color
         roots = color.filter(F.col("vid") == F.col("color")).select(
             "vid", "color"
@@ -649,8 +554,8 @@ def strongly_connected_components(
         scc = roots
         frontier = roots
         back = e.select(F.col("dst").alias("from"), F.col("src").alias("to"))
-        frontiers = []
-        for i in range(max_inner):
+        ss = Supersteps(accumulating=True)
+        for _ in range(max_inner):
             nxt = (
                 frontier.join(back, frontier["vid"] == back["from"], "inner")
                 .select(F.col("to").alias("vid"), "color")
@@ -660,25 +565,16 @@ def strongly_connected_components(
             nxt = nxt.join(
                 color.withColumnRenamed("color", "c2"), "vid"
             ).filter(F.col("color") == F.col("c2")).select("vid", "color")
-            nxt = nxt.join(scc.select("vid"), "vid", "left_anti").persist()
-            if nxt.count() == 0:
-                nxt.unpersist()
+            nxt = nxt.join(scc.select("vid"), "vid", "left_anti")
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
                 break
-            frontiers.append(nxt)
-            scc = scc.unionByName(nxt)
+            scc = ss.carry(scc.unionByName(nxt))
             frontier = nxt
-            if (i + 1) % _CHECKPOINT_EVERY == 0:
-                scc = scc.truncate_plan()
-                for f in frontiers[:-1]:
-                    f.unpersist()
-                frontiers = frontiers[-1:]
         # accumulate lazily: per-round results are truncated frames already,
         # so the union stays a cheap scan-union (the old per-round
         # truncate_plan of `assigned` rewrote the full accumulated set
         # every round)
-        scc = scc.truncate_plan()
-        for f in frontiers:
-            f.unpersist()
+        scc = ss.finish(scc)
         assigned = assigned.unionByName(
             scc.select("vid", F.col("color").alias("component"))
         )

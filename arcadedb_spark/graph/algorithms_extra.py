@@ -4,9 +4,9 @@ paths, max-flow, maximal cliques.
 Reference: query/opencypher/procedures/algo/AlgoLeiden.java,
 AlgoAStar.java, AlgoKShortestPaths.java, AlgoMaxFlow.java,
 AlgoClique.java.  Same discipline as graph/algorithms.py: supersteps are
-join + groupBy keyed by vertex id, lineage truncated with
-localCheckpoint, no unbounded driver collects (point-to-point paths are
-the one legitimate single-row collect).
+join + groupBy keyed by vertex id, loop lifecycle in graph/superstep.py,
+no unbounded driver collects (point-to-point paths are the one
+legitimate single-row collect).
 """
 
 from __future__ import annotations
@@ -15,8 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.algorithms import _vertices_of, connected_components
-
-_CHECKPOINT_EVERY = 4
+from arcadedb_spark.graph.superstep import Supersteps
 
 
 def _weighted(edges: DataFrame) -> DataFrame:
@@ -175,22 +174,17 @@ def astar(
     """
     e = _weighted(edges).cache()
     spark = edges.sparkSession
+    # label frame; __chg marks the labels the last superstep improved,
+    # which are the frontier the next one expands
     best = spark.createDataFrame(
-        [(source, 0.0, [source])], "vid long, distance double, path array<long>"
+        [(source, 0.0, [source], True)],
+        "vid long, distance double, path array<long>, __chg boolean",
     )
-    frontier = best
+    bound = 0.0 if source == target else None  # best-known target distance
     h = heuristic.select("vid", "h") if heuristic is not None else None
-    # fused supersteps (same shape as algorithms.py): persist the new
-    # label frame + frontier, let the emptiness probe (a FULL count, not
-    # limit(1)) materialize both, and release the previous iteration's
-    # caches — one superstep of work per iteration instead of replaying
-    # the lineage since the last truncation for the bound collect, the
-    # probe, and the next expansion separately (guide §2.1/§5)
-    prev_best = prev_frontier = None
-    for i in range(1, max_iterations + 1):
-        # current best-known target distance (pruning bound) — 1-row action
-        t_row = best.filter(F.col("vid") == target).agg(F.min("distance")).collect()
-        bound = t_row[0][0]
+    ss = Supersteps()
+    for _ in range(max_iterations):
+        frontier = best.filter("__chg")
         exp = (
             frontier.join(e, frontier["vid"] == e["src"], "inner")
             .filter(~F.array_contains("path", F.col("dst")))
@@ -212,49 +206,41 @@ def astar(
                 )
             else:
                 exp = exp.filter(F.col("distance") < F.lit(bound))
-        merged = best.unionByName(exp)
-        w = Window.partitionBy("vid").orderBy(F.asc("distance"))
-        new_best = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        stepped = _relax(best, exp, "path")
+        # one action: the improvement flag and the next pruning bound
+        changed, bound = ss.step(
+            stepped,
+            F.max("__chg"),
+            F.min(F.when(F.col("vid") == target, F.col("distance"))),
         )
-        if i % _CHECKPOINT_EVERY == 0:
-            new_best = new_best.truncate_plan()
-        else:
-            new_best = new_best.persist()
-        frontier = (
-            new_best.alias("n")
-            .join(best.alias("o"), "vid", "left")
-            .filter(
-                F.col("o.distance").isNull()
-                | (F.col("n.distance") < F.col("o.distance"))
-            )
-            .select("vid", F.col("n.distance").alias("distance"), F.col("n.path").alias("path"))
-        ).persist()
-        # full count (not limit(1)): materializes every partition of both
-        # caches, so the next iteration reads them instead of recomputing
-        empty = frontier.count() == 0
-        if prev_best is not None:
-            prev_best.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-        prev_best = None if i % _CHECKPOINT_EVERY == 0 else new_best
-        prev_frontier = frontier
-        best = new_best
-        if empty:
+        best = ss.carry(stepped)
+        if not changed:
             break
-    out = best.filter(F.col("vid") == target).select(
+    best = ss.finish(best)
+    e.unpersist()
+    return best.filter(F.col("vid") == target).select(
         "path", F.col("distance").alias("weight")
     )
-    if prev_best is not None or prev_frontier is not None:
-        out = out.truncate_plan()  # detach before releasing the caches
-        if prev_best is not None:
-            prev_best.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-    e.unpersist()
-    return out
+
+
+def _relax(best: DataFrame, exp: DataFrame, tie: str) -> DataFrame:
+    """Merge candidate labels ``exp`` (vid, distance, ``tie``) into the
+    label frame ``best``: per vertex the least (distance, ``tie``) wins,
+    and ``__chg`` flags the vertices whose distance strictly improved (or
+    that had no label), i.e. the next frontier."""
+    merged = best.select("vid", "distance", tie, F.col("distance").alias("__old")).unionByName(
+        exp.select("vid", "distance", tie, F.lit(None).cast("double").alias("__old"))
+    )
+    return (
+        merged.groupBy("vid")
+        .agg(F.min(F.struct("distance", tie)).alias("__b"), F.min("__old").alias("__old"))
+        .select(
+            "vid",
+            "__b.distance",
+            f"__b.{tie}",
+            (F.col("__old").isNull() | (F.col("__b.distance") < F.col("__old"))).alias("__chg"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -281,12 +267,15 @@ def k_shortest_paths(
     """
     e = _weighted(edges).cache()
     spark = edges.sparkSession
+    # __chg marks the labels added by the last superstep (the frontier);
+    # an expansion adds one hop, so it never repeats a kept (vid, path)
     state = spark.createDataFrame(
-        [(source, 0.0, [source])], "vid long, weight double, path array<long>"
+        [(source, 0.0, [source], True)],
+        "vid long, weight double, path array<long>, __chg boolean",
     )
-    frontier = state
-    prev_state = prev_frontier = None
-    for depth in range(1, max_depth + 1):
+    ss = Supersteps()
+    for _ in range(max_depth):
+        frontier = state.filter("__chg")
         exp = (
             frontier.join(e, frontier["vid"] == e["src"], "inner")
             .filter(~F.array_contains("path", F.col("dst")))
@@ -296,46 +285,29 @@ def k_shortest_paths(
                 F.concat("path", F.array(F.col("dst"))).alias("path"),
             )
         )
-        merged = state.unionByName(exp).dropDuplicates(["vid", "path"])
+        merged = state.withColumn("__chg", F.lit(False)).unionByName(
+            exp.dropDuplicates(["vid", "path"]).withColumn("__chg", F.lit(True))
+        )
         w = Window.partitionBy("vid").orderBy(F.asc("weight"), F.asc("path"))
         kept = (
             merged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
             .drop("__rn")
         )
-        if depth % _CHECKPOINT_EVERY == 0:
-            kept = kept.truncate_plan()
-        else:
-            kept = kept.persist()
-        frontier = kept.join(state, ["vid", "path"], "left_anti").persist()
-        # full-count probe doubles as the materializing action for both
-        # caches (fused superstep, guide §2.1/§5)
-        empty = frontier.count() == 0
-        if prev_state is not None:
-            prev_state.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-        prev_state = None if depth % _CHECKPOINT_EVERY == 0 else kept
-        prev_frontier = frontier
-        state = kept
-        if empty:
+        changed = ss.step(kept, F.max("__chg"))[0]
+        state = ss.carry(kept)
+        if not changed:
             break
+    state = ss.finish(state)
+    e.unpersist()
     # bounded-window ok: at most k candidate paths reach the target
     w_rank = Window.orderBy(F.asc("weight"), F.asc("path"))
-    out = (
+    return (
         state.filter(F.col("vid") == target)
         .select("path", "weight")
         .withColumn("rank", F.row_number().over(w_rank))
         .filter(F.col("rank") <= k)
     )
-    if prev_state is not None or prev_frontier is not None:
-        out = out.truncate_plan()
-        if prev_state is not None:
-            prev_state.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-    e.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,7 @@ from arcadedb_spark.graph.algorithms import (
     _vertices_of,
     connected_components,
 )
-
-_CHECKPOINT_EVERY = 4
+from arcadedb_spark.graph.superstep import Supersteps
 
 
 def all_simple_paths(
@@ -35,32 +34,20 @@ def all_simple_paths(
     spark = edges.sparkSession
     frontier = spark.createDataFrame([(source, [source])], "vid long, path array<long>")
     out = frontier.filter(F.col("vid") == target).select("path")
-    # fused supersteps: each frontier has THREE consumers (hits, the
-    # emptiness probe, the next expansion) — persist it and let a full
-    # count() materialize the cache once per depth (guide §2.1/§5); the
-    # accumulated `out` references every frontier, so frontiers are kept
-    # until `out` is pinned as a truncated frame at exit
-    frontiers = []
-    for depth in range(1, max_depth + 1):
+    # `out` accumulates every frontier's hits, so frontiers stay cached
+    # until the cadence truncates `out`
+    ss = Supersteps(accumulating=True)
+    for _ in range(max_depth):
         frontier = (
             frontier.filter(F.col("vid") != target)
             .join(e, frontier["vid"] == e["src"], "inner")
             .filter(~F.array_contains("path", F.col("dst")))
             .select(F.col("dst").alias("vid"), F.concat("path", F.array("dst")).alias("path"))
         )
-        if depth % _CHECKPOINT_EVERY == 0:
-            frontier = frontier.truncate_plan()
-        else:
-            frontier = frontier.persist()
-            frontiers.append(frontier)
-        hits = frontier.filter(F.col("vid") == target).select("path")
-        out = out.unionByName(hits)
-        if frontier.count() == 0:
+        if ss.step(frontier, F.count(F.lit(1)))[0] == 0:
             break
-    if frontiers:
-        out = out.truncate_plan()
-        for f in frontiers:
-            f.unpersist()
+        out = ss.carry(out.unionByName(frontier.filter(F.col("vid") == target).select("path")))
+    out = ss.finish(out)
     e.unpersist()
     return out
 
@@ -77,40 +64,33 @@ def graph_coloring(edges: DataFrame, max_colors: int = 64) -> DataFrame:
     adj = _undirected_adj(edges).cache()
     deg = adj.groupBy("v").agg(F.count("*").alias("d"))
     verts = _vertices_of(edges)
-    uncolored = (
-        verts.join(deg, verts["vid"] == deg["v"], "left")
-        .select("vid", F.coalesce("d", F.lit(0)).alias("d"))
-        .cache()
+    # one carried frame: (vid, d, color), color null while uncolored
+    state = verts.join(deg, verts["vid"] == deg["v"], "left").select(
+        "vid", F.coalesce("d", F.lit(0)).alias("d"), F.lit(None).cast("int").alias("color")
     )
-    spark = edges.sparkSession
-    out = spark.createDataFrame([], "vid long, color int")
+    ss = Supersteps()
     for color in range(max_colors):
-        if uncolored.limit(1).count() == 0:
+        uncolored = state.filter(F.col("color").isNull())
+        # highest (degree, vid) among each vertex's uncolored neighbors
+        nbr = adj.join(
+            uncolored.select(F.col("vid").alias("n"), F.col("d").alias("dn")), "n"
+        ).groupBy(F.col("v").alias("vid")).agg(
+            F.max(F.struct("dn", F.col("n").alias("nv"))).alias("mx")
+        )
+        wins = F.col("color").isNull() & (
+            F.col("mx").isNull()
+            | (F.struct(F.col("d").alias("dn"), F.col("vid").alias("nv")) > F.col("mx"))
+        )
+        stepped = state.join(nbr, "vid", "left").select(
+            "vid", "d", F.when(wins, F.lit(color)).otherwise(F.col("color")).alias("color")
+        )
+        uncolored_left = ss.step(stepped, F.count(F.when(F.col("color").isNull(), 1)))[0]
+        state = ss.carry(stepped)
+        if uncolored_left == 0:
             break
-        # neighbor priorities among uncolored vertices
-        u = uncolored.select(F.col("vid").alias("v"), F.col("d").alias("dv"))
-        nbr = (
-            adj.join(u, "v", "left_semi")
-            .join(
-                uncolored.select(F.col("vid").alias("n"), F.col("d").alias("dn")),
-                "n",
-            )
-            .groupBy("v")
-            .agg(F.max(F.struct("dn", F.col("n").alias("nv"))).alias("mx"))
-        )
-        winners = (
-            uncolored.join(nbr, uncolored["vid"] == nbr["v"], "left")
-            .filter(
-                F.col("mx").isNull()
-                | (F.struct(F.col("d").alias("dn"), F.col("vid").alias("nv")) > F.col("mx"))
-            )
-            .select("vid")
-        )
-        out = out.unionByName(
-            winners.withColumn("color", F.lit(color))
-        ).truncate_plan()
-        uncolored = uncolored.join(winners, "vid", "left_anti").truncate_plan()
-    return out
+    state = ss.finish(state)
+    adj.unpersist()
+    return state.filter(F.col("color").isNotNull()).select("vid", "color")
 
 
 def densest_subgraph(edges: DataFrame, epsilon: float = 0.1) -> DataFrame:
@@ -298,7 +278,8 @@ def max_k_cut(edges: DataFrame, k: int = 2, max_iterations: int = 10) -> DataFra
     reference restarts a greedy local search, this runs the same move
     rule data-parallel).  Each round every vertex moves to the partition
     minimizing same-partition neighbors (hash-parity gate breaks
-    oscillation).  Returns (vid, community, cut_weight)."""
+    oscillation); two quiet rounds in a row (both gate parities) are a
+    fixed point and end the search.  Returns (vid, community, cut_weight)."""
     adj = _undirected_adj(edges).cache()
     und = (
         edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
@@ -311,6 +292,8 @@ def max_k_cut(edges: DataFrame, k: int = 2, max_iterations: int = 10) -> DataFra
     )
     spark = edges.sparkSession
     parts_df = spark.createDataFrame([(i,) for i in range(k)], "community int")
+    quiet = 0
+    ss = Supersteps()
     for i in range(1, max_iterations + 1):
         cmap = part.select(F.col("vid").alias("n"), F.col("community").alias("nc"))
         # same-partition neighbor counts per (v, candidate partition)
@@ -326,23 +309,29 @@ def max_k_cut(edges: DataFrame, k: int = 2, max_iterations: int = 10) -> DataFra
             .fillna(0, ["same"])
         )
         w_best = Window.partitionBy("v").orderBy(F.asc("same"), F.asc("nc"))
-        best = (
+        move = ((F.abs(F.xxhash64(F.col("v"))) + F.lit(i)) % 2 == 0) & (
+            F.col("nc") != F.col("community")
+        )
+        stepped = (
             full.withColumn("__rn", F.row_number().over(w_best))
             .filter(F.col("__rn") == 1)
-            .select(F.col("v").alias("vid"), F.col("nc").alias("new_c"))
-        )
-        gate = (F.abs(F.xxhash64(F.col("vid"))) + F.lit(i)) % 2 == 0
-        part = (
-            part.join(best, "vid")
             .select(
-                "vid",
-                F.when(gate, F.col("new_c")).otherwise(F.col("community")).alias("community"),
+                F.col("v").alias("vid"),
+                F.when(move, F.col("nc")).otherwise(F.col("community")).alias("community"),
+                move.alias("__moved"),
             )
-            .truncate_plan()
         )
+        moved = ss.step(stepped, F.count(F.when(F.col("__moved"), 1)))[0]
+        part = ss.carry(stepped.select("vid", "community"))
+        quiet = quiet + 1 if moved == 0 else 0
+        if quiet == 2:
+            break
+    part = ss.finish(part)
     pa = part.select(F.col("vid").alias("a"), F.col("community").alias("ca"))
     pb = part.select(F.col("vid").alias("b"), F.col("community").alias("cb"))
     cut = und.join(pa, "a").join(pb, "b").filter(F.col("ca") != F.col("cb")).count()
+    adj.unpersist()
+    und.unpersist()
     return part.withColumn("cut_weight", F.lit(float(cut)))
 
 

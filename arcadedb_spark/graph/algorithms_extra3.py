@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.algorithms import connected_components
-
-_CHECKPOINT_EVERY = 4
+from arcadedb_spark.graph.algorithms_extra import _relax
+from arcadedb_spark.graph.superstep import Supersteps
 
 
 def _weighted(edges: DataFrame) -> DataFrame:
@@ -90,13 +90,12 @@ def bellman_ford_path(
     e = _weighted(edges).cache()
     spark = edges.sparkSession
     best = spark.createDataFrame(
-        [(source, 0.0, [source])], "vid long, distance double, path array<long>"
+        [(source, 0.0, [source], True)],
+        "vid long, distance double, path array<long>, __chg boolean",
     )
-    frontier = best
-    # fused supersteps: persist labels + frontier, full-count probe as the
-    # materializing action, release previous caches (guide §2.1/§5)
-    prev_best = prev_frontier = None
-    for i in range(1, max_iterations + 1):
+    ss = Supersteps()
+    for _ in range(max_iterations):
+        frontier = best.filter("__chg")
         exp = (
             frontier.join(e, frontier["vid"] == e["src"], "inner")
             .filter(~F.array_contains("path", F.col("dst")))
@@ -106,48 +105,13 @@ def bellman_ford_path(
                 F.concat("path", F.array(F.col("dst"))).alias("path"),
             )
         )
-        merged = best.unionByName(exp)
-        w = Window.partitionBy("vid").orderBy(F.asc("distance"))
-        new_best = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if i % _CHECKPOINT_EVERY == 0:
-            new_best = new_best.truncate_plan()
-        else:
-            new_best = new_best.persist()
-        frontier = (
-            new_best.alias("n")
-            .join(best.alias("o"), "vid", "left")
-            .filter(
-                F.col("o.distance").isNull()
-                | (F.col("n.distance") < F.col("o.distance"))
-            )
-            .select(
-                "vid",
-                F.col("n.distance").alias("distance"),
-                F.col("n.path").alias("path"),
-            )
-        ).persist()
-        empty = frontier.count() == 0
-        if prev_best is not None:
-            prev_best.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-        prev_best = None if i % _CHECKPOINT_EVERY == 0 else new_best
-        prev_frontier = frontier
-        best = new_best
-        if empty:
+        stepped = _relax(best, exp, "path")
+        changed = ss.step(stepped, F.max("__chg"))[0]
+        best = ss.carry(stepped)
+        if not changed:
             break
-    if prev_best is not None or prev_frontier is not None:
-        # `best` feeds the V-th-round test and the hit below — pin it as a
-        # truncated frame before releasing the superstep caches
-        best = best.truncate_plan()
-        if prev_best is not None:
-            prev_best.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
+    # `best` feeds the V-th-round test and the hit below
+    best = ss.finish(best)
     # V-th-round improvement test (unrestricted by the simple-path filter)
     improved = (
         best.join(e, best["vid"] == e["src"], "inner")
@@ -198,6 +162,7 @@ def _bfs_forest(edges: DataFrame, max_depth: int = 64):
     ).truncate_plan()
     frontier = visited.select("vid")
     depth = 0
+    ss = Supersteps(accumulating=True)
     for lvl in range(1, max_depth + 1):
         nxt = (
             frontier.join(adj, frontier["vid"] == adj["v"], "inner")
@@ -207,14 +172,13 @@ def _bfs_forest(edges: DataFrame, max_depth: int = 64):
             .withColumn("level", F.lit(lvl))
             .select("vid", "level", "parent")
         )
-        nxt = nxt.truncate_plan()
-        if nxt.limit(1).count() == 0:
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
         depth = lvl
-        visited = visited.unionByName(nxt)
-        if lvl % _CHECKPOINT_EVERY == 0:
-            visited = visited.truncate_plan()
+        visited = ss.carry(visited.unionByName(nxt))
         frontier = nxt.select("vid")
+    visited = ss.finish(visited)
+    adj.unpersist()
     return visited.filter(F.col("parent").isNotNull()), visited, depth
 
 
@@ -273,18 +237,21 @@ def bridges(edges: DataFrame, max_depth: int = 64) -> DataFrame:
     # S_{i+1}(v) = T(v) XOR bit_xor over children c of S_i(c);
     # after `depth` rounds S(v) = XOR of T over v's whole subtree.
     s = base
-    for i in range(depth):
+    ss = Supersteps()
+    for _ in range(depth):
         contrib = (
             s.join(child_parent, "vid")
             .groupBy(F.col("parent").alias("vid"))
             .agg(F.expr("bit_xor(t)").alias("cs"))
         )
-        s = base.join(contrib, "vid", "left").select(
-            "vid",
-            F.col("t").bitwiseXOR(F.coalesce("cs", F.lit(0))).alias("t"),
+        s = ss.carry(
+            base.join(contrib, "vid", "left").select(
+                "vid",
+                F.col("t").bitwiseXOR(F.coalesce("cs", F.lit(0))).alias("t"),
+            )
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            s = s.truncate_plan()
+    s = ss.finish(s)
+    child_parent.unpersist()
     subtree_xor = s.select("vid", F.col("t").alias("s"))
     return (
         tree.join(subtree_xor, "vid")

@@ -15,12 +15,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from arcadedb_spark.graph.algorithms_extra import _relax
 from arcadedb_spark.graph.algorithms_extra3 import (
     _undirected_pairs,
     _weighted,
 )
+from arcadedb_spark.graph.superstep import Supersteps
 
-_CHECKPOINT_EVERY = 4
 _MAX_LONG = (1 << 63) - 1
 
 
@@ -61,38 +62,32 @@ def hashgnn(
         F.array(
             *[F.xxhash64("vid", F.lit(seed), F.lit(i)) for i in range(per_round)]
         ).alias("sig"),
-    ).truncate_plan()
-    rounds = [sig]
+    )
+    # carried frame: the current sketch plus every round's sketch so far
+    state = sig.withColumn("acc", F.col("sig"))
+    ss = Supersteps()
     for r in range(1, iterations):
-        neigh = adj.join(sig, adj["n"] == sig["vid"], "inner").select(
-            F.col("v").alias("vid"), "sig"
+        neigh = adj.join(state, adj["n"] == state["vid"], "inner").select(
+            F.col("v").alias("vid"), "sig", F.lit(None).cast("array<long>").alias("acc")
         )
-        combined = sig.unionByName(neigh)
-        mins = combined.groupBy("vid").agg(
+        mins = state.unionByName(neigh).groupBy("vid").agg(
             F.aggregate(
                 F.collect_list("sig"),
                 F.array_repeat(F.lit(_MAX_LONG), per_round),
                 lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
-            ).alias("sig")
+            ).alias("sig"),
+            F.first("acc", ignorenulls=True).alias("acc"),
         )
         # re-mix so round r+1's minhash space is independent of round r's
-        sig = mins.select(
-            "vid",
-            F.transform(
-                "sig", lambda x: F.xxhash64(x, F.lit(seed + r))
-            ).alias("sig"),
+        state = ss.carry(
+            mins.withColumn(
+                "sig", F.transform("sig", lambda x: F.xxhash64(x, F.lit(seed + r)))
+            ).withColumn("acc", F.concat("acc", "sig"))
         )
-        if r % _CHECKPOINT_EVERY == 0:
-            sig = sig.truncate_plan()
-        rounds.append(sig)
-    out = rounds[0].select("vid", F.col("sig").alias("sig_0"))
-    for i, rdf in enumerate(rounds[1:], start=1):
-        out = out.join(
-            rdf.select("vid", F.col("sig").alias(f"sig_{i}")), "vid"
-        )
-    concat = F.concat(*[F.col(f"sig_{i}") for i in range(len(rounds))])
+    out = ss.finish(state)
+    adj.unpersist()
     floats = F.transform(
-        concat, lambda x: (x % 1000003).cast("double") / F.lit(1000003.0)
+        "acc", lambda x: (x % 1000003).cast("double") / F.lit(1000003.0)
         * F.lit(2.0) - F.lit(1.0)
     )
     norm = F.sqrt(
@@ -264,13 +259,12 @@ def _sssp_parents(
     ).cache()
     spark = edges.sparkSession
     best = spark.createDataFrame(
-        [(source, 0.0, None)], "vid long, distance double, parent long"
+        [(source, 0.0, None, True)],
+        "vid long, distance double, parent long, __chg boolean",
     )
-    frontier = best
-    # fused supersteps: persist labels + frontier, full-count probe as the
-    # materializing action, release previous caches (guide §2.1/§5)
-    prev_best = prev_frontier = None
-    for i in range(1, max_iterations + 1):
+    ss = Supersteps()
+    for _ in range(max_iterations):
+        frontier = best.filter("__chg")
         relaxed = (
             frontier.join(und, frontier["vid"] == und["src"], "inner")
             .select(
@@ -279,45 +273,14 @@ def _sssp_parents(
                 F.col("src").alias("parent"),
             )
         )
-        merged = best.unionByName(relaxed)
-        w = Window.partitionBy("vid").orderBy(F.asc("distance"), F.asc("parent"))
-        new_best = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if i % _CHECKPOINT_EVERY == 0:
-            new_best = new_best.truncate_plan()
-        else:
-            new_best = new_best.persist()
-        frontier = (
-            new_best.alias("n")
-            .join(best.alias("o"), "vid", "left")
-            .filter(
-                F.col("o.distance").isNull()
-                | (F.col("n.distance") < F.col("o.distance"))
-            )
-            .select("vid", F.col("n.distance").alias("distance"),
-                    F.col("n.parent").alias("parent"))
-        ).persist()
-        empty = frontier.count() == 0
-        if prev_best is not None:
-            prev_best.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-        prev_best = None if i % _CHECKPOINT_EVERY == 0 else new_best
-        prev_frontier = frontier
-        best = new_best
-        if empty:
+        stepped = _relax(best, relaxed, "parent")
+        changed = ss.step(stepped, F.max("__chg"))[0]
+        best = ss.carry(stepped)
+        if not changed:
             break
-    if prev_best is not None or prev_frontier is not None:
-        best = best.truncate_plan()  # detach before releasing the caches
-        if prev_best is not None:
-            prev_best.unpersist()
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
+    best = ss.finish(best)  # detach before releasing the caches
     und.unpersist()
-    return best
+    return best.drop("__chg")
 
 
 def steiner_tree(

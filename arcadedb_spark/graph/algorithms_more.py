@@ -3,7 +3,7 @@
 Continues graph/algorithms.py with the remaining Spark-expressible
 procedures from query/opencypher/procedures/algo/Algo*.java (70 files).
 Same execution discipline: message passing = join + groupBy per
-superstep, localCheckpoint to truncate lineage, everything keyed by
+superstep, loop lifecycle in graph/superstep.py, everything keyed by
 vertex id so it partitions at cluster scale.
 
 Inherently sequential references (Tarjan bridges/articulation points,
@@ -24,8 +24,7 @@ from arcadedb_spark.graph.algorithms import (
     shortest_paths,
     triangle_count,
 )
-
-_CHECKPOINT_EVERY = 5
+from arcadedb_spark.graph.superstep import Supersteps
 
 
 # ---------------------------------------------------------------------------
@@ -107,34 +106,35 @@ def topological_layers(edges: DataFrame, max_iterations: int = 100) -> DataFrame
     layers are its parallel refinement: any layer-respecting order is
     valid).  Vertices on cycles never peel and are absent from the
     result.  Returns (vid, layer)."""
-    spark = edges.sparkSession
     e = edges.select("src", "dst").distinct().cache()
-    remaining_v = _vertices_of(edges)
-    remaining_e = e
-    out = spark.createDataFrame([], "vid long, layer int")
+    # one carried frame: (vid, layer), layer null until the vertex peels
+    state = _vertices_of(edges).withColumn("layer", F.lit(None).cast("int"))
+    ss = Supersteps()
     for layer in range(max_iterations):
-        with_in = remaining_e.select(F.col("dst").alias("vid")).distinct()
-        # ready has three consumers (probe, out union, the two peels) —
-        # persist it, materialize with a full count, and release it once
-        # the peeled v/e frames are pinned.  The peeled frames themselves
-        # are truncated (they shrink every layer), so the lineage stays
-        # flat and NO cache outlives its round — the old shape .cache()d
-        # every round's v/e/ready and never unpersisted any of them
-        # (unbounded CacheManager growth per call, guide §5).
-        ready = remaining_v.join(with_in, "vid", "left_anti").persist()
-        if ready.count() == 0:
-            ready.unpersist()
+        # vertices still holding an in-edge from an unpeeled source
+        blocked = (
+            e.join(
+                state.filter(F.col("layer").isNull()).select(F.col("vid").alias("src")),
+                "src",
+                "left_semi",
+            )
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+            .withColumn("__in", F.lit(True))
+        )
+        stepped = state.join(blocked, "vid", "left").select(
+            "vid",
+            F.when(F.col("layer").isNull() & F.col("__in").isNull(), F.lit(layer))
+            .otherwise(F.col("layer"))
+            .alias("layer"),
+        )
+        peeled = ss.step(stepped, F.count(F.when(F.col("layer") == layer, 1)))[0]
+        state = ss.carry(stepped)
+        if peeled == 0:
             break
-        out = out.unionByName(
-            ready.withColumn("layer", F.lit(layer))
-        ).truncate_plan()
-        remaining_v = remaining_v.join(ready, "vid", "left_anti").truncate_plan()
-        remaining_e = remaining_e.join(
-            ready.withColumnRenamed("vid", "src"), "src", "left_anti"
-        ).truncate_plan()
-        ready.unpersist()
+    state = ss.finish(state)
     e.unpersist()
-    return out
+    return state.filter(F.col("layer").isNotNull())
 
 
 def topological_sort(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
@@ -191,38 +191,25 @@ def longest_path_dag(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
     verts = _vertices_of(edges)
     e = edges.select("src", "dst").distinct().cache()
     dist = verts.withColumn("length", F.lit(0))
-    prev = None
-    for i in range(1, max_iterations + 1):
+    ss = Supersteps()
+    for _ in range(max_iterations):
         relaxed = (
             e.join(dist, e["src"] == dist["vid"], "inner")
             .groupBy(F.col("dst").alias("vid"))
             .agg((F.max("length") + 1).alias("nl"))
         )
-        stepped = (
-            dist.join(relaxed, "vid", "left")
-            .select(
-                "vid",
-                F.greatest(
-                    F.col("length"), F.coalesce(F.col("nl"), F.col("length"))
-                ).alias("length"),
-                (F.col("nl") > F.col("length")).alias("__chg"),
-            )
-            .persist()
+        stepped = dist.join(relaxed, "vid", "left").select(
+            "vid",
+            F.greatest(F.col("length"), F.coalesce(F.col("nl"), F.col("length"))).alias(
+                "length"
+            ),
+            (F.col("nl") > F.col("length")).alias("__chg"),
         )
-        changed = stepped.agg(F.max("__chg")).collect()[0][0]
-        if prev is not None:
-            prev.unpersist()
-        prev = stepped
-        dist = stepped.select("vid", "length")
-        if i % _CHECKPOINT_EVERY == 0:
-            dist = dist.truncate_plan()
-            prev.unpersist()
-            prev = None
+        changed = ss.step(stepped, F.max("__chg"))[0]
+        dist = ss.carry(stepped.select("vid", "length"))
         if not changed:
             break
-    if prev is not None:
-        dist = dist.truncate_plan()
-        prev.unpersist()
+    dist = ss.finish(dist)
     e.unpersist()
     return dist
 
@@ -380,10 +367,7 @@ def bipartite_check(edges: DataFrame, max_depth: int = 20) -> bool:
         "vid", F.lit(0).alias("color")
     )
     frontier = color
-    # fused supersteps: nxt has three consumers (probe, color union, next
-    # expansion) — persist it and let a full count() materialize the cache
-    # once per level (guide §2.1/§5)
-    prev = None
+    ss = Supersteps(accumulating=True)
     for depth in range(1, max_depth + 1):
         nxt = (
             frontier.join(adj, frontier["vid"] == adj["v"], "inner")
@@ -391,20 +375,11 @@ def bipartite_check(edges: DataFrame, max_depth: int = 20) -> bool:
             .distinct()
             .join(color, "vid", "left_anti")
         )
-        if depth % _CHECKPOINT_EVERY == 0:
-            nxt = nxt.truncate_plan()
-        else:
-            nxt = nxt.persist()
-        empty = nxt.count() == 0
-        if prev is not None:
-            prev.unpersist()
-        prev = None if depth % _CHECKPOINT_EVERY == 0 else nxt
-        if empty:
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        color = color.unionByName(nxt).truncate_plan()
+        color = ss.carry(color.unionByName(nxt))
         frontier = nxt
-    if prev is not None:
-        prev.unpersist()  # `color` is truncated; nothing reads nxt now
+    color = ss.finish(color)
     adj.unpersist()
     e = edges.select("src", "dst")
     bad = (
@@ -497,21 +472,17 @@ def personalized_pagerank(
     )
     ranks = teleport.select("vid", F.col("t").alias("rank"))
     ranks = verts.join(ranks, "vid", "left").fillna(0.0, ["rank"])
-    prev = None
-    for i in range(1, iterations + 1):
+    ss = Supersteps()
+    for _ in range(iterations):
         contribs = (
             e.join(ranks, e["src"] == ranks["vid"], "inner")
             .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
             .groupBy("vid")
             .agg(F.sum("c").alias("c"))
-            .persist()
         )
-        flowed = contribs.agg(F.sum("c")).collect()[0][0] or 0.0
-        if prev is not None:
-            prev.unpersist()
-        prev = contribs
+        flowed = ss.step(contribs, F.sum("c"))[0] or 0.0
         dangling = 1.0 - flowed  # total rank mass is 1
-        ranks = (
+        ranks = ss.carry(
             verts.join(contribs, "vid", "left")
             .join(teleport.select("vid", "t"), "vid", "left")
             .select(
@@ -526,13 +497,7 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        if i % _CHECKPOINT_EVERY == 0:
-            ranks = ranks.truncate_plan()
-            prev.unpersist()
-            prev = None
-    if prev is not None:
-        ranks = ranks.truncate_plan()
-        prev.unpersist()
+    ranks = ss.finish(ranks)
     e.unpersist()
     verts.unpersist()
     return ranks
@@ -544,59 +509,43 @@ def article_rank(
     """ArticleRank: PageRank with contributions damped by
     (outdeg + avg outdeg) (AlgoArticleRank.java:169-187).
     Returns (vid, rank)."""
-    verts = _vertices_of(edges).cache()
-    n = verts.count()
     outd = edges.groupBy("src").agg(F.count("*").alias("__outd"))
+    # the dangling flag is static: tag each vertex once, so each
+    # superstep's dangling mass is one aggregate over the new rank frame
+    verts = (
+        _vertices_of(edges)
+        .join(outd.select(F.col("src").alias("vid"), F.lit(False).alias("__dang")), "vid", "left")
+        .select("vid", F.coalesce("__dang", F.lit(True)).alias("__dang"))
+        .cache()
+    )
+    n, n_dang = verts.agg(F.count(F.lit(1)), F.count(F.when(F.col("__dang"), 1))).collect()[0]
     avg_out = edges.count() / n if n else 1.0
     e = edges.join(outd, "src").select(
         "src", "dst",
         (F.lit(1.0) / (F.col("__outd") + F.lit(avg_out))).alias("__share"),
     ).cache()
-    # the dangling set is static — compute it once instead of re-deriving
-    # it through an anti-join against the full rank frame every iteration
-    dangling_verts = verts.join(
-        outd.withColumnRenamed("src", "vid"), "vid", "left_anti"
-    ).cache()
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    prev = None
-    for i in range(1, iterations + 1):
-        # both per-iteration actions now touch at most one superstep of
-        # work: the dangling sum reads the (cached) previous contributions
-        # through one cheap join, and the contribution aggregate below is
-        # persisted before its scalar is read
-        dangling = (
-            ranks.join(dangling_verts, "vid", "left_semi")
-            .agg(F.sum("rank"))
-            .collect()[0][0]
-            or 0.0
-        )
+    dangling = n_dang / n  # rank mass on dangling vertices
+    ss = Supersteps()
+    for _ in range(iterations):
         contribs = (
             e.join(ranks, e["src"] == ranks["vid"], "inner")
             .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
             .groupBy("vid")
             .agg(F.sum("c").alias("c"))
-            .persist()
         )
-        contribs.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = contribs
-        ranks = verts.join(contribs, "vid", "left").select(
+        stepped = verts.join(contribs, "vid", "left").select(
             "vid",
+            "__dang",
             (
                 F.lit((1.0 - damping) / n)
                 + F.lit(damping)
                 * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
             ).alias("rank"),
         )
-        if i % _CHECKPOINT_EVERY == 0:
-            ranks = ranks.truncate_plan()
-            prev.unpersist()
-            prev = None
-    if prev is not None:
-        ranks = ranks.truncate_plan()
-        prev.unpersist()
-    dangling_verts.unpersist()
+        dangling = ss.step(stepped, F.sum(F.when(F.col("__dang"), F.col("rank"))))[0] or 0.0
+        ranks = ss.carry(stepped)
+    ranks = ss.finish(ranks).select("vid", "rank")
     e.unpersist()
     verts.unpersist()
     return ranks
@@ -607,56 +556,33 @@ def hits(edges: DataFrame, iterations: int = 20) -> DataFrame:
     (AlgoHITS.java).  Returns (vid, hub, authority)."""
     verts = _vertices_of(edges).cache()
     e = edges.select("src", "dst").distinct().cache()
-    hub = verts.withColumn("hub", F.lit(1.0))
-    auth = verts.withColumn("authority", F.lit(1.0))
-    prev_auth = None
-    prev_hub = None
-    for i in range(1, iterations + 1):
-        # each half-step is persisted and materialized by its own max-norm
-        # aggregate, so the two per-iteration collects each perform exactly
-        # one half-superstep instead of replaying the chain
-        # authority(v) = Σ hub(u) over u→v
-        new_auth = (
-            e.join(hub, e["src"] == hub["vid"], "inner")
+    out = verts.select("vid", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
+    ss = Supersteps()
+    for _ in range(iterations):
+        # authority(v) = Σ hub(u) over u→v, then hub(v) = Σ authority(w)
+        # over v→w, in one superstep: max-normalizing authority before the
+        # hub sums would only rescale them, and hub is max-normalized anyway
+        auth = (
+            e.join(out, e["src"] == out["vid"], "inner")
             .groupBy(F.col("dst").alias("vid"))
             .agg(F.sum("hub").alias("authority"))
         )
-        new_auth = (
-            verts.join(new_auth, "vid", "left").fillna(0.0, ["authority"]).persist()
-        )
-        amax = new_auth.agg(F.max("authority")).collect()[0][0] or 1.0
-        if prev_auth is not None:
-            prev_auth.unpersist()
-        prev_auth = new_auth
-        auth = new_auth.select(
-            "vid", (F.col("authority") / F.lit(amax)).alias("authority")
-        )
-        # hub(v) = Σ authority(w) over v→w
-        new_hub = (
+        auth = verts.join(auth, "vid", "left").fillna(0.0, ["authority"])
+        hub = (
             e.join(auth, e["dst"] == auth["vid"], "inner")
             .groupBy(F.col("src").alias("vid"))
             .agg(F.sum("authority").alias("hub"))
         )
-        new_hub = verts.join(new_hub, "vid", "left").fillna(0.0, ["hub"]).persist()
-        hmax = new_hub.agg(F.max("hub")).collect()[0][0] or 1.0
-        if prev_hub is not None:
-            prev_hub.unpersist()
-        prev_hub = new_hub
-        hub = new_hub.select("vid", (F.col("hub") / F.lit(hmax)).alias("hub"))
-        if i % _CHECKPOINT_EVERY == 0:
-            hub = hub.truncate_plan()
-            auth = auth.truncate_plan()
-            prev_auth.unpersist()
-            prev_auth = None
-            prev_hub.unpersist()
-            prev_hub = None
-    out = hub.join(auth, "vid")
-    if prev_auth is not None or prev_hub is not None:
-        out = out.truncate_plan()
-        if prev_auth is not None:
-            prev_auth.unpersist()
-        if prev_hub is not None:
-            prev_hub.unpersist()
+        stepped = auth.join(hub, "vid", "left").fillna(0.0, ["hub"])
+        amax, hmax = ss.step(stepped, F.max("authority"), F.max("hub"))
+        out = ss.carry(
+            stepped.select(
+                "vid",
+                (F.col("hub") / F.lit(hmax or 1.0)).alias("hub"),
+                (F.col("authority") / F.lit(amax or 1.0)).alias("authority"),
+            )
+        )
+    out = ss.finish(out)
     e.unpersist()
     verts.unpersist()
     return out
@@ -679,36 +605,30 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 30) -> DataFrame:
         .cache()
     )
     cur = und
-    for i in range(max_iterations):
-        # support(a,b) = common neighbors of a and b within current edges
-        adj = cur.select("a", "b").unionByName(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        l, r = adj.alias("l"), adj.alias("r")
-        wedge = (
-            l.join(r, F.col("l.a") == F.col("r.a"))
-            .filter(F.col("l.b") < F.col("r.b"))
-            .select(
-                F.col("l.b").alias("a"), F.col("r.b").alias("b"),
-                F.col("l.a").alias("w"),
-            )
-        )
-        support = (
-            wedge.join(cur, ["a", "b"], "left_semi")
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("sup"))
+    n_cur = und.count()
+    ss = Supersteps()
+    for _ in range(max_iterations):
+        # support(a,b) = |N(a) ∩ N(b)| within the current edges; neighbor
+        # sets are one degree-bounded groupBy, so `cur` appears three times
+        # in the superstep plan instead of six (the plan nests per step)
+        nbrs = (
+            cur.select(F.explode(F.array(F.array("a", "b"), F.array("b", "a"))).alias("p"))
+            .groupBy(F.col("p")[0].alias("v"))
+            .agg(F.collect_set(F.col("p")[1]).alias("nb"))
         )
         nxt = (
-            cur.join(support, ["a", "b"], "left")
-            .fillna(0, ["sup"])
-            .filter(F.col("sup") >= k - 2)
+            cur.join(nbrs.select(F.col("v").alias("a"), F.col("nb").alias("na")), "a")
+            .join(nbrs.select(F.col("v").alias("b"), F.col("nb").alias("nbb")), "b")
+            .filter(F.size(F.array_intersect("na", "nbb")) >= k - 2)
             .select("a", "b")
         )
-        nxt = nxt.truncate_plan()
-        removed = cur.count() - nxt.count()
-        cur = nxt
-        if removed == 0:
+        n_next = ss.step(nxt, F.count(F.lit(1)))[0]
+        cur = ss.carry(nxt)
+        if n_next == n_cur:
             break
+        n_cur = n_next
+    cur = ss.finish(cur)
+    und.unpersist()
     return cur
 
 
@@ -730,19 +650,21 @@ def mst(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
         .agg(F.min("weight").alias("weight"))
         .cache()
     )
-    comp = _vertices_of(edges).withColumn("component", F.col("vid"))
+    # vertices read off the cached edge frame, not the (maybe costly) input
+    comp = (
+        und.select(F.col("a").alias("vid"))
+        .unionByName(und.select(F.col("b").alias("vid")))
+        .distinct()
+        .withColumn("component", F.col("vid"))
+    )
     spark = edges.sparkSession
     chosen = spark.createDataFrame([], "a long, b long, weight double")
+    ss = Supersteps()
     for _ in range(max_iterations):
         ca = comp.select(F.col("vid").alias("a"), F.col("component").alias("__ca"))
         cb = comp.select(F.col("vid").alias("b"), F.col("component").alias("__cb"))
-        cross = (
-            und.join(ca, "a").join(cb, "b").filter(F.col("__ca") != F.col("__cb"))
-        ).persist()
-        # full-count probe materializes the cache its second consumer
-        # (per_comp below) reads — one cross-edge scan per round, not two
-        if cross.count() == 0:
-            cross.unpersist()
+        cross = und.join(ca, "a").join(cb, "b").filter(F.col("__ca") != F.col("__cb"))
+        if ss.step(cross, F.count(F.lit(1)))[0] == 0:
             break
         # lightest outgoing edge per component (either endpoint side)
         per_comp = cross.select(
@@ -754,46 +676,27 @@ def mst(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
         picks = (
             per_comp.withColumn("__rn", F.row_number().over(wmin))
             .filter(F.col("__rn") == 1)
-            .select("a", "b", "weight")
+            .select("a", "b")
             .distinct()
-            .truncate_plan()
         )
-        chosen = chosen.unionByName(picks).dropDuplicates(["a", "b"]).truncate_plan()
-        cross.unpersist()  # picks is truncated; nothing reads cross now
-        # merge components connected by picked edges (hash-min rounds)
-        merge_edges = picks.select("a", "b")
-        for _inner in range(max_iterations):
-            cm = comp.select(F.col("vid").alias("a"), F.col("component").alias("__ca"))
-            cm2 = comp.select(F.col("vid").alias("b"), F.col("component").alias("__cb"))
-            pairs = merge_edges.join(cm, "a").join(cm2, "b")
-            updates = (
-                pairs.select(
-                    F.col("__ca").alias("component"),
-                    F.least("__ca", "__cb").alias("nc"),
-                )
-                .unionByName(
-                    pairs.select(
-                        F.col("__cb").alias("component"),
-                        F.least("__ca", "__cb").alias("nc"),
-                    )
-                )
-                .groupBy("component")
-                .agg(F.min("nc").alias("nc"))
-                .filter(F.col("component") != F.col("nc"))
-            ).persist()
-            # full-count probe materializes the cache the comp rewrite
-            # below reads — the hash-min join runs once per round, not twice
-            if updates.count() == 0:
-                updates.unpersist()
-                break
-            comp = (
-                comp.join(updates, "component", "left")
-                .select(
-                    "vid", F.coalesce(F.col("nc"), F.col("component")).alias("component")
-                )
-                .truncate_plan()
-            )
-            updates.unpersist()
+        # the round's output, one row per merging component: pinned, since
+        # `chosen` keeps it after the cross-edge frame is released
+        picked = cross.join(picks, ["a", "b"], "left_semi").truncate_plan()
+        # a picked edge joins two components, so no edge is picked twice
+        chosen = chosen.unionByName(picked.select("a", "b", "weight"))
+        # merge the components the picks connect: min-id WCC over the
+        # component graph (a truncated frame, so comp grows one join a round)
+        merged = connected_components(
+            picked.select(F.col("__ca").alias("src"), F.col("__cb").alias("dst"))
+        )
+        comp = ss.carry(
+            comp.join(
+                merged.select(F.col("vid").alias("component"), F.col("component").alias("__m")),
+                "component",
+                "left",
+            ).select("vid", F.coalesce("__m", "component").alias("component"))
+        )
+    chosen = ss.finish(chosen)
     und.unpersist()
     return chosen
 
@@ -820,6 +723,7 @@ def slpa(
     memory = _vertices_of(edges).select(
         "vid", F.col("vid").alias("label"), F.lit(1).alias("cnt")
     )
+    ss = Supersteps()
     for it in range(1, iterations + 1):
         # speaker's label: most frequent in memory, hash-jittered tie order
         wsp = Window.partitionBy("vid").orderBy(
@@ -841,13 +745,13 @@ def slpa(
             .filter(F.col("__rn") == 1)
             .select("vid", "label", F.lit(1).alias("cnt"))
         )
-        memory = (
+        memory = ss.carry(
             memory.unionByName(accepted)
             .groupBy("vid", "label")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        if it % _CHECKPOINT_EVERY == 0:
-            memory = memory.truncate_plan()
+    memory = ss.finish(memory)
+    und.unpersist()
     totals = memory.groupBy("vid").agg(F.sum("cnt").alias("tot"))
     return (
         memory.join(totals, "vid")
@@ -872,7 +776,8 @@ def simrank(
     sim = verts.select(
         F.col("vid").alias("a"), F.col("vid").alias("b"), F.lit(1.0).alias("s")
     )
-    for it in range(iterations):
+    ss = Supersteps()
+    for _ in range(iterations):
         # expand: a pair (u,v) with sim s contributes to every (a,b) with
         # u ∈ I(a), v ∈ I(b) — two joins against the in-neighbor lists
         fa = inn.select(F.col("v").alias("ta"), F.col("n").alias("a"))
@@ -895,7 +800,9 @@ def simrank(
         diag = verts.select(
             F.col("vid").alias("a"), F.col("vid").alias("b"), F.lit(1.0).alias("s")
         )
-        sim = new_sim.unionByName(diag).truncate_plan()
+        sim = ss.carry(new_sim.unionByName(diag))
+    sim = ss.finish(sim)
+    inn.unpersist()
     return (
         sim.filter((F.col("a") < F.col("b")) & (F.col("s") > 0))
         .select("a", "b", F.col("s").alias("similarity"))

@@ -121,6 +121,22 @@ def test_no_unbounded_global_windows_in_algorithms():
     )
 
 
+def test_algorithms_share_one_checkpoint_cadence():
+    """graph/superstep.py owns the lineage-truncation cadence of every
+    superstep loop; an algorithms module defining or reading a
+    ``_CHECKPOINT_EVERY`` of its own would fork it again."""
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark", "graph")
+    offenders = [
+        os.path.basename(path)
+        for path in glob.glob(os.path.join(root, "algorithms*.py"))
+        if "_CHECKPOINT_EVERY" in open(path).read()
+    ]
+    assert not offenders, f"per-module checkpoint cadence in: {offenders}"
+
+
 def test_runtime_temporal_kernels_are_arrow_batched(spark):
     """Per-row temporal math over stored strings must run as Arrow-batched
     pandas UDFs (ArrowEvalPython), never row-pickled BatchEvalPython."""

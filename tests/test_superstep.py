@@ -1,0 +1,143 @@
+"""Superstep driver (graph/superstep.py): cache bound, one action per
+superstep, truncation cadence, early stop, and no cache left behind by
+the algorithms built on it."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from arcadedb_spark.graph import algorithms as A
+from arcadedb_spark.graph import algorithms_extra as X
+from arcadedb_spark.graph import algorithms_extra2 as X2
+from arcadedb_spark.graph import algorithms_extra3 as X3
+from arcadedb_spark.graph.superstep import CHECKPOINT_EVERY, Supersteps
+
+
+def _persisted(spark) -> set:
+    """Ids of the RDDs persisted in the session (other tests' caches and
+    the engine's own may come and go meanwhile, so compare id sets)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture
+def truncations(monkeypatch):
+    calls = []
+    orig = DataFrame.truncate_plan
+
+    def counted(df):
+        calls.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(DataFrame, "truncate_plan", counted)
+    return calls
+
+
+def _countdown(spark, start, max_iter, probe=None):
+    """Toy loop on 8 vertices: x ← max(x − 1, 0) until no x changes.  One
+    partition, so a superstep's plan has no exchange and its aggregate is
+    a single job."""
+    state = spark.createDataFrame(
+        [(v, start(v)) for v in range(8)], "vid long, x long"
+    ).coalesce(1)
+    ss = Supersteps()
+    for _ in range(max_iter):
+        if probe:
+            probe("begin", ss)
+        stepped = state.select(
+            "vid",
+            F.greatest(F.col("x") - 1, F.lit(0)).alias("x"),
+            (F.col("x") > 0).alias("__chg"),
+        )
+        changed = ss.step(stepped, F.max("__chg"))[0]
+        if probe:
+            probe("step", ss)
+        state = ss.carry(stepped.select("vid", "x"))
+        if probe:
+            probe("carry", ss)
+        if not changed:
+            break
+    return ss, ss.finish(state)
+
+
+def test_one_frame_cached_and_all_released(spark):
+    base = _persisted(spark)
+    seen = []
+
+    def probe(_, ss):
+        seen.append(len(_persisted(spark) - base))
+
+    ss, out = _countdown(spark, lambda v: 100, 7, probe)
+    assert ss.n == 7
+    assert max(seen) == 1  # (a) at most one superstep frame cached
+    assert out.agg(F.max("x")).collect()[0][0] == 93
+    assert not _persisted(spark) - base  # (b) nothing left cached
+
+
+def test_one_job_per_superstep(spark):
+    """(c) one action per superstep.  Measured with AQE off: under AQE the
+    same action fills the new cache as a query stage of its own, which
+    Spark runs as a second job."""
+    sc = spark.sparkContext
+    groups = []
+
+    def probe(where, ss):
+        if where == "begin":
+            groups.append(f"superstep-test-{len(groups)}")
+            sc.setJobGroup(groups[-1], groups[-1])
+        elif where == "carry":
+            sc._jsc.clearJobGroup()
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _countdown(spark, lambda v: 100, CHECKPOINT_EVERY - 1, probe)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert jobs == [1] * (CHECKPOINT_EVERY - 1)
+
+
+@pytest.mark.parametrize(
+    "steps, expected",
+    [
+        (CHECKPOINT_EVERY, 1),  # ends on the cadence: no terminal truncate
+        (CHECKPOINT_EVERY + 2, 2),  # one on the cadence, one to pin
+    ],
+)
+def test_truncation_cadence(spark, truncations, steps, expected):
+    ss, out = _countdown(spark, lambda v: 100, steps)
+    assert ss.n == steps
+    assert len(truncations) == expected  # (d)
+    assert out.agg(F.max("x")).collect()[0][0] == 100 - steps
+
+
+def test_stops_when_converged(spark):
+    ss, out = _countdown(spark, lambda v: v % 4, 20)
+    # three supersteps decrement, the fourth sees nothing change (e)
+    assert ss.n == 4
+    assert out.agg(F.max("x")).collect()[0][0] == 0
+
+
+_ALGORITHMS = {
+    "pagerank": lambda e: A.pagerank(e, iterations=2),
+    "connected_components": A.connected_components,
+    "dijkstra_sssp": lambda e: A.dijkstra_sssp(e, 0),
+    "k_core": lambda e: A.k_core(e, 2),
+    "astar": lambda e: X.astar(e, 0, 3),
+    "k_shortest_paths": lambda e: X.k_shortest_paths(e, 0, 3, k=2, max_depth=3),
+    "all_simple_paths": lambda e: X2.all_simple_paths(e, 0, 3, max_depth=3),
+    "bellman_ford_path": lambda e: X3.bellman_ford_path(e, 0, 3, max_iterations=4),
+}
+
+
+@pytest.mark.parametrize("name", list(_ALGORITHMS))
+def test_algorithms_release_their_caches(spark, name):
+    e = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 1.0), (0, 2, 3.0), (2, 3, 1.0), (1, 3, 4.0), (3, 0, 2.0)],
+        "src long, dst long, weight double",
+    )
+    base = _persisted(spark)
+    assert _ALGORITHMS[name](e).collect()
+    assert not _persisted(spark) - base
