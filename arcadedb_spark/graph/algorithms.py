@@ -43,53 +43,53 @@ def pagerank(
     Returns (vid, rank) with sum(rank) == N convention (reference uses the
     1/N-normalized variant scaled by N; ranks are comparable by ratio).
 
-    Scale: out-degree is precomputed once and joined into the edge frame,
-    which is cached — each superstep is one shuffle (groupBy dst).
-    Dangling-vertex mass is redistributed uniformly each step.
+    Scale: one shuffle (a window over src) gives every edge its share
+    w / Σw of its source's out-weight; the share frame is cached and
+    filled by the first superstep, which needs no join because every rank
+    starts at 1.0.  There is no separate vertex frame: a superstep groups
+    its messages by vid together with a zero row per edge source, so its
+    frame holds every vertex (a dangling one is some edge's dst) and its
+    one action returns sum(c) and count(*).  n and the dangling mass
+    (n − sum(c), spread evenly) thus come from the superstep itself, and
+    nothing is counted before the loop.  The zero rows come from the
+    share frame, not the previous ranks: ranks already feed the join, and
+    a second reference would double the plan every superstep until the
+    next truncation.  Like a repartition by src, the window puts all
+    out-edges of one source in one task.
     """
-    verts = _vertices_of(edges).cache()
-    n = verts.count()
-    if n == 0:
-        return verts.withColumn("rank", F.lit(0.0))
-    if weighted and "weight" in edges.columns:
-        outw = edges.groupBy("src").agg(F.sum("weight").alias("__outw"))
-        e = edges.join(outw, "src").select(
-            "src", "dst", (F.col("weight") / F.col("__outw")).alias("__share")
-        )
-    else:
-        outd = edges.groupBy("src").agg(F.count("*").alias("__outd"))
-        e = edges.join(outd, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("__outd")).alias("__share")
-        )
-    e = e.repartition("src").cache()
-    e.count()  # materialize once
-
-    ranks = verts.withColumn("rank", F.lit(1.0))
+    if iterations <= 0:
+        return _vertices_of(edges).withColumn("rank", F.lit(1.0))
+    w = (
+        F.col("weight").cast("double")
+        if weighted and "weight" in edges.columns
+        else F.lit(1.0)
+    )
+    e = edges.select(
+        "src", "dst", (w / F.sum(w).over(Window.partitionBy("src"))).alias("__share")
+    ).cache()
+    zero = e.select(F.col("src").alias("vid"), F.lit(0.0).alias("c"))
+    msgs = e.select(F.col("dst").alias("vid"), F.col("__share").alias("c"))
     ss = Supersteps()
-    for _ in range(iterations):
-        contribs = (
-            e.join(ranks, e["src"] == ranks["vid"], "inner")
-            .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
-            .groupBy("vid")
-            .agg(F.sum("c").alias("c"))
-        )
-        # dangling mass = total rank − mass that flowed through edges
-        flowed = ss.step(contribs, F.sum("c"))[0] or 0.0
-        dangling = n - flowed  # total rank is kept at n
+    for i in range(iterations):
+        if i:
+            msgs = e.join(ranks, e["src"] == ranks["vid"]).select(
+                F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c")
+            )
+        stepped = zero.unionByName(msgs).groupBy("vid").agg(F.sum("c").alias("c"))
+        flowed, n = ss.step(stepped, F.sum("c"), F.count(F.lit(1)))
+        # total rank is kept at n: what did not flow along an edge sat on
+        # dangling vertices and is spread evenly
+        spread = (n - (flowed or 0.0)) / n if n else 0.0
         ranks = ss.carry(
-            verts.join(contribs, "vid", "left")
-            .select(
+            stepped.select(
                 "vid",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
+                (F.lit(1.0 - damping) + F.lit(damping) * (F.col("c") + F.lit(spread))).alias(
+                    "rank"
+                ),
             )
         )
     ranks = ss.finish(ranks)
     e.unpersist()
-    verts.unpersist()
     return ranks
 
 

@@ -509,18 +509,28 @@ def article_rank(
     """ArticleRank: PageRank with contributions damped by
     (outdeg + avg outdeg) (AlgoArticleRank.java:169-187).
     Returns (vid, rank)."""
-    outd = edges.groupBy("src").agg(F.count("*").alias("__outd"))
-    # the dangling flag is static: tag each vertex once, so each
-    # superstep's dangling mass is one aggregate over the new rank frame
+    # one shuffle tags every vertex with its out-degree: each edge counts
+    # 1 for its src and 0 for its dst, so a dangling vertex has 0.  The
+    # tag is static, so each superstep's dangling mass is one aggregate
+    # over the new rank frame, and |E| is the sum of the out-degrees.
+    out = F.explode(
+        F.array(
+            F.struct(F.col("src").alias("vid"), F.lit(1).alias("d")),
+            F.struct(F.col("dst").alias("vid"), F.lit(0).alias("d")),
+        )
+    ).alias("o")
     verts = (
-        _vertices_of(edges)
-        .join(outd.select(F.col("src").alias("vid"), F.lit(False).alias("__dang")), "vid", "left")
-        .select("vid", F.coalesce("__dang", F.lit(True)).alias("__dang"))
+        edges.select(out)
+        .groupBy(F.col("o.vid").alias("vid"))
+        .agg(F.sum("o.d").alias("__outd"))
         .cache()
     )
-    n, n_dang = verts.agg(F.count(F.lit(1)), F.count(F.when(F.col("__dang"), 1))).collect()[0]
-    avg_out = edges.count() / n if n else 1.0
-    e = edges.join(outd, "src").select(
+    dang = F.col("__outd") == 0
+    n, n_dang, m = verts.agg(
+        F.count(F.lit(1)), F.count(F.when(dang, 1)), F.sum("__outd")
+    ).collect()[0]
+    avg_out = m / n if n else 1.0
+    e = edges.join(verts, edges["src"] == verts["vid"]).select(
         "src", "dst",
         (F.lit(1.0) / (F.col("__outd") + F.lit(avg_out))).alias("__share"),
     ).cache()
@@ -536,14 +546,14 @@ def article_rank(
         )
         stepped = verts.join(contribs, "vid", "left").select(
             "vid",
-            "__dang",
+            "__outd",
             (
                 F.lit((1.0 - damping) / n)
                 + F.lit(damping)
                 * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
             ).alias("rank"),
         )
-        dangling = ss.step(stepped, F.sum(F.when(F.col("__dang"), F.col("rank"))))[0] or 0.0
+        dangling = ss.step(stepped, F.sum(F.when(dang, F.col("rank"))))[0] or 0.0
         ranks = ss.carry(stepped)
     ranks = ss.finish(ranks).select("vid", "rank")
     e.unpersist()

@@ -20,6 +20,11 @@ exactly the durability/cost model of a reliable ``checkpoint(dir)``.  On
 a real cluster point ``arcadedb.lineage.dir`` at shared storage (HDFS /
 object store); files persist for the life of the session because the
 returned frame re-reads them on every downstream action.
+
+The re-read is handed the written frame's schema.  Inferring it would
+open the parquet footers just written in a Spark job of its own -- one
+job more per truncation -- only to find the schema the writer already
+had.
 """
 
 from __future__ import annotations
@@ -54,7 +59,7 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     path = os.path.join(_root_for(spark), f"t{next(_counter)}")
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 # Extension method so iterative loops keep their fluent chaining style:

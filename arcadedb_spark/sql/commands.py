@@ -340,12 +340,12 @@ def _define_function(db, stmt: ast.DefineFunctionStmt) -> DataFrame:
 
 
 def _release_replaced(old) -> None:
-    """Unpersist a replaced backing frame — ONLY safe when the replacement
-    was just fully materialized from a lineage that does not read ``old``
-    (MV full recomputes translate straight off the base tables).  Mutation
-    swaps (_replace_df, insert unions) must NOT do this: each new state's
-    lineage reads the previous one, so dropping un-superseded caches would
-    make later materializations replay the whole mutation chain."""
+    """Unpersist a replaced backing frame — ONLY safe when the replacement's
+    lineage does not read ``old`` (MV full recomputes translate straight
+    off the base tables).  Mutation swaps (_replace_df, insert unions)
+    must NOT do this: each new state's lineage reads the previous one, so
+    dropping un-superseded caches would make later materializations
+    replay the whole mutation chain."""
     try:
         if old is not None and (
             old.storageLevel.useMemory or old.storageLevel.useDisk
@@ -353,6 +353,19 @@ def _release_replaced(old) -> None:
             old.unpersist()
     except Exception:
         pass
+
+
+def _recompute_mv(db, tdef, select, params: dict) -> int:
+    """Full MV recompute: re-translate the view off the base tables, swap
+    the fresh frame in, cache and materialize it.  The old cache is
+    released first: with the base tables unchanged the new plan
+    ``sameResult``s the old one, so ``.cache()`` would reuse the old
+    entry and releasing ``old`` afterwards would drop the fresh cache."""
+    df = Translator(db, params).translate(select)
+    _release_replaced(tdef.df())
+    tdef._df = df.cache()
+    db._plan_cache.clear()
+    return df.count()
 
 
 def _create_mv(db, stmt: ast.CreateMaterializedViewStmt, params: dict) -> DataFrame:
@@ -375,13 +388,7 @@ def _refresh_mv(db, stmt: ast.RefreshMaterializedViewStmt, params: dict) -> Data
     mode = (tdef.properties.get("mv_refresh") or "MANUAL").upper()
     if mode.startswith("INCREMENTAL"):
         return _result(db, _incremental_refresh(db, tdef, select, params))
-    df = Translator(db, params).translate(select).cache()
-    old = tdef._df
-    tdef._df = df
-    db._plan_cache.clear()
-    n = df.count()  # materializes the fresh cache (lineage reads only base tables)
-    _release_replaced(old)
-    return _result(db, n)
+    return _result(db, _recompute_mv(db, tdef, select, params))
 
 
 def _incremental_refresh(db, tdef, select, params: dict) -> int:
@@ -429,13 +436,7 @@ def _incremental_refresh(db, tdef, select, params: dict) -> int:
         if n is not None:
             return n
     if dirty or aggregated or src_name is None or select.lets:
-        df = Translator(db, params).translate(select).cache()
-        old = tdef._df
-        tdef._df = df
-        db._plan_cache.clear()
-        n = df.count()  # fresh full recompute — safe to drop the old cache
-        _release_replaced(old)
-        return n
+        return _recompute_mv(db, tdef, select, params)
     # delta-only path: run the view query against just the new rows
     src = db.schema.get(src_name)
     delta = pending[0]

@@ -100,3 +100,16 @@ def test_incremental_aggregated_bucket_refresh(mdb):
     after = {r["region"]: r["total"]
              for r in mdb.query("SELECT FROM RegionTotals").collect()}
     assert after == {"n": 15, "s": 20, "e": 7}
+
+
+def test_full_refresh_keeps_the_fresh_cache(mdb):
+    """With the base tables unchanged, REFRESH re-translates to a plan that
+    ``sameResult``s the cached one; the view must still be cached after
+    the old frame is released."""
+    mdb.command(
+        "CREATE MATERIALIZED VIEW RegionSums AS "
+        "SELECT region, sum(amount) AS total FROM Sale GROUP BY region"
+    )
+    assert mdb.query("SELECT FROM RegionSums").count() == 2
+    assert mdb.command("REFRESH MATERIALIZED VIEW RegionSums").collect()[0][0] == 2
+    assert mdb.schema.get("RegionSums").df().storageLevel.useMemory

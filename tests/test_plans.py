@@ -137,6 +137,30 @@ def test_algorithms_share_one_checkpoint_cadence():
     assert not offenders, f"per-module checkpoint cadence in: {offenders}"
 
 
+def test_algorithms_fire_no_discarded_count_probes():
+    """A ``<frame>.count()`` statement whose result is thrown away (the
+    ``e.count()  # materialize once`` pattern) costs a Spark job that does
+    no algorithm work: a cached frame is filled by the first superstep
+    that reads it, and ``Supersteps.step`` is where a loop's action goes."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark", "graph")
+    offenders = []
+    for path in glob.glob(os.path.join(root, "algorithms*.py")):
+        for node in ast.walk(ast.parse(open(path).read())):
+            call = node.value if isinstance(node, ast.Expr) else None
+            if (
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "count"
+                and not call.args
+            ):
+                offenders.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not offenders, f"discarded count() probes at: {offenders}"
+
+
 def test_runtime_temporal_kernels_are_arrow_batched(spark):
     """Per-row temporal math over stored strings must run as Arrow-batched
     pandas UDFs (ArrowEvalPython), never row-pickled BatchEvalPython."""

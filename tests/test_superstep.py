@@ -141,3 +141,86 @@ def test_algorithms_release_their_caches(spark, name):
     base = _persisted(spark)
     assert _ALGORITHMS[name](e).collect()
     assert not _persisted(spark) - base
+
+
+# 0..5 with a duplicate edge (0→1 twice) and a dangling vertex (5)
+_PR_EDGES = [
+    (0, 1, 1.0), (0, 1, 2.0), (1, 2, 0.5), (1, 5, 1.0), (2, 0, 1.0),
+    (2, 3, 3.0), (3, 0, 0.25), (3, 4, 1.0), (4, 5, 2.0),
+]
+
+
+def _pagerank_reference(edges, iterations, weighted, damping=0.85):
+    """Plain power iteration with the engine's conventions: ranks start at
+    1.0, Σrank = n, dangling mass spread evenly over every vertex."""
+    edges = [(s, d, x if weighted else 1.0) for s, d, x in edges]
+    verts = {v for s, d, _ in edges for v in (s, d)}
+    n = len(verts)
+    outw = dict.fromkeys(verts, 0.0)
+    for s, _, x in edges:
+        outw[s] += x
+    rank = dict.fromkeys(verts, 1.0)
+    for _ in range(iterations):
+        c = dict.fromkeys(verts, 0.0)
+        for s, d, x in edges:
+            c[d] += rank[s] * x / outw[s]
+        spread = (n - sum(c.values())) / n
+        rank = {v: 1.0 - damping + damping * (c[v] + spread) for v in verts}
+    return rank
+
+
+@pytest.fixture
+def no_probes(monkeypatch):
+    """Record every count()/collect() this thread runs outside
+    ``Supersteps.step``.  The classic DataFrame overrides both, so it is
+    the class to patch, not ``pyspark.sql.DataFrame``."""
+    import threading
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+
+    me = threading.get_ident()
+    state = {"in_step": False, "stray": []}
+    step = Supersteps.step
+
+    def counted_step(self, *args):
+        state["in_step"] = True
+        try:
+            return step(self, *args)
+        finally:
+            state["in_step"] = False
+
+    def watch(name):
+        orig = getattr(ClassicFrame, name)
+
+        def wrapped(df, *args, **kwargs):
+            if threading.get_ident() == me and not state["in_step"]:
+                state["stray"].append(name)
+            return orig(df, *args, **kwargs)
+
+        monkeypatch.setattr(ClassicFrame, name, wrapped)
+
+    monkeypatch.setattr(Supersteps, "step", counted_step)
+    watch("count")
+    watch("collect")
+    return state
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+@pytest.mark.parametrize("iterations", [0, 1, 2, 7])
+def test_pagerank_matches_power_iteration(spark, no_probes, iterations, weighted):
+    e = spark.createDataFrame(_PR_EDGES, "src long, dst long, weight double")
+    pr = A.pagerank(e, iterations=iterations, weighted=weighted)
+    assert no_probes["stray"] == []  # no action outside the supersteps
+    got = {r["vid"]: r["rank"] for r in pr.collect()}
+    expected = _pagerank_reference(_PR_EDGES, iterations, weighted)
+    assert got.keys() == expected.keys()
+    for v, rank in expected.items():
+        assert got[v] == pytest.approx(rank, abs=1e-9), v
+
+
+@pytest.mark.parametrize("iterations", [0, 3])
+def test_pagerank_empty_graph(spark, iterations):
+    e = spark.createDataFrame([], "src long, dst long, weight double")
+    pr = A.pagerank(e, iterations=iterations)
+    assert pr.columns == ["vid", "rank"]
+    assert pr.collect() == []
