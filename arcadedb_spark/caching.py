@@ -13,10 +13,10 @@ that several consumers inside ONE returned plan share.  A bare
 
 ``bounded_cache`` fixes both: it skips frames whose analyzed plan is
 already cached (plan-level lookup — the existing entry serves this frame
-too), and it evicts the oldest registered frame beyond
-``arcadedb.cache.maxOperatorFrames`` (default 8; eviction only costs
-recompute, never correctness).  ``release_operator_caches`` drops
-everything, for callers that want deterministic lifecycle.
+too), and it evicts the oldest registered frame beyond ``_MAX_DEFAULT``
+(8; eviction only costs recompute, never correctness).
+``release_operator_caches`` drops everything, for callers that want
+deterministic lifecycle.
 """
 
 from __future__ import annotations
@@ -40,15 +40,7 @@ def bounded_cache(
         pass
     df.persist(level)
     _registry.append(df)
-    try:
-        limit = int(
-            df.sparkSession.conf.get(
-                "arcadedb.cache.maxOperatorFrames", str(_MAX_DEFAULT)
-            )
-        )
-    except Exception:
-        limit = _MAX_DEFAULT
-    while len(_registry) > max(1, limit):
+    while len(_registry) > _MAX_DEFAULT:
         old = _registry.pop(0)
         try:
             old.unpersist()

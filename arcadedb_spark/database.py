@@ -201,10 +201,11 @@ class Database:
             if name in _TESTDATA_LINKS:
                 tdef.properties["links"] = _TESTDATA_LINKS[name]
         # Warm the graph view off the critical path: build the property
-        # graph (driver-side plan construction) and its derived edge
-        # caches in a daemon thread so the first graph query finds them
-        # ready.  Spark schedules jobs from concurrent threads, so this
-        # overlaps whatever relational queries run first.
+        # graph (driver-side plan construction) and fill its derived
+        # INTERACTED edge cache (a global window over events) in a daemon
+        # thread so the first graph query finds them ready.  Spark
+        # schedules jobs from concurrent threads, so this overlaps
+        # whatever relational queries run first.
         if "customer" in db.schema.names() and (
             str(spark.conf.get("arcadedb.graph.prewarm", "true")).lower()
             == "true"
@@ -213,7 +214,7 @@ class Database:
 
             def _warm_graph(d=db):
                 try:
-                    d.graph()
+                    d.graph().edges("INTERACTED", with_identity=False).count()
                 except Exception:
                     pass  # first real graph() call rebuilds and surfaces
 

@@ -23,27 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from arcadedb_spark.graph.algorithms import connected_components
-from arcadedb_spark.graph.algorithms_extra import _relax
+from arcadedb_spark.graph.algorithms import _undirected_adj, connected_components
+from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
-
-
-def _weighted(edges: DataFrame) -> DataFrame:
-    if "weight" in edges.columns:
-        return edges.select(
-            "src", "dst", F.coalesce(F.col("weight"), F.lit(1.0)).alias("w")
-        )
-    return edges.select("src", "dst", F.lit(1.0).alias("w"))
-
-
-def _undirected_pairs(edges: DataFrame) -> DataFrame:
-    """Distinct undirected adjacency (v, n), both orientations."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    return (
-        e.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .unionByName(e.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct()
-    )
 
 
 def _capped_edge_list(edges: DataFrame, max_edges: int, what: str):
@@ -154,7 +136,7 @@ def _bfs_forest(edges: DataFrame, max_depth: int = 64):
     Returns (tree, levels, depth): tree = (vid, parent, level) for
     non-root vertices, levels = (vid, level) for all, depth = max level
     reached.  O(diameter) supersteps, frontier-parallel."""
-    adj = _undirected_pairs(edges).cache()
+    adj = _undirected_adj(edges).cache()
     comp = connected_components(edges)
     roots = comp.filter(F.col("vid") == F.col("component")).select("vid")
     visited = roots.select(
@@ -282,7 +264,7 @@ def knn_similarity(
     elif direction == "in":
         adj = edges.select(F.col("dst").alias("v"), F.col("src").alias("n"))
     else:
-        adj = _undirected_pairs(edges)
+        adj = _undirected_adj(edges)
     adj = adj.distinct().cache()
     deg = adj.groupBy("v").agg(F.count("*").alias("d"))
     x = adj.select(F.col("v").alias("a"), "n")

@@ -15,11 +15,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-from arcadedb_spark.graph.algorithms_extra import _relax
-from arcadedb_spark.graph.algorithms_extra3 import (
-    _undirected_pairs,
-    _weighted,
-)
+from arcadedb_spark.graph.algorithms import _undirected_adj
+from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
 
 _MAX_LONG = (1 << 63) - 1
@@ -50,7 +47,7 @@ def hashgnn(
     neighbor sketches folded with zip_with/least) — no driver state, no
     all-pairs anything."""
     per_round = max(1, dim // max(1, iterations))
-    adj = _undirected_pairs(edges) if direction == "both" else (
+    adj = _undirected_adj(edges) if direction == "both" else (
         edges.select(F.col("src").alias("v"), F.col("dst").alias("n"))
         if direction == "out"
         else edges.select(F.col("dst").alias("v"), F.col("src").alias("n"))
@@ -148,7 +145,7 @@ def graphsage(
     linear projection + ReLU (Arrow-batched, the matrix is rebuilt from
     the seed in each executor), and L2-normalises.  Captures multi-hop
     structural similarity deterministically for a fixed seed."""
-    adj = _undirected_pairs(edges).cache()
+    adj = _undirected_adj(edges).cache()
     deg = adj.groupBy(F.col("v").alias("vid")).agg(F.count("*").alias("d"))
     noise = [
         (F.xxhash64("vid", F.lit(seed), F.lit(i)) % 1000003).cast("double")
@@ -207,7 +204,7 @@ def hierarchical_clustering(
     from arcadedb_spark.graph.algorithms_extra3 import knn_similarity
     from arcadedb_spark.graph.algorithms_more import mst
 
-    verts = _undirected_pairs(edges).select(
+    verts = _undirected_adj(edges).select(
         F.col("v").alias("vid")
     ).distinct().cache()
     n_verts = verts.count()

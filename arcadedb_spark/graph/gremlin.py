@@ -31,6 +31,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.graph.superstep import Supersteps
+
 _REPEAT_CAP = 100
 
 
@@ -320,9 +322,8 @@ class GraphTraversal:
         ``until`` is a filtering sub-traversal evaluated AFTER each
         iteration (TinkerPop post-loop until): traversers it keeps stop,
         the rest loop.  ``emit`` collects every intermediate frontier.
-        Distributed form: each iteration is one join superstep; lineage
-        is truncated every few supersteps like every other iterative
-        operator in this repo."""
+        Distributed form: each ``until`` iteration is one join superstep
+        on the shared superstep driver (``graph/superstep.py``)."""
         out_frames: list[DataFrame] = []
         cur = self
         if emit:
@@ -336,8 +337,10 @@ class GraphTraversal:
         else:
             if until is None:
                 raise ValueError("repeat() needs times= or until=")
+            ss = Supersteps(accumulating=True)
+            hops = None  # every iteration's flagged traversers, tagged __it
             for i in range(_REPEAT_CAP):
-                cur = sub(cur)
+                hopped = sub(cur)
                 # TinkerPop until(pred): a traverser STOPS when the
                 # predicate traversal yields anything for it — existence
                 # keyed by source vid for every sub shape (a filter sub
@@ -345,30 +348,46 @@ class GraphTraversal:
                 # hopped frame must never be emitted as the stopped
                 # traversers, and a column-set heuristic would misfire on
                 # same-schema hops like a Customer→Customer edge)
-                tagged = cur._wrap(
-                    cur._df.withColumn("__usrc", F.col("vid")), cur._label
+                tagged = hopped._wrap(
+                    hopped._df.withColumn("__usrc", F.col("vid")),
+                    hopped._label,
                 )
                 u2 = until(tagged)
                 u2df = u2._df if isinstance(u2, GraphTraversal) else u2
                 produced = (
-                    u2df.select(F.col("__usrc").alias("vid")).distinct()
+                    u2df.select(F.col("__usrc").alias("vid"))
+                    .distinct()
+                    .withColumn("__stop", F.lit(True))
                 )
-                # semi/anti joins preserve bag multiplicity; the stop
-                # decision is per vertex, so duplicates stop together
-                stopped_df = cur._df.join(produced, "vid", "left_semi")
-                out_frames.append(stopped_df)
-                continuing = cur._df.join(produced, "vid", "left_anti")
-                cur = cur._wrap(continuing, cur._label)
-                if i % 4 == 3:
-                    cur = cur._wrap(cur._df.truncate_plan(), cur._label)
-                if cur._df.isEmpty():
+                # a left join to the distinct stop keys keeps bag
+                # multiplicity; the stop decision is per vertex, so
+                # duplicates stop together
+                flagged = hopped._df.join(produced, "vid", "left").select(
+                    *[F.col(f"`{c}`") for c in hopped._df.columns],
+                    F.col("__stop").isNotNull().alias("__stop"),
+                    F.lit(i).alias("__it"),
+                )
+                live = ss.step(flagged, F.count(F.when(~F.col("__stop"), 1)))[0]
+                grown = flagged if hops is None else hops.unionByName(
+                    flagged, allowMissingColumns=True
+                )
+                hops = ss.carry(grown)
+                if hops is not grown:
+                    # the truncation also cuts the frontier's lineage
+                    flagged = hops.filter(F.col("__it") == i)
+                continuing = flagged.filter(~F.col("__stop")).drop("__stop", "__it")
+                cur = hopped._wrap(continuing, hopped._label)
+                if not live:
                     break
-                if emit:
-                    out_frames.append(cur._df)
             else:
+                ss.finish(hops.limit(0))  # release; nothing to pin
                 raise ValueError(
                     f"repeat().until() exceeded {_REPEAT_CAP} iterations"
                 )
+            hops = ss.finish(hops)
+            if not emit:
+                hops = hops.filter(F.col("__stop"))
+            out_frames.append(hops.drop("__stop", "__it"))
         res = out_frames[0]
         for fr in out_frames[1:]:
             res = res.unionByName(fr, allowMissingColumns=True)

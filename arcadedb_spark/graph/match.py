@@ -23,6 +23,7 @@ import itertools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.translator import Ctx, ExprCompiler, TranslateError, Translator
 
@@ -266,7 +267,7 @@ def _expand(
         # so the frontier drains and the loop terminates.
         # Scale note: path counts can grow combinatorially — bounded hops
         # are strongly recommended on large graphs; each superstep is one
-        # distributed self-join, checkpointed every 4 hops.
+        # distributed self-join on the shared superstep driver.
         from pyspark.sql.types import ArrayType, StructType
 
         vname = f"__pvids_{alias}"
@@ -322,10 +323,12 @@ def _expand(
                 F.array(F.col("__rel")).alias(rname),
                 F.array(F.col("__eid")).alias(iname),
                 F.array(F.col("__dir")).alias(dname),
+                F.lit(1).alias("__hop"),
             ).cache()
-            frontier = one
-            if step.min_hops <= 1:
-                selected.append(one)
+            # every hop's paths, tagged with the hop; the frontier is the
+            # newest hop
+            frontier = paths = one
+            ss = Supersteps(accumulating=True)
             h = 1
             # unbounded (*) expansion superstep cap: edge-uniqueness bounds
             # path length by |E|, but pathological graphs could need huge
@@ -363,17 +366,17 @@ def _expand(
                         F.concat(
                             F.col(f"r.{dname}"), F.array(F.col("s.__dir"))
                         ).alias(dname),
+                        F.lit(h).alias("__hop"),
                     )
                 )
-                if h % 4 == 0:
-                    frontier = frontier.truncate_plan()
-                else:
-                    frontier = frontier.cache()
-                if frontier.isEmpty():
+                if ss.step(frontier, F.count(F.lit(1)))[0] == 0:
                     drained = True
                     break
-                if h >= max(step.min_hops, 1):
-                    selected.append(frontier)
+                grown = paths.unionByName(frontier)
+                paths = ss.carry(grown)
+                if paths is not grown:
+                    # the truncation also cuts the frontier's lineage
+                    frontier = paths.filter(F.col("__hop") == h)
             if unbounded and not drained and h >= cap:
                 # probe one more expansion: only a LIVE frontier means
                 # paths were actually dropped (a longest path of exactly
@@ -386,6 +389,9 @@ def _expand(
                     ),
                 )
                 if not probe.isEmpty():
+                    ss.finish(paths.limit(0))  # release; nothing to pin
+                    one.unpersist()
+                    base.unpersist()
                     raise TranslateError(
                         f"unbounded var-length expansion exceeded {cap} "
                         "hops with paths still growing — results would "
@@ -393,6 +399,13 @@ def _expand(
                         "arcadedb.match.maxVarLengthHops or bound the "
                         "pattern (*..n)"
                     )
+            paths = ss.finish(paths)
+            one.unpersist()
+            selected.append(
+                paths.filter(F.col("__hop") >= max(step.min_hops, 1))
+                .drop("__hop")
+            )
+        base.unpersist()
         if not selected:
             edge = db.spark.createDataFrame(
                 [], StructType(

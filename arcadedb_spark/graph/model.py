@@ -1240,30 +1240,10 @@ class GraphModel:
         )
         # INTERACTED is derived (global window over events) — cache the
         # result so algorithms/traversals don't replay the derivation
+        # (Database.open's prewarm thread fills it)
         inter = inter.cache()
         g.add_edges(
             "INTERACTED", inter, "__src", "__dst", props=["weight"],
             src_label="Customer", dst_label="Customer",
         )
-        # Background-materialize the derived edge cache: Spark schedules
-        # jobs from multiple threads concurrently, so the derivation
-        # overlaps whatever query triggered the graph build instead of
-        # landing cold on the first traversal/algorithm that touches
-        # INTERACTED.  Same pattern a real engine uses to warm a derived
-        # adjacency/materialized view off the query critical path.
-        if (
-            str(db.spark.conf.get("arcadedb.graph.prewarmDerived", "true"))
-            .lower() == "true"
-        ):
-            import threading
-
-            def _warm(frame=inter):
-                try:
-                    frame.count()
-                except Exception:
-                    pass  # session shut down mid-warm — harmless
-
-            threading.Thread(
-                target=_warm, name="arcadedb-prewarm-interacted", daemon=True
-            ).start()
         return g

@@ -11,8 +11,9 @@ the reference streams the procedure per input row (CallStep.java:71);
 here the start SET drives ONE distributed BFS and the results join back
 on the start vid, so cardinality matches without a per-row loop.
 
-Scale posture: expansions are frontier equi-joins against the edge frame
-(plan truncated per hop); simple-path enumeration is bounded by node
+Scale posture: expansions are frontier equi-joins against the edge frame,
+one superstep per hop on the shared superstep driver
+(``graph/superstep.py``); simple-path enumeration is bounded by node
 uniqueness within a path, spanning trees by global first-arrival.
 """
 
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.procedures import PROCEDURES, procedure
+from arcadedb_spark.graph.superstep import Supersteps
 
 # name → fn(db, args, frame, params) -> (DataFrame, yield_cols)
 # When frame is None (standalone CALL) the result carries only yield_cols.
@@ -117,14 +119,14 @@ def _paths_bfs(db, starts, rel_types, labels, min_d, max_d,
             und = und.join(
                 allowed.withColumnRenamed("vid", "dst"), "dst", "left_semi"
             )
-    und = und.distinct()
-    frontier = starts.select(
-        "__start",
-        F.array(F.col("__start")).alias("vids"),
-        F.col("__start").alias("__last"),
-    )
-    out = frontier.select("__start", "vids") if min_d <= 0 else None
-    seen = starts.select("__start", F.col("__start").alias("v"))
+    und = und.distinct().cache()
+    roots = starts.select("__start", F.array(F.col("__start")).alias("vids"))
+    frontier = roots.withColumn("__last", F.col("__start"))
+    # every hop's paths, tagged with the hop: the frontier is the newest
+    # hop and, when spanning, the (start, node) pairs seen so far are all
+    # of them (a path never returns to its start: `vids` holds it)
+    paths = None
+    ss = Supersteps(accumulating=True)
     depth = 0
     while depth < max_d:
         depth += 1
@@ -141,10 +143,11 @@ def _paths_bfs(db, starts, rel_types, labels, min_d, max_d,
             # first arrival wins, one path per (start, node); the pick is
             # deterministic (min path signature) where the reference's
             # queue order is incidental
-            nxt = nxt.join(
-                seen.withColumnRenamed("v", "__last"),
-                ["__start", "__last"], "left_anti",
-            )
+            if paths is not None:
+                nxt = nxt.join(
+                    paths.select("__start", "__last"),
+                    ["__start", "__last"], "left_anti",
+                )
             nxt = (
                 nxt.groupBy("__start", "__last")
                 .agg(F.min_by("vids", F.concat_ws(",", F.transform(
@@ -152,26 +155,22 @@ def _paths_bfs(db, starts, rel_types, labels, min_d, max_d,
                 ))).alias("vids"))
                 .select("__start", "vids", "__last")
             )
-        nxt = nxt.truncate_plan()
-        if nxt.isEmpty():
+        nxt = nxt.withColumn("__depth", F.lit(depth))
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        if spanning:
-            seen = seen.unionByName(
-                nxt.select("__start", F.col("__last").alias("v"))
-            ).truncate_plan()
-        frontier = nxt
-        if depth >= min_d:
-            part = frontier.select("__start", "vids")
-            out = part if out is None else out.unionByName(part)
-    if out is None:
-        from pyspark.sql.types import (
-            ArrayType, LongType, StructField, StructType,
+        grown = nxt if paths is None else paths.unionByName(nxt)
+        paths = ss.carry(grown)
+        # a truncation also cuts the frontier's lineage
+        frontier = nxt if paths is grown else paths.filter(
+            F.col("__depth") == depth
         )
-
-        out = db.spark.createDataFrame([], StructType([
-            StructField("__start", LongType()),
-            StructField("vids", ArrayType(LongType())),
-        ]))
+    paths = ss.finish(paths)
+    und.unpersist()
+    out = roots if min_d <= 0 else roots.limit(0)
+    if paths is not None:
+        out = out.unionByName(
+            paths.filter(F.col("__depth") >= min_d).select("__start", "vids")
+        )
     res = out.select(
         "__start",
         F.struct(
@@ -269,9 +268,11 @@ def _reachable(db, starts, rel_types, labels, max_d) -> DataFrame:
             und = und.join(
                 allowed.withColumnRenamed("vid", "dst"), "dst", "left_semi"
             )
-    und = und.distinct()
-    seen = starts.select("__start", F.col("__start").alias("v"))
-    frontier = seen
+    und = und.distinct().cache()
+    frontier = seen = roots = starts.select(
+        "__start", F.col("__start").alias("v"), F.lit(0).alias("__depth")
+    ).cache()
+    ss = Supersteps(accumulating=True)
     depth = 0
     while depth < max_d:
         depth += 1
@@ -280,12 +281,19 @@ def _reachable(db, starts, rel_types, labels, max_d) -> DataFrame:
             .select("__start", F.col("dst").alias("v"))
             .distinct()
             .join(seen, ["__start", "v"], "left_anti")
-            .truncate_plan()
+            .withColumn("__depth", F.lit(depth))
         )
-        if nxt.isEmpty():
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        seen = seen.unionByName(nxt).truncate_plan()
-        frontier = nxt
+        grown = seen.unionByName(nxt)
+        seen = ss.carry(grown)
+        # a truncation also cuts the frontier's lineage
+        frontier = nxt if seen is grown else seen.filter(
+            F.col("__depth") == depth
+        )
+    seen = ss.finish(seen).drop("__depth")
+    roots.unpersist()
+    und.unpersist()
     return seen
 
 

@@ -1,4 +1,6 @@
-"""One lifecycle for every Pregel-style superstep loop in graph/algorithms*.
+"""One lifecycle for the superstep and frontier loops in graph/: the
+algorithms, TRAVERSE's distributed mode, MATCH/Cypher var-length
+expansion, Gremlin ``repeat().until()`` and the ``path.*`` procedures.
 
 A superstep is one DataFrame plan.  What each loop used to repeat by hand
 lives here instead:
@@ -31,7 +33,7 @@ wrappers of those methods (the benchmark's tracer) see every call.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, Observation, Row
 
 # 5 keeps a 10-iteration PageRank at two truncations.
 CHECKPOINT_EVERY = 5
@@ -59,7 +61,16 @@ class Supersteps:
         on it -- the superstep's one Spark action.  A loop without a
         per-superstep scalar skips ``step`` and only calls ``carry``."""
         frame.persist()
-        row = frame.agg(*aggregates).collect()[0]
+        # the aggregates are observed metrics of a no-op write, so the job
+        # that fills the cache computes them: ``frame.agg(...)`` would add
+        # a shuffle stage, which AQE runs as a job of its own
+        seen = Observation()
+        names = [f"_{i}" for i in range(len(aggregates))]
+        frame.observe(
+            seen, *[a.alias(n) for a, n in zip(aggregates, names)]
+        ).write.format("noop").mode("overwrite").save()
+        metrics = seen.get
+        row = Row(**{n: metrics[n] for n in names})
         if not self._accumulating:
             self._release()
         self._cached.append(frame)

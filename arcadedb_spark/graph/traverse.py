@@ -25,13 +25,12 @@ not graph size:
   vertex cannot blow up the collect.
 - **Distributed mode**: the moment the frontier outgrows
   ``_DRIVER_FRONTIER_MAX`` (or the roots already do), state spills to
-  DataFrames and the classic frontier-join loop takes over: one
-  ``persist + count`` materialization per hop (the count both drives the
-  emptiness check and fully populates the cache — a ``limit(1).count()``
-  probe would leave the cache partial and recompute the hop twice),
-  distinct+anti against visited, lineage truncated every
-  ``_CHECKPOINT_EVERY`` hops so Catalyst never sees an exponentially
-  growing iterative plan.
+  DataFrames and the classic frontier-join loop takes over on the shared
+  superstep driver (``graph/superstep.py``): each hop is one persisted
+  frame whose ``count`` is its one action (it both decides termination
+  and fully populates the cache), distinct+anti against visited, and the
+  visited set is truncated on the driver's ``CHECKPOINT_EVERY`` cadence
+  so Catalyst never sees an exponentially growing iterative plan.
 """
 
 from __future__ import annotations
@@ -39,10 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.sql import ast
-from arcadedb_spark.sql.translator import Ctx, ExprCompiler, TranslateError
+from arcadedb_spark.sql.translator import Ctx, ExprCompiler, TranslateError, VarBinding
 
-_CHECKPOINT_EVERY = 4
 _DEFAULT_MAX_DEPTH = 10
 # frontier/visited ids held driver-side before spilling to DataFrames
 # (1M longs ≈ 8 MB — trivial next to any driver heap; the cap bounds the
@@ -180,7 +179,6 @@ def _while_keep(db, params, pairs, while_):
     one-partition frame — keeps the expression compiler as the single
     source of predicate semantics."""
     from arcadedb_spark.graph.model import local_df
-    from arcadedb_spark.sql.translator import VarBinding
 
     if not pairs:
         return []
@@ -245,10 +243,7 @@ def traverse(
         if result is not None:
             return result
     # roots too large, or the driver loop spilled: distributed BFS
-    visited = roots.select("vid").distinct().withColumn("depth", F.lit(0))
-    return _traverse_distributed(
-        db, visited, visited, edges, 1, max_depth, while_, params
-    )
+    return _traverse_distributed(db, roots, edges, max_depth, while_, params)
 
 
 def _traverse_driver(db, root_vids, edges, max_depth, while_, params):
@@ -279,10 +274,17 @@ def _traverse_driver(db, root_vids, edges, max_depth, while_, params):
     )
 
 
-def _traverse_distributed(
-    db, visited, frontier, edges, start_depth, max_depth, while_, params
-):
-    for depth in range(start_depth, max_depth + 1):
+def _traverse_distributed(db, roots, edges, max_depth, while_, params):
+    if while_ is not None:
+        # WHILE with $depth bound (grammar SQLParser.g4:223-230)
+        ctx = Ctx(db=db, params=params, columns=("vid", "depth"))
+        ctx.vars["depth"] = VarBinding("col", col=F.col("depth"))
+        keep = ExprCompiler(ctx).compile(while_)
+    visited = frontier = roots.select("vid").distinct().withColumn(
+        "depth", F.lit(0)
+    )
+    ss = Supersteps(accumulating=True)
+    for depth in range(1, max_depth + 1):
         nxt = (
             frontier.join(edges, frontier["vid"] == edges["__from"], "inner")
             .select(F.col("__to").alias("vid"))
@@ -292,27 +294,17 @@ def _traverse_distributed(
             "depth", F.lit(depth)
         )
         if while_ is not None:
-            ctx = Ctx(db=db, params=params, columns=("vid", "depth"))
-            # WHILE with $depth bound (grammar SQLParser.g4:223-230)
-            from arcadedb_spark.sql.translator import VarBinding
-
-            ctx.vars["depth"] = VarBinding("col", col=F.col("depth"))
-            nxt = nxt.filter(ExprCompiler(ctx).compile(while_))
-        if depth % _CHECKPOINT_EVERY == 0:
-            nxt = nxt.truncate_plan()
-        else:
-            nxt = nxt.persist()
-        # ONE action per hop: the full count both decides termination and
-        # materializes the persisted hop (limit(1).count() would leave the
-        # cache partial — the next hop's join and the visited union would
-        # then recompute the whole hop plan again)
-        if nxt.count() == 0:
+            nxt = nxt.filter(keep)
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        visited = visited.unionByName(nxt)
-        if depth % _CHECKPOINT_EVERY == 0:
-            visited = visited.truncate_plan()
-        frontier = nxt
-    return visited
+        grown = visited.unionByName(nxt)
+        visited = ss.carry(grown)
+        # a truncated visited set also cuts the frontier's lineage
+        frontier = (
+            nxt if visited is grown
+            else visited.filter(F.col("depth") == depth)
+        )
+    return ss.finish(visited)
 
 
 def translate_traverse(db, stmt: ast.TraverseStmt, params: dict) -> DataFrame:

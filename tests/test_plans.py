@@ -123,7 +123,7 @@ def test_no_unbounded_global_windows_in_algorithms():
 
 def test_algorithms_share_one_checkpoint_cadence():
     """graph/superstep.py owns the lineage-truncation cadence of every
-    superstep loop; an algorithms module defining or reading a
+    superstep and frontier loop; a graph module defining or reading a
     ``_CHECKPOINT_EVERY`` of its own would fork it again."""
     import glob
     import os
@@ -131,10 +131,36 @@ def test_algorithms_share_one_checkpoint_cadence():
     root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark", "graph")
     offenders = [
         os.path.basename(path)
-        for path in glob.glob(os.path.join(root, "algorithms*.py"))
-        if "_CHECKPOINT_EVERY" in open(path).read()
+        for path in glob.glob(os.path.join(root, "*.py"))
+        if os.path.basename(path) != "superstep.py"
+        and "_CHECKPOINT_EVERY" in open(path).read()
     ]
     assert not offenders, f"per-module checkpoint cadence in: {offenders}"
+
+
+def test_frontier_loops_truncate_only_through_supersteps():
+    """The query skins' frontier loops leave truncation to
+    ``Supersteps.carry``/``finish``: a ``truncate_plan()`` call inside a
+    ``for``/``while`` body is a private cadence (or a per-hop parquet
+    round trip) again."""
+    import ast
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark", "graph")
+    offenders = []
+    for name in ("traverse.py", "match.py", "gremlin.py", "procedures_path.py"):
+        tree = ast.parse(open(os.path.join(root, name)).read())
+        for loop in ast.walk(tree):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for node in ast.walk(loop):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "truncate_plan"
+                ):
+                    offenders.append(f"{name}:{node.lineno}")
+    assert not offenders, f"truncate_plan() inside a loop at: {sorted(set(offenders))}"
 
 
 def test_algorithms_fire_no_discarded_count_probes():
