@@ -146,7 +146,7 @@ def shortest_paths(
     frontier = dist
     # traverse edges BACKWARD so distance is vid→landmark
     back = edges.select(F.col("dst").alias("from"), F.col("src").alias("to")).distinct().cache()
-    ss = Supersteps(accumulating=True)
+    ss = Supersteps(level="distance")
     for depth in range(1, max_depth + 1):
         nxt = (
             frontier.join(back, frontier["vid"] == back["from"], "inner")
@@ -165,7 +165,7 @@ def shortest_paths(
         if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
         dist = ss.carry(dist.unionByName(nxt))
-        frontier = nxt
+        frontier = ss.frontier
     dist = ss.finish(dist)
     back.unpersist()
     return dist
@@ -548,14 +548,12 @@ def strongly_connected_components(
         # the backward phase probes `color` every level
         color = ss.finish(color)
         # 2) backward reachability from each color root, within the color
-        roots = color.filter(F.col("vid") == F.col("color")).select(
-            "vid", "color"
+        scc = frontier = color.filter(F.col("vid") == F.col("color")).select(
+            "vid", "color", F.lit(0).alias("level")
         )
-        scc = roots
-        frontier = roots
         back = e.select(F.col("dst").alias("from"), F.col("src").alias("to"))
-        ss = Supersteps(accumulating=True)
-        for _ in range(max_inner):
+        ss = Supersteps(level="level")
+        for level in range(1, max_inner + 1):
             nxt = (
                 frontier.join(back, frontier["vid"] == back["from"], "inner")
                 .select(F.col("to").alias("vid"), "color")
@@ -565,11 +563,13 @@ def strongly_connected_components(
             nxt = nxt.join(
                 color.withColumnRenamed("color", "c2"), "vid"
             ).filter(F.col("color") == F.col("c2")).select("vid", "color")
-            nxt = nxt.join(scc.select("vid"), "vid", "left_anti")
+            nxt = nxt.join(scc.select("vid"), "vid", "left_anti").withColumn(
+                "level", F.lit(level)
+            )
             if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
                 break
             scc = ss.carry(scc.unionByName(nxt))
-            frontier = nxt
+            frontier = ss.frontier
         # accumulate lazily: per-round results are truncated frames already,
         # so the union stays a cheap scan-union (the old per-round
         # truncate_plan of `assigned` rewrote the full accumulated set

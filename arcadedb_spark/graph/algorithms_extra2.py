@@ -32,24 +32,29 @@ def all_simple_paths(
     regardless of path count.  Returns (path array<long>)."""
     e = edges.select("src", "dst").distinct().cache()
     spark = edges.sparkSession
-    frontier = spark.createDataFrame([(source, [source])], "vid long, path array<long>")
-    out = frontier.filter(F.col("vid") == target).select("path")
-    # `out` accumulates every frontier's hits, so frontiers stay cached
-    # until the cadence truncates `out`
-    ss = Supersteps(accumulating=True)
-    for _ in range(max_depth):
-        frontier = (
+    # every hop's paths, tagged with the hop; a path stops at the target
+    paths = frontier = spark.createDataFrame(
+        [(source, [source], 0)], "vid long, path array<long>, hop int"
+    )
+    ss = Supersteps(level="hop")
+    for hop in range(1, max_depth + 1):
+        nxt = (
             frontier.filter(F.col("vid") != target)
             .join(e, frontier["vid"] == e["src"], "inner")
             .filter(~F.array_contains("path", F.col("dst")))
-            .select(F.col("dst").alias("vid"), F.concat("path", F.array("dst")).alias("path"))
+            .select(
+                F.col("dst").alias("vid"),
+                F.concat("path", F.array("dst")).alias("path"),
+                F.lit(hop).alias("hop"),
+            )
         )
-        if ss.step(frontier, F.count(F.lit(1)))[0] == 0:
+        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        out = ss.carry(out.unionByName(frontier.filter(F.col("vid") == target).select("path")))
-    out = ss.finish(out)
+        paths = ss.carry(paths.unionByName(nxt))
+        frontier = ss.frontier
+    paths = ss.finish(paths)
     e.unpersist()
-    return out
+    return paths.filter(F.col("vid") == target).select("path")
 
 
 def graph_coloring(edges: DataFrame, max_colors: int = 64) -> DataFrame:

@@ -138,13 +138,11 @@ def _bfs_forest(edges: DataFrame, max_depth: int = 64):
     reached.  O(diameter) supersteps, frontier-parallel."""
     adj = _undirected_adj(edges).cache()
     comp = connected_components(edges)
-    roots = comp.filter(F.col("vid") == F.col("component")).select("vid")
-    visited = roots.select(
+    visited = frontier = comp.filter(F.col("vid") == F.col("component")).select(
         "vid", F.lit(0).alias("level"), F.lit(None).cast("long").alias("parent")
-    ).truncate_plan()
-    frontier = visited.select("vid")
+    )
     depth = 0
-    ss = Supersteps(accumulating=True)
+    ss = Supersteps(level="level")
     for lvl in range(1, max_depth + 1):
         nxt = (
             frontier.join(adj, frontier["vid"] == adj["v"], "inner")
@@ -158,7 +156,7 @@ def _bfs_forest(edges: DataFrame, max_depth: int = 64):
             break
         depth = lvl
         visited = ss.carry(visited.unionByName(nxt))
-        frontier = nxt.select("vid")
+        frontier = ss.frontier
     visited = ss.finish(visited)
     adj.unpersist()
     return visited.filter(F.col("parent").isNotNull()), visited, depth

@@ -363,23 +363,22 @@ def bipartite_check(edges: DataFrame, max_depth: int = 20) -> bool:
     scales to graphs with arbitrarily many components."""
     adj = _undirected_adj(edges).cache()
     comp = connected_components(edges)
-    color = comp.filter(F.col("vid") == F.col("component")).select(
-        "vid", F.lit(0).alias("color")
+    seen = frontier = comp.filter(F.col("vid") == F.col("component")).select(
+        "vid", F.lit(0).alias("depth")
     )
-    frontier = color
-    ss = Supersteps(accumulating=True)
+    ss = Supersteps(level="depth")
     for depth in range(1, max_depth + 1):
         nxt = (
             frontier.join(adj, frontier["vid"] == adj["v"], "inner")
-            .select(F.col("n").alias("vid"), F.lit(depth % 2).alias("color"))
+            .select(F.col("n").alias("vid"), F.lit(depth).alias("depth"))
             .distinct()
-            .join(color, "vid", "left_anti")
+            .join(seen, "vid", "left_anti")
         )
         if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        color = ss.carry(color.unionByName(nxt))
-        frontier = nxt
-    color = ss.finish(color)
+        seen = ss.carry(seen.unionByName(nxt))
+        frontier = ss.frontier
+    color = ss.finish(seen).select("vid", (F.col("depth") % 2).alias("color"))
     adj.unpersist()
     e = edges.select("src", "dst")
     bad = (

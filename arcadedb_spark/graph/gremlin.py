@@ -337,7 +337,7 @@ class GraphTraversal:
         else:
             if until is None:
                 raise ValueError("repeat() needs times= or until=")
-            ss = Supersteps(accumulating=True)
+            ss = Supersteps(level="__it")
             hops = None  # every iteration's flagged traversers, tagged __it
             for i in range(_REPEAT_CAP):
                 hopped = sub(cur)
@@ -368,14 +368,10 @@ class GraphTraversal:
                     F.lit(i).alias("__it"),
                 )
                 live = ss.step(flagged, F.count(F.when(~F.col("__stop"), 1)))[0]
-                grown = flagged if hops is None else hops.unionByName(
+                hops = ss.carry(flagged if hops is None else hops.unionByName(
                     flagged, allowMissingColumns=True
-                )
-                hops = ss.carry(grown)
-                if hops is not grown:
-                    # the truncation also cuts the frontier's lineage
-                    flagged = hops.filter(F.col("__it") == i)
-                continuing = flagged.filter(~F.col("__stop")).drop("__stop", "__it")
+                ))
+                continuing = ss.frontier.filter(~F.col("__stop")).drop("__stop", "__it")
                 cur = hopped._wrap(continuing, hopped._label)
                 if not live:
                     break

@@ -316,7 +316,10 @@ def _expand(
                 )
             )
         if unbounded or step.max_hops >= 1:
-            one = base.select(
+            # paths start at the bound vertices only: `__from` never
+            # changes along a path, and the closing join keeps no other
+            starts = current.select(F.col(f"{from_alias}.vid").alias("__from"))
+            one = base.join(starts.distinct(), "__from", "left_semi").select(
                 "__from",
                 "__to",
                 F.array(F.col("__from"), F.col("__to")).alias(vname),
@@ -328,7 +331,7 @@ def _expand(
             # every hop's paths, tagged with the hop; the frontier is the
             # newest hop
             frontier = paths = one
-            ss = Supersteps(accumulating=True)
+            ss = Supersteps(level="__hop")
             h = 1
             # unbounded (*) expansion superstep cap: edge-uniqueness bounds
             # path length by |E|, but pathological graphs could need huge
@@ -372,11 +375,8 @@ def _expand(
                 if ss.step(frontier, F.count(F.lit(1)))[0] == 0:
                     drained = True
                     break
-                grown = paths.unionByName(frontier)
-                paths = ss.carry(grown)
-                if paths is not grown:
-                    # the truncation also cuts the frontier's lineage
-                    frontier = paths.filter(F.col("__hop") == h)
+                paths = ss.carry(paths.unionByName(frontier))
+                frontier = ss.frontier
             if unbounded and not drained and h >= cap:
                 # probe one more expansion: only a LIVE frontier means
                 # paths were actually dropped (a longest path of exactly

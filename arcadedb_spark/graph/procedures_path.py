@@ -126,10 +126,8 @@ def _paths_bfs(db, starts, rel_types, labels, min_d, max_d,
     # hop and, when spanning, the (start, node) pairs seen so far are all
     # of them (a path never returns to its start: `vids` holds it)
     paths = None
-    ss = Supersteps(accumulating=True)
-    depth = 0
-    while depth < max_d:
-        depth += 1
+    ss = Supersteps(level="__depth")
+    for depth in range(1, max_d + 1):
         nxt = (
             frontier.join(und, frontier["__last"] == und["src"])
             .filter(~F.array_contains(F.col("vids"), F.col("dst")))
@@ -158,12 +156,8 @@ def _paths_bfs(db, starts, rel_types, labels, min_d, max_d,
         nxt = nxt.withColumn("__depth", F.lit(depth))
         if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        grown = nxt if paths is None else paths.unionByName(nxt)
-        paths = ss.carry(grown)
-        # a truncation also cuts the frontier's lineage
-        frontier = nxt if paths is grown else paths.filter(
-            F.col("__depth") == depth
-        )
+        paths = ss.carry(nxt if paths is None else paths.unionByName(nxt))
+        frontier = ss.frontier
     paths = ss.finish(paths)
     und.unpersist()
     out = roots if min_d <= 0 else roots.limit(0)
@@ -272,10 +266,8 @@ def _reachable(db, starts, rel_types, labels, max_d) -> DataFrame:
     frontier = seen = roots = starts.select(
         "__start", F.col("__start").alias("v"), F.lit(0).alias("__depth")
     ).cache()
-    ss = Supersteps(accumulating=True)
-    depth = 0
-    while depth < max_d:
-        depth += 1
+    ss = Supersteps(level="__depth")
+    for depth in range(1, max_d + 1):
         nxt = (
             frontier.join(und, frontier["v"] == und["src"])
             .select("__start", F.col("dst").alias("v"))
@@ -285,12 +277,8 @@ def _reachable(db, starts, rel_types, labels, max_d) -> DataFrame:
         )
         if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        grown = seen.unionByName(nxt)
-        seen = ss.carry(grown)
-        # a truncation also cuts the frontier's lineage
-        frontier = nxt if seen is grown else seen.filter(
-            F.col("__depth") == depth
-        )
+        seen = ss.carry(seen.unionByName(nxt))
+        frontier = ss.frontier
     seen = ss.finish(seen).drop("__depth")
     roots.unpersist()
     und.unpersist()

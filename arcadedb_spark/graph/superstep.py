@@ -34,6 +34,7 @@ wrappers of those methods (the benchmark's tracer) see every call.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Row
+from pyspark.sql import functions as F
 
 # 5 keeps a 10-iteration PageRank at two truncations.
 CHECKPOINT_EVERY = 5
@@ -44,15 +45,24 @@ class Supersteps:
 
     By default the carried state is derived from the latest frame alone
     (ranks from contributions, labels from a flagged merge), so a step
-    releases the frame before it.  With ``accumulating=True`` the state is
-    a union of every frame since the last truncation (BFS levels, path
-    hits): frames stay cached until ``carry`` truncates that union, which
-    then keeps only the newest frame -- the frontier the next step expands.
+    releases the frame before it.
+
+    With ``level="<col>"`` the state is a union of levels (BFS levels,
+    path hops) tagged in that column, each stepped frame is the next level,
+    and frames stay cached until ``carry`` truncates the union.  The next
+    step expands ``frontier``, the newest level.  A truncation cuts the
+    union's lineage, not the stepped frame's: each level anti-joins the
+    union that holds the level before, so a frontier kept as that frame
+    would double its plan per level.  After a truncation ``frontier`` is
+    the truncated union's rows at the newest level, a value ``step``
+    observes in its own job.
     """
 
-    def __init__(self, accumulating: bool = False) -> None:
+    def __init__(self, level: str | None = None) -> None:
         self.n = 0  # supersteps carried so far
-        self._accumulating = accumulating
+        self.level = level
+        self.frontier: DataFrame | None = None  # the newest level
+        self._newest = None  # max(level) of the last stepped frame
         self._cached: list[DataFrame] = []
         self._pinned: DataFrame | None = None  # what the last truncation returned
 
@@ -66,13 +76,16 @@ class Supersteps:
         # a shuffle stage, which AQE runs as a job of its own
         seen = Observation()
         names = [f"_{i}" for i in range(len(aggregates))]
-        frame.observe(
-            seen, *[a.alias(n) for a, n in zip(aggregates, names)]
-        ).write.format("noop").mode("overwrite").save()
+        observed = [a.alias(n) for a, n in zip(aggregates, names)]
+        if self.level is not None:
+            observed.append(F.max(self.level).alias("level"))
+        frame.observe(seen, *observed).write.format("noop").mode("overwrite").save()
         metrics = seen.get
         row = Row(**{n: metrics[n] for n in names})
-        if not self._accumulating:
+        if self.level is None:
             self._release()
+        else:
+            self.frontier, self._newest = frame, metrics["level"]
         self._cached.append(frame)
         return row
 
@@ -83,7 +96,11 @@ class Supersteps:
         if self.n % CHECKPOINT_EVERY:
             return state
         self._pinned = state.truncate_plan()
-        self._release(keep_newest=self._accumulating)
+        self._release()
+        if self.level is not None:
+            self.frontier = self._pinned.filter(
+                F.col(self.level) == F.lit(self._newest)
+            )
         return self._pinned
 
     def finish(self, result: DataFrame) -> DataFrame:
@@ -94,8 +111,7 @@ class Supersteps:
         self._release()
         return result
 
-    def _release(self, keep_newest: bool = False) -> None:
-        keep = self._cached[-1:] if keep_newest else []
-        for f in self._cached[: len(self._cached) - len(keep)]:
+    def _release(self) -> None:
+        for f in self._cached:
             f.unpersist()
-        self._cached = keep
+        self._cached = []

@@ -283,7 +283,7 @@ def _traverse_distributed(db, roots, edges, max_depth, while_, params):
     visited = frontier = roots.select("vid").distinct().withColumn(
         "depth", F.lit(0)
     )
-    ss = Supersteps(accumulating=True)
+    ss = Supersteps(level="depth")
     for depth in range(1, max_depth + 1):
         nxt = (
             frontier.join(edges, frontier["vid"] == edges["__from"], "inner")
@@ -297,13 +297,8 @@ def _traverse_distributed(db, roots, edges, max_depth, while_, params):
             nxt = nxt.filter(keep)
         if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
             break
-        grown = visited.unionByName(nxt)
-        visited = ss.carry(grown)
-        # a truncated visited set also cuts the frontier's lineage
-        frontier = (
-            nxt if visited is grown
-            else visited.filter(F.col("depth") == depth)
-        )
+        visited = ss.carry(visited.unionByName(nxt))
+        frontier = ss.frontier
     return ss.finish(visited)
 
 

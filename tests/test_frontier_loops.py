@@ -99,6 +99,28 @@ def test_cypher_var_length_releases_its_frames(cdb):
     assert sorted(r["n"] for r in rows) == ["b", "c", "d", "d", "e", "f"]
 
 
+def test_var_length_expands_from_its_bound_start(cdb, monkeypatch):
+    """Only paths from the bound ``a`` are expanded (seeded from every
+    edge, hops 2 and 3 step 17 paths on this graph)."""
+    from arcadedb_spark.graph.superstep import Supersteps
+
+    counts = []
+    step = Supersteps.step
+
+    def counted(self, frame, *aggregates):
+        row = step(self, frame, *aggregates)
+        counts.append(row[0])
+        return row
+
+    monkeypatch.setattr(Supersteps, "step", counted)
+    cdb.query(
+        "MATCH (a:P {name:'a'})-[:LINK*1..3]->(b) RETURN b.name AS n",
+        language="cypher",
+    ).collect()
+    # hop 2: a→b→c, a→d→e; hop 3: a→b→c→d, a→d→e→f
+    assert sum(counts) == 4
+
+
 @pytest.mark.parametrize(
     "emit, names",
     [

@@ -163,6 +163,48 @@ def test_frontier_loops_truncate_only_through_supersteps():
     assert not offenders, f"truncate_plan() inside a loop at: {sorted(set(offenders))}"
 
 
+def test_level_loops_all_have_a_plan_size_guard():
+    """Every ``Supersteps(level=...)`` loop in the package has a case in
+    the plan-size guard (``tests/test_superstep.py::LEVEL_LOOPS``, keyed by
+    module and enclosing function), so a new frontier loop cannot skip
+    it; and no call passes the ``accumulating=`` flag the level driver
+    replaced."""
+    import ast
+    import glob
+    import os
+
+    from test_superstep import LEVEL_LOOPS
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark")
+    sites, flags = set(), []
+
+    def visit(node, scope, module):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                inner = [*scope, child.name]
+            if isinstance(child, ast.Call):
+                kws = {k.arg for k in child.keywords}
+                if "accumulating" in kws:
+                    flags.append(f"{module}:{child.lineno}")
+                if (
+                    isinstance(child.func, ast.Name)
+                    and child.func.id == "Supersteps"
+                    and (child.args or "level" in kws)
+                ):
+                    sites.add(".".join([module, *scope]))
+            visit(child, inner, module)
+
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        module = os.path.basename(path)[: -len(".py")]
+        visit(ast.parse(open(path).read()), [], module)
+    assert sites == set(LEVEL_LOOPS), (
+        f"unguarded: {sorted(sites - set(LEVEL_LOOPS))}, "
+        f"stale: {sorted(set(LEVEL_LOOPS) - sites)}"
+    )
+    assert not flags, f"accumulating= at: {flags}"
+
+
 def test_algorithms_fire_no_discarded_count_probes():
     """A ``<frame>.count()`` statement whose result is thrown away (the
     ``e.count()  # materialize once`` pattern) costs a Spark job that does

@@ -1,6 +1,6 @@
 """Superstep driver (graph/superstep.py): cache bound, one action per
-superstep, truncation cadence, early stop, and no cache left behind by
-the algorithms built on it."""
+superstep, truncation cadence, early stop, no cache left behind by the
+algorithms built on it, and bounded plans in every level-driven loop."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ from arcadedb_spark.graph import algorithms as A
 from arcadedb_spark.graph import algorithms_extra as X
 from arcadedb_spark.graph import algorithms_extra2 as X2
 from arcadedb_spark.graph import algorithms_extra3 as X3
+from arcadedb_spark.graph import algorithms_more as M
 from arcadedb_spark.graph.superstep import CHECKPOINT_EVERY, Supersteps
 
 
@@ -224,3 +225,162 @@ def test_pagerank_empty_graph(spark, iterations):
     pr = A.pagerank(e, iterations=iterations)
     assert pr.columns == ["vid", "rank"]
     assert pr.collect() == []
+
+
+# Level-driven loops (``Supersteps(level=...)``): run long enough for two
+# truncations and two supersteps past the second.
+LEVELS = 2 * CHECKPOINT_EVERY + 2
+
+
+def _chain(spark, n):
+    """0 → 1 → … → n."""
+    return spark.createDataFrame(
+        [(v, v + 1) for v in range(n)], "src long, dst long"
+    )
+
+
+def _cycle(spark, n):
+    """0 → 1 → … → n−1 → 0."""
+    return spark.createDataFrame(
+        [(v, (v + 1) % n) for v in range(n)], "src long, dst long"
+    )
+
+
+@pytest.fixture(scope="module")
+def chain_db(spark):
+    """(:N {i:0})-[:NEXT]->…->(:N {i:LEVELS})."""
+    from arcadedb_spark.database import Database
+
+    db = Database(spark)
+    db.query(
+        "CREATE " + "-[:NEXT]->".join(f"(:N {{i:{i}}})" for i in range(LEVELS + 1)),
+        language="cypher",
+    ).collect()
+    return db
+
+
+def _traverse_chain(db):
+    from arcadedb_spark.graph import traverse as tv
+
+    g = db.graph()
+    roots = g.vertices("N").filter(F.col("i") == 0).select("vid")
+    edges = g.edges("NEXT").select(
+        F.col("src").alias("__from"), F.col("dst").alias("__to")
+    )
+    return tv._traverse_distributed(db, roots, edges, LEVELS, None, {})
+
+
+def _cypher(db, text):
+    return db.query(text, language="cypher")
+
+
+# one case per enclosing function of a ``Supersteps(level=...)`` call in
+# graph/ (tests/test_plans.py checks that none is missing); each runs at
+# least LEVELS supersteps on a chain or cycle
+LEVEL_LOOPS = {
+    "algorithms.shortest_paths": lambda spark, db: A.shortest_paths(
+        _chain(spark, LEVELS), [LEVELS], max_depth=LEVELS
+    ),
+    "algorithms.strongly_connected_components": lambda spark, db: (
+        A.strongly_connected_components(_cycle(spark, LEVELS + 1))
+    ),
+    "algorithms_extra3._bfs_forest": lambda spark, db: X3._bfs_forest(
+        _chain(spark, LEVELS)
+    )[1],
+    "algorithms_more.bipartite_check": lambda spark, db: M.bipartite_check(
+        _chain(spark, LEVELS)
+    ),
+    "algorithms_extra2.all_simple_paths": lambda spark, db: X2.all_simple_paths(
+        _chain(spark, LEVELS), 0, LEVELS, max_depth=LEVELS
+    ),
+    "procedures_path._paths_bfs": lambda spark, db: _cypher(
+        db,
+        "MATCH (a:N {i:0}) CALL path.expand(a, 'NEXT', null, 1, "
+        f"{LEVELS}) YIELD path RETURN length(path) AS l",
+    ),
+    "procedures_path._reachable": lambda spark, db: _cypher(
+        db,
+        "MATCH (a:N {i:0}) CALL path.subgraphNodes(a, {relationshipFilter: "
+        f"'NEXT', maxLevel: {LEVELS}}}) YIELD node RETURN node.i AS i",
+    ),
+    "match._expand": lambda spark, db: _cypher(
+        db, f"MATCH (a:N {{i:0}})-[:NEXT*1..{LEVELS + 1}]->(b) RETURN b.i AS i"
+    ),
+    "traverse._traverse_distributed": lambda spark, db: _traverse_chain(db),
+    "gremlin.GraphTraversal.repeat": lambda spark, db: db.query(
+        f"g.V('N').has('i', 0).repeat(out('NEXT')).until(has('i', {LEVELS}))"
+        ".values('i')",
+        language="gremlin",
+    ),
+}
+
+
+@pytest.fixture
+def plan_leaves(monkeypatch):
+    """Analyzed-plan leaf counts of the frames each level driver steps, one
+    list per driver.  A step whose plan has more leaves than the one
+    CHECKPOINT_EVERY supersteps before it fails at once, so a plan that
+    doubles per level stops its loop instead of exhausting the heap."""
+    series = []
+    step = Supersteps.step
+
+    def recording(self, frame, *aggregates):
+        if self.level is not None:
+            if not hasattr(self, "_leaves"):
+                self._leaves = []
+                series.append(self._leaves)
+            leaves = self._leaves
+            leaves.append(
+                frame._jdf.queryExecution().analyzed().collectLeaves().size()
+            )
+            k = len(leaves) - 1 - CHECKPOINT_EVERY
+            assert k < 0 or leaves[-1] <= leaves[k], leaves
+        return step(self, frame, *aggregates)
+
+    monkeypatch.setattr(Supersteps, "step", recording)
+    return series
+
+
+@pytest.mark.parametrize("name", list(LEVEL_LOOPS))
+def test_level_loops_keep_their_plans_bounded(spark, chain_db, plan_leaves, name):
+    out = LEVEL_LOOPS[name](spark, chain_db)
+    if isinstance(out, DataFrame):
+        assert out.collect()
+    assert max(map(len, plan_leaves)) >= LEVELS
+    for leaves in plan_leaves:
+        later = leaves[CHECKPOINT_EVERY:]
+        assert all(b <= a for a, b in zip(leaves, later)), leaves
+
+
+# Long BFS loops finish: before the frontier was re-read from the
+# truncated state, each of these doubled its plan per level and ran out
+# of driver heap well short of 32 levels.
+
+
+@pytest.mark.slow
+def test_bridges_on_a_long_chain(spark):
+    got = {(r["source"], r["target"]) for r in X3.bridges(_chain(spark, 32)).collect()}
+    assert got == {(v, v + 1) for v in range(32)}
+
+
+@pytest.mark.slow
+def test_scc_on_a_long_cycle_and_chain(spark):
+    # the forward colouring needs 31 supersteps on the cycle
+    cycle = A.strongly_connected_components(_cycle(spark, 32), max_inner=40)
+    assert {r["component"] for r in cycle.collect()} == {31}
+    chain = A.strongly_connected_components(_chain(spark, 32))
+    assert sorted(r["component"] for r in chain.collect()) == list(range(33))
+
+
+@pytest.mark.slow
+def test_bipartite_check_on_long_cycles(spark):
+    assert M.bipartite_check(_cycle(spark, 32)) is True
+    assert M.bipartite_check(_cycle(spark, 31)) is False
+
+
+@pytest.mark.slow
+def test_shortest_paths_on_a_long_chain(spark):
+    d = A.shortest_paths(_chain(spark, 32), [32], max_depth=40)
+    assert {(r["vid"], r["distance"]) for r in d.collect()} == {
+        (v, 32 - v) for v in range(33)
+    }
