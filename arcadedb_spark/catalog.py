@@ -23,6 +23,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 RID_COL = "@rid"
 TYPE_COL = "@type"
 
@@ -218,16 +220,15 @@ class Catalog:
                 (t.name, t.kind, t.bucket_id, list(t.parents))
                 for t in self._types.values()
             ]
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 rows, "name string, kind string, bucket_id int, parents array<string>"
             )
         if which == "buckets":
             rows = [(t.bucket_id, t.name) for t in self._types.values()]
-            return self.spark.createDataFrame(rows, "bucket_id int, type string")
+            return local_df(self.spark, rows, "bucket_id int, type string")
         if which == "database":
-            return self.spark.createDataFrame(
-                [(len(self._types),)], "types int"
-            )
+            return local_df(self.spark, [(len(self._types),)], "types int")
         if which == "indexes":
             # Indexes are execution no-ops on Spark (scan + pushdown
             # replaces them); registered entries are catalog metadata only.
@@ -235,7 +236,8 @@ class Catalog:
                 (name, meta["type"], list(meta["props"]), meta.get("kind", ""))
                 for name, meta in self.indexes.items()
             ]
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 rows, "name string, type string, props array<string>, kind string"
             )
         if which == "stats":
@@ -246,7 +248,8 @@ class Catalog:
                 for t in self._types.values()
                 if t.kind != "view"
             ]
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 rows, "type string, kind string, row_count long, columns int"
             )
         if which == "dictionary":
@@ -260,16 +263,14 @@ class Catalog:
                     if c not in seen:
                         seen.add(c)
                         names.append(c)
-            return self.spark.createDataFrame(
-                list(enumerate(names)), "id int, name string"
-            )
+            return local_df(self.spark, list(enumerate(names)), "id int, name string")
         if which == "materializedviews":
             rows = [
                 (t.name, str(t.properties.get("mv_refresh", "MANUAL")))
                 for t in self._types.values()
                 if t.kind == "view" and "mv_select" in t.properties
             ]
-            return self.spark.createDataFrame(rows, "name string, refresh_mode string")
+            return local_df(self.spark, rows, "name string, refresh_mode string")
         if which == "continuousaggregates":
             rows = [
                 (t.name, str(t.properties.get("ca_bucket", "")),
@@ -277,7 +278,7 @@ class Catalog:
                 for t in self._types.values()
                 if t.kind == "view" and t.properties.get("mv_refresh") == "CONTINUOUS"
             ]
-            return self.spark.createDataFrame(rows, "name string, bucket string, watermark string")
+            return local_df(self.spark, rows, "name string, bucket string, watermark string")
         if which == "graphanalyticalviews":
             # explicit GAVs (CREATE GRAPH ANALYTICAL VIEW — graph/gav.py)
             # plus one implicit row per edge type (the always-available
@@ -295,7 +296,8 @@ class Catalog:
                 g_ref, "edge_meta", {}
             ).items():
                 rows.append((etype, etype, src or "", dst or "", "IMPLICIT", -1))
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 rows,
                 "name string, edge_type string, src_type string, "
                 "dst_type string, mode string, edge_count long",

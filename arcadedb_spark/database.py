@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from arcadedb_spark.catalog import Catalog
+from arcadedb_spark.session import local_df
 
 # Natural keys for the driver testdata tables (TESTDATA.md) — used for
 # deterministic RID offsets (database/RID.java:40-47).
@@ -383,7 +384,8 @@ class Database:
                 wdf = self.command(inner, language=language, **params)
                 nw = wdf.count()
                 ew = (_t.perf_counter() - t0w) * 1000.0
-                return self.spark.createDataFrame(
+                return local_df(
+                    self.spark,
                     [(inner, language, "write (executed eagerly)", nw,
                       float(ew))],
                     "statement string, language string, plan string, "
@@ -395,7 +397,8 @@ class Database:
             from arcadedb_spark.sql.parser import parse as _parse
 
             stmt_w = _parse(inner)
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 [(inner, language,
                   f"write statement {type(stmt_w).__name__} "
                   "(executes eagerly; no cost-based plan)")],
@@ -407,14 +410,16 @@ class Database:
             df.explain("formatted")
         plan = buf.getvalue()
         if not profile:
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 [(inner, language, plan)],
                 "statement string, language string, plan string",
             )
         t0 = _t.perf_counter()
         n = df.count()
         elapsed_ms = (_t.perf_counter() - t0) * 1000.0
-        return self.spark.createDataFrame(
+        return local_df(
+            self.spark,
             [(inner, language, plan, n, float(elapsed_ms))],
             "statement string, language string, plan string, "
             "rows bigint, elapsed_ms double",

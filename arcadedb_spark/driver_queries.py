@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -533,13 +535,9 @@ def q_traverse_bfs(spark, sf_dir):
 def q_graph_bfs_hops(spark, sf_dir):
     from arcadedb_spark.graph.traverse import traverse
 
-    from arcadedb_spark.graph.model import local_df
-
     db = _db(spark, sf_dir)
     g = db.graph()
     base = db.schema.get("customer").bucket_id << 40
-    # single-slice literal frame: createDataFrame would scatter one row
-    # over defaultParallelism python tasks
     roots = local_df(spark, [(base + 7,)], "struct<vid:bigint>")
     edges = g.edges("INTERACTED").select(
         F.col("src").alias("__from"), F.col("dst").alias("__to")

@@ -18,10 +18,13 @@ correctness oracle (tolerance-based stopping is available via ``tol``).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 
 def _vertices_of(edges: DataFrame) -> DataFrame:
@@ -140,8 +143,8 @@ def shortest_paths(
     parity for hop counts).  Returns (vid, landmark, distance).
     """
     spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(v, v, 0) for v in landmarks], "vid long, landmark long, distance int"
+    dist = local_df(
+        spark, [(v, v, 0) for v in landmarks], "vid long, landmark long, distance int"
     )
     frontier = dist
     # traverse edges BACKWARD so distance is vid→landmark
@@ -186,7 +189,7 @@ def dijkstra_sssp(
     )
     e = e.cache()
     spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0.0)], "vid long, distance double")
+    dist = local_df(spark, [(source, 0.0)], "vid long, distance double")
     ss = Supersteps()
     for _ in range(max_iterations):
         relaxed = (
@@ -500,7 +503,7 @@ def closeness_centrality(
 
 
 def strongly_connected_components(
-    edges: DataFrame, max_outer: int = 10, max_inner: int = 30
+    edges: DataFrame, max_outer: int | None = None, max_inner: int | None = None
 ) -> DataFrame:
     """SCC via the coloring algorithm (AlgoSCC.java parity — same
     components, different discovery order).
@@ -510,15 +513,28 @@ def strongly_connected_components(
     as one SCC and peel it.  Scales as O(rounds · diameter) supersteps —
     the standard distributed SCC shape (vs Tarjan's inherently sequential
     stack walk in the reference).
+    Every loop runs to its fixed point.  ``max_outer`` caps the rounds and
+    ``max_inner`` the supersteps of each phase; a cap that is reached
+    before the fixed point raises ``RuntimeError`` naming it (stopping
+    there would return partial components, silently wrong).
     Returns (vid, component)."""
+
+    def _cap(name: str, limit: int | None, done: int) -> None:
+        if limit is not None and done >= limit:
+            raise RuntimeError(
+                f"strongly_connected_components: {name}={limit} reached "
+                "before the fixed point; the components would be partial"
+            )
+
     e_all = edges.select("src", "dst").distinct().cache()
     remaining = _vertices_of(edges).persist()
     n_remaining = remaining.count()
     spark = edges.sparkSession
-    assigned = spark.createDataFrame([], "vid long, component long")
-    for _ in range(max_outer):
-        if n_remaining == 0:
-            break
+    assigned = local_df(spark, [], "vid long, component long")
+    rounds = 0
+    while n_remaining:
+        _cap("max_outer", max_outer, rounds)
+        rounds += 1
         e = (
             e_all.join(remaining.withColumnRenamed("vid", "src"), "src", "left_semi")
             .join(remaining.withColumnRenamed("vid", "dst"), "dst", "left_semi")
@@ -528,7 +544,8 @@ def strongly_connected_components(
         # (nc > color) replaces a new-vs-old convergence self-join.
         color = remaining.withColumn("color", F.col("vid"))
         ss = Supersteps()
-        for _ in range(max_inner):
+        for step in itertools.count():
+            _cap("max_inner", max_inner, step)
             prop = (
                 e.join(color, e["src"] == color["vid"], "inner")
                 .groupBy(F.col("dst").alias("vid"))
@@ -553,7 +570,8 @@ def strongly_connected_components(
         )
         back = e.select(F.col("dst").alias("from"), F.col("src").alias("to"))
         ss = Supersteps(level="level")
-        for level in range(1, max_inner + 1):
+        for level in itertools.count(1):
+            _cap("max_inner", max_inner, level - 1)
             nxt = (
                 frontier.join(back, frontier["vid"] == back["from"], "inner")
                 .select(F.col("to").alias("vid"), "color")
@@ -747,7 +765,8 @@ def betweenness_centrality(
     if sources is None:
         sources = [r[0] for r in _vertices_of(edges).limit(10).collect()]
 
-    state = spark.createDataFrame(
+    state = local_df(
+        spark,
         [(s, s, 0, 1.0) for s in sources],
         "source long, vid long, dist int, sigma double",
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.algorithms import _vertices_of, connected_components
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 
 def _weighted(edges: DataFrame) -> DataFrame:
@@ -176,7 +177,8 @@ def astar(
     spark = edges.sparkSession
     # label frame; __chg marks the labels the last superstep improved,
     # which are the frontier the next one expands
-    best = spark.createDataFrame(
+    best = local_df(
+        spark,
         [(source, 0.0, [source], True)],
         "vid long, distance double, path array<long>, __chg boolean",
     )
@@ -269,7 +271,8 @@ def k_shortest_paths(
     spark = edges.sparkSession
     # __chg marks the labels added by the last superstep (the frontier);
     # an expansion adds one hop, so it never repeats a kept (vid, path)
-    state = spark.createDataFrame(
+    state = local_df(
+        spark,
         [(source, 0.0, [source], True)],
         "vid long, weight double, path array<long>, __chg boolean",
     )
@@ -350,9 +353,7 @@ def max_flow(
     for _ in range(max_augmentations):
         # BFS shortest augmenting path in the residual graph
         live = res.filter(F.col("cap") > 0)
-        frontier = spark.createDataFrame(
-            [(source, [source])], "vid long, path array<long>"
-        )
+        frontier = local_df(spark, [(source, [source])], "vid long, path array<long>")
         seen = frontier.select("vid")
         found = None
         for _d in range(max_depth):
@@ -374,7 +375,7 @@ def max_flow(
         if found is None:
             break
         path_edges = [(int(found[j]), int(found[j + 1])) for j in range(len(found) - 1)]
-        pe = spark.createDataFrame(path_edges, "src long, dst long")
+        pe = local_df(spark, path_edges, "src long, dst long")
         bottleneck = (
             res.join(F.broadcast(pe), ["src", "dst"]).agg(F.min("cap")).collect()[0][0]
         )
@@ -390,8 +391,8 @@ def max_flow(
             .select("src", "dst", (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"))
             .truncate_plan()
         )
-    return spark.createDataFrame(
-        [(total, source, sink)], "max_flow double, source_id long, sink_id long"
+    return local_df(
+        spark, [(total, source, sink)], "max_flow double, source_id long, sink_id long"
     )
 
 
@@ -429,7 +430,7 @@ def maximal_cliques(
         .cache()
     )
     spark = edges.sparkSession
-    out = spark.createDataFrame([], "clique array<long>, size int")
+    out = local_df(spark, [], "clique array<long>, size int")
     cliques = und.select(F.array("a", "b").alias("clique"))
     size = 2
     while size < max_size:

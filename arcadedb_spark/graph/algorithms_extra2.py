@@ -21,6 +21,7 @@ from arcadedb_spark.graph.algorithms import (
     connected_components,
 )
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 
 def all_simple_paths(
@@ -33,8 +34,8 @@ def all_simple_paths(
     e = edges.select("src", "dst").distinct().cache()
     spark = edges.sparkSession
     # every hop's paths, tagged with the hop; a path stops at the target
-    paths = frontier = spark.createDataFrame(
-        [(source, [source], 0)], "vid long, path array<long>, hop int"
+    paths = frontier = local_df(
+        spark, [(source, [source], 0)], "vid long, path array<long>, hop int"
     )
     ss = Supersteps(level="hop")
     for hop in range(1, max_depth + 1):
@@ -188,7 +189,7 @@ def vote_rank(edges: DataFrame, k: int = 10) -> DataFrame:
             )
             .truncate_plan()
         )
-    return spark.createDataFrame(elected or [], "vid long, rank int")
+    return local_df(spark, elected or [], "vid long, rank int")
 
 
 def influence_maximization(edges: DataFrame, k: int = 5) -> DataFrame:
@@ -222,9 +223,7 @@ def influence_maximization(edges: DataFrame, k: int = 5) -> DataFrame:
             )
             .truncate_plan()
         )
-    return spark.createDataFrame(
-        chosen or [], "vid long, rank int, marginal_gain double"
-    )
+    return local_df(spark, chosen or [], "vid long, rank int, marginal_gain double")
 
 
 def modularity_score(edges: DataFrame, communities: DataFrame) -> DataFrame:
@@ -242,7 +241,8 @@ def modularity_score(edges: DataFrame, communities: DataFrame) -> DataFrame:
     spark = edges.sparkSession
     if m == 0:
         ncomm = communities.select("community").distinct().count()
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [(0.0, ncomm, 0)], "modularity double, communities long, edge_count long"
         )
     ca = communities.select(F.col("vid").alias("a"), F.col("community").alias("ca"))
@@ -271,7 +271,8 @@ def modularity_score(edges: DataFrame, communities: DataFrame) -> DataFrame:
         .collect()[0][0]
     )
     ncomm = communities.select("community").distinct().count()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(float(q or 0.0), ncomm, m)],
         "modularity double, communities long, edge_count long",
     )
@@ -296,7 +297,7 @@ def max_k_cut(edges: DataFrame, k: int = 2, max_iterations: int = 10) -> DataFra
         "community", F.pmod(F.xxhash64("vid"), F.lit(k)).cast("int")
     )
     spark = edges.sparkSession
-    parts_df = spark.createDataFrame([(i,) for i in range(k)], "community int")
+    parts_df = local_df(spark, [(i,) for i in range(k)], "community int")
     quiet = 0
     ss = Supersteps()
     for i in range(1, max_iterations + 1):

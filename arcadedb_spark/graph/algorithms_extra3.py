@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from arcadedb_spark.graph.algorithms import _undirected_adj, connected_components
 from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 
 def _capped_edge_list(edges: DataFrame, max_edges: int, what: str):
@@ -71,7 +72,8 @@ def bellman_ford_path(
     null."""
     e = _weighted(edges).cache()
     spark = edges.sparkSession
-    best = spark.createDataFrame(
+    best = local_df(
+        spark,
         [(source, 0.0, [source], True)],
         "vid long, distance double, path array<long>, __chg boolean",
     )
@@ -114,7 +116,8 @@ def bellman_ford_path(
     e.unpersist()  # the lazy `hit` below reads only the truncated `best`
     hit = best.filter(F.col("vid") == target)
     if neg:
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [(None, None, True)],
             "path array<long>, weight double, negativeCycle boolean",
         )
@@ -334,7 +337,7 @@ def dfs_order(
             if n not in seen:
                 stack.append((n, depth + 1))
     spark = edges.sparkSession
-    return spark.createDataFrame(order or [], "node long, depth int")
+    return local_df(spark, order or [], "node long, depth int")
 
 
 def _tarjan(pairs):
@@ -428,9 +431,7 @@ def articulation_points(
     pairs = _capped_edge_list(edges, max_edges, "algo.articulationPoints")
     arts, _ = _tarjan(pairs)
     spark = edges.sparkSession
-    return spark.createDataFrame(
-        [(v,) for v in sorted(arts)] or [], "node long"
-    )
+    return local_df(spark, [(v,) for v in sorted(arts)] or [], "node long")
 
 
 def biconnected_components(
@@ -445,7 +446,7 @@ def biconnected_components(
         (v, cid) for cid, comp in enumerate(comps) for v in sorted(comp)
     ]
     spark = edges.sparkSession
-    return spark.createDataFrame(rows or [], "node long, componentId int")
+    return local_df(spark, rows or [], "node long, componentId int")
 
 
 # ---------------------------------------------------------------------------
@@ -466,9 +467,7 @@ def bipartite_matching(
     from arcadedb_spark.graph.algorithms_more import bipartite_check
 
     spark = edges.sparkSession
-    empty = spark.createDataFrame(
-        [], "node1 long, node2 long, matchingSize int"
-    )
+    empty = local_df(spark, [], "node1 long, node2 long, matchingSize int")
     if not bipartite_check(edges, max_depth=max_depth):
         return empty
     pairs = _capped_edge_list(edges, max_edges, "algo.bipartiteMatching")
@@ -549,6 +548,4 @@ def bipartite_matching(
         sys.setrecursionlimit(old_limit)
     size = len(match_l)
     rows = [(u, v, size) for u, v in sorted(match_l.items())]
-    return spark.createDataFrame(
-        rows or [], "node1 long, node2 long, matchingSize int"
-    )
+    return local_df(spark, rows or [], "node1 long, node2 long, matchingSize int")

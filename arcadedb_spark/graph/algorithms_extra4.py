@@ -18,6 +18,7 @@ from pyspark.sql.types import ArrayType, DoubleType
 from arcadedb_spark.graph.algorithms import _undirected_adj
 from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 _MAX_LONG = (1 << 63) - 1
 
@@ -255,7 +256,8 @@ def _sssp_parents(
         )
     ).cache()
     spark = edges.sparkSession
-    best = spark.createDataFrame(
+    best = local_df(
+        spark,
         [(source, 0.0, None, True)],
         "vid long, distance double, parent long, __chg boolean",
     )
@@ -292,8 +294,8 @@ def steiner_tree(
     with per-step 1-row lookups batched across all MST edges; leaf
     pruning is iterative degree-filtering, all joins."""
     spark = edges.sparkSession
-    empty = spark.createDataFrame(
-        [], "source long, target long, weight double, totalWeight double"
+    empty = local_df(
+        spark, [], "source long, target long, weight double, totalWeight double"
     )
     terminals = sorted(set(int(t) for t in terminals))
     if len(terminals) < 2:
@@ -337,8 +339,8 @@ def steiner_tree(
     if len(mst_pairs) < len(terminals) - 1:
         return empty  # terminals not mutually reachable
     # 4. expand each closure edge (a,b) along a's predecessor chain from b
-    frontier = spark.createDataFrame(
-        [(a, b) for a, b in mst_pairs], "terminal long, cur long"
+    frontier = local_df(
+        spark, [(a, b) for a, b in mst_pairs], "terminal long, cur long"
     )
     pmap = allp.select(
         "terminal", F.col("vid").alias("cur"), "parent",
@@ -368,7 +370,7 @@ def steiner_tree(
     sub = tree_edges.distinct().join(ew, ["lo", "hi"], "inner")
     # 5. iteratively prune non-terminal leaves
     sub = sub.truncate_plan()
-    term_df = spark.createDataFrame([(t,) for t in terminals], "vid long")
+    term_df = local_df(spark, [(t,) for t in terminals], "vid long")
     for _ in range(max_iterations):
         degs = (
             sub.select(F.col("lo").alias("vid"))
@@ -419,8 +421,8 @@ def min_spanning_arborescence(
     )
 
     spark = edges.sparkSession
-    empty = spark.createDataFrame(
-        [], "source long, target long, weight double, totalWeight double"
+    empty = local_df(
+        spark, [], "source long, target long, weight double, totalWeight double"
     )
     e0 = _weighted(edges).filter(F.col("src") != F.col("dst"))
     # rows carry original identity through contractions

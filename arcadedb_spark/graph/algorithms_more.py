@@ -25,6 +25,7 @@ from arcadedb_spark.graph.algorithms import (
     triangle_count,
 )
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 
 # ---------------------------------------------------------------------------
@@ -465,7 +466,7 @@ def personalized_pagerank(
     e = edges.join(outd, "src").select(
         "src", "dst", (F.lit(1.0) / F.col("__outd")).alias("__share")
     ).cache()
-    src_df = spark.createDataFrame([(s,) for s in sources], "vid long")
+    src_df = local_df(spark, [(s,) for s in sources], "vid long")
     teleport = verts.join(src_df, "vid", "left_semi").withColumn(
         "t", F.lit(1.0 / len(sources))
     )
@@ -667,7 +668,7 @@ def mst(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
         .withColumn("component", F.col("vid"))
     )
     spark = edges.sparkSession
-    chosen = spark.createDataFrame([], "a long, b long, weight double")
+    chosen = local_df(spark, [], "a long, b long, weight double")
     ss = Supersteps()
     for _ in range(max_iterations):
         ca = comp.select(F.col("vid").alias("a"), F.col("component").alias("__ca"))

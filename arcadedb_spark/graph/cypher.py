@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 
 import itertools as _itools
 
+from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.lexer import Token
 from arcadedb_spark.sql.parser import ParseError, Parser
@@ -2517,7 +2518,6 @@ def _apply_write(
                 if bindings is not None and node.alias:
                     bindings.append((node.alias, label, vid_m, dict(pvals)))
                 rows_out.append({**pvals, "vid": vid_m})
-            from arcadedb_spark.graph.model import local_df
 
             mdf = local_df(db.spark, rows_out)
             for k, _ in comp:
@@ -2736,7 +2736,7 @@ def _apply_write(
         for alias, label, vid, state in node_state:
             if state != want or alias is None or alias not in per_alias:
                 continue
-            matched = db.spark.createDataFrame([(vid,)], "vid long")
+            matched = local_df(db.spark, [(vid,)], "vid long")
             label_ops = [
                 (prop, e) for prop, e in per_alias[alias]
                 if prop in ("@set_label", "@remove_label")
@@ -2935,9 +2935,7 @@ def _apply_write(
                     ef = ef.filter(F.col(k) == F.lit(v))
                 if match_ok and ef.limit(1).count():
                     if om:
-                        pair = db.spark.createDataFrame(
-                            [(a[1], b[1])], "src long, dst long"
-                        )
+                        pair = local_df(db.spark, [(a[1], b[1])], "src long, dst long")
                         _set_matched_edges(
                             db, g, etype, pair, om,
                             step.edge_alias, eprops, params,
@@ -3862,9 +3860,7 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
                     for lb_, vid_ in binds:
                         by_label.setdefault(lb_, []).append(vid_)
                     for blabel, vids in by_label.items():
-                        matched = db.spark.createDataFrame(
-                            [(v,) for v in vids], "vid long"
-                        )
+                        matched = local_df(db.spark, [(v,) for v in vids], "vid long")
                         n += _apply_vertex_set(
                             db, g, matched, blabel, alias, assigns,
                             replace_keys, params,
@@ -4015,8 +4011,6 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
                     # (r IN relationships(p) | DELETE r)) — the element
                     # registered as an edge binding; delete by
                     # (etype, src, dst)
-                    from arcadedb_spark.graph.model import local_df
-
                     triples = local_df(
                         db.spark,
                         [(b[1], b[2], b[3]) for b in ebinds],
@@ -4033,9 +4027,7 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
                         vid_ for (a_, _lb, vid_, _p) in write_bindings
                         if a_ == alias
                     ]
-                    matched = db.spark.createDataFrame(
-                        [(v,) for v in vids_b], "vid long"
-                    )
+                    matched = local_df(db.spark, [(v,) for v in vids_b], "vid long")
                     _check_deletable(matched)
                     n += g.remove_vertices_any(matched)
                     continue
@@ -4075,7 +4067,7 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
             # write query without RETURN: empty result (TCK create)
             from pyspark.sql.types import StructType as _ST9
 
-            return db.spark.createDataFrame([], _ST9([]))
+            return local_df(db.spark, [], _ST9([]))
         # stage-driven writes (UNWIND … CREATE …): one write pass per
         # frame row with the row's scalar columns substituted — the
         # driver-side bounded loop FOREACH already uses
@@ -4127,8 +4119,6 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
         # each pass runs with the frame scoped to ITS row: a bound-endpoint
         # CREATE reading the full frame would write one edge per frame row
         # on every pass (rows² duplication)
-        from arcadedb_spark.graph.model import local_df
-
         full_df = df
         row_frames: list = [None] * len(rows)
         for chunk, fdel in segments:
@@ -4199,7 +4189,7 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
                         **{k: props.get(k) for k in sorted(ekeys[a])},
                     })
                 out_rows.append(Row(**d))
-            df = db.spark.createDataFrame(out_rows)
+            df = local_df(db.spark, out_rows)
         df = _refresh_set_aliases(
             db, g, df, p._writes, alias_label, rel_alias
         )
@@ -4432,7 +4422,7 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
                         if a:
                             d[a] = _ent(label, vid, props)
                     out_rows.append(Row(**d))
-                df = db.spark.createDataFrame(out_rows)
+                df = local_df(db.spark, out_rows)
                 aliases = set(df.columns)
             write_bindings[nb_start:nb_start] = carried_nb
             edge_bindings[eb_start:eb_start] = carried_eb
@@ -4728,7 +4718,7 @@ def _execute_writes_inner(db, p: "CypherParser", params) -> DataFrame:
     # counts surface via the SQL DML path, not Cypher
     from pyspark.sql.types import StructType
 
-    return db.spark.createDataFrame([], StructType([]))
+    return local_df(db.spark, [], StructType([]))
 
 
 def lower_exists_block(db, text: str, outer_df, params: dict):
@@ -5001,7 +4991,7 @@ def _cypher_schema_ddl(db, p: "CypherParser", text: str,
     def _one_row(**cols):
         vals = tuple(None if v is None else str(v) for v in cols.values())
         schema = ", ".join(f"`{k}` string" for k in cols)
-        return db.spark.createDataFrame([vals], schema)
+        return local_df(db.spark, [vals], schema)
 
     if action == "DROP":
         name = p.ident()

@@ -887,7 +887,6 @@ def _arg_values(args: list) -> list:
 
 
 def _run_calls(cur, calls: list):
-    db = cur.db
     i = 0
     while i < len(calls):
         name, args = calls[i]
@@ -897,7 +896,8 @@ def _run_calls(cur, calls: list):
         if name == "as":
             name = "as_"
         if name == "count":
-            return db.spark.createDataFrame([(cur.count(),)], "count long")
+            # lazy: the one `count long` row, also for an empty traversal
+            return cur._df.groupBy().count()
         if name == "values":
             vals = _arg_values(args)
             vdf = cur.values(*vals)

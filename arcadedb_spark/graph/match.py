@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.translator import Ctx, ExprCompiler, TranslateError, Translator
 
@@ -36,7 +37,7 @@ def _vertex_df(db, type_name: str | None) -> DataFrame:
         # anonymous node: all vertices with all properties (null-padded)
         df = g.all_vertices_full()
         if df is None:
-            return db.spark.createDataFrame([], "vid long, `@type` string")
+            return local_df(db.spark, [], "vid long, `@type` string")
         return df
     if type_name.lower().startswith("bucket:"):
         # {bucket: <name|id>}: resolve the owning type (default bucket
@@ -302,7 +303,7 @@ def _expand(
         if step.min_hops == 0:
             av = g.all_vertices_full()
             if av is None:
-                ids = db.spark.createDataFrame([], "vid long")
+                ids = local_df(db.spark, [], "vid long")
             else:
                 ids = av.select("vid")
             selected.append(
@@ -407,7 +408,8 @@ def _expand(
             )
         base.unpersist()
         if not selected:
-            edge = db.spark.createDataFrame(
+            edge = local_df(
+                db.spark,
                 [], StructType(
                     base.select(
                         "__from", "__to",

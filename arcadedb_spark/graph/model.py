@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 # vid = (bucket_id << 40) | key — collision-free while keys < 2^40
 _VID_SHIFT = 40
 
@@ -30,70 +32,6 @@ def make_vid(bucket_id: int, key_col) -> F.Column:
     return (F.lit(bucket_id).cast("long") * F.lit(1 << _VID_SHIFT)) + key_col.cast(
         "long"
     )
-
-
-def local_df(spark, rows, schema=None) -> DataFrame:
-    """``createDataFrame`` over literal rows in ONE partition.
-
-    The default path slices local data into ``defaultParallelism`` pieces
-    (32 here), and every subsequent action on the frame pays a
-    Python-worker roundtrip PER SLICE — a trivial cartesian over two
-    literal frames was 32×32 tasks / ~7 s.  Schema inference stays
-    driver-side (probe frame), then the data rides a single-slice RDD."""
-    if schema is None:
-        schema = spark.createDataFrame(rows).schema
-    elif isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        schema = _parse_datatype_string(schema)
-    names = schema.names
-    if rows and isinstance(rows[0], dict):
-        data = [tuple(r.get(n) for n in names) for r in rows]
-    else:
-        data = rows
-    if not data:
-        return spark.createDataFrame([], schema)
-    # Arrow fast path for fully-atomic typed rows: the frame lands as JVM
-    # Arrow batches, so neither its creation nor later collects need a
-    # python worker (the parallelize path pays a worker round-trip per
-    # action).  Gated to non-null atomic types — pandas' None→NaN
-    # coercion and nested values keep the exact pickled path instead.
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, FloatType, IntegerType, LongType,
-        StringType,
-    )
-
-    atomic = (LongType, IntegerType, DoubleType, FloatType, StringType,
-              BooleanType)
-
-    def _val_ok(v, dt) -> bool:
-        # the value's python type must MATCH the declared column type —
-        # a mismatch (int under a string column from a heterogeneous
-        # Cypher variable) makes Arrow raise-and-fall-back, which is
-        # both a warning and the slow pickled path
-        if v is None:
-            return False
-        if isinstance(dt, BooleanType):
-            return isinstance(v, bool)
-        if isinstance(dt, (LongType, IntegerType)):
-            return isinstance(v, int) and not isinstance(v, bool)
-        if isinstance(dt, (DoubleType, FloatType)):
-            return isinstance(v, (int, float)) and not isinstance(v, bool)
-        return isinstance(v, str)  # StringType
-
-    if all(isinstance(f.dataType, atomic) for f in schema.fields) and all(
-        _val_ok(v, f.dataType)
-        for row in data for v, f in zip(row, schema.fields)
-    ):
-        try:
-            import pandas as pd
-
-            pdf = pd.DataFrame(data, columns=names)
-            return spark.createDataFrame(pdf, schema=schema)
-        except Exception:
-            pass  # fall through to the exact pickled path
-    rdd = spark.sparkContext.parallelize(data, 1)
-    return spark.createDataFrame(rdd, schema)
 
 
 def _metadata_safe(df: DataFrame) -> bool:
@@ -279,7 +217,7 @@ class GraphModel:
         self._flushing = True
         try:
             for key, rows in list(self._pending_v.items()):
-                # one createDataFrame per distinct property-key set
+                # one local frame per distinct property-key set
                 groups: dict[tuple, list[dict]] = {}
                 for r in rows:
                     groups.setdefault(tuple(sorted(r)), []).append(r)
@@ -456,7 +394,7 @@ class GraphModel:
         if not frames:
             # matching a non-existent label is an empty result, not an
             # error (Cypher semantics; TCK clauses/match)
-            return self.spark.createDataFrame([], "vid long, `@type` string")
+            return local_df(self.spark, [], "vid long, `@type` string")
         out = frames[0]
         for f_ in frames[1:]:
             out = out.unionByName(f_, allowMissingColumns=True)
@@ -540,9 +478,7 @@ class GraphModel:
         if df is None:
             # no edges in the graph: canonical empty frame (Cypher
             # relationship matches yield empty, not an error)
-            df = self.spark.createDataFrame(
-                [], "etype string, src long, dst long"
-            )
+            df = local_df(self.spark, [], "etype string, src long, dst long")
         if etypes:
             df = df.filter(F.col("etype").isin(list(etypes)))
         return df

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 PROCEDURES = {}
 
 
@@ -303,7 +305,7 @@ def _p_bipartite(db, args) -> DataFrame:
     from arcadedb_spark.graph.algorithms_more import bipartite_check
 
     ok = bipartite_check(_edges(db, args))
-    return db.spark.createDataFrame([(bool(ok),)], "is_bipartite boolean")
+    return local_df(db.spark, [(bool(ok),)], "is_bipartite boolean")
 
 
 @procedure("algo.assortativity")
@@ -312,7 +314,7 @@ def _p_assortativity(db, args) -> DataFrame:
     from arcadedb_spark.graph.algorithms_more import assortativity
 
     r = assortativity(_edges(db, args))
-    return db.spark.createDataFrame([(float(r),)], "assortativity double")
+    return local_df(db.spark, [(float(r),)], "assortativity double")
 
 
 @procedure("algo.conductance")
@@ -334,9 +336,7 @@ def _p_richclub(db, args) -> DataFrame:
 
     k = int(_num(args, 0, 2))
     r = rich_club_coefficient(_edges(db, args), k)
-    return db.spark.createDataFrame(
-        [(k, float(r))], "k int, rich_club double"
-    )
+    return local_df(db.spark, [(k, float(r))], "k int, rich_club double")
 
 
 @procedure("algo.allSimplePaths")
@@ -655,12 +655,12 @@ def _table_proc_frame(db, tp: dict, args: list) -> DataFrame:
         # VOID procedure: no columns, no rows (CALL result "empty")
         from pyspark.sql.types import StructType
 
-        return db.spark.createDataFrame([], StructType([]))
+        return local_df(db.spark, [], StructType([]))
     schema = ", ".join(
         f"`{c}` {_CYPHER_SPARK_TYPES.get(t.lower().rstrip('?'), 'string')}"
         for c, t in tp["out"]
     )
-    return db.spark.createDataFrame(out_rows, schema)
+    return local_df(db.spark, out_rows, schema)
 
 
 def normalize_proc_name(name: str) -> str:
@@ -727,9 +727,7 @@ def _p_db_labels(db, args) -> DataFrame:
         for part in disp.split(":"):
             if part:
                 labels.add(g.label_display.get(part.lower(), part))
-    return db.spark.createDataFrame(
-        [(l,) for l in sorted(labels)], "label string"
-    )
+    return local_df(db.spark, [(l,) for l in sorted(labels)], "label string")
 
 
 @procedure("db.relationshipTypes")
@@ -741,9 +739,7 @@ def _p_db_rel_types(db, args) -> DataFrame:
             r["etype"]
             for r in g.edges().select("etype").distinct().collect()
         })
-    return db.spark.createDataFrame(
-        [(t,) for t in types], "relationshipType string"
-    )
+    return local_df(db.spark, [(t,) for t in types], "relationshipType string")
 
 
 @procedure("db.propertyKeys")
@@ -762,11 +758,9 @@ def _p_db_prop_keys(db, args) -> DataFrame:
                 "src", "dst", "etype",
             )
         )
-    return db.spark.createDataFrame(
-        [(k,) for k in sorted(keys)], "propertyKey string"
-    )
+    return local_df(db.spark, [(k,) for k in sorted(keys)], "propertyKey string")
 
 
 @procedure("db.ping")
 def _p_db_ping(db, args) -> DataFrame:
-    return db.spark.createDataFrame([(True,)], "ok boolean")
+    return local_df(db.spark, [(True,)], "ok boolean")

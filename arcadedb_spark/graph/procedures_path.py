@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.procedures import PROCEDURES, procedure
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 
 # name → fn(db, args, frame, params) -> (DataFrame, yield_cols)
 # When frame is None (standalone CALL) the result carries only yield_cols.
@@ -63,8 +64,6 @@ def _split_filter(v) -> "list[str] | None":
 def _resolve_starts(db, arg, frame):
     """Start-node argument → one-column frame (__start long).  A string
     names a bound node variable of the pipeline frame; an int is a vid."""
-    from arcadedb_spark.graph.model import local_df
-
     if isinstance(arg, str) and frame is not None and arg in frame.columns:
         return (
             frame.select(F.col(f"`{arg}`.vid").alias("__start"))
@@ -543,7 +542,8 @@ def _p_meta_stats(db, args) -> DataFrame:
             {k: int(v) for k, v in rel_counts.items()},
         ),
     )
-    df = db.spark.createDataFrame(
+    df = local_df(
+        db.spark,
         list(row),
         "labelCount int, relTypeCount int, nodeCount bigint, "
         "relCount bigint, labels map<string,bigint>, "
@@ -653,7 +653,8 @@ def _p_meta_ntp(db, args) -> DataFrame:
                 disp, f_.name, [_cy_type(f_.dataType)],
                 bool(spec.get("mandatory", False)),
             ))
-    return db.spark.createDataFrame(
+    return local_df(
+        db.spark,
         sorted(rows),
         "nodeType string, propertyName string, "
         "propertyTypes array<string>, mandatory boolean",
@@ -675,7 +676,8 @@ def _p_meta_rtp(db, args) -> DataFrame:
                 continue
             for et in etypes:
                 rows.append((et, f_.name, [_cy_type(f_.dataType)], False))
-    return db.spark.createDataFrame(
+    return local_df(
+        db.spark,
         sorted(rows),
         "relType string, propertyName string, "
         "propertyTypes array<string>, mandatory boolean",

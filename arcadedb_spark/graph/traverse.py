@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.superstep import Supersteps
+from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.translator import Ctx, ExprCompiler, TranslateError, VarBinding
 
@@ -163,12 +164,7 @@ def _expand_driver(edges: DataFrame, frontier: "set[int]") -> "list[int]":
             )
         )
     else:
-        import pandas as pd
-
-        # Arrow path: the frame lands JVM-side without python workers
-        fdf = spark.createDataFrame(
-            pd.DataFrame({"__from": [int(v) for v in frontier]})
-        )
+        fdf = local_df(spark, [(int(v),) for v in frontier], "__from long")
         hits = edges.join(F.broadcast(fdf), "__from", "left_semi")
     row = hits.agg(F.collect_set("__to").alias("ns")).collect()[0]
     return row["ns"] or []
@@ -178,8 +174,6 @@ def _while_keep(db, params, pairs, while_):
     """Apply the WHILE predicate to driver-side (vid, depth) pairs via a
     one-partition frame — keeps the expression compiler as the single
     source of predicate semantics."""
-    from arcadedb_spark.graph.model import local_df
-
     if not pairs:
         return []
     df = local_df(db.spark, pairs, "struct<vid:bigint,depth:int>")
@@ -232,7 +226,6 @@ def traverse(
                     for v in nxt:
                         visited[v] = depth
                     frontier = nxt
-                from arcadedb_spark.graph.model import local_df
 
                 return local_df(
                     db.spark, list(visited.items()), "struct<vid:bigint,depth:int>"
@@ -251,8 +244,6 @@ def _traverse_driver(db, root_vids, edges, max_depth, while_, params):
     if the frontier outgrew ``_DRIVER_FRONTIER_MAX`` mid-walk (the
     caller restarts distributed — bounded rework: at most one extra
     sub-threshold prefix of the walk)."""
-    from arcadedb_spark.graph.model import local_df
-
     visited: dict[int, int] = {int(v): 0 for v in root_vids}
     frontier = set(visited)
     for depth in range(1, max_depth + 1):

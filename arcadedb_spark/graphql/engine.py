@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 
 @dataclass
 class GQLField:
@@ -171,7 +173,7 @@ def graphql_command(db, typedefs: str) -> DataFrame:
     if "Query" not in types:
         raise ValueError("GraphQL schema needs a 'type Query'")
     db._graphql_types = types
-    return db.spark.createDataFrame([(len(types),)], "types long")
+    return local_df(db.spark, [(len(types),)], "types long")
 
 
 def _scalar_fields(db, t: GQLType) -> list[str]:

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 _SCHEMA = "key string, value string"
 
 
@@ -32,7 +34,7 @@ class KeyValueStore:
         self._writes = 0
         if not db.schema.exists(type_name):
             db.schema.register(
-                type_name, db.spark.createDataFrame([], _SCHEMA), key="key"
+                type_name, local_df(db.spark, [], _SCHEMA), key="key"
             )
 
     def _df(self):
@@ -53,21 +55,26 @@ class KeyValueStore:
 
     def set(self, key: str, value) -> None:
         """SET — upsert one key."""
-        new = self.db.spark.createDataFrame([(key, str(value))], _SCHEMA)
+        new = local_df(self.db.spark, [(key, str(value))], _SCHEMA)
         self._replace(
             self._df().filter(F.col("key") != key).unionByName(new)
         )
 
     def mset(self, mapping: dict) -> None:
-        new = self.db.spark.createDataFrame(
-            [(k, str(v)) for k, v in mapping.items()], _SCHEMA
+        new = local_df(
+            self.db.spark, [(k, str(v)) for k, v in mapping.items()], _SCHEMA
         )
         self._replace(
             self._df().filter(~F.col("key").isin(list(mapping))).unionByName(new)
         )
 
+    # Point reads run ONE plain action: keys are unique (every write
+    # filters its keys out before the union), so the filter returns at
+    # most one row, and a limit(1) would let Spark's incremental take
+    # fire 2-3 jobs over a many-partition state.
+
     def get(self, key: str) -> str | None:
-        rows = self._df().filter(F.col("key") == key).limit(1).collect()
+        rows = self._df().filter(F.col("key") == key).select("value").collect()
         return rows[0]["value"] if rows else None
 
     def mget(self, keys: list[str]) -> dict:
@@ -76,7 +83,7 @@ class KeyValueStore:
         return {k: found.get(k) for k in keys}
 
     def exists(self, key: str) -> bool:
-        return bool(self._df().filter(F.col("key") == key).limit(1).count())
+        return bool(self._df().filter(F.col("key") == key).select("key").collect())
 
     def delete(self, *keys: str) -> int:
         df = self._df()
@@ -148,7 +155,7 @@ class KeyValueStore:
         if not self.db.schema.exists(hname):
             self.db.schema.register(
                 hname,
-                self.db.spark.createDataFrame([], self._HASH_SCHEMA),
+                local_df(self.db.spark, [], self._HASH_SCHEMA),
                 key="key",
             )
         return self.db.schema.get(hname).df()
@@ -171,7 +178,8 @@ class KeyValueStore:
                 (F.col("key") == key) & F.col("field").isin(list(items))
             ).select("field").collect()
         }
-        new = self.db.spark.createDataFrame(
+        new = local_df(
+            self.db.spark,
             [(key, f, str(v)) for f, v in items.items()], self._HASH_SCHEMA
         )
         self._hreplace(
@@ -184,7 +192,7 @@ class KeyValueStore:
     def hget(self, key: str, field: str) -> str | None:
         rows = self._hdf().filter(
             (F.col("key") == key) & (F.col("field") == field)
-        ).limit(1).collect()
+        ).select("value").collect()
         return rows[0]["value"] if rows else None
 
     def hmget(self, key: str, fields: list[str]) -> dict:
@@ -212,5 +220,5 @@ class KeyValueStore:
         return bool(
             self._hdf().filter(
                 (F.col("key") == key) & (F.col("field") == field)
-            ).limit(1).count()
+            ).select("key").collect()
         )

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from arcadedb_spark.session import local_df
+
 _SCHEMA = (
     "measurement string, tags map<string,string>, "
     "fields_double map<string,double>, fields_long map<string,long>, "
@@ -176,5 +178,4 @@ def line_protocol_df(
 ) -> DataFrame:
     """Parse an in-memory payload into the same schema (HTTP-ingest
     analog of server/http ... api/v1/ts endpoints)."""
-    rows = parse_text(text, precision)
-    return spark.createDataFrame(rows, _SCHEMA) if rows else spark.createDataFrame([], _SCHEMA)
+    return local_df(spark, parse_text(text, precision), _SCHEMA)

@@ -23,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.litreg import value_of
 from arcadedb_spark.sql.translator import (
@@ -43,7 +44,7 @@ def _literal_value(db, e: ast.Expr, params: dict) -> Any:
 
 
 def _result(db, n: int) -> DataFrame:
-    return db.spark.createDataFrame([(n,)], "count long")
+    return local_df(db.spark, [(n,)], "count long")
 
 
 def _content_value(db, expr, params: dict):
@@ -166,7 +167,7 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
             if tdef is None:
                 raise TranslateError(f"No bucket {b}")
             if tdef.live:
-                m = db.spark.createDataFrame([(int(pos),)], "vid long")
+                m = local_df(db.spark, [(int(pos),)], "vid long")
                 n += db.graph().remove_vertices_any(m)
             else:
                 tab = db.schema.table(tdef.name, polymorphic=False)
@@ -283,7 +284,7 @@ def _create_timeseries_type(db, stmt: ast.CreateTimeSeriesTypeStmt) -> DataFrame
     cols = [f"{stmt.timestamp_col} timestamp"]
     cols += [f"{n} {_TS_SPARK_TYPES.get(t, 'string')}" for n, t in stmt.tags]
     cols += [f"{n} {_TS_SPARK_TYPES.get(t, 'double')}" for n, t in stmt.fields]
-    empty = db.spark.createDataFrame([], ", ".join(cols))
+    empty = local_df(db.spark, [], ", ".join(cols))
     tdef = db.schema.register(stmt.name, empty)
     tdef.properties["timeseries"] = {
         "timestamp": stmt.timestamp_col,
@@ -665,7 +666,8 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
                 new_df = db.spark.range(len(rows)).drop("id")
                 rows = [{} for _ in rows]
             else:
-                new_df = db.spark.createDataFrame(
+                new_df = local_df(
+                    db.spark,
                     [tuple(r.get(k) for k in keys) for r in rows],
                     ", ".join(
                         f"`{k}` {_py_spark_type(next((r[k] for r in rows if r.get(k) not in (None, [], ())), None))}"
@@ -796,9 +798,7 @@ def _insert_bucket(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
     if not rows:
         raise TranslateError("bucket INSERT needs VALUES/SET/CONTENT")
     rows = [_validate_row(db, owner, r) for r in rows]
-    new_df = db.spark.createDataFrame(
-        [tuple(r.values()) for r in rows], list(rows[0].keys())
-    )
+    new_df = local_df(db.spark, [tuple(r.values()) for r in rows], list(rows[0].keys()))
     if meta["df"] is None:
         meta["df"] = new_df
     else:
@@ -982,7 +982,8 @@ def _update_content_array(db, tdef, stmt, rows: list, params) -> DataFrame:
         for k in r:
             if k not in keys:
                 keys.append(k)
-    content = db.spark.createDataFrame(
+    content = local_df(
+        db.spark,
         [tuple([i] + [r.get(k) for k in keys]) for i, r in enumerate(rows)],
         ", ".join(["__ci long"] + [
             f"`{k}` {_py_spark_type(next((r[k] for r in rows if r.get(k) is not None), None))}"
@@ -1179,7 +1180,7 @@ def _update(db, stmt: ast.UpdateStmt, params: dict) -> DataFrame:
         # UPSERT: no match → insert one document from the SET items
         # (UpsertStep.java:37)
         row = {p: _literal_value(db, e, params) for p, e in set_items}
-        ins = db.spark.createDataFrame([tuple(row.values())], list(row.keys()))
+        ins = local_df(db.spark, [tuple(row.values())], list(row.keys()))
         new_df = base.unionByName(ins, allowMissingColumns=True)
         ret_after = ins
         matched = 1
@@ -1367,7 +1368,7 @@ def _create_type(db, stmt: ast.CreateTypeStmt) -> DataFrame:
         return _result(db, 1)
     tdef = db.schema.register(
         stmt.name,
-        loader=lambda: db.spark.createDataFrame([], "dummy string").limit(0).drop("dummy"),
+        loader=lambda: local_df(db.spark, [], "dummy string").limit(0).drop("dummy"),
         kind=stmt.kind,
         parents=parents,
     )
@@ -1432,8 +1433,8 @@ def _create_property(db, stmt: ast.CreatePropertyStmt) -> DataFrame:
         ):
             db.schema.register(
                 stmt.type_name,
-                loader=lambda: db.spark.createDataFrame(
-                    [], "dummy string"
+                loader=lambda: local_df(
+                    db.spark, [], "dummy string"
                 ).limit(0).drop("dummy"),
                 kind="vertex",
             )
@@ -1653,8 +1654,8 @@ def _check_database(db, stmt: ast.CheckDatabaseStmt) -> DataFrame:
                     )
         rows.append((name, tdef.kind, n,
                      None if dangling is None else int(dangling)))
-    return db.spark.createDataFrame(
-        rows, "type string, kind string, rows long, dangling_edges long"
+    return local_df(
+        db.spark, rows, "type string, kind string, rows long, dangling_edges long"
     )
 
 
@@ -1663,7 +1664,7 @@ def _op_result(db, **cols) -> DataFrame:
     (operation/oldValue/newValue properties on a ResultInternal)."""
     vals = tuple(None if v is None else str(v) for v in cols.values())
     schema = ", ".join(f"`{k}` string" for k in cols)
-    return db.spark.createDataFrame([vals], schema)
+    return local_df(db.spark, [vals], schema)
 
 
 def _alter_type(db, stmt: ast.AlterTypeStmt) -> DataFrame:

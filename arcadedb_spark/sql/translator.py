@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import NullType as _NullType
 
 from arcadedb_spark.catalog import RID_COL, TYPE_COL
+from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.functions import (
     AGGREGATES,
@@ -3645,8 +3646,6 @@ class Translator:
             else:
                 vals = None
             if vals is not None and not any(isinstance(v, dict) for v in vals):
-                from arcadedb_spark.graph.model import local_df
-
                 nn = next((v for v in vals if v is not None), None)
                 return local_df(
                     self.db.spark, [(v,) for v in vals],
@@ -3676,7 +3675,6 @@ class Translator:
                 if nested.include != ("*",):
                     keys = [k for k in keys if k in nested.include]
                 keys = [k for k in keys if k not in nested.exclude]
-            from arcadedb_spark.graph.model import local_df
 
             out = local_df(
                 self.db.spark,
@@ -3917,9 +3915,7 @@ class Translator:
                 if av is None:
                     av = g.all_vertices_full()
                 if av is None:  # empty graph: typed empty frame
-                    av = self.db.spark.createDataFrame(
-                        [], "vid long, `@type` string"
-                    )
+                    av = local_df(self.db.spark, [], "vid long, `@type` string")
                 ent = F.struct(*[
                     F.col(c) for c in av.columns if not c.startswith("__")
                 ])

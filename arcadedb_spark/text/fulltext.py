@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
 
@@ -138,9 +140,7 @@ def bm25_search(
     avgdl = total_tokens / n_docs if n_docs else 1.0
 
     terms = [t for t in set(query.lower().split()) if t]
-    qterms = postings.sparkSession.createDataFrame(
-        [(t,) for t in terms], "term string"
-    )
+    qterms = local_df(postings.sparkSession, [(t,) for t in terms], "term string")
     hits = postings.join(F.broadcast(qterms), "term")
     df_counts = hits.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     idf = df_counts.withColumn(

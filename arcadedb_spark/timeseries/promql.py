@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 DEFAULT_LOOKBACK_MS = 5 * 60_000  # PromQLEvaluator.DEFAULT_LOOKBACK_MS
 
 _DUR_RE = re.compile(r"(\d+)(ms|s|m|h|d|w|y)")
@@ -513,7 +515,7 @@ class PromQLEvaluator:
         start_ms: int | None = None,
     ) -> DataFrame:
         expr = PromQLParser(query).parse()
-        grid = self.spark.createDataFrame([(p,) for p in points], "eval_ts long")
+        grid = local_df(self.spark, [(p,) for p in points], "eval_ts long")
         ctx = _Ctx(
             grid=F.broadcast(grid),
             lookback_ms=self.lookback_ms,

@@ -20,6 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
 from arcadedb_spark.vector.distance import cosine_similarity
 
 
@@ -110,9 +111,7 @@ def ivf_search_join(
     cent_rows = [
         (int(i), [float(x) for x in c]) for i, c in enumerate(index.centroids)
     ]
-    cents = spark.createDataFrame(
-        cent_rows, "__cell int, __centroid array<double>"
-    )
+    cents = local_df(spark, cent_rows, "__cell int, __centroid array<double>")
     qx = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("__qv"))
     # rank cells per query by euclidean distance to the centroid
     qc = (

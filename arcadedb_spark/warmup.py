@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.session import local_df
+
 
 def _synthetic_docs(spark: SparkSession, n: int = 500):
     """(doc_id, text) corpus with enough token variety to exercise the
@@ -260,7 +262,6 @@ def _warm_database(spark: SparkSession) -> None:
         # window-derived edge cache registration, the bounded adjacency
         # collect (Arrow), and the literal-frame result path
         try:
-            from arcadedb_spark.graph.model import local_df
             from arcadedb_spark.graph.traverse import traverse
 
             g = db.graph()

@@ -353,7 +353,8 @@ def test_eid_deterministic_across_recomputation(spark):
     (cache eviction / task retry at cluster scale).  The write path pins
     freshly minted ids to storage (truncate_plan); catalog bulk frames
     derive @eid from file row metadata — both re-scan to the same set."""
-    from arcadedb_spark.graph.model import GraphModel, local_df
+    from arcadedb_spark.graph.model import GraphModel
+    from arcadedb_spark.session import local_df
 
     g = GraphModel(spark)
     pairs = local_df(

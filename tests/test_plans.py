@@ -229,6 +229,38 @@ def test_algorithms_fire_no_discarded_count_probes():
     assert not offenders, f"discarded count() probes at: {offenders}"
 
 
+def test_python_rows_reach_spark_only_through_local_df():
+    """``session.local_df`` is the package's one way to turn Python rows
+    into a frame: a list handed to ``createDataFrame`` becomes a
+    ``defaultParallelism``-slice PythonRDD, and every action on it runs
+    Python-worker tasks."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark")
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+
+        def visit(node, scope):
+            for child in ast.iter_child_nodes(node):
+                inner = scope
+                if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                    inner = [*scope, child.name]
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in ("createDataFrame", "parallelize")
+                    and (rel, scope[:1]) != ("session.py", ["local_df"])
+                ):
+                    offenders.append(f"{rel}:{child.lineno}")
+                visit(child, inner)
+
+        visit(ast.parse(open(path).read()), [])
+    assert not offenders, f"createDataFrame/parallelize outside local_df: {offenders}"
+
+
 def test_runtime_temporal_kernels_are_arrow_batched(spark):
     """Per-row temporal math over stored strings must run as Arrow-batched
     pandas UDFs (ArrowEvalPython), never row-pickled BatchEvalPython."""

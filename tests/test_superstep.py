@@ -363,10 +363,17 @@ def test_bridges_on_a_long_chain(spark):
     assert got == {(v, v + 1) for v in range(32)}
 
 
+def test_scc_raises_on_a_reached_cap(spark):
+    # the forward colouring of a 6-cycle needs 5 supersteps to converge
+    with pytest.raises(RuntimeError, match="max_inner=3"):
+        A.strongly_connected_components(_cycle(spark, 6), max_inner=3)
+
+
 @pytest.mark.slow
 def test_scc_on_a_long_cycle_and_chain(spark):
-    # the forward colouring needs 31 supersteps on the cycle
-    cycle = A.strongly_connected_components(_cycle(spark, 32), max_inner=40)
+    # the forward colouring needs 31 supersteps on the cycle, more than
+    # the 30 the loop used to stop at (and then returned 32 singletons)
+    cycle = A.strongly_connected_components(_cycle(spark, 32))
     assert {r["component"] for r in cycle.collect()} == {31}
     chain = A.strongly_connected_components(_chain(spark, 32))
     assert sorted(r["component"] for r in chain.collect()) == list(range(33))
