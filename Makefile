@@ -4,7 +4,12 @@
 
 SHARDS := 0 1 2 3
 
-.PHONY: test tck bench oracle
+.PHONY: test tck bench oracle ab
+
+# alternated base/change runs of perfbench against BENCHMARK.json's
+# bounds (tools/ab_pairs.py); BASE is the revision to compare against
+BASE ?= HEAD
+PAIRS ?= 5
 
 # the tier-1 line of ROADMAP.md
 test:
@@ -16,6 +21,9 @@ bench:
 
 oracle:
 	python3 tools/compare_oracle.py /root/testdata/sf0.01
+
+ab:
+	python3 tools/ab_pairs.py --base $(BASE) --pairs $(PAIRS)
 
 tck:
 	@for i in $(SHARDS); do \

@@ -20,10 +20,12 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arcadedb_spark.session import local_df
+from arcadedb_spark.lineage import CHECKPOINT_EVERY
+from arcadedb_spark.session import in_driver, local_df
 
 RID_COL = "@rid"
 TYPE_COL = "@type"
@@ -46,13 +48,44 @@ class TypeDef:
     # df() re-reads the graph frame every call so writes from EITHER
     # surface are immediately visible to the other.
     live: bool = False
+    _cached: list = field(default_factory=list, repr=False)  # see store()
 
     def df(self) -> DataFrame:
         if self.live:
             return self.loader()
         if self._df is None:
-            self._df = self.loader()
+            self._df = self.loader()  # a memo of the loader, not a write
         return self._df
+
+
+def store(owner: TypeDef | dict, frame: DataFrame | None) -> None:
+    """Make ``frame`` the stored state of a type (``TypeDef._df``) or named
+    bucket (``meta["df"]``): the one writer behind DML, MV creation and
+    refresh, kv commands, bucket INSERTs and the streaming trigger sink.
+
+    Each state is cached, except a bare ``LocalRelation``: its rows are in
+    driver memory, and cached it would stand in for an equal one-row DML
+    result.  The write that finds ``CHECKPOINT_EVERY`` states cached
+    compacts instead: ``truncate_plan()``, cache the re-read, release the
+    states cached before it (until then each state's lineage reads them).
+    ``None`` clears the state and releases what it held."""
+    cached = owner._cached if isinstance(owner, TypeDef) else owner["cached"]
+    release = frame is None
+    if not release and len(cached) >= CHECKPOINT_EVERY:
+        try:
+            frame, release = frame.truncate_plan(), True
+        except AnalysisException:  # a schema parquet cannot hold (no columns)
+            pass
+    if release:
+        for old in cached:
+            old.unpersist()
+        cached.clear()
+    if frame is not None and not in_driver(frame):
+        cached.append(frame.cache())
+    if isinstance(owner, TypeDef):
+        owner._df = frame
+    else:
+        owner["df"] = frame
 
 
 class Catalog:
@@ -83,7 +116,7 @@ class Catalog:
         meta = self.named_buckets.get(name.lower())
         if meta is None:
             meta = {"name": name, "owner": owner, "bucket_id": self._next_bucket,
-                    "df": None}
+                    "df": None, "cached": []}
             self._next_bucket += 1
             self.named_buckets[name.lower()] = meta
         elif owner is not None:
@@ -127,7 +160,9 @@ class Catalog:
         return tdef
 
     def drop(self, name: str) -> None:
-        self._types.pop(name.lower(), None)
+        tdef = self._types.pop(name.lower(), None)
+        if tdef is not None:
+            store(tdef, None)
 
     def get(self, name: str) -> TypeDef:
         try:

@@ -4,12 +4,13 @@ Mirrors ``database/LocalDatabase.java:186`` (a database owns the schema and
 dispatches queries per language via ``query/QueryEngineManager.java:60``)
 without any of its storage concerns — storage is parquet, transactions are
 out of scope (analytical engine), and the statement cache
-(``query/sql/parser/StatementCache.java:59``) becomes a dict of translated
-DataFrames keyed by query text.
+(``query/sql/parser/StatementCache.java:59``) becomes a bounded LRU of
+parsed statements keyed by query text.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,13 +92,24 @@ def _load_parquet(spark: SparkSession, path: str, nanos_cols: tuple[str, ...]) -
     return df
 
 
+# parsed SQL statements Database.query keeps: parsing reads no state and
+# every AST node is frozen, so no write invalidates one
+_PARSED_STATEMENTS = 512
+
+
+@functools.lru_cache(maxsize=_PARSED_STATEMENTS)
+def _parsed(text: str):
+    from arcadedb_spark.sql import parser
+
+    return parser.parse(text)
+
+
 class Database:
     """One analytical database = SparkSession + type catalog."""
 
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
         self.schema = Catalog(spark)
-        self._plan_cache: dict[str, object] = {}
         self._graph = None
         import threading
 
@@ -346,15 +358,9 @@ class Database:
             from arcadedb_spark.graphql.engine import graphql_query
 
             return graphql_query(self, text)
-        from arcadedb_spark.sql.parser import parse
         from arcadedb_spark.sql.translator import Translator
 
-        key = text
-        stmt = self._plan_cache.get(key)
-        if stmt is None:
-            stmt = parse(text)
-            self._plan_cache[key] = stmt
-        return Translator(self, params=params).translate(stmt)
+        return Translator(self, params=params).translate(_parsed(text))
 
     _WRITE_HEADS = (
         "INSERT", "UPDATE", "DELETE", "CREATE", "MERGE", "DROP", "ALTER",

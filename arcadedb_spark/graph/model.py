@@ -892,6 +892,7 @@ class GraphModel:
             new_frames.append(
                 e.join(m, cond_of(e), "left_anti").localCheckpoint(eager=True)
             )
+        m.unpersist()  # the callers cache it for the probe and the anti-joins
         self._edge_dfs = new_frames
         self._prune_edge_slim()
         self._edges = None
@@ -926,7 +927,6 @@ class GraphModel:
         """DETACH-delete matched vids from every label (label-less
         ``MATCH (n) DELETE n``)."""
         self._flush_edges()
-        m = matched_vids.select("vid").distinct().coalesce(1).cache()
         # ONE job finds which labels are touched (tagged union), instead of
         # a semi-join probe per label — write statements over small match
         # sets are job-count-bound, not data-bound
@@ -938,6 +938,7 @@ class GraphModel:
             tagged = part if tagged is None else tagged.unionByName(part)
         if tagged is None:
             return 0
+        m = matched_vids.select("vid").distinct().coalesce(1).cache()
         hits = {
             r["__lbl"]: r["cnt"]
             for r in tagged.join(m, "vid", "left_semi")
@@ -952,6 +953,7 @@ class GraphModel:
                 .localCheckpoint(eager=True)
             )
         self._edge_dfs = self._drop_incident_edges(m)
+        m.unpersist()
         self._prune_edge_slim()
         self._edges = None
         self._edges_by_src = None
@@ -998,6 +1000,7 @@ class GraphModel:
         n = m.count()
         self.vertex_dfs[label.lower()] = vdf.join(m, "vid", "left_anti").localCheckpoint(eager=True)
         self._edge_dfs = self._drop_incident_edges(m)
+        m.unpersist()
         self._prune_edge_slim()
         self._edges = None
         self._edges_by_src = None

@@ -12,7 +12,7 @@ lives here instead:
 3. release the previous frame;
 4. ``truncate_plan()`` the carried state every ``CHECKPOINT_EVERY``
    supersteps, counted from superstep 1 (``lineage.py`` says why that is
-   a parquet round trip and not ``localCheckpoint``);
+   a parquet round trip);
 5. pin the result with ``truncate_plan()`` unless it already is the
    frame the last truncation returned, then release what is still cached.
 
@@ -36,8 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
-# 5 keeps a 10-iteration PageRank at two truncations.
-CHECKPOINT_EVERY = 5
+from arcadedb_spark.lineage import CHECKPOINT_EVERY
 
 
 class Supersteps:

@@ -7,31 +7,29 @@ is the command surface over the same engine).
 Semantics: values are strings (Redis strings); SET upserts; INCR treats
 the value as an integer counter.  Point reads filter on the key column —
 at 100 TB the backing table would be bucketed by key so the filter
-prunes to one bucket; writes are whole-table rewrites with documented
-non-transactional semantics (the same DML model as UPDATE/DELETE).
+prunes to one bucket.  A write derives the next state (filter the keys
+out, union the new rows) and hands it to ``catalog.store``, the holder
+every DML statement writes through, which caches and compacts it;
+semantics are non-transactional, the same DML model as UPDATE/DELETE.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arcadedb_spark.catalog import store
 from arcadedb_spark.session import local_df
 
 _SCHEMA = "key string, value string"
 
 
 class KeyValueStore:
-    # plan-lineage cap: every write stacks filter+union nodes on the
-    # cached frame; a long sequential command stream would chain
-    # thousands of plan nodes (analysis cost grows per command).  Every
-    # N writes the frame is localCheckpoint-frozen, which resets the
-    # lineage to a materialized block scan.
-    _CHECKPOINT_EVERY = 64
+    # a (key, value) type in the catalog: ``catalog.store`` bounds the
+    # filter + union chain that every write stacks on its state
 
     def __init__(self, db, type_name: str) -> None:
         self.db = db
         self.type_name = type_name
-        self._writes = 0
         if not db.schema.exists(type_name):
             db.schema.register(
                 type_name, local_df(db.spark, [], _SCHEMA), key="key"
@@ -40,23 +38,15 @@ class KeyValueStore:
     def _df(self):
         return self.db.schema.get(self.type_name).df()
 
-    def _freeze(self, df):
-        self._writes += 1
-        if self._writes % self._CHECKPOINT_EVERY == 0:
-            return df.localCheckpoint(eager=True)
-        return df
-
-    def _replace(self, df) -> None:
-        tdef = self.db.schema.get(self.type_name)
-        tdef._df = self._freeze(df).cache()
-        self.db._plan_cache.clear()
+    def _write(self, df) -> None:
+        store(self.db.schema.get(self.type_name), df)
 
     # -- commands -----------------------------------------------------------
 
     def set(self, key: str, value) -> None:
         """SET — upsert one key."""
         new = local_df(self.db.spark, [(key, str(value))], _SCHEMA)
-        self._replace(
+        self._write(
             self._df().filter(F.col("key") != key).unionByName(new)
         )
 
@@ -64,7 +54,7 @@ class KeyValueStore:
         new = local_df(
             self.db.spark, [(k, str(v)) for k, v in mapping.items()], _SCHEMA
         )
-        self._replace(
+        self._write(
             self._df().filter(~F.col("key").isin(list(mapping))).unionByName(new)
         )
 
@@ -89,7 +79,7 @@ class KeyValueStore:
         df = self._df()
         n = df.filter(F.col("key").isin(list(keys))).count()
         if n:
-            self._replace(df.filter(~F.col("key").isin(list(keys))))
+            self._write(df.filter(~F.col("key").isin(list(keys))))
         return n
 
     def keys(self, pattern: str = "*") -> list[str]:
@@ -160,10 +150,8 @@ class KeyValueStore:
             )
         return self.db.schema.get(hname).df()
 
-    def _hreplace(self, df) -> None:
-        tdef = self.db.schema.get(f"{self.type_name}__hash")
-        tdef._df = self._freeze(df).cache()
-        self.db._plan_cache.clear()
+    def _hwrite(self, df) -> None:
+        store(self.db.schema.get(f"{self.type_name}__hash"), df)
 
     def hset(self, key: str, mapping: dict | None = None, **fields) -> int:
         """HSET/HMSET — upsert fields of one hash; returns the number of
@@ -182,7 +170,7 @@ class KeyValueStore:
             self.db.spark,
             [(key, f, str(v)) for f, v in items.items()], self._HASH_SCHEMA
         )
-        self._hreplace(
+        self._hwrite(
             df.filter(
                 ~((F.col("key") == key) & F.col("field").isin(list(items)))
             ).unionByName(new)
@@ -213,7 +201,7 @@ class KeyValueStore:
         cond = (F.col("key") == key) & F.col("field").isin(list(fields))
         n = df.filter(cond).count()
         if n:
-            self._hreplace(df.filter(~cond))
+            self._hwrite(df.filter(~cond))
         return n
 
     def hexists(self, key: str, field: str) -> bool:

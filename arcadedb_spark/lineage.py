@@ -25,6 +25,10 @@ The re-read is handed the written frame's schema.  Inferring it would
 open the parquet footers just written in a Spark job of its own -- one
 job more per truncation -- only to find the schema the writer already
 had.
+
+Its callers share one cadence, ``CHECKPOINT_EVERY``: the superstep loops
+and, for writes, ``catalog.store``, whose re-read packs a stored state's
+small files into few partitions.
 """
 
 from __future__ import annotations
@@ -36,6 +40,9 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame
+
+# 5 keeps a 10-iteration PageRank at two truncations
+CHECKPOINT_EVERY = 5
 
 _counter = itertools.count()
 _roots: dict[str, str] = {}  # spark app id -> session-scoped temp root

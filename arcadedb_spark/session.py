@@ -119,6 +119,12 @@ def local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
+def in_driver(df: DataFrame) -> bool:
+    """Whether ``df`` is a bare ``LocalRelation``, rows held in driver memory."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def _arrow_table(rows: list, schema: StructType):
     """``rows`` as a pyarrow Table of ``schema``'s Arrow types, or None
     when pyarrow cannot type them exactly."""

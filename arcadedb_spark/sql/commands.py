@@ -18,12 +18,14 @@ mirroring the reference's update/delete result sets.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from arcadedb_spark.session import local_df
+from arcadedb_spark.catalog import store
+from arcadedb_spark.session import in_driver, local_df
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.litreg import value_of
 from arcadedb_spark.sql.translator import (
@@ -173,10 +175,7 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
                 tab = db.schema.table(tdef.name, polymorphic=False)
                 keep = tab.filter(F.col(RID_COL) != f"#{b}:{pos}")
                 n += tab.count() - keep.count()
-                _replace_df(
-                    db, tdef.name,
-                    keep.drop(RID_COL, "@type"),
-                )
+                store(tdef, keep.drop(RID_COL, "@type"))
         return _result(db, n)
     if isinstance(stmt, ast.TruncateTypeStmt):
         return _truncate(db, stmt)
@@ -209,6 +208,7 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
             if stmt.if_exists:
                 return _result(db, 0)
             raise TranslateError(f"Bucket '{stmt.name}' does not exist")
+        store(meta, None)
         owner = meta.get("owner")
         if owner and db.schema.exists(owner):
             props = db.schema.get(owner).properties
@@ -216,15 +216,13 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
                 b for b in props.get("extra_buckets", ())
                 if b.lower() != stmt.name.lower()
             ]
-        db._plan_cache.clear()
         return _result(db, 1)
     if isinstance(stmt, ast.TruncateBucketStmt):
         meta = db.schema.named_buckets.get(stmt.name.lower())
         if meta is None:
             raise TranslateError(f"Bucket '{stmt.name}' does not exist")
         n = meta["df"].count() if meta["df"] is not None else 0
-        meta["df"] = None
-        db._plan_cache.clear()
+        store(meta, None)
         return _result(db, n)
     if isinstance(stmt, ast.CreateMaterializedViewStmt):
         return _create_mv(db, stmt, params)
@@ -340,33 +338,26 @@ def _define_function(db, stmt: ast.DefineFunctionStmt) -> DataFrame:
 # arcadedb_spark.streaming.ContinuousAggregate)
 
 
-def _release_replaced(old) -> None:
-    """Unpersist a replaced backing frame — ONLY safe when the replacement's
-    lineage does not read ``old`` (MV full recomputes translate straight
-    off the base tables).  Mutation swaps (_replace_df, insert unions)
-    must NOT do this: each new state's lineage reads the previous one, so
-    dropping un-superseded caches would make later materializations
-    replay the whole mutation chain."""
-    try:
-        if old is not None and (
-            old.storageLevel.useMemory or old.storageLevel.useDisk
-        ):
-            old.unpersist()
-    except Exception:
-        pass
-
-
 def _recompute_mv(db, tdef, select, params: dict) -> int:
-    """Full MV recompute: re-translate the view off the base tables, swap
-    the fresh frame in, cache and materialize it.  The old cache is
-    released first: with the base tables unchanged the new plan
-    ``sameResult``s the old one, so ``.cache()`` would reuse the old
-    entry and releasing ``old`` afterwards would drop the fresh cache."""
-    df = Translator(db, params).translate(select)
-    _release_replaced(tdef.df())
-    tdef._df = df.cache()
-    db._plan_cache.clear()
-    return df.count()
+    """Full MV recompute: re-translate the view off the base tables, store
+    the fresh frame and materialize it.  With the base tables unchanged
+    the new plan ``sameResult``s the old one and shares its cache entry;
+    ``store`` releases neither before its next compaction."""
+    store(tdef, Translator(db, params).translate(select))
+    return tdef.df().count()
+
+
+@contextmanager
+def _source_as(src, frame):
+    """Point type ``src`` at ``frame`` for one translation (the incremental
+    refresh's delta and dirty-bucket slices): the one assignment of a
+    stored frame outside ``catalog.store``, undone before it returns."""
+    saved = src._df
+    src._df = frame
+    try:
+        yield
+    finally:
+        src._df = saved
 
 
 def _create_mv(db, stmt: ast.CreateMaterializedViewStmt, params: dict) -> DataFrame:
@@ -374,11 +365,12 @@ def _create_mv(db, stmt: ast.CreateMaterializedViewStmt, params: dict) -> DataFr
         if stmt.if_not_exists:
             return _result(db, 0)
         raise TranslateError(f"Type/view '{stmt.name}' already exists")
-    df = Translator(db, params).translate(stmt.select).cache()
+    df = Translator(db, params).translate(stmt.select)
     tdef = db.schema.register(stmt.name, df, kind="view")
+    store(tdef, df)
     tdef.properties["mv_select"] = stmt.select
     tdef.properties["mv_refresh"] = stmt.refresh_mode
-    return _result(db, df.count())
+    return _result(db, tdef.df().count())
 
 
 def _refresh_mv(db, stmt: ast.RefreshMaterializedViewStmt, params: dict) -> DataFrame:
@@ -417,6 +409,9 @@ def _incremental_refresh(db, tdef, select, params: dict) -> int:
     dirty = tdef.properties.pop("mv_dirty", False)
     if not pending and not dirty:
         return 0
+    delta = None
+    for d in pending:
+        delta = d if delta is None else delta.unionByName(d, allowMissingColumns=True)
     src_name = None
     if isinstance(select.target, ast.TypeTarget):
         src_name = select.target.name
@@ -433,38 +428,25 @@ def _incremental_refresh(db, tdef, select, params: dict) -> int:
         and select.limit is None and select.skip is None
         and not select.order_by
     ):
-        n = _bucket_refresh(db, tdef, select, params, pending, src_name)
+        n = _bucket_refresh(db, tdef, select, params, delta, src_name)
         if n is not None:
             return n
     if dirty or aggregated or src_name is None or select.lets:
         return _recompute_mv(db, tdef, select, params)
     # delta-only path: run the view query against just the new rows
     src = db.schema.get(src_name)
-    delta = pending[0]
-    for d in pending[1:]:
-        delta = delta.unionByName(d, allowMissingColumns=True)
-    saved = src._df
-    try:
-        src._df = delta
+    with _source_as(src, delta):
         delta_view = Translator(db, params).translate(select)
-    finally:
-        src._df = saved
-    merged = tdef.df().unionByName(delta_view, allowMissingColumns=True).cache()
     n = delta_view.count()
-    tdef._df = merged
-    db._plan_cache.clear()
+    store(tdef, tdef.df().unionByName(delta_view, allowMissingColumns=True))
     return n
 
 
-def _bucket_refresh(db, tdef, select, params, pending, src_name):
+def _bucket_refresh(db, tdef, select, params, delta, src_name):
     """GROUP BY view + append-only delta: re-aggregate only the DIRTY
     buckets.  Returns rows recomputed, or None when the view shape isn't
     bucketable (a group key isn't projected) — caller falls back to full
     recompute."""
-    from pyspark.sql import functions as F
-
-    from arcadedb_spark.sql.translator import Ctx, ExprCompiler
-
     # each group-by expr must surface as an output column to splice on
     out_names = []
     for g in select.group_by:
@@ -480,9 +462,6 @@ def _bucket_refresh(db, tdef, select, params, pending, src_name):
         out_names.append(name)
 
     src = db.schema.get(src_name)
-    delta = pending[0]
-    for d in pending[1:]:
-        delta = delta.unionByName(d, allowMissingColumns=True)
 
     def _keys_of(frame):
         ctx = Ctx(db=db, params=params or {}, columns=tuple(frame.columns),
@@ -492,31 +471,25 @@ def _bucket_refresh(db, tdef, select, params, pending, src_name):
 
     dirty_keys = delta.select(
         *[k.alias(f"__k{i}") for i, k in enumerate(_keys_of(delta))]
-    ).distinct().cache()
+    ).distinct()
 
-    saved = src._df
-    try:
-        src_keys = _keys_of(saved)
-        cond = None
-        for i, k in enumerate(src_keys):
-            c = k.eqNullSafe(F.col(f"__k{i}"))
-            cond = c if cond is None else (cond & c)
-        # dirty-bucket slice of the source (broadcast: the delta's
-        # distinct keys are small by construction)
-        src._df = saved.join(F.broadcast(dirty_keys), cond, "left_semi")
+    base = src.df()
+    cond = None
+    for i, k in enumerate(_keys_of(base)):
+        c = k.eqNullSafe(F.col(f"__k{i}"))
+        cond = c if cond is None else (cond & c)
+    # dirty-bucket slice of the source (broadcast: the delta's distinct
+    # keys are small by construction)
+    with _source_as(src, base.join(F.broadcast(dirty_keys), cond, "left_semi")):
         part = Translator(db, params).translate(select)
-    finally:
-        src._df = saved
     old = tdef.df()
     anti = None
     for i, name in enumerate(out_names):
         c = F.col(name).eqNullSafe(F.col(f"__k{i}"))
         anti = c if anti is None else (anti & c)
     kept = old.join(F.broadcast(dirty_keys), anti, "left_anti")
-    merged = kept.unionByName(part, allowMissingColumns=True).cache()
     n = part.count()
-    tdef._df = merged
-    db._plan_cache.clear()
+    store(tdef, kept.unionByName(part, allowMissingColumns=True))
     return n
 
 
@@ -572,17 +545,7 @@ def _drop_mv(db, stmt: ast.DropMaterializedViewStmt) -> DataFrame:
             return _result(db, 0)
         raise TranslateError(f"View '{stmt.name}' does not exist")
     db.schema.drop(stmt.name)
-    db._plan_cache.clear()
     return _result(db, 1)
-
-
-def _replace_df(db, name: str, df: DataFrame) -> None:
-    """Swap the type's backing DataFrame (cached: later queries reuse the
-    rewritten state instead of replaying the mutation lineage)."""
-    tdef = db.schema.get(name)
-    new_df = df.cache()
-    tdef._df = new_df
-    db._plan_cache.clear()
 
 
 # -- INSERT -----------------------------------------------------------------
@@ -697,10 +660,10 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
         if stmt.from_select is not None:
             # frame-wise append: mint a vid block and freeze the ids
             base_vid = g.mint_vid_block()
-            store = new_df.withColumn(
+            minted = new_df.withColumn(
                 "vid", g.frame_vid_col(base_vid)
             ).truncate_plan()
-            n = g.append_vertex_frame(tdef.name, store)
+            n = g.append_vertex_frame(tdef.name, minted)
         else:
             new_vids = g.add_vertex_rows(tdef.name, rows)
             n = len(rows)
@@ -718,16 +681,15 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
             ret = _with_rid(vdf, tdef).drop("vid")
             return _dml_return_frame(db, ret, stmt.return_expr, params)
         return _result(db, n)
-    if tdef is not None and tdef._df is not None:
-        base = tdef.df()
-        merged = base.unionByName(new_df, allowMissingColumns=True)
-    elif tdef is not None:
+    if tdef is None:
+        tdef = db.schema.register(name, new_df)
         merged = new_df
     else:
-        db.schema.register(name, new_df)
-        merged = new_df
-    n = new_df.count()
-    _replace_df(db, name, merged)
+        merged = tdef.df().unionByName(new_df, allowMissingColumns=True)
+    # rows local_df holds are counted on the driver; a SELECT's and the
+    # one-slice fallback's by Spark (a row Spark rejects fails here)
+    n = len(rows) if stmt.from_select is None and in_driver(new_df) else new_df.count()
+    store(tdef, merged)
     _notify_mvs(db, name, delta=new_df)
     if (
         db.schema.exists(name) and db.schema.get(name).kind == "vertex"
@@ -799,13 +761,9 @@ def _insert_bucket(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
         raise TranslateError("bucket INSERT needs VALUES/SET/CONTENT")
     rows = [_validate_row(db, owner, r) for r in rows]
     new_df = local_df(db.spark, [tuple(r.values()) for r in rows], list(rows[0].keys()))
-    if meta["df"] is None:
-        meta["df"] = new_df
-    else:
-        meta["df"] = meta["df"].unionByName(
-            new_df, allowMissingColumns=True
-        ).cache()
-    db._plan_cache.clear()
+    store(meta, new_df if meta["df"] is None else meta["df"].unionByName(
+        new_df, allowMissingColumns=True
+    ))
     _notify_mvs(db, owner, delta=new_df)
     return _result(db, len(rows))
 
@@ -1022,7 +980,7 @@ def _update_content_array(db, tdef, stmt, rows: list, params) -> DataFrame:
     )
     new_df = out.drop("__hit", "__rn", "__ci", *[f"__nv_{k}" for k in keys])
     n = after.count()
-    _replace_df(db, tdef.name, new_df)
+    store(tdef, new_df)
     _notify_mvs(db, tdef.name)
     if stmt.return_mode in ("after", "before"):
         if stmt.return_mode == "before":
@@ -1194,10 +1152,10 @@ def _update(db, stmt: ast.UpdateStmt, params: dict) -> DataFrame:
             r.asDict(recursive=True) for r in ret_after.collect()
         ]
         fire(db, "BEFORE", "UPDATE", name, new_rows, old_rows)
-        _replace_df(db, name, new_df)
+        store(tdef, new_df)
         fire(db, "AFTER", "UPDATE", name, new_rows, old_rows)
         return _result(db, matched)
-    _replace_df(db, name, new_df)
+    store(tdef, new_df)
     if stmt.return_mode in ("after", "before"):
         # BEFORE reads the pre-update rows (the old frame object stays
         # valid lazily); AFTER reads the frozen match set post-rewrite
@@ -1309,7 +1267,7 @@ def _delete(db, stmt: ast.DeleteStmt, params: dict) -> DataFrame:
             from arcadedb_spark.triggers import fire
 
             fire(db, "BEFORE", "DELETE", name, del_rows)
-        _replace_df(db, name, base.limit(0))
+        store(tdef, base.limit(0))
         if del_rows is not None:
             from arcadedb_spark.triggers import fire
 
@@ -1325,7 +1283,7 @@ def _delete(db, stmt: ast.DeleteStmt, params: dict) -> DataFrame:
         from arcadedb_spark.triggers import fire
 
         fire(db, "BEFORE", "DELETE", name, del_rows)
-    _replace_df(db, name, base.filter(~cond | cond.isNull()))
+    store(tdef, base.filter(~cond | cond.isNull()))
     if del_rows is not None:
         from arcadedb_spark.triggers import fire
 
@@ -1372,7 +1330,6 @@ def _create_type(db, stmt: ast.CreateTypeStmt) -> DataFrame:
         kind=stmt.kind,
         parents=parents,
     )
-    tdef._df = None
     _attach_named_buckets(db, tdef, stmt.bucket_names)
     _store_custom(tdef)
     return _result(db, 1)
@@ -1418,7 +1375,6 @@ def _drop_type(db, stmt: ast.DropTypeStmt) -> DataFrame:
                 g.label_display.pop(key, None)
                 g._invalidate_vertex_unions()
     db.schema.drop(stmt.name)
-    db._plan_cache.clear()
     return _result(db, 1)
 
 
@@ -1694,7 +1650,6 @@ def _alter_type(db, stmt: ast.AlterTypeStmt) -> DataFrame:
                     new if p.lower() == old.lower() else p
                     for p in t.parents
                 )
-        db._plan_cache.clear()
         return _op_result(db, operation="alter type name",
                           oldValue=old, newValue=new)
     if stmt.attr == "supertype":
@@ -1709,7 +1664,6 @@ def _alter_type(db, stmt: ast.AlterTypeStmt) -> DataFrame:
                 parents = [p for p in parents
                            if p.lower() != ident.lower()]
         tdef.parents = tuple(parents)
-        db._plan_cache.clear()
         return _op_result(db, operation="alter type supertype",
                           supertype=",".join(parents))
     if stmt.attr == "bucket":
@@ -1764,8 +1718,7 @@ def _alter_property(db, stmt: ast.AlterPropertyStmt) -> DataFrame:
         new_name = str(stmt.value)
         declared[new_name] = declared.pop(stmt.prop)
         if tdef._df is not None and stmt.prop in tdef._df.columns:
-            tdef._df = tdef._df.withColumnRenamed(stmt.prop, new_name)
-            db._plan_cache.clear()
+            store(tdef, tdef._df.withColumnRenamed(stmt.prop, new_name))
         return _op_result(
             db, type=stmt.type_name, property=stmt.prop,
             operation="alter property", attribute="name",
@@ -1836,5 +1789,5 @@ def _truncate(db, stmt: ast.TruncateTypeStmt) -> DataFrame:
         return _result(db, n)
     base = tdef.df()
     n = base.count()
-    _replace_df(db, stmt.name, base.limit(0))
+    store(tdef, base.limit(0))
     return _result(db, n)

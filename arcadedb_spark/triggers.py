@@ -19,6 +19,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+from arcadedb_spark.catalog import store
+
 MAX_TRIGGER_ROWS = 10_000
 
 _TIMINGS = ("BEFORE", "AFTER")
@@ -147,8 +149,7 @@ def stream_after_create(
         if not rows:
             return
         tdef = db.schema.get(type_name)
-        merged = tdef.df().unionByName(batch_df, allowMissingColumns=True)
-        tdef._df = merged
+        store(tdef, tdef.df().unionByName(batch_df, allowMissingColumns=True))
         fire(db, "AFTER", "CREATE", type_name, rows)
 
     writer = (

@@ -12,15 +12,8 @@ frame itself before counting.
 from __future__ import annotations
 
 import pytest
+from conftest import cache_entries
 from pyspark.sql import functions as F
-
-
-def cache_entries(spark) -> int:
-    """Entries in the session's CacheManager (cached query plans)."""
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    field = cm.getClass().getDeclaredField("cachedData")
-    field.setAccessible(True)
-    return int(field.get(cm).size())
 
 
 @pytest.fixture()

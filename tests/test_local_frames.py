@@ -5,23 +5,10 @@ a Gremlin count, and the point reads on top of them run one job each."""
 from __future__ import annotations
 
 import datetime
-import itertools
+
+from conftest import spark_jobs as _jobs
 
 from arcadedb_spark.session import local_df
-
-_groups = itertools.count()
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"local-frames-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _leaf(df) -> str:

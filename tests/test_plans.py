@@ -261,6 +261,59 @@ def test_python_rows_reach_spark_only_through_local_df():
     assert not offenders, f"createDataFrame/parallelize outside local_df: {offenders}"
 
 
+def test_stored_state_has_one_writer():
+    """``catalog.store`` owns the cache-and-compact policy of every write:
+    the write paths in sql/commands.py, kv.py and triggers.py neither
+    cache nor checkpoint a state themselves, nor keep a cache of their
+    own, and nothing in the package assigns a type's backing frame
+    (``._df``) or a named bucket's (``["df"]``) but ``store``, the loader
+    memo in ``TypeDef.df`` and the incremental refresh's scoped override
+    ``_source_as`` (a Gremlin traversal's own ``_df`` is not a type's)."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark")
+    private = []
+    for rel in ("sql/commands.py", "kv.py", "triggers.py"):
+        for node in ast.walk(ast.parse(open(os.path.join(root, rel)).read())):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name) else None
+            )
+            if name in ("cache", "persist", "localCheckpoint", "_plan_cache"):
+                private.append(f"{rel}:{node.lineno}")
+    assert not private, f"a private state policy at: {private}"
+
+    writers = set()
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+
+        def visit(node, scope):
+            for child in ast.iter_child_nodes(node):
+                inner = scope
+                if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                    inner = [*scope, child.name]
+                for target in getattr(child, "targets", ()):
+                    if (
+                        isinstance(target, ast.Attribute) and target.attr == "_df"
+                    ) or (
+                        isinstance(target, ast.Subscript)
+                        and isinstance(target.slice, ast.Constant)
+                        and target.slice.value == "df"
+                    ):
+                        writers.add(f"{rel}::{'.'.join(scope)}")
+                visit(child, inner)
+
+        visit(ast.parse(open(path).read()), [])
+    assert writers == {
+        "catalog.py::store",
+        "catalog.py::TypeDef.df",
+        os.path.join("sql", "commands.py") + "::_source_as",
+        os.path.join("graph", "gremlin.py") + "::GraphTraversal.__init__",
+    }, sorted(writers)
+
+
 def test_runtime_temporal_kernels_are_arrow_batched(spark):
     """Per-row temporal math over stored strings must run as Arrow-batched
     pandas UDFs (ArrowEvalPython), never row-pickled BatchEvalPython."""
