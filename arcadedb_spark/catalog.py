@@ -21,7 +21,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from arcadedb_spark.lineage import CHECKPOINT_EVERY
@@ -31,24 +31,61 @@ RID_COL = "@rid"
 TYPE_COL = "@type"
 
 
+# A keyless row's @rid offset is its position, monotonically_increasing_id,
+# which encodes the row's partition.  A compaction packs partitions, so it
+# first stores each row's offset in OFFSET_COL; rows written after it count
+# on from ``State._offset_base``, past every stored offset.
+OFFSET_COL = "@offset"
+
+
+@dataclass(kw_only=True)
+class State:
+    """What ``store`` holds for a type or a named bucket: the stored frame,
+    the states cached since the last compaction and the first positional
+    offset of rows written since then; and what its ``@rid`` is made of."""
+
+    bucket_id: int
+    key: str | None = None  # natural-key column used for the RID offset
+    _df: DataFrame | None = None
+    _cached: list = field(default_factory=list, repr=False)
+    _offset_base: int = 0
+
+    def positional(self, df: DataFrame) -> bool:
+        return self.key is None or self.key not in df.columns
+
+    def offset(self, df: DataFrame) -> Column:
+        """The ``@rid`` offset of each row of ``df``, a state of this owner."""
+        if not self.positional(df):
+            return F.col(self.key).cast("long")
+        pos = F.monotonically_increasing_id()
+        if self._offset_base:
+            pos = pos + F.lit(self._offset_base)
+        return F.coalesce(F.col(OFFSET_COL), pos) if OFFSET_COL in df.columns else pos
+
+    def rid(self, df: DataFrame) -> Column:
+        return F.concat(F.lit(f"#{self.bucket_id}:"), self.offset(df).cast("string"))
+
+    def records(self, df: DataFrame, type_name: str) -> DataFrame:
+        """``df`` with ``@rid`` and ``@type``, its stored offsets hidden."""
+        return df.withColumn(RID_COL, self.rid(df)).withColumn(
+            TYPE_COL, F.lit(type_name)
+        ).drop(OFFSET_COL)
+
+
 @dataclass
-class TypeDef:
+class TypeDef(State):
     """Schema entry for one document/vertex/edge type."""
 
     name: str
     kind: str  # 'document' | 'vertex' | 'edge'
-    bucket_id: int
     loader: Callable[[], DataFrame]
-    key: str | None = None  # natural-key column used for the RID offset
     parents: tuple[str, ...] = ()
     properties: dict[str, str] = field(default_factory=dict)  # declared props
-    _df: DataFrame | None = None
     # live types delegate storage to the property graph (one record store
     # under both the SQL and Cypher surfaces — QueryEngineManager.java:60):
     # df() re-reads the graph frame every call so writes from EITHER
     # surface are immediately visible to the other.
     live: bool = False
-    _cached: list = field(default_factory=list, repr=False)  # see store()
 
     def df(self) -> DataFrame:
         if self.live:
@@ -58,10 +95,10 @@ class TypeDef:
         return self._df
 
 
-def store(owner: TypeDef | dict, frame: DataFrame | None) -> None:
-    """Make ``frame`` the stored state of a type (``TypeDef._df``) or named
-    bucket (``meta["df"]``): the one writer behind DML, MV creation and
-    refresh, kv commands, bucket INSERTs and the streaming trigger sink.
+def store(owner: State, frame: DataFrame | None) -> None:
+    """Make ``frame`` the stored state of a type or named bucket: the one
+    writer behind DML, MV creation and refresh, kv commands, bucket
+    INSERTs and the streaming trigger sink.
 
     Each state is cached, except a bare ``LocalRelation``: its rows are in
     driver memory, and cached it would stand in for an equal one-row DML
@@ -69,23 +106,34 @@ def store(owner: TypeDef | dict, frame: DataFrame | None) -> None:
     compacts instead: ``truncate_plan()``, cache the re-read, release the
     states cached before it (until then each state's lineage reads them).
     ``None`` clears the state and releases what it held."""
-    cached = owner._cached if isinstance(owner, TypeDef) else owner["cached"]
     release = frame is None
-    if not release and len(cached) >= CHECKPOINT_EVERY:
+    if not release and len(owner._cached) >= CHECKPOINT_EVERY:
         try:
-            frame, release = frame.truncate_plan(), True
-        except AnalysisException:  # a schema parquet cannot hold (no columns)
+            frame, release = _compact(owner, frame), True
+        except AnalysisException:  # a schema parquet cannot hold
             pass
     if release:
-        for old in cached:
+        for old in owner._cached:
             old.unpersist()
-        cached.clear()
+        owner._cached.clear()
     if frame is not None and not in_driver(frame):
-        cached.append(frame.cache())
-    if isinstance(owner, TypeDef):
-        owner._df = frame
-    else:
-        owner["df"] = frame
+        owner._cached.append(frame.cache())
+    owner._df = frame
+
+
+def _compact(owner: State, frame: DataFrame) -> DataFrame:
+    """``truncate_plan()`` a state.  Its re-read packs partitions, so a
+    positional state first stores each row's offset, and the rows written
+    after it count on from the largest."""
+    if not owner.positional(frame):
+        return frame.truncate_plan()
+    seen = Observation()
+    out = frame.withColumn(OFFSET_COL, owner.offset(frame)).observe(
+        seen, F.max(OFFSET_COL).alias("top")
+    ).truncate_plan()
+    if seen.get["top"] is not None:
+        owner._offset_base = seen.get["top"] + 1
+    return out
 
 
 class Catalog:
@@ -105,8 +153,8 @@ class Catalog:
         # full-text entries resolve search_index() to their fields.
         self.indexes: dict[str, dict] = {}
         # named buckets (engine/LocalBucket.java; CREATE BUCKET /
-        # CREATE TYPE … BUCKET b1,b2): name → {owner: type-name|None,
-        # bucket_id, df: DataFrame|None}.  A bucket is a named
+        # CREATE TYPE … BUCKET b1,b2): name → {name, owner: type-name|None,
+        # state: its State}.  A bucket is a named
         # horizontal slice of its owner type — at scale it maps to a
         # partition directory; here to a per-bucket frame unioned into
         # the type scan.
@@ -115,8 +163,8 @@ class Catalog:
     def register_bucket(self, name: str, owner: str | None = None) -> dict:
         meta = self.named_buckets.get(name.lower())
         if meta is None:
-            meta = {"name": name, "owner": owner, "bucket_id": self._next_bucket,
-                    "df": None, "cached": []}
+            meta = {"name": name, "owner": owner,
+                    "state": State(bucket_id=self._next_bucket)}
             self._next_bucket += 1
             self.named_buckets[name.lower()] = meta
         elif owner is not None:
@@ -125,15 +173,9 @@ class Catalog:
 
     def _bucket_frame(self, bname: str, tdef: TypeDef) -> DataFrame | None:
         meta = self.named_buckets.get(bname.lower())
-        if meta is None or meta["df"] is None:
+        if meta is None or meta["state"]._df is None:
             return None
-        rid = F.concat(
-            F.lit(f"#{meta['bucket_id']}:"),
-            F.monotonically_increasing_id().cast("string"),
-        )
-        return meta["df"].withColumn(RID_COL, rid).withColumn(
-            TYPE_COL, F.lit(tdef.name)
-        )
+        return meta["state"].records(meta["state"]._df, tdef.name)
 
     # -- registration -----------------------------------------------------
     def register(
@@ -216,13 +258,7 @@ class Catalog:
             return df.withColumn(RID_COL, rid).withColumn(
                 TYPE_COL, F.lit(tdef.name)
             ).drop("@eid")
-        if tdef.key is not None and tdef.key in df.columns:
-            offset = F.col(tdef.key).cast("long")
-        else:
-            # No natural key: fall back to a partition-stable synthetic id.
-            offset = F.monotonically_increasing_id()
-        rid = F.concat(F.lit(f"#{tdef.bucket_id}:"), offset.cast("string"))
-        return df.withColumn(RID_COL, rid).withColumn(TYPE_COL, F.lit(tdef.name))
+        return tdef.records(df, tdef.name)
 
     def table(self, name: str, polymorphic: bool = True) -> DataFrame:
         """DataFrame for a type, including subtype rows when polymorphic.
@@ -279,7 +315,7 @@ class Catalog:
             # FetchFromSchemaStatsStep — per-type row counts; parquet
             # footer metadata makes count() a metadata-only scan
             rows = [
-                (t.name, t.kind, t.df().count(), len(t.df().columns))
+                (t.name, t.kind, t.df().count(), len(t.df().drop(OFFSET_COL).columns))
                 for t in self._types.values()
                 if t.kind != "view"
             ]
@@ -294,7 +330,7 @@ class Catalog:
             names: list[str] = []
             seen = set()
             for t in self._types.values():
-                for c in t.df().columns:
+                for c in t.df().drop(OFFSET_COL).columns:
                     if c not in seen:
                         seen.add(c)
                         names.append(c)

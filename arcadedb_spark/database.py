@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from arcadedb_spark.catalog import Catalog
+from arcadedb_spark.catalog import OFFSET_COL, Catalog
 from arcadedb_spark.session import local_df
 
 # Natural keys for the driver testdata tables (TESTDATA.md) — used for
@@ -300,7 +300,7 @@ class Database:
         counts: dict[str, int] = {}
         for name in list(self.schema.names()):
             tdef = self.schema.get(name)
-            df = tdef.df()
+            df = tdef.df().drop(OFFSET_COL)
             target = os.path.join(path, f"{name}.{'parquet' if format == 'parquet' else 'jsonl'}")
             if format == "parquet":
                 df.write.mode("overwrite").parquet(target)

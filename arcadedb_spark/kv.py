@@ -91,8 +91,16 @@ class KeyValueStore:
         ]
 
     def incr(self, key: str, by: int = 1) -> int:
+        return self._add(key, by, int)
+
+    def _add(self, key: str, by, kind):
+        """The value of ``key`` as ``kind`` (0 when missing) plus ``by``,
+        stored and returned; a value ``kind`` cannot parse is an error."""
         cur = self.get(key)
-        val = (int(cur) if cur is not None else 0) + by
+        try:
+            val = kind(cur if cur is not None else 0) + by
+        except ValueError:
+            raise ValueError(f"Key '{key}' is not a number") from None
         self.set(key, val)
         return val
 
@@ -112,27 +120,11 @@ class KeyValueStore:
     def decr(self, key: str, by: int = 1) -> int:
         """DECR/DECRBY (RedisNetworkExecutor.decrBy:351) — missing key
         counts from 0; a non-integer value is an error."""
-        cur = self.get(key)
-        if cur is not None:
-            try:
-                cur = int(cur)
-            except ValueError:
-                raise ValueError(f"Key '{key}' is not a number") from None
-        val = (cur if cur is not None else 0) - by
-        self.set(key, val)
-        return val
+        return self._add(key, -by, int)
 
     def incrbyfloat(self, key: str, by: float) -> float:
         """INCRBYFLOAT (RedisNetworkExecutor.incrBy(…, true))."""
-        cur = self.get(key)
-        if cur is not None:
-            try:
-                cur = float(cur)
-            except ValueError:
-                raise ValueError(f"Key '{key}' is not a number") from None
-        val = (cur if cur is not None else 0.0) + float(by)
-        self.set(key, val)
-        return val
+        return self._add(key, float(by), float)
 
     # -- hash commands (RedisNetworkExecutor.java hSet/hGet/hMGet/hDel/
     #    hExists) — a (key, field, value) frame; at 100 TB the table

@@ -24,8 +24,11 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from arcadedb_spark.catalog import store
+from arcadedb_spark.catalog import OFFSET_COL, store
 from arcadedb_spark.session import in_driver, local_df
+from arcadedb_spark.triggers import (
+    MAX_TRIGGER_ROWS, drop_trigger, fire, matching, register_trigger,
+)
 from arcadedb_spark.sql import ast
 from arcadedb_spark.sql.litreg import value_of
 from arcadedb_spark.sql.translator import (
@@ -158,9 +161,8 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
         del db.schema.indexes[hit]
         return _result(db, 1)
     if isinstance(stmt, ast.TruncateRecordStmt):
-        from arcadedb_spark.sql.translator import RID_COL
-
         n = 0
+        doomed: dict[str, tuple] = {}  # type -> (tdef, its rids)
         for b, pos in stmt.rids:
             tdef = next(
                 (t for t in db.schema._types.values()
@@ -172,10 +174,14 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
                 m = local_df(db.spark, [(int(pos),)], "vid long")
                 n += db.graph().remove_vertices_any(m)
             else:
-                tab = db.schema.table(tdef.name, polymorphic=False)
-                keep = tab.filter(F.col(RID_COL) != f"#{b}:{pos}")
-                n += tab.count() - keep.count()
-                store(tdef, keep.drop(RID_COL, "@type"))
+                doomed.setdefault(tdef.name, (tdef, []))[1].append(f"#{b}:{pos}")
+        # one filter per type: a positional rid names a row only in the
+        # state it was read from
+        for tdef, rids in doomed.values():
+            base = tdef.df()
+            keep = base.filter(~tdef.rid(base).isin(rids))
+            n += base.count() - keep.count()
+            store(tdef, keep)
         return _result(db, n)
     if isinstance(stmt, ast.TruncateTypeStmt):
         return _truncate(db, stmt)
@@ -208,7 +214,7 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
             if stmt.if_exists:
                 return _result(db, 0)
             raise TranslateError(f"Bucket '{stmt.name}' does not exist")
-        store(meta, None)
+        store(meta["state"], None)
         owner = meta.get("owner")
         if owner and db.schema.exists(owner):
             props = db.schema.get(owner).properties
@@ -221,8 +227,8 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
         meta = db.schema.named_buckets.get(stmt.name.lower())
         if meta is None:
             raise TranslateError(f"Bucket '{stmt.name}' does not exist")
-        n = meta["df"].count() if meta["df"] is not None else 0
-        store(meta, None)
+        n = meta["state"]._df.count() if meta["state"]._df is not None else 0
+        store(meta["state"], None)
         return _result(db, n)
     if isinstance(stmt, ast.CreateMaterializedViewStmt):
         return _create_mv(db, stmt, params)
@@ -243,8 +249,6 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
     if isinstance(stmt, ast.AlterTimeSeriesTypeStmt):
         return _alter_timeseries_type(db, stmt)
     if isinstance(stmt, ast.CreateTriggerStmt):
-        from arcadedb_spark.triggers import register_trigger
-
         if stmt.language.upper() != "SQL":
             raise TranslateError(
                 "Only EXECUTE SQL triggers are supported (JAVASCRIPT/JAVA "
@@ -256,8 +260,6 @@ def execute_command(db, stmt, params: dict) -> DataFrame:
         )
         return _result(db, 1)
     if isinstance(stmt, ast.DropTriggerStmt):
-        from arcadedb_spark.triggers import drop_trigger
-
         dropped = drop_trigger(db, stmt.name, if_exists=stmt.if_exists)
         return _result(db, int(dropped))
     raise TranslateError(f"Unsupported command {type(stmt).__name__}")
@@ -340,11 +342,14 @@ def _define_function(db, stmt: ast.DefineFunctionStmt) -> DataFrame:
 
 def _recompute_mv(db, tdef, select, params: dict) -> int:
     """Full MV recompute: re-translate the view off the base tables, store
-    the fresh frame and materialize it.  With the base tables unchanged
-    the new plan ``sameResult``s the old one and shares its cache entry;
-    ``store`` releases neither before its next compaction."""
-    store(tdef, Translator(db, params).translate(select))
-    return tdef.df().count()
+    the fresh frame and materialize it.  Its lineage reads no old state,
+    so those are released first; with the base tables unchanged the new
+    plan ``sameResult``s the old one, and releasing it after the new
+    frame is cached would drop the fresh cache."""
+    df = Translator(db, params).translate(select)
+    store(tdef, None)
+    store(tdef, df)
+    return df.count()
 
 
 @contextmanager
@@ -555,6 +560,7 @@ def _dml_return_frame(db, ret_df: DataFrame, expr, params) -> DataFrame:
     """Project a DML RETURN expression over the affected-rows frame
     (UpdateStatement.java returnBefore/After, InsertStatement RETURN).
     ``@this`` / ``*`` yield the full records."""
+    ret_df = ret_df.drop(OFFSET_COL)
     if expr is None or isinstance(expr, ast.Star) or (
         isinstance(expr, ast.Chain) and expr.parts == ("@this",)
     ):
@@ -640,8 +646,6 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
 
     trig_rows = _trigger_rows(db, "CREATE", name, new_df)
     if trig_rows is not None:
-        from arcadedb_spark.triggers import fire
-
         fire(db, "BEFORE", "CREATE", name, trig_rows)
     tdef = db.schema.get(name) if db.schema.exists(name) else None
     if tdef is not None and tdef.live:
@@ -669,8 +673,6 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
             n = len(rows)
         _notify_mvs(db, name, delta=new_df)
         if trig_rows is not None:
-            from arcadedb_spark.triggers import fire
-
             fire(db, "AFTER", "CREATE", name, trig_rows)
         if stmt.return_expr is not None:
             vdf = g.vertices(tdef.name)
@@ -689,6 +691,18 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
     # rows local_df holds are counted on the driver; a SELECT's and the
     # one-slice fallback's by Spark (a row Spark rejects fails here)
     n = len(rows) if stmt.from_select is None and in_driver(new_df) else new_df.count()
+    ret = None
+    if stmt.return_expr is not None:
+        # the new rows' @rid, read off the merged state before ``store``
+        # compacts it; ``__new`` marks them and moves no partition
+        ret = new_df.withColumn("__new", F.lit(True))
+        if merged is not new_df:
+            ret = tdef.df().withColumn("__new", F.lit(False)).unionByName(
+                ret, allowMissingColumns=True
+            )
+        ret = tdef.records(ret, tdef.name).filter("__new").select(
+            *[F.col(f"`{c}`") for c in new_df.columns], "@rid", "@type"
+        )
     store(tdef, merged)
     _notify_mvs(db, name, delta=new_df)
     if (
@@ -699,28 +713,8 @@ def _insert(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
         # with a DataFrame): keep INSERT-then-MATCH working
         db.graph().add_vertex_rows(db.schema.get(name).name, rows)
     if trig_rows is not None:
-        from arcadedb_spark.triggers import fire
-
         fire(db, "AFTER", "CREATE", name, trig_rows)
-    if stmt.return_expr is not None:
-        tdef2 = db.schema.get(name)
-        base_n = 0
-        if tdef2.key is None:
-            # positional rid offsets continue the pre-insert row count
-            base_n = merged.count() - n
-        rid = (
-            F.concat(F.lit(f"#{tdef2.bucket_id}:"),
-                     F.col(tdef2.key).cast("long").cast("string"))
-            if tdef2.key is not None and tdef2.key in new_df.columns
-            else F.concat(
-                F.lit(f"#{tdef2.bucket_id}:"),
-                (F.lit(base_n) + F.monotonically_increasing_id())
-                .cast("string"),
-            )
-        )
-        ret = new_df.withColumn("@rid", rid).withColumn(
-            "@type", F.lit(tdef2.name)
-        )
+    if ret is not None:
         return _dml_return_frame(db, ret, stmt.return_expr, params)
     return _result(db, n)
 
@@ -761,7 +755,8 @@ def _insert_bucket(db, stmt: ast.InsertStmt, params: dict) -> DataFrame:
         raise TranslateError("bucket INSERT needs VALUES/SET/CONTENT")
     rows = [_validate_row(db, owner, r) for r in rows]
     new_df = local_df(db.spark, [tuple(r.values()) for r in rows], list(rows[0].keys()))
-    store(meta, new_df if meta["df"] is None else meta["df"].unionByName(
+    old = meta["state"]._df
+    store(meta["state"], new_df if old is None else old.unionByName(
         new_df, allowMissingColumns=True
     ))
     _notify_mvs(db, owner, delta=new_df)
@@ -791,14 +786,12 @@ def _notify_mvs(db, src_name: str, delta=None) -> None:
 def _trigger_rows(db, event: str, type_name: str, df) -> "list[dict] | None":
     """Affected rows as dicts when any trigger matches, else None (no
     collect on the fast path)."""
-    from arcadedb_spark.triggers import MAX_TRIGGER_ROWS, matching
-
     if not (matching(db, "BEFORE", event, type_name)
             or matching(db, "AFTER", event, type_name)):
         return None
     return [
         r.asDict(recursive=True)
-        for r in df.limit(MAX_TRIGGER_ROWS + 1).collect()
+        for r in df.drop(OFFSET_COL).limit(MAX_TRIGGER_ROWS + 1).collect()
     ]
 
 
@@ -965,7 +958,7 @@ def _update_content_array(db, tdef, stmt, rows: list, params) -> DataFrame:
             out = out.withColumn(
                 c, F.when(paired, F.col(f"__nv_{c}")).otherwise(F.col(c))
             )
-        else:
+        elif c != OFFSET_COL:
             # CONTENT replaces the whole record: absent keys null out
             out = out.withColumn(
                 c,
@@ -1011,6 +1004,18 @@ def _resolve_dml_rid_target(db, stmt, params):
     return dataclasses.replace(stmt, type_name=tdef.name, where=where)
 
 
+def _addressable(tdef, where) -> DataFrame:
+    """The type's state, with the scan's ``@rid`` when ``where`` reads it
+    (FetchFromRids parity)."""
+    base = tdef.df()
+    if "@rid" in base.columns or where is None or not any(
+        isinstance(n_, ast.Chain) and n_.parts and n_.parts[0].lower() == "@rid"
+        for n_ in _walk_t(where)
+    ):
+        return base
+    return base.withColumn("@rid", tdef.rid(base))
+
+
 def _update(db, stmt: ast.UpdateStmt, params: dict) -> DataFrame:
     if isinstance(stmt.type_name, ast.RidTarget):
         stmt = _resolve_dml_rid_target(db, stmt, params)
@@ -1032,22 +1037,8 @@ def _update(db, stmt: ast.UpdateStmt, params: dict) -> DataFrame:
         return _update_live(db, tdef, stmt, params)
     if tdef.live and tdef.kind == "edge":
         return _update_live_edges(db, tdef, stmt, params)
-    base = tdef.df()
-    had_rid = "@rid" in base.columns
-    if not had_rid and stmt.where is not None and any(
-        isinstance(n_, ast.Chain) and n_.parts
-        and n_.parts[0].lower() == "@rid"
-        for n_ in _walk_t(stmt.where)
-    ):
-        # WHERE references @rid: synthesize it the same way the type
-        # scan does (positional rid — FetchFromRids parity)
-        base = base.withColumn(
-            "@rid",
-            F.concat(
-                F.lit(f"#{tdef.bucket_id}:"),
-                F.monotonically_increasing_id().cast("string"),
-            ),
-        )
+    had_rid = "@rid" in tdef.df().columns
+    base = _addressable(tdef, stmt.where)
     ctx = Ctx(db=db, params=params, columns=tuple(base.columns),
               frame_schema=base.schema)
     compiler = ExprCompiler(ctx)
@@ -1146,16 +1137,12 @@ def _update(db, stmt: ast.UpdateStmt, params: dict) -> DataFrame:
     _notify_mvs(db, name)
     old_rows = _trigger_rows(db, "UPDATE", name, base.filter(cond))
     if old_rows is not None:
-        from arcadedb_spark.triggers import fire
-
-        new_rows = [
-            r.asDict(recursive=True) for r in ret_after.collect()
-        ]
+        new_rows = _trigger_rows(db, "UPDATE", name, ret_after)
         fire(db, "BEFORE", "UPDATE", name, new_rows, old_rows)
-        store(tdef, new_df)
+    store(tdef, new_df)
+    if old_rows is not None:
         fire(db, "AFTER", "UPDATE", name, new_rows, old_rows)
         return _result(db, matched)
-    store(tdef, new_df)
     if stmt.return_mode in ("after", "before"):
         # BEFORE reads the pre-update rows (the old frame object stays
         # valid lazily); AFTER reads the frozen match set post-rewrite
@@ -1258,41 +1245,27 @@ def _delete(db, stmt: ast.DeleteStmt, params: dict) -> DataFrame:
     tdef = db.schema.get(name)
     if tdef.live:
         return _delete_live(db, tdef, stmt, params)
-    base = tdef.df()
-    if stmt.where is None:
-        n = base.count()
-        _notify_mvs(db, name)
-        del_rows = _trigger_rows(db, "DELETE", name, base)
-        if del_rows is not None:
-            from arcadedb_spark.triggers import fire
-
-            fire(db, "BEFORE", "DELETE", name, del_rows)
-        store(tdef, base.limit(0))
-        if del_rows is not None:
-            from arcadedb_spark.triggers import fire
-
-            fire(db, "AFTER", "DELETE", name, del_rows)
-        return _result(db, n)
-    ctx = Ctx(db=db, params=params, columns=tuple(base.columns),
-              frame_schema=base.schema)
-    cond = ExprCompiler(ctx).compile(stmt.where)
-    n = base.filter(cond).count()
+    base = _addressable(tdef, stmt.where)
+    cond = F.lit(True) if stmt.where is None else ExprCompiler(
+        Ctx(db=db, params=params, columns=tuple(base.columns),
+            frame_schema=base.schema)
+    ).compile(stmt.where)
+    gone = base.filter(cond)
+    n = gone.count()
     _notify_mvs(db, name)
-    del_rows = _trigger_rows(db, "DELETE", name, base.filter(cond))
+    del_rows = _trigger_rows(db, "DELETE", name, gone)
     if del_rows is not None:
-        from arcadedb_spark.triggers import fire
-
         fire(db, "BEFORE", "DELETE", name, del_rows)
-    store(tdef, base.filter(~cond | cond.isNull()))
+    if stmt.where is None:
+        store(tdef, base.limit(0))
+    else:
+        kept = base.filter(~cond | cond.isNull())  # less a synthesized @rid
+        store(tdef, kept if base is tdef.df() else kept.drop("@rid"))
     if del_rows is not None:
-        from arcadedb_spark.triggers import fire
-
         fire(db, "AFTER", "DELETE", name, del_rows)
-    if stmt.return_mode == "before":
+    if stmt.return_mode == "before" and stmt.where is not None:
         # the pre-delete frame object stays valid lazily
-        return _dml_return_frame(
-            db, base.filter(cond), stmt.return_expr, params
-        )
+        return _dml_return_frame(db, gone, stmt.return_expr, params)
     return _result(db, n)
 
 

@@ -265,8 +265,8 @@ def test_stored_state_has_one_writer():
     """``catalog.store`` owns the cache-and-compact policy of every write:
     the write paths in sql/commands.py, kv.py and triggers.py neither
     cache nor checkpoint a state themselves, nor keep a cache of their
-    own, and nothing in the package assigns a type's backing frame
-    (``._df``) or a named bucket's (``["df"]``) but ``store``, the loader
+    own, and nothing in the package assigns the frame a type or named
+    bucket holds (``._df``, formerly a bucket's ``["df"]``) but ``store``, the loader
     memo in ``TypeDef.df`` and the incremental refresh's scoped override
     ``_source_as`` (a Gremlin traversal's own ``_df`` is not a type's)."""
     import ast

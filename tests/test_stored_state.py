@@ -74,6 +74,64 @@ def test_write_streams_keep_their_state_bounded(spark, write):
         assert db.kv("ss_kv").get("k") == str(WRITES)
 
 
+def test_compaction_keeps_positional_rids(spark):
+    """A keyless row's @rid is its position, which a compaction's re-read
+    repacks: across CHECKPOINT_EVERY + 2 one-row INSERTs into a keyless
+    type and into a named bucket every row keeps its first @rid, and so
+    do the rows a DELETE or TRUNCATE RECORD of saved rids leaves."""
+    db = Database(spark)
+    db.command("CREATE DOCUMENT TYPE SsRid")
+    db.command("CREATE BUCKET ss_rid_b")
+    db.command("CREATE DOCUMENT TYPE SsRidB BUCKET ss_rid_b")
+    first = {}
+
+    def check(target):
+        got = {r["a"]: r["@rid"] for r in db.query(f"SELECT @rid, a FROM {target}").collect()}
+        for a, rid in got.items():
+            assert first.setdefault((target, a), rid) == rid, (target, a)
+        return sorted(got)
+
+    for i in range(CHECKPOINT_EVERY + 2):
+        db.command(f"INSERT INTO SsRid SET a = {i}")
+        db.command(f"INSERT INTO bucket:ss_rid_b SET a = {i}")
+        assert check("SsRid") == check("bucket:ss_rid_b") == list(range(i + 1))
+    db.command("DELETE FROM SsRid WHERE a = 1")
+    db.command(f"TRUNCATE RECORD {first['SsRid', 0]}, {first['SsRid', 5]}")
+    assert check("SsRid") == [2, 3, 4, 6]
+
+
+def test_rids_a_write_returns_address_its_rows(spark):
+    """INSERT ... RETURN @rid gives the rid SELECT shows, on and off the
+    compaction beat, and UPDATE and DELETE by that rid touch that row."""
+    db = Database(spark)
+    db.command("CREATE DOCUMENT TYPE SsRet")
+    got = {}
+    for i in range(CHECKPOINT_EVERY + 2):
+        got[i] = db.command(f"INSERT INTO SsRet SET a = {i} RETURN @rid").collect()[0][0]
+    assert {r["a"]: r["@rid"] for r in db.query("SELECT @rid, a FROM SsRet").collect()} == got
+    assert db.command(f"UPDATE [{got[5]}] SET b = 1").collect() == [(1,)]
+    assert db.command(f"DELETE FROM SsRet WHERE @rid = '{got[6]}'").collect() == [(1,)]
+    rows = {r["a"]: r["b"] for r in db.query("SELECT a, b FROM SsRet").collect()}
+    assert sorted(rows) == list(range(CHECKPOINT_EVERY + 1)) and rows[5] == 1
+
+
+def test_full_refresh_keeps_one_state_of_the_view(spark):
+    """A full MV recompute reads none of the view's old states, so it
+    releases them: the view holds one cached state across refreshes."""
+    db = Database(spark)
+    db.command("CREATE DOCUMENT TYPE SsSrc")
+    db.command("INSERT INTO SsSrc (g, v) VALUES ('a', 1), ('b', 2)")
+    db.command(
+        "CREATE MATERIALIZED VIEW SsSums AS SELECT g, sum(v) AS s FROM SsSrc GROUP BY g"
+    )
+    for i in range(CHECKPOINT_EVERY + 1):
+        db.command(f"UPDATE SsSrc SET v = {i} WHERE g = 'a'")
+        db.command("REFRESH MATERIALIZED VIEW SsSums")
+        assert len(db.schema.get("SsSums")._cached) == 1
+    sums = {r["g"]: r["s"] for r in db.query("SELECT FROM SsSums").collect()}
+    assert sums == {"a": CHECKPOINT_EVERY, "b": 2}
+
+
 def test_one_row_insert_runs_no_job(spark):
     """INSERT counts the rows it holds: off the compaction beat a one-row
     INSERT runs no Spark job (the parent counted them with two)."""

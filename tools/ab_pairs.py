@@ -2,7 +2,7 @@
 working tree.
 
     python3 tools/ab_pairs.py [--base REV] [--pairs N] [--workload W ...]
-                              [--seed0 S] [--claim METRIC] [--out FILE]
+                              [--seed0 S]
 
 The base revision (default ``HEAD``) is exported with ``git archive`` into
 a temporary directory (``TMPDIR`` decides where; it is removed at the
@@ -12,9 +12,7 @@ end).  For each workload named in ``BENCHMARK.json`` (or given with
 (``seed0 + i``), alternating which side goes first.  It prints every pair,
 then per end-to-end metric the medians, the base's interquartile range,
 the change's wins and the verdict against the metric's ``BENCHMARK.json``
-bound, and the failed-op share of each side.  With ``--claim`` it also
-says whether a claimed gain holds: better in nine of ten pairs, and in
-the median by more than the base's interquartile range.
+bound, and the failed-op share of each side.
 
 It reads ``perfbench/`` and ``BENCHMARK.json`` and never edits them.
 """
@@ -68,7 +66,7 @@ def quartiles(xs: list) -> tuple:
     return q[0], q[2]
 
 
-def verdicts(pairs: list, metrics: list, claim: str | None) -> list:
+def verdicts(pairs: list, metrics: list) -> list:
     """Text lines: one per metric, then the failed-op shares."""
     out = []
     for m in metrics:
@@ -80,14 +78,9 @@ def verdicts(pairs: list, metrics: list, claim: str | None) -> list:
         wins = sum((c < b) if lower else (c > b) for b, c in zip(base, change))
         worse = mc > mb * (1 + m["bound"]) if lower else mc < mb * (1 - m["bound"])
         delta = (mc - mb) / mb * 100 if mb else 0.0
-        line = (f"  {name:16s} base {mb:10.3f} [{q1:.3f}-{q3:.3f}]  change "
-                f"{mc:10.3f}  {delta:+6.1f}%  wins {wins}/{len(pairs)}  "
-                f"bound {m['bound']:.2f}: {'WORSE' if worse else 'ok'}")
-        if name == claim:
-            gap = (mb - mc) if lower else (mc - mb)
-            held = wins >= 0.9 * len(pairs) and gap > q3 - q1
-            line += f"  claim {'holds' if held else 'NOT met'}"
-        out.append(line)
+        out.append(f"  {name:16s} base {mb:10.3f} [{q1:.3f}-{q3:.3f}]  change "
+                   f"{mc:10.3f}  {delta:+6.1f}%  wins {wins}/{len(pairs)}  "
+                   f"bound {m['bound']:.2f}: {'WORSE' if worse else 'ok'}")
     fb = statistics.median(p["base"]["failed_share"] for p in pairs)
     fc = statistics.median(p["change"]["failed_share"] for p in pairs)
     out.append(f"  failed-op share base {fb:.3f} change {fc:.3f}: "
@@ -104,8 +97,6 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", action="append",
                     choices=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--seed0", type=int, default=2001)
-    ap.add_argument("--claim", help="end-to-end metric a gain is claimed on")
-    ap.add_argument("--out", help="write every pair's values here as JSON")
     args = ap.parse_args(argv)
 
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
@@ -129,10 +120,7 @@ def main(argv=None) -> int:
         shutil.rmtree(base_dir, ignore_errors=True)
     for w, pairs in results.items():
         print(f"{w} ({len(pairs)} pairs, base {args.base}):")
-        print("\n".join(verdicts(pairs, bench["end_to_end"], args.claim)))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(results, fh, indent=1)
+        print("\n".join(verdicts(pairs, bench["end_to_end"])))
     return 0
 
 
