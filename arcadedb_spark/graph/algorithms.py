@@ -35,6 +35,15 @@ def _vertices_of(edges: DataFrame) -> DataFrame:
     )
 
 
+def _undirected_pairs(edges: DataFrame) -> DataFrame:
+    """Distinct undirected edges (a, b) with a < b; self-loops dropped."""
+    return (
+        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 20,
@@ -223,11 +232,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     (each triangle counted once on the oriented graph, then credited to
     all three corners).
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("v")).unionByName(und.select(F.col("b").alias("v")))
         .groupBy("v")
@@ -347,6 +352,16 @@ def _undirected_adj(edges: DataFrame) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("n")))
         .filter(F.col("v") != F.col("n"))
         .distinct()
+    )
+
+
+def _with_self_rows(adj: DataFrame, verts: DataFrame) -> DataFrame:
+    """``adj`` (v, n) plus one (v, v) row per vertex of ``verts`` (vid),
+    flagged ``__self``.  Joined to a per-vertex state on ``n`` and grouped
+    by ``v``, the self row brings a vertex's own state into the group of
+    its neighbours' rows, so a superstep reads the state once."""
+    return adj.withColumn("__self", F.lit(False)).unionByName(
+        verts.select(F.col("vid").alias("v"), F.col("vid").alias("n"), F.lit(True).alias("__self"))
     )
 
 
@@ -620,11 +635,13 @@ def fastrp_embeddings(
     per-hop states).  Deterministic: the initial projection is derived
     from xxhash64(vid, dim_index) — no RNG state to distribute.
     Returns (vid, embedding: array<double>)."""
-    verts = _vertices_of(edges).cache()
-    und = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().repartition("src").cache()
-    deg = und.groupBy("src").agg(F.count("*").alias("__d"))
+    verts = _vertices_of(edges)
+    nbr = _with_self_rows(
+        edges.select(F.col("src").alias("v"), F.col("dst").alias("n"))
+        .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("n")))
+        .distinct(),
+        verts,
+    ).cache()
 
     # sparse signed init: hash → {-1, 0, +1} with p(±1) = 1/4 each
     def _init_col(i: int):
@@ -634,55 +651,36 @@ def fastrp_embeddings(
             F.when(bucket == 0, 1.0).when(bucket == 1, -1.0).otherwise(0.0)
         )
 
-    x = verts.select(
-        "vid", F.array(*[_init_col(i) for i in range(dim)]).alias("emb")
-    )
-    acc = x.select(
-        "vid",
-        F.transform("emb", lambda v: v * F.lit(weights[0])).alias("acc"),
-    ) if weights and weights[0] else verts.select(
-        "vid", F.array(*[F.lit(0.0)] * dim).alias("acc")
-    )
+    x0 = F.array(*[_init_col(i) for i in range(dim)])
+    w0 = weights[0] if weights else 0.0
+    acc0 = F.transform(x0, lambda v: v * F.lit(w0)) if w0 else F.array(*[F.lit(0.0)] * dim)
+    # the carried state: (vid, acc, emb)
+    state = verts.select("vid", acc0.alias("acc"), x0.alias("emb"))
+    nb = ~F.col("__self")
+    ss = Supersteps()
     for it in range(1, iterations + 1):
-        # neighbor mean: sum over in-neighbors / degree
-        msgs = (
-            und.join(x, und["dst"] == x["vid"], "inner")
-            .groupBy(F.col("src").alias("vid"))
-            .agg(
-                F.array(
-                    *[
-                        F.sum(F.element_at("emb", i + 1)).alias(f"s{i}")
-                        for i in range(dim)
-                    ]
-                ).alias("sums")
-            )
-        )
-        x = (
-            verts.join(msgs, "vid", "left")
-            .join(deg.withColumnRenamed("src", "vid"), "vid", "left")
-            .select(
-                "vid",
-                F.coalesce(
-                    F.transform("sums", lambda s: s / F.col("__d")),
-                    F.array(*[F.lit(0.0)] * dim),
-                ).alias("emb"),
-            )
-        )
         w = weights[it] if it < len(weights) else 1.0
-        acc = (
-            acc.join(x, "vid")
-            .select(
-                "vid",
-                F.zip_with("acc", "emb", lambda a, b: a + b * F.lit(w)).alias("acc"),
-                F.col("emb"),
+        # neighbor mean: sum over in-neighbors / degree
+        x = (
+            nbr.join(state, nbr["n"] == state["vid"])
+            .groupBy(F.col("v").alias("vid"))
+            .agg(
+                F.max(F.when(~nb, F.col("acc"))).alias("acc"),
+                F.count(F.when(nb, 1)).alias("d"),
+                F.array(
+                    *[F.sum(F.when(nb, F.element_at("emb", i + 1))) for i in range(dim)]
+                ).alias("s"),
             )
-            .select("vid", "acc", "emb")
+            # every vertex has a neighbour: it comes from an edge
+            .withColumn("emb", F.transform("s", lambda s: s / F.col("d")))
         )
-        x = acc.select("vid", "emb")
-        acc = acc.select("vid", "acc")
-        if it % 2 == 0:
-            acc = acc.truncate_plan()
-            x = x.truncate_plan()
+        state = ss.carry(
+            x.select(
+                "vid", F.zip_with("acc", "emb", lambda a, b: a + b * F.lit(w)).alias("acc"), "emb"
+            )
+        )
+    acc = ss.finish(state)
+    nbr.unpersist()
     # L2 normalize
     norm = F.sqrt(F.aggregate("acc", F.lit(0.0), lambda s, v: s + v * v))
     return acc.select(
@@ -723,12 +721,13 @@ def random_walks(
         F.array(F.col("vid")).alias("path"),
         F.col("vid").alias("cur"),
     )
+    ss = Supersteps()
     for step in range(walk_length):
         choice = F.pmod(
             F.xxhash64(F.col("cur"), F.col("walk_id"), F.lit(step), F.lit(seed)),
             F.col("__deg"),
         )
-        walks = (
+        walks = ss.carry(
             walks.join(indexed, walks["cur"] == indexed["src"], "left")
             .filter((F.col("__i").isNull()) | (F.col("__i") == choice))
             .select(
@@ -740,8 +739,8 @@ def random_walks(
                 F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
             )
         )
-        if (step + 1) % 3 == 0:
-            walks = walks.truncate_plan()
+    walks = ss.finish(walks)
+    indexed.unpersist()
     return walks.select("start", "walk_id", "path")
 
 
@@ -756,8 +755,11 @@ def betweenness_centrality(
 
     All sources advance together: state is (source, vid, dist, sigma)
     so each BFS level is ONE join regardless of |sources| — the
-    vectorized-Brandes shape that scales horizontally.  The backward
-    dependency accumulation walks the recorded levels in reverse.
+    vectorized-Brandes shape that scales horizontally.  The forward pass
+    carries one row per reached (source, vid) and reads it once per
+    superstep through the self rows of the in-adjacency.  The backward
+    dependency accumulation is a level loop over the finished state
+    filtered on ``dist``: a superstep reads levels d+1 and d only.
     Returns (vid, betweenness).
     """
     e = edges.select("src", "dst").distinct().cache()
@@ -770,67 +772,58 @@ def betweenness_centrality(
         [(s, s, 0, 1.0) for s in sources],
         "source long, vid long, dist int, sigma double",
     )
-    levels = [state]
-    frontier = state
+    # forward: a superstep sends the newest level's sigma along its
+    # out-edges; a vertex keeps its (dist, sigma) once reached
+    nbr = _with_self_rows(
+        e.select(F.col("dst").alias("v"), F.col("src").alias("n")), _vertices_of(e)
+    ).cache()
+    own = F.col("__self")
+    fwd = Supersteps()
+    deepest = 0
     for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["vid"] == e["src"], "inner")
-            .groupBy("source", F.col("dst").alias("vid"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(depth))
-        )
-        seen = state.select(
-            F.col("source").alias("__s"), F.col("vid").alias("__v")
-        )
-        nxt = nxt.join(
-            seen,
-            (nxt["source"] == seen["__s"]) & (nxt["vid"] == seen["__v"]),
-            "left_anti",
-        ).select("source", "vid", "dist", "sigma")
-        nxt = nxt.truncate_plan()
-        if nxt.limit(1).count() == 0:
-            break
-        levels.append(nxt)
-        state = state.unionByName(nxt).truncate_plan()
-        frontier = nxt
-
-    # backward accumulation: delta(v) = Σ_{w: succ} σ(v)/σ(w) · (1 + δ(w))
-    delta = levels[-1].select("source", "vid", F.lit(0.0).alias("delta"))
-    acc = None
-    for d in range(len(levels) - 2, -1, -1):
-        cur = levels[d].select("source", "vid", "sigma")
-        succ = levels[d + 1].select(
-            F.col("source").alias("source"),
-            F.col("vid").alias("__w"),
-            F.col("sigma").alias("__sw"),
-        ).join(
-            delta.select(
-                F.col("source").alias("source"),
-                F.col("vid").alias("__w"),
-                F.col("delta").alias("__dw"),
-            ),
-            ["source", "__w"],
-        )
-        contrib = (
-            cur.join(e, cur["vid"] == e["src"], "inner")
-            .join(
-                succ,
-                (F.col("dst") == succ["__w"]) & (cur["source"] == succ["source"]),
-            )
-            .groupBy(cur["source"], "vid")
+        stepped = (
+            nbr.join(state, (nbr["n"] == state["vid"]) & (own | (state["dist"] == depth - 1)))
+            .groupBy("source", F.col("v").alias("vid"))
             .agg(
-                F.sum(
-                    (F.col("sigma") / F.col("__sw")) * (1.0 + F.col("__dw"))
-                ).alias("delta")
+                F.min(F.when(own, F.col("dist")).otherwise(depth)).alias("dist"),
+                F.max(F.when(own, F.col("sigma"))).alias("__own"),
+                F.sum(F.when(~own, F.col("sigma"))).alias("__msg"),
+            )
+            .select("source", "vid", "dist", F.coalesce("__own", "__msg").alias("sigma"))
+        )
+        grew = fwd.step(stepped, F.count(F.when(F.col("dist") == depth, 1)))[0]
+        state = fwd.carry(stepped)
+        if not grew:
+            break
+        deepest = depth
+    state = fwd.finish(state)
+    nbr.unpersist()
+
+    # backward, deepest level first: delta(v) = σ(v) · Σ_{w: succ}
+    # (1 + δ(w)) / σ(w); level d+1 sends its terms to its in-neighbours
+    # and level d sums them.  Level 0 (the sources) is not accumulated.
+    frontier = state.filter(F.col("dist") == deepest).withColumn("delta", F.lit(0.0))
+    acc = frontier
+    bwd = Supersteps(level="dist")
+    for d in range(deepest - 1, 0, -1):
+        terms = (
+            frontier.join(e, frontier["vid"] == e["dst"])
+            .groupBy("source", F.col("src").alias("vid"))
+            .agg(F.sum((1.0 + F.col("delta")) / F.col("sigma")).alias("__t"))
+        )
+        level = (
+            state.filter(F.col("dist") == d)
+            .join(terms, ["source", "vid"], "left")
+            .select(
+                "source", "vid", "dist", "sigma",
+                (F.col("sigma") * F.coalesce("__t", F.lit(0.0))).alias("delta"),
             )
         )
-        delta = cur.select("source", "vid").join(
-            contrib, ["source", "vid"], "left"
-        ).fillna(0.0, ["delta"]).truncate_plan()
-        part = delta.filter(F.col("vid") != F.col("source"))
-        acc = part if acc is None else acc.unionByName(part)
-    if acc is None:
-        return _vertices_of(edges).withColumn("betweenness", F.lit(0.0))
+        bwd.step(level)
+        acc = bwd.carry(acc.unionByName(level))
+        frontier = bwd.frontier
+    acc = bwd.finish(acc)
+    e.unpersist()
     bc = acc.groupBy("vid").agg(F.sum("delta").alias("betweenness"))
     return _vertices_of(edges).join(bc, "vid", "left").fillna(0.0, ["betweenness"])
 
@@ -871,46 +864,86 @@ def node2vec_embeddings(
     )
 
 
-def modularity(edges: DataFrame, communities: DataFrame) -> float:
-    """Newman modularity Q of an undirected view of ``edges`` under the
-    (vid, community) assignment — Σ_c [ in_c/(2m) − (tot_c/(2m))² ].
-    (AlgoModularity.java analog; evaluation metric for Louvain/LP.)"""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
+def _local_moving(
+    edges: DataFrame, max_iterations: int, gain, gate=None, quiet: int = 1
+) -> DataFrame:
+    """The local-moving superstep ``louvain`` and ``leiden`` share: every
+    vertex may move to the neighbouring community with the best
+    ``gain(m2)`` (ties → smaller community id), a column over a candidate
+    row: ``nc``, ``w`` (the vertex's links into nc), ``tot`` (Σ degree of
+    nc), the vertex's degree ``k``, and its own ``community``, ``w_cur``
+    and ``tot_cur``; a null gain is no candidate.  A vertex moves when the
+    best gain is positive, names another community and ``gate(i)`` holds;
+    the loop stops after ``quiet`` supersteps in a row without a move.
+
+    The carried state is (vid, community, k), read once per superstep:
+    community totals are a window over it, and the self rows of ``nbr``
+    bring a vertex's own community into the rows of its candidates.
+    Every vertex of ``edges`` gets a community, one with only self-loops
+    its own.  Returns (vid, community).
+    """
+    # pinned, so that each superstep's plan adds a scan of it, not its build
+    nbr = _with_self_rows(_undirected_adj(edges), _vertices_of(edges)).truncate_plan().cache()
+    comm = (
+        nbr.groupBy("v")
+        .agg(F.count(F.when(~F.col("__self"), 1)).alias("k"))
+        .select(F.col("v").alias("vid"), F.col("v").alias("community"), "k")
     )
-    m = und.count()
-    if m == 0:
-        return 0.0
-    ca = communities.select(F.col("vid").alias("a"), F.col("community").alias("__ca"))
-    cb = communities.select(F.col("vid").alias("b"), F.col("community").alias("__cb"))
-    tagged = und.join(ca, "a").join(cb, "b")
-    in_c = (
-        tagged.filter(F.col("__ca") == F.col("__cb"))
-        .groupBy(F.col("__ca").alias("c"))
-        .agg(F.count("*").alias("in_edges"))
-    )
-    deg = (
-        und.select(F.col("a").alias("vid"))
-        .unionByName(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count("*").alias("d"))
-    )
-    tot = (
-        communities.join(deg, "vid", "left")
-        .fillna(0, ["d"])
-        .groupBy(F.col("community").alias("c"))
-        .agg(F.sum("d").alias("tot"))
-    )
-    parts = tot.join(in_c, "c", "left").fillna(0, ["in_edges"])
-    row = parts.agg(
-        F.sum(
-            F.col("in_edges") / F.lit(float(m))
-            - (F.col("tot") / F.lit(2.0 * m)) * (F.col("tot") / F.lit(2.0 * m))
-        ).alias("q")
-    ).collect()[0]
-    return float(row["q"])
+    m2 = float(nbr.filter(~F.col("__self")).count())  # 2m
+    if m2 == 0:
+        nbr.unpersist()
+        return comm.select("vid", "community")
+    by_c, by_v = Window.partitionBy("community"), Window.partitionBy("v")
+
+    def own(c):
+        return F.max(F.when(F.col("__own"), c)).over(by_v)
+
+    ss = Supersteps()
+    still = 0
+    for i in range(1, max_iterations + 1):
+        tot = comm.withColumn("tot", F.sum("k").over(by_c))
+        rows = (
+            nbr.join(tot, nbr["n"] == tot["vid"])
+            .groupBy("v", F.col("community").alias("nc"))
+            .agg(
+                F.count(F.when(~F.col("__self"), 1)).alias("w"),
+                F.max("tot").alias("tot"),
+                F.max("__self").alias("__own"),
+                F.max(F.when(F.col("__self"), F.col("k"))).alias("__k"),
+            )
+        )
+        cand = rows.select(
+            "v", "nc", "w", "tot",
+            own(F.col("nc")).alias("community"),
+            own(F.col("w")).alias("w_cur"),
+            own(F.col("tot")).alias("tot_cur"),
+            F.max("__k").over(by_v).alias("k"),
+        ).withColumn("gain", gain(m2))
+        # best candidate per vertex via max(struct(gain, −nc)): a hash
+        # aggregate on the window's partitioning, no sort; (gain desc,
+        # nc asc) by the lexicographic struct order
+        best = cand.groupBy(F.col("v").alias("vid")).agg(
+            F.max(F.struct("gain", (-F.col("nc")).alias("__negnc"), "nc")).alias("__m"),
+            F.max("community").alias("community"),
+            F.max("k").alias("k"),
+        )
+        move = (F.col("__m.gain") > 0) & (F.col("__m.nc") != F.col("community"))
+        if gate is not None:
+            move = move & gate(i)
+        stepped = best.select(
+            "vid",
+            F.when(move, F.col("__m.nc")).otherwise(F.col("community")).alias("community"),
+            "k",
+            move.alias("__moved"),
+        )
+        moved = ss.step(stepped, F.max("__moved"))[0]
+        comm = ss.carry(stepped.drop("__moved"))
+        still = 0 if moved else still + 1
+        if still >= quiet:
+            break
+    comm = ss.finish(comm)
+    nbr.unpersist()
+    return comm.select("vid", "community")
 
 
 def louvain(edges: DataFrame, max_iterations: int = 10) -> DataFrame:
@@ -924,87 +957,10 @@ def louvain(edges: DataFrame, max_iterations: int = 10) -> DataFrame:
     the iteration cap plus min-id tie-breaking keeps it stable in
     practice; the aggregation phase (community contraction) is round-2.
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
+    # ΔQ ∝ w/m2·2 − k·tot/(m2²)·2 up to constants; comparing candidates
+    # for one v, the shared terms cancel
+    return _local_moving(
+        edges,
+        max_iterations,
+        lambda m2: F.col("w") / F.lit(m2) - F.col("k") * F.col("tot") / F.lit(m2 * m2),
     )
-    adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("n"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("n")))
-        .repartition("v")
-        .cache()
-    )
-    m2 = 2.0 * und.count()  # 2m
-    deg = adj.groupBy("v").agg(F.count("*").alias("k")).cache()
-    comm = deg.select(F.col("v").alias("vid"), F.col("v").alias("community"))
-    for i in range(1, max_iterations + 1):
-        cmap = comm.select(F.col("vid").alias("n"), F.col("community").alias("nc"))
-        ctot = (
-            comm.join(deg.withColumnRenamed("v", "vid"), "vid")
-            .groupBy("community")
-            .agg(F.sum("k").alias("tot"))
-        )
-        # links from v to each neighboring community
-        v2c = (
-            adj.join(cmap, "n")
-            .groupBy("v", "nc")
-            .agg(F.count("*").alias("w"))
-        )
-        cand = (
-            v2c.join(deg, "v")
-            .join(ctot.withColumnRenamed("community", "nc"), "nc")
-            .withColumn(
-                # ΔQ ∝ w/m2·2 − k·tot/(m2²)·2 up to constants; comparing
-                # candidates for one v, the shared terms cancel
-                "gain",
-                F.col("w") / F.lit(m2) - F.col("k") * F.col("tot") / F.lit(m2 * m2),
-            )
-        )
-        # best candidate per vertex via max(struct(gain, −nc)) — a hash
-        # aggregate with map-side partial aggregation instead of the
-        # row_number() window's extra shuffle + sort; (gain desc, nc asc)
-        # tie-breaking is preserved by the lexicographic struct order
-        best = (
-            cand.groupBy("v")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("gain"), (-F.col("nc")).alias("__negnc"), F.col("nc")
-                    )
-                ).alias("__m")
-            )
-            .select(
-                F.col("v").alias("vid"),
-                F.col("__m.nc").alias("new_c"),
-                F.col("__m.gain").alias("gain"),
-            )
-        )
-        # Hard-truncate EVERY superstep: ``comm`` feeds this plan 3-4 times
-        # (cmap, ctot, the final join), so a lazy chain grows the Catalyst
-        # tree ~4^k per superstep — 5 deferred supersteps OOM the driver
-        # (measured).  The carried moved-flag still removes the old
-        # convergence self-join: `moved` is one aggregate over the freshly
-        # truncated frame instead of a second join of two parquet scans.
-        stepped = (
-            comm.join(best, "vid", "left")
-            .select(
-                "vid",
-                F.when(
-                    F.col("gain") > 0, F.col("new_c")
-                ).otherwise(F.col("community")).alias("community"),
-                (
-                    (F.col("gain") > 0) & (F.col("new_c") != F.col("community"))
-                ).alias("__chg"),
-            )
-            .truncate_plan()
-        )
-        moved = stepped.agg(F.max("__chg")).collect()[0][0]
-        comm = stepped.select("vid", "community")
-        if not moved:
-            break
-    adj.unpersist()
-    deg.unpersist()
-    und.unpersist()
-    return comm

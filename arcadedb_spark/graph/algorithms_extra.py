@@ -14,7 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from arcadedb_spark.graph.algorithms import _vertices_of, connected_components
+from arcadedb_spark.graph.algorithms import (
+    _local_moving,
+    _undirected_adj,
+    _undirected_pairs,
+    _with_self_rows,
+    connected_components,
+)
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
 
@@ -40,108 +46,46 @@ def leiden(
     communities).
 
     Distributed form: (1) synchronous modularity local-moving with the γ
-    term (gain ∝ w/2m − γ·k·Σtot/(2m)²) — the same superstep shape as
-    ``louvain``; (2) refinement = connected components of each community's
+    term (gain ∝ w/2m − γ·k·Σtot/(2m)²) — the superstep ``louvain``
+    shares (``algorithms._local_moving``); (2) refinement = connected components of each community's
     induced subgraph, so no output community can be internally
     disconnected (the Leiden guarantee Louvain lacks — Traag et al. 2019).
     Returns (vid, community).
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
+    # full move delta = insertion gain MINUS removal cost
+    # (AlgoLeiden.java:142,175 computes both terms; without the removal
+    # term, symmetric vertices swap communities forever); the own
+    # community is no candidate
+    def gain(m2):
+        return F.when(
+            F.col("nc") != F.col("community"),
+            (F.col("w") - F.col("w_cur")) / F.lit(m2)
+            - F.lit(resolution)
+            * F.col("k")
+            * (F.col("tot") - F.col("tot_cur") + F.col("k"))
+            / F.lit(m2 * m2),
+        )
+
+    # alternating move gate (vid-hash parity per round) breaks the
+    # synchronous-oscillation symmetry that plain simultaneous moving
+    # suffers on regular structures — standard distributed-Louvain trick.
+    # It lets one parity class move per round, so two consecutive quiet
+    # rounds (both parities) confirm convergence (AlgoLeiden.java's
+    # local-move loop exits when no vertex moves).
+    comm = _local_moving(
+        edges,
+        max_iterations,
+        gain,
+        gate=lambda i: (F.abs(F.xxhash64(F.col("vid"))) + F.lit(i)) % 2 == 0,
+        quiet=2,
     )
-    adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("n"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("n")))
-        .repartition("v")
-        .cache()
-    )
-    m2 = 2.0 * und.count()
-    if m2 == 0:
-        return _vertices_of(edges).withColumn("community", F.col("vid"))
-    deg = adj.groupBy("v").agg(F.count("*").alias("k")).cache()
-    comm = deg.select(F.col("v").alias("vid"), F.col("v").alias("community"))
-    quiet = 0
-    for i in range(1, max_iterations + 1):
-        cmap = comm.select(F.col("vid").alias("n"), F.col("community").alias("nc"))
-        ctot = (
-            comm.join(deg.withColumnRenamed("v", "vid"), "vid")
-            .groupBy("community")
-            .agg(F.sum("k").alias("tot"))
-        )
-        v2c = adj.join(cmap, "n").groupBy("v", "nc").agg(F.count("*").alias("w"))
-        # full move delta = insertion gain MINUS removal cost
-        # (AlgoLeiden.java:142,175 computes both terms; without the removal
-        # term, symmetric vertices swap communities forever)
-        cur = (
-            comm.withColumnRenamed("vid", "v")
-            .join(ctot, "community")
-            .withColumnRenamed("tot", "tot_cur")
-        )
-        w_cur = (
-            v2c.join(
-                comm.select(F.col("vid").alias("v"), F.col("community").alias("nc")),
-                ["v", "nc"],
-            )
-            .select("v", F.col("w").alias("w_cur"))
-        )
-        cand = (
-            v2c.join(deg, "v")
-            .join(cur.select("v", "community", "tot_cur"), "v")
-            .join(w_cur, "v", "left")
-            .filter(F.col("nc") != F.col("community"))
-            .join(ctot.withColumnRenamed("community", "nc"), "nc")
-            .withColumn(
-                "gain",
-                (F.col("w") - F.coalesce(F.col("w_cur"), F.lit(0.0))) / F.lit(m2)
-                - F.lit(resolution)
-                * F.col("k")
-                * (F.col("tot") - F.col("tot_cur") + F.col("k"))
-                / F.lit(m2 * m2),
-            )
-        )
-        w_best = Window.partitionBy("v").orderBy(F.desc("gain"), F.asc("nc"))
-        best = (
-            cand.withColumn("__rn", F.row_number().over(w_best))
-            .filter(F.col("__rn") == 1)
-            .select(F.col("v").alias("vid"), F.col("nc").alias("new_c"), "gain")
-        )
-        # alternating move gate (vid-hash parity per round) breaks the
-        # synchronous-oscillation symmetry that plain simultaneous moving
-        # suffers on regular structures — standard distributed-Louvain trick
-        gate = (F.abs(F.xxhash64(F.col("vid"))) + F.lit(i)) % 2 == 0
-        moved = (F.col("gain") > 0) & gate
-        comm = (
-            comm.join(best, "vid", "left")
-            .select(
-                "vid",
-                F.when(moved, F.col("new_c"))
-                .otherwise(F.col("community"))
-                .alias("community"),
-                moved.alias("__moved"),
-            )
-            .truncate_plan()
-        )
-        # convergence early-exit (AlgoLeiden.java local-move loop exits when
-        # no vertex moves) — the count scans the just-truncated frame, cheap.
-        # The alternating gate only lets one parity class move per round, so
-        # two consecutive quiet rounds (both parities) are needed to confirm.
-        moves = comm.filter(F.col("__moved")).limit(1).count()
-        comm = comm.drop("__moved")
-        quiet = quiet + 1 if moves == 0 else 0
-        if quiet >= 2:
-            break
     # refinement: split internally-disconnected communities
-    cm = comm.select(F.col("vid").alias("a"), F.col("community").alias("ca"))
     intra = (
-        und.join(cm, "a")
-        .join(
-            comm.select(F.col("vid").alias("b"), F.col("community").alias("cb")), "b"
-        )
-        .filter(F.col("ca") == F.col("cb"))
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        edges.select("src", "dst")
+        .join(comm.select(F.col("vid").alias("src"), F.col("community").alias("cs")), "src")
+        .join(comm.select(F.col("vid").alias("dst"), F.col("community").alias("cd")), "dst")
+        .filter(F.col("cs") == F.col("cd"))
+        .select("src", "dst")
     )
     refined = connected_components(intra).withColumnRenamed("component", "rc")
     return comm.join(refined, "vid", "left").select(
@@ -331,9 +275,14 @@ def max_flow(
 
     Each augmentation runs a distributed BFS over the residual graph
     (positive-capacity edges) carrying path arrays; the shortest
-    augmenting path (one row) is the only driver-side materialization.
-    Residual updates are a broadcast join against the path's edge list,
-    checkpointed per round.  ``max_augmentations`` bounds the sequential
+    augmenting path (one row) is an observed aggregate of the superstep
+    that reaches the sink.  Residual updates are a broadcast join against
+    the path's edge list, and the residual frame is the outer loop's
+    carried state; both loops run on ``Supersteps``.  The BFS carries one
+    row per reached vertex, read once per superstep through the self rows
+    of the live in-adjacency, rather than a union of levels anti-joined
+    per level, so its plan grows by one superstep per level, not ~2.6×.
+    ``max_augmentations`` bounds the sequential
     outer loop — flow problems with more augmenting paths than that need
     a push-relabel formulation, documented out of scope.
     Returns one row (max_flow double, source_id long, sink_id long).
@@ -349,36 +298,54 @@ def max_flow(
         .agg(F.sum("cap").alias("cap"))
         .truncate_plan()
     )
+    # one self row per vertex keeps a reached vertex's own row in its group
+    verts = res.select(F.col("src").alias("vid")).distinct().cache()
+    own = F.col("__self")
     total = 0.0
+    rounds = Supersteps()
     for _ in range(max_augmentations):
-        # BFS shortest augmenting path in the residual graph
+        # BFS shortest augmenting path in the residual graph, one row per
+        # reached vertex: a superstep extends the newest level along the
+        # live edges and keeps each vertex's first (depth, path)
         live = res.filter(F.col("cap") > 0)
-        frontier = local_df(spark, [(source, [source])], "vid long, path array<long>")
-        seen = frontier.select("vid")
+        nbr = _with_self_rows(
+            live.select(F.col("dst").alias("v"), F.col("src").alias("n")), verts
+        )
+        reached = local_df(
+            spark, [(source, 0, [source])], "vid long, depth int, path array<long>"
+        )
+        bfs = Supersteps()
         found = None
-        for _d in range(max_depth):
-            exp = (
-                frontier.join(live, frontier["vid"] == live["src"], "inner")
-                .select(F.col("dst").alias("vid"), F.concat("path", F.array("dst")).alias("path"))
-                .join(seen, "vid", "left_anti")
-                .dropDuplicates(["vid"])
-                .truncate_plan()
+        for depth in range(1, max_depth + 1):
+            hop = F.struct(F.lit(depth).alias("depth"), F.concat("path", F.array("v")).alias("path"))
+            stepped = (
+                nbr.join(
+                    reached,
+                    (nbr["n"] == reached["vid"]) & (own | (reached["depth"] == depth - 1)),
+                )
+                .groupBy(F.col("v").alias("vid"))
+                .agg(F.min(F.when(own, F.struct("depth", "path")).otherwise(hop)).alias("m"))
+                .select("vid", "m.depth", "m.path")
             )
-            hit = exp.filter(F.col("vid") == sink).limit(1).collect()
-            if hit:
-                found = hit[0]["path"]
+            new = F.col("depth") == depth
+            found, grew = bfs.step(
+                stepped,
+                F.max(F.when(new & (F.col("vid") == sink), F.col("path"))),
+                F.count(F.when(new, 1)),
+            )
+            reached = bfs.carry(stepped)
+            if found or not grew:
                 break
-            if exp.limit(1).count() == 0:
-                break
-            seen = seen.unionByName(exp.select("vid")).truncate_plan()
-            frontier = exp
-        if found is None:
+        bfs.finish(reached)
+        if not found:
             break
         path_edges = [(int(found[j]), int(found[j + 1])) for j in range(len(found) - 1)]
         pe = local_df(spark, path_edges, "src long, dst long")
-        bottleneck = (
-            res.join(F.broadcast(pe), ["src", "dst"]).agg(F.min("cap")).collect()[0][0]
+        # every path edge's cap with its bottleneck, in one superstep
+        stepped = res.join(
+            F.broadcast(pe.withColumn("__on", F.lit(True))), ["src", "dst"], "left"
         )
+        bottleneck = rounds.step(stepped, F.min(F.when(F.col("__on"), F.col("cap"))))[0]
         if not bottleneck or bottleneck <= 0:
             break
         total += float(bottleneck)
@@ -386,11 +353,12 @@ def max_flow(
             pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             .withColumn("d", F.lit(float(bottleneck)))
         )
-        res = (
-            res.join(F.broadcast(delta), ["src", "dst"], "left")
+        res = rounds.carry(
+            stepped.join(F.broadcast(delta), ["src", "dst"], "left")
             .select("src", "dst", (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"))
-            .truncate_plan()
         )
+    rounds.finish(res)
+    verts.unpersist()
     return local_df(
         spark, [(total, source, sink)], "max_flow double, source_id long, sink_id long"
     )
@@ -407,70 +375,57 @@ def maximal_cliques(
     """All maximal cliques (AlgoClique.java — Bron-Kerbosch with Tomita
     pivoting; yields (clique, size)).
 
-    Distributed form: level-synchronous k-clique enumeration — cliques of
-    size s+1 = size-s cliques joined with the adjacency of their largest
-    member (ordering kills duplicates), all-membership verified with one
-    explode + edge semi-join + count.  Bron-Kerbosch's recursive pivot
-    stack is inherently sequential; level enumeration does the same
-    search breadth-first with one join round per clique size, bounded by
-    ``max_size`` (cliques above it are reported truncated — raise it
-    explicitly for clique-dense graphs).  Maximality = no vertex extends
-    the clique, tested with the same explode/count shape.
+    Distributed form: level-synchronous k-clique enumeration — one
+    explode + adjacency join + count per (clique, vertex) pair finds the
+    vertices adjacent to every member of a size-s clique: the clique is
+    maximal when there is none, and grows to size s+1 by each one larger
+    than its largest member (ordering kills duplicates).  Bron-Kerbosch's
+    recursive pivot stack is inherently sequential; level enumeration
+    does the same search breadth-first with one superstep per clique
+    size, bounded by ``max_size`` (cliques above it are reported
+    truncated — raise it explicitly for clique-dense graphs).
     Returns (clique array<long> ascending, size int).
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
+    adj = _undirected_adj(edges).cache()
+    # the carried state holds the newest level's cliques and the maximal
+    # cliques of the levels before; a superstep tests the newest level,
+    # keeps its maximal cliques and appends the next level
+    state = _undirected_pairs(edges).select(F.array("a", "b").alias("clique"))
+    ss = Supersteps()
+    for size in range(2, max_size):
+        newest = F.size("clique") == size
+        # (clique, n): members adjacent to n; n extends the clique when
+        # all ``size`` members are, and grows it when n > its last member
+        hits = (
+            state.select("clique", F.explode_outer(F.when(newest, F.col("clique"))).alias("m"))
+            .join(adj, F.col("m") == adj["v"], "left")
+            .groupBy("clique", "n")
+            .agg(F.count("v").alias("hits"))
+        )
+        extends = (F.col("hits") == size) & ~F.array_contains("clique", F.col("n"))
+        stepped = hits.groupBy("clique").agg(
+            F.max(extends).alias("__ext"),
+            F.collect_list(
+                F.when(extends & (F.col("n") > F.element_at("clique", -1)), F.col("n"))
+            ).alias("__up"),
+        )
+        grown = ss.step(stepped, F.sum(F.size("__up")))[0]
+        state = ss.carry(
+            stepped.select(
+                F.explode(
+                    F.concat(
+                        F.filter(F.array("clique"), lambda c: ~F.col("__ext")),
+                        F.transform("__up", lambda w: F.concat("clique", F.array(w))),
+                    )
+                ).alias("clique")
+            )
+        )
+        if not grown:
+            break
+    state = ss.finish(state)
+    adj.unpersist()
+    # a level the loop never tested (the one at max_size) is emitted
+    # unconditionally
+    return state.filter(F.size("clique") >= min_size).select(
+        "clique", F.size("clique").alias("size")
     )
-    adj = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("n"))
-        .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("n")))
-        .cache()
-    )
-    spark = edges.sparkSession
-    out = local_df(spark, [], "clique array<long>, size int")
-    cliques = und.select(F.array("a", "b").alias("clique"))
-    size = 2
-    while size < max_size:
-        # extend: w adjacent to the largest member, larger than it
-        last = F.element_at("clique", -1)
-        cand = (
-            cliques.join(adj, last == adj["v"], "inner")
-            .filter(F.col("n") > last)
-            .select("clique", F.col("n").alias("w"))
-        )
-        # verify w adjacent to EVERY member: explode + edge join + count
-        chk = cand.select("clique", "w", F.explode("clique").alias("m"))
-        ok = (
-            chk.join(und, (chk["m"] == und["a"]) & (chk["w"] == und["b"]), "inner")
-            .groupBy("clique", "w")
-            .agg(F.count("*").alias("hits"))
-            .filter(F.col("hits") == size)
-        )
-        nxt = ok.select(F.concat("clique", F.array("w")).alias("clique")).truncate_plan()
-        # maximality of the current level: no vertex (any id) extends it
-        ext = cliques.select("clique", F.explode("clique").alias("m")).join(
-            adj, F.col("m") == adj["v"], "inner"
-        )
-        extendable = (
-            ext.groupBy("clique", "n")
-            .agg(F.count("*").alias("hits"))
-            .filter((F.col("hits") == size) & ~F.array_contains("clique", F.col("n")))
-            .select("clique")
-            .distinct()
-        )
-        maximal = cliques.join(extendable, "clique", "left_anti")
-        if size >= min_size:
-            out = out.unionByName(
-                maximal.withColumn("size", F.lit(size))
-            ).truncate_plan()
-        if nxt.limit(1).count() == 0:
-            return out
-        cliques = nxt
-        size += 1
-    # emit the final level unconditionally (truncated at max_size)
-    if size >= min_size:
-        out = out.unionByName(cliques.withColumn("size", F.lit(size)))
-    return out

@@ -7,17 +7,22 @@ AlgoGraphColoring.java, AlgoDensestSubgraph.java, AlgoVoteRank.java,
 AlgoInfluenceMaximization.java, AlgoModularityScore.java,
 AlgoMaxKCut.java, AlgoSameCommunity.java.  Same superstep discipline as
 graph/algorithms.py; sequential-selection loops (VoteRank, influence
-max) do one 1-row action per selection, never an unbounded collect.
+max) observe each selection's top row as ``max(struct(score, −vid))`` in
+their superstep's one action, never an unbounded collect.
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.algorithms import (
     _undirected_adj,
+    _undirected_pairs,
     _vertices_of,
+    _with_self_rows,
     connected_components,
 )
 from arcadedb_spark.graph.superstep import Supersteps
@@ -105,49 +110,46 @@ def densest_subgraph(edges: DataFrame, epsilon: float = 0.1) -> DataFrame:
     density)).  Each round removes all vertices with degree ≤ (1+ε)·avg;
     the best-density snapshot wins — O(log n) rounds (Bahmani et al.
     2012).  Returns (vid, in_dense boolean, density double)."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
-    verts = _vertices_of(edges).cache()
-    cur_v = verts
-    best_density = -1.0
-    best = cur_v
-    while True:
-        m = und.join(cur_v.withColumnRenamed("vid", "a"), "a", "left_semi").join(
-            cur_v.withColumnRenamed("vid", "b"), "b", "left_semi"
-        ).cache()
-        counts = m.count()
-        nv = cur_v.count()
-        if nv == 0:
+    verts = _vertices_of(edges)
+    nbr = _with_self_rows(_undirected_adj(edges), verts).cache()
+    # the carried state: each vertex with the round that peeled it (null
+    # while it is in the subgraph)
+    state = verts.select("vid", F.lit(None).cast("int").alias("gone"))
+    alive = F.col("gone").isNull()
+    best_density, best_round, nv_before = -1.0, 0, None
+    ss = Supersteps()
+    for r in itertools.count():
+        # degree of each vertex inside the current subgraph
+        stepped = (
+            nbr.join(state, nbr["n"] == state["vid"])
+            .groupBy("v")
+            .agg(
+                F.max(F.when(F.col("__self"), F.col("gone"))).alias("gone"),
+                F.count(F.when(~F.col("__self") & alive, 1)).alias("d"),
+            )
+            .withColumnRenamed("v", "vid")
+        )
+        nv, ends = ss.step(stepped, F.count(F.when(alive, 1)), F.sum(F.when(alive, F.col("d"))))
+        if nv == 0 or nv == nv_before:
             break
-        density = counts / nv
+        density = (ends // 2) / nv
         if density > best_density:
-            best_density = density
-            best = cur_v
-        deg = (
-            m.select(F.col("a").alias("vid"))
-            .unionByName(m.select(F.col("b").alias("vid")))
-            .groupBy("vid")
-            .agg(F.count("*").alias("d"))
-        )
+            best_density, best_round = density, r
         thresh = 2.0 * (1.0 + epsilon) * density
-        keep = (
-            cur_v.join(deg, "vid", "left")
-            .filter(F.coalesce(F.col("d"), F.lit(0)) > thresh)
-            .select("vid")
-            .truncate_plan()
+        state = ss.carry(
+            stepped.select(
+                "vid",
+                F.when(alive & (F.col("d") <= thresh), F.lit(r))
+                .otherwise(F.col("gone"))
+                .alias("gone"),
+            )
         )
-        if keep.count() == nv:
-            break
-        cur_v = keep
-    return verts.join(
-        best.withColumn("__in", F.lit(True)), "vid", "left"
-    ).select(
+        nv_before = nv
+    state = ss.finish(state)
+    nbr.unpersist()
+    return state.select(
         "vid",
-        F.coalesce(F.col("__in"), F.lit(False)).alias("in_dense"),
+        (alive | (F.col("gone") >= best_round)).alias("in_dense"),
         F.lit(float(best_density)).alias("density"),
     )
 
@@ -163,32 +165,50 @@ def vote_rank(edges: DataFrame, k: int = 10) -> DataFrame:
     avg_deg = adj.groupBy("v").agg(F.count("*").alias("d")).agg(F.avg("d")).collect()[0][0]
     decay = 1.0 / (avg_deg or 1.0)
     spark = edges.sparkSession
-    ability = _vertices_of(edges).withColumn("ab", F.lit(1.0))
+    verts = _vertices_of(edges)
+    nbr = _with_self_rows(adj, verts).cache()
+    state = verts.select("vid", F.lit(1.0).alias("ab"), F.lit(False).alias("__won"))
     elected: list[tuple[int, int]] = []
+    ss = Supersteps()
     for rank in range(1, k + 1):
-        votes = (
-            adj.join(ability.withColumnRenamed("vid", "n").withColumnRenamed("ab", "nab"), "n")
-            .groupBy("v")
-            .agg(F.sum("nab").alias("score"))
-            .filter(~F.col("v").isin([e[0] for e in elected]) if elected else F.lit(True))
+        own = F.col("__self")
+        stepped = (
+            nbr.join(state, nbr["n"] == state["vid"])
+            .groupBy(F.col("v").alias("vid"))
+            .agg(
+                F.max(F.when(own, F.col("ab"))).alias("ab"),
+                F.max(F.when(own, F.col("__won"))).alias("__won"),
+                F.sum(F.when(~own, F.col("ab"))).alias("score"),
+            )
         )
-        top = votes.orderBy(F.desc("score"), F.asc("v")).limit(1).collect()
-        if not top or top[0]["score"] <= 0:
+        # the election: max(struct(score, −vid)) over the unelected voters
+        top = ss.step(
+            stepped,
+            F.max(
+                F.when(
+                    F.col("score").isNotNull() & ~F.col("__won"),
+                    F.struct("score", (-F.col("vid")).alias("v")),
+                )
+            ),
+        )[0]
+        if top is None or top["score"] <= 0:
             break
-        w = int(top[0]["v"])
+        w = -int(top["v"])
         elected.append((w, rank))
-        nbrs = adj.filter(F.col("v") == w).select(F.col("n").alias("vid"))
-        ability = (
-            ability.join(nbrs.withColumn("__hit", F.lit(True)), "vid", "left")
-            .select(
+        nbrs = adj.filter(F.col("v") == w).select(F.col("n").alias("vid"), F.lit(True).alias("__hit"))
+        state = ss.carry(
+            stepped.join(nbrs, "vid", "left").select(
                 "vid",
                 F.when(F.col("vid") == w, F.lit(0.0))
                 .when(F.col("__hit"), F.greatest(F.col("ab") - decay, F.lit(0.0)))
                 .otherwise(F.col("ab"))
                 .alias("ab"),
+                (F.col("__won") | (F.col("vid") == w)).alias("__won"),
             )
-            .truncate_plan()
         )
+    ss.finish(state)
+    nbr.unpersist()
+    adj.unpersist()
     return local_df(spark, elected or [], "vid long, rank int")
 
 
@@ -203,26 +223,34 @@ def influence_maximization(edges: DataFrame, k: int = 5) -> DataFrame:
     p = 0.1  # IC edge probability (reference default)
     deg = adj.groupBy("v").agg(F.count("*").alias("d"))
     spark = edges.sparkSession
-    state = deg.select(F.col("v").alias("vid"), F.col("d"), F.lit(0).alias("t"))
+    state = deg.select(
+        F.col("v").alias("vid"), F.col("d"), F.lit(0).alias("t"), F.lit(False).alias("__won")
+    )
     chosen: list[tuple[int, int, float]] = []
+    ss = Supersteps()
     for rank in range(1, k + 1):
-        scored = state.withColumn(
+        stepped = state.withColumn(
             "dd", F.col("d") - 2 * F.col("t") - (F.col("d") - F.col("t")) * F.col("t") * F.lit(p)
-        ).filter(~F.col("vid").isin([c[0] for c in chosen]) if chosen else F.lit(True))
-        top = scored.orderBy(F.desc("dd"), F.asc("vid")).limit(1).collect()
-        if not top:
+        )
+        # the pick: max(struct(dd, −vid)) over the unchosen vertices
+        top = ss.step(
+            stepped,
+            F.max(F.when(~F.col("__won"), F.struct("dd", (-F.col("vid")).alias("v")))),
+        )[0]
+        if top is None:
             break
-        w = int(top[0]["vid"])
-        chosen.append((w, rank, float(top[0]["dd"])))
-        nbrs = adj.filter(F.col("v") == w).select(F.col("n").alias("vid"))
-        state = (
-            state.join(nbrs.withColumn("__hit", F.lit(True)), "vid", "left")
-            .select(
+        w = -int(top["v"])
+        chosen.append((w, rank, float(top["dd"])))
+        nbrs = adj.filter(F.col("v") == w).select(F.col("n").alias("vid"), F.lit(True).alias("__hit"))
+        state = ss.carry(
+            stepped.join(nbrs, "vid", "left").select(
                 "vid", "d",
                 (F.col("t") + F.when(F.col("__hit"), 1).otherwise(0)).alias("t"),
+                (F.col("__won") | (F.col("vid") == w)).alias("__won"),
             )
-            .truncate_plan()
         )
+    ss.finish(state)
+    adj.unpersist()
     return local_df(spark, chosen or [], "vid long, rank int, marginal_gain double")
 
 
@@ -231,12 +259,7 @@ def modularity_score(edges: DataFrame, communities: DataFrame) -> DataFrame:
     yields (modularity, communities, edgeCount)).  Pure aggregation:
     Q = Σ_c [ in_c/m − (tot_c/2m)² ].  Returns one row
     (modularity, communities, edge_count)."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected_pairs(edges).cache()
     m = und.count()
     spark = edges.sparkSession
     if m == 0:
@@ -287,12 +310,7 @@ def max_k_cut(edges: DataFrame, k: int = 2, max_iterations: int = 10) -> DataFra
     oscillation); two quiet rounds in a row (both gate parities) are a
     fixed point and end the search.  Returns (vid, community, cut_weight)."""
     adj = _undirected_adj(edges).cache()
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected_pairs(edges).cache()
     part = _vertices_of(edges).withColumn(
         "community", F.pmod(F.xxhash64("vid"), F.lit(k)).cast("int")
     )
@@ -351,11 +369,7 @@ def same_community(
         communities = connected_components(edges).withColumnRenamed(
             "component", "community"
         )
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected_pairs(edges)
     ca = communities.select(F.col("vid").alias("a"), F.col("community").alias("ca"))
     cb = communities.select(F.col("vid").alias("b"), F.col("community").alias("cb"))
     return und.join(ca, "a").join(cb, "b").select(

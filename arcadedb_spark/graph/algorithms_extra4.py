@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-from arcadedb_spark.graph.algorithms import _undirected_adj
+from arcadedb_spark.graph.algorithms import _undirected_adj, _with_self_rows
 from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
@@ -153,34 +153,33 @@ def graphsage(
         / F.lit(1000003.0) * F.lit(2.0) - F.lit(1.0)
         for i in range(dim - 1)
     ]
-    h = deg.select(
-        "vid", F.array(F.log1p("d"), *noise).alias("h")
-    ).truncate_plan()
+    h = deg.select("vid", F.array(F.log1p("d"), *noise).alias("h"))
+    nbr = _with_self_rows(adj, deg).cache()
+    nb = ~F.col("__self")
+    ss = Supersteps()
     for layer in range(layers):
-        neigh = adj.join(h, adj["n"] == h["vid"], "inner").select(
-            F.col("v").alias("vid"), "h"
-        )
-        mean = neigh.groupBy("vid").agg(
-            (
+        folded = (
+            nbr.join(h, nbr["n"] == h["vid"], "inner")
+            .groupBy(F.col("v").alias("vid"))
+            .agg(
+                F.max(F.when(F.col("__self"), F.col("h"))).alias("h"),
                 F.aggregate(
-                    F.collect_list("h"),
+                    F.collect_list(F.when(nb, F.col("h"))),
                     F.array_repeat(F.lit(0.0), dim),
                     lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-                )
-            ).alias("s"),
-            F.count("*").alias("n"),
-        ).select(
-            "vid", F.transform("s", lambda x: x / F.col("n")).alias("m")
+                ).alias("s"),
+                F.count(F.when(nb, 1)).alias("n"),
+            )
         )
-        combined = h.join(mean, "vid", "left").select(
+        combined = folded.select(
             "vid",
-            F.concat(
-                "h", F.coalesce("m", F.array_repeat(F.lit(0.0), dim))
-            ).alias("x"),
+            F.concat("h", F.transform("s", lambda x: x / F.col("n"))).alias("x"),
         )
         proj = _sage_project_udf(2 * dim, dim, seed + layer)
-        h = combined.select("vid", proj("x").alias("h"))
-        h = h.truncate_plan()
+        h = ss.carry(combined.select("vid", proj("x").alias("h")))
+    h = ss.finish(h)
+    nbr.unpersist()
+    adj.unpersist()
     return h.select(F.col("vid").alias("node"), F.col("h").alias("embedding"))
 
 
@@ -290,9 +289,10 @@ def steiner_tree(
 
     SSSP from each terminal (t is user-supplied and small — the SSSPs
     themselves are distributed); the t×t metric closure and its MST are
-    driver-side (t² scalars); path expansion walks predecessor chains
-    with per-step 1-row lookups batched across all MST edges; leaf
-    pruning is iterative degree-filtering, all joins."""
+    driver-side (t² scalars); path expansion walks predecessor chains,
+    one walker row per MST edge collecting the segments it passes; leaf
+    pruning flags edges with a degree-1 non-terminal end.  Both are
+    ``Supersteps`` loops whose stop test is an observed aggregate."""
     spark = edges.sparkSession
     empty = local_df(
         spark, [], "source long, target long, weight double, totalWeight double"
@@ -338,56 +338,68 @@ def steiner_tree(
             mst_pairs.append((a, b))
     if len(mst_pairs) < len(terminals) - 1:
         return empty  # terminals not mutually reachable
-    # 4. expand each closure edge (a,b) along a's predecessor chain from b
-    frontier = local_df(
-        spark, [(a, b) for a, b in mst_pairs], "terminal long, cur long"
+    # 4. expand each closure edge (a,b) along a's predecessor chain from b:
+    # one walker row per closure edge collects the segments it passes
+    walkers = local_df(
+        spark,
+        [(a, b, []) for a, b in mst_pairs],
+        "terminal long, cur long, segs array<struct<lo:long,hi:long>>",
     )
-    pmap = allp.select(
-        "terminal", F.col("vid").alias("cur"), "parent",
-        F.col("distance").alias("dist"),
-    )
-    tree_edges = None
+    pmap = allp.select("terminal", F.col("vid").alias("cur"), "parent")
+    ss = Supersteps()
     for _ in range(max_iterations * len(terminals)):
-        step = frontier.join(pmap, ["terminal", "cur"], "inner").filter(
-            F.col("parent").isNotNull()
+        stepped = walkers.join(pmap, ["terminal", "cur"], "left").select(
+            "terminal",
+            F.col("parent").alias("cur"),
+            F.when(
+                F.col("parent").isNotNull(),
+                F.array_append(
+                    "segs",
+                    F.struct(
+                        F.least("parent", "cur").alias("lo"),
+                        F.greatest("parent", "cur").alias("hi"),
+                    ),
+                ),
+            )
+            .otherwise(F.col("segs"))
+            .alias("segs"),
         )
-        seg = step.select(
-            F.least("parent", "cur").alias("lo"),
-            F.greatest("parent", "cur").alias("hi"),
-        )
-        tree_edges = seg if tree_edges is None else tree_edges.unionByName(seg)
-        frontier = step.select("terminal", F.col("parent").alias("cur"))
-        frontier = frontier.truncate_plan()
-        if frontier.limit(1).count() == 0:
+        walking = ss.step(stepped, F.count("cur"))[0]
+        walkers = ss.carry(stepped)
+        if not walking:
             break
-    if tree_edges is None:
-        return empty
+    walkers = ss.finish(walkers)
     ew = _weighted(edges).select(
         F.least("src", "dst").alias("lo"),
         F.greatest("src", "dst").alias("hi"),
         "w",
     ).groupBy("lo", "hi").agg(F.min("w").alias("w"))
-    sub = tree_edges.distinct().join(ew, ["lo", "hi"], "inner")
-    # 5. iteratively prune non-terminal leaves
-    sub = sub.truncate_plan()
-    term_df = local_df(spark, [(t,) for t in terminals], "vid long")
+    sub = (
+        walkers.select(F.inline("segs"))
+        .distinct()
+        .join(ew, ["lo", "hi"], "inner")
+    )
+    # 5. iteratively prune non-terminal leaves: an edge goes when one of
+    # its ends has degree 1 and is no terminal
+    ss = Supersteps()
     for _ in range(max_iterations):
-        degs = (
-            sub.select(F.col("lo").alias("vid"))
-            .unionByName(sub.select(F.col("hi").alias("vid")))
-            .groupBy("vid")
-            .agg(F.count("*").alias("d"))
+        ends = sub.select("lo", "hi", "w", F.explode(F.array("lo", "hi")).alias("vid"))
+        stepped = (
+            ends.select(
+                "lo", "hi", "w",
+                (
+                    (F.count(F.lit(1)).over(Window.partitionBy("vid")) == 1)
+                    & ~F.col("vid").isin(terminals)
+                ).alias("__leaf"),
+            )
+            .groupBy("lo", "hi", "w")
+            .agg(F.max("__leaf").alias("__leaf"))
         )
-        leaves = degs.filter(F.col("d") == 1).join(
-            term_df, "vid", "left_anti"
-        )
-        if leaves.limit(1).count() == 0:
+        pruned = ss.step(stepped, F.max("__leaf"))[0]
+        sub = ss.carry(stepped.filter(~F.col("__leaf")).drop("__leaf"))
+        if not pruned:
             break
-        sub = (
-            sub.join(leaves.select(F.col("vid").alias("lo")), "lo", "left_anti")
-            .join(leaves.select(F.col("vid").alias("hi")), "hi", "left_anti")
-            .truncate_plan()
-        )
+    sub = ss.finish(sub)
     total = sub.agg(F.sum("w")).collect()[0][0] or 0.0
     return sub.select(
         F.col("lo").alias("source"),

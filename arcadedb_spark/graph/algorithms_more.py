@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from arcadedb_spark.graph.algorithms import (
     _undirected_adj,
+    _undirected_pairs,
     _vertices_of,
     connected_components,
     default_landmarks,
@@ -244,12 +245,7 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
 def graph_summary(edges: DataFrame) -> DataFrame:
     """One-row structural summary (AlgoGraphSummary.java): vertex/edge
     counts, density, degree min/avg/max."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected_pairs(edges).cache()
     deg = (
         und.select(F.col("a").alias("vid"))
         .unionByName(und.select(F.col("b").alias("vid")))
@@ -284,12 +280,7 @@ def assortativity(edges: DataFrame) -> float:
 def rich_club_coefficient(edges: DataFrame, k: int) -> float:
     """φ(k) = 2·E_k / (N_k·(N_k−1)) over vertices with degree > k
     (AlgoRichClub.java)."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected_pairs(edges).cache()
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -311,12 +302,7 @@ def rich_club_coefficient(edges: DataFrame, k: int) -> float:
 def conductance(edges: DataFrame, communities: DataFrame) -> DataFrame:
     """Per-community conductance = cut / min(vol, 2m − vol)
     (AlgoConductance.java).  ``communities`` = (vid, community)."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected_pairs(edges).cache()
     m = und.count()
     ca = communities.select(F.col("vid").alias("a"), F.col("community").alias("__ca"))
     cb = communities.select(F.col("vid").alias("b"), F.col("community").alias("__cb"))
@@ -608,12 +594,7 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 30) -> DataFrame:
     than k−2 triangles (AlgoKTruss.java computes the full decomposition;
     this is the membership query for one k — run over k=3..k_max for the
     decomposition).  Returns undirected surviving edges (a, b)."""
-    und = (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
+    und = _undirected_pairs(edges).cache()
     cur = und
     n_cur = und.count()
     ss = Supersteps()

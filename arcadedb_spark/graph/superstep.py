@@ -1,6 +1,11 @@
-"""One lifecycle for the superstep and frontier loops in graph/: the
-algorithms, TRAVERSE's distributed mode, MATCH/Cypher var-length
-expansion, Gremlin ``repeat().until()`` and the ``path.*`` procedures.
+"""One lifecycle for the superstep and frontier loops in graph/: every
+algorithm loop (PageRank through Louvain/Leiden, max-flow, betweenness,
+the embeddings, the selection and peeling loops), TRAVERSE's distributed
+mode, MATCH/Cypher var-length expansion, Gremlin ``repeat().until()``
+and the ``path.*`` procedures.  Two loops keep their own truncation
+(``tests/test_plans.py::KEPT_TRUNCATING_LOOPS``): ``algorithms_more.mst``
+and ``algorithms_extra4.min_spanning_arborescence`` write per-round
+outputs that a later union or unwind pass re-reads.
 
 A superstep is one DataFrame plan.  What each loop used to repeat by hand
 lives here instead:

@@ -195,6 +195,24 @@ def test_betweenness_path_graph(db, spark):
 
 
 @pytest.mark.slow
+def test_betweenness_matches_networkx_on_a_grid(spark):
+    """A directed 3×4 grid has many shortest paths per pair, so sigma
+    sums over several predecessors and delta splits over successors."""
+    nx = pytest.importorskip("networkx")
+    from arcadedb_spark.graph.algorithms import betweenness_centrality
+
+    rows, cols = 3, 4
+    pairs = [(r * cols + c, r * cols + c + 1) for r in range(rows) for c in range(cols - 1)]
+    pairs += [(r * cols + c, (r + 1) * cols + c) for r in range(rows - 1) for c in range(cols)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    got = {r["vid"]: r["betweenness"] for r in betweenness_centrality(
+        edges, sources=list(range(rows * cols)), max_depth=rows + cols
+    ).collect()}
+    want = nx.betweenness_centrality(nx.DiGraph(pairs), normalized=False)
+    assert got == pytest.approx(want)
+
+
+@pytest.mark.slow
 def test_node2vec_embeddings(db):
     from arcadedb_spark.graph.algorithms import node2vec_embeddings
 
@@ -206,7 +224,8 @@ def test_node2vec_embeddings(db):
 
 @pytest.mark.slow
 def test_louvain_two_cliques(db, spark):
-    from arcadedb_spark.graph.algorithms import louvain, modularity
+    from arcadedb_spark.graph.algorithms import louvain
+    from arcadedb_spark.graph.algorithms_extra2 import modularity_score
 
     tri = lambda base: [(base + i, base + j) for i in range(4) for j in range(i + 1, 4)]
     edges = spark.createDataFrame(tri(0) + tri(10) + [(0, 10)], "src long, dst long")
@@ -215,8 +234,31 @@ def test_louvain_two_cliques(db, spark):
     assert len({rows[v] for v in (0, 1, 2, 3)}) == 1
     assert len({rows[v] for v in (10, 11, 12, 13)}) == 1
     assert rows[0] != rows[10]
-    q = modularity(edges, comm)
+    q = modularity_score(edges, comm).collect()[0]["modularity"]
     assert q > 0.4  # clean 2-community split of bridged cliques
+
+
+@pytest.mark.parametrize("algo", ["louvain", "leiden"])
+@pytest.mark.parametrize(
+    "pairs, expected",
+    [
+        ([(1, 2), (3, 3)], {1, 2, 3}),
+        ([(1, 1), (2, 2)], {1, 2}),
+    ],
+)
+def test_community_detection_keeps_self_loop_only_vertices(spark, algo, pairs, expected):
+    # a vertex whose only edges are self-loops forms a community of its own
+    from arcadedb_spark.graph.algorithms import louvain
+    from arcadedb_spark.graph.algorithms_extra import leiden
+
+    run = {"louvain": louvain, "leiden": leiden}[algo]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    rows = {r["vid"]: r["community"] for r in run(edges, max_iterations=2).collect()}
+    assert set(rows) == expected
+    loners = {s for s, d in pairs if s == d}
+    for v in loners:
+        assert rows[v] == v
+        assert all(rows[u] != v for u in rows if u != v)
 
 
 def test_edge_step_with_properties(db):

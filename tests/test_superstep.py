@@ -281,6 +281,9 @@ LEVEL_LOOPS = {
     "algorithms.shortest_paths": lambda spark, db: A.shortest_paths(
         _chain(spark, LEVELS), [LEVELS], max_depth=LEVELS
     ),
+    "algorithms.betweenness_centrality": lambda spark, db: A.betweenness_centrality(
+        _chain(spark, LEVELS + 1), sources=[0], max_depth=LEVELS + 1
+    ),
     "algorithms.strongly_connected_components": lambda spark, db: (
         A.strongly_connected_components(_cycle(spark, LEVELS + 1))
     ),
@@ -315,17 +318,17 @@ LEVEL_LOOPS = {
 }
 
 
-@pytest.fixture
-def plan_leaves(monkeypatch):
-    """Analyzed-plan leaf counts of the frames each level driver steps, one
-    list per driver.  A step whose plan has more leaves than the one
-    CHECKPOINT_EVERY supersteps before it fails at once, so a plan that
-    doubles per level stops its loop instead of exhausting the heap."""
+def _record_leaves(monkeypatch, wanted):
+    """Analyzed-plan leaf counts of the frames each ``wanted`` driver
+    steps, one list per driver.  A step whose plan has more leaves than
+    the one CHECKPOINT_EVERY supersteps before it fails at once, so a plan
+    that doubles per superstep stops its loop instead of exhausting the
+    heap."""
     series = []
     step = Supersteps.step
 
     def recording(self, frame, *aggregates):
-        if self.level is not None:
+        if wanted(self):
             if not hasattr(self, "_leaves"):
                 self._leaves = []
                 series.append(self._leaves)
@@ -341,6 +344,18 @@ def plan_leaves(monkeypatch):
     return series
 
 
+@pytest.fixture
+def plan_leaves(monkeypatch):
+    """Leaf series of the level drivers (``Supersteps(level=...)``)."""
+    return _record_leaves(monkeypatch, lambda ss: ss.level is not None)
+
+
+@pytest.fixture
+def stepped_leaves(monkeypatch):
+    """Leaf series of every driver."""
+    return _record_leaves(monkeypatch, lambda ss: True)
+
+
 @pytest.mark.parametrize("name", list(LEVEL_LOOPS))
 def test_level_loops_keep_their_plans_bounded(spark, chain_db, plan_leaves, name):
     out = LEVEL_LOOPS[name](spark, chain_db)
@@ -350,6 +365,35 @@ def test_level_loops_keep_their_plans_bounded(spark, chain_db, plan_leaves, name
     for leaves in plan_leaves:
         later = leaves[CHECKPOINT_EVERY:]
         assert all(b <= a for a, b in zip(leaves, later)), leaves
+
+
+def _swapping_edge(spark):
+    """One edge whose ends share Leiden's move-gate parity: both ends move
+    in the same supersteps and swap communities for ever (Louvain's swap
+    on any single edge)."""
+    rows = spark.range(1, 16).select(
+        "id", (F.abs(F.xxhash64("id")) % 2).alias("parity")
+    ).collect()
+    a, b = [r["id"] for r in rows if r["parity"] == rows[0]["parity"]][:2]
+    return spark.createDataFrame([(a, b)], "src long, dst long")
+
+
+@pytest.mark.parametrize("name", ["louvain", "leiden"])
+def test_local_moving_plans_stay_bounded(spark, stepped_leaves, name):
+    """Louvain and Leiden read the carried communities once per
+    superstep: within a truncation window the stepped frame's plan grows
+    by the same number of leaves each superstep, and the driver's cadence
+    cuts it back."""
+    run = {"louvain": A.louvain, "leiden": X.leiden}[name]
+    out = run(_swapping_edge(spark), max_iterations=LEVELS)
+    assert len(out.collect()) == 2
+    leaves = stepped_leaves[0]  # the local-moving driver (Leiden refines after)
+    assert len(leaves) == LEVELS, leaves
+    windows = [leaves[i : i + CHECKPOINT_EVERY] for i in range(0, LEVELS, CHECKPOINT_EVERY)]
+    growth = {b - a for w in windows for a, b in zip(w, w[1:])}
+    assert len(growth) == 1, leaves
+    later = leaves[CHECKPOINT_EVERY:]
+    assert all(b <= a for a, b in zip(leaves, later)), leaves
 
 
 # Long BFS loops finish: before the frontier was re-read from the

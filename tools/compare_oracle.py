@@ -2,15 +2,20 @@
 
 Runs every ``queries()`` entry and its ``oracle_sql()`` twin, compares
 row count, sorted column names, and the order-insensitive multiset of
-row values.  Usage:  python tools/compare_oracle.py [sf_dir] [name ...]
+row values, and prints each query's wall seconds and Spark job count
+(one job group per query) on its line.  Usage:
+python tools/compare_oracle.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
+import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, not whichever one is installed or first on the path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def norm_cell(v):
@@ -52,20 +57,32 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    sc = spark.sparkContext
     n_pass = n_fail = n_weak = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        group = f"oracle-{name}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = sdf.collect()
+            error = None
         except Exception as e:
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:200]}")
+            error = f"{type(e).__name__}: {str(e)[:200]}"
+        cost = (
+            f"{time.perf_counter() - t0:.2f}s "
+            f"{len(sc.statusTracker().getJobIdsForGroup(group))} jobs"
+        )
+        sc._jsc.clearJobGroup()
+        if error is not None:
+            print(f"FAIL {name} [{cost}]: spark error: {error}")
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"weak {name}: rows-only ({len(srows)} rows)")
+            print(f"weak {name}: rows-only ({len(srows)} rows) [{cost}]")
             n_weak += 1
             continue
         try:
@@ -90,10 +107,10 @@ def main() -> int:
                 ][:3]
                 problems.append(f"values differ, first diffs: {diffs}")
         if problems:
-            print(f"FAIL {name}: " + "; ".join(problems))
+            print(f"FAIL {name} [{cost}]: " + "; ".join(problems))
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(srows)} rows)")
+            print(f"PASS {name} ({len(srows)} rows) [{cost}]")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} rows-only")
     spark.stop()
