@@ -8,7 +8,8 @@ per superstep.  graph/superstep.py owns each loop's persist / probe /
 release / truncate lifecycle (lineage.py says why truncation is a parquet
 round trip).  This is the GraphX/Pregel shape expressed on DataFrames,
 which keeps AQE/broadcast available and scales out by partitioning on
-vertex id.
+vertex id.  PageRank on a graph that fits in the driver iterates numpy
+CSR arrays instead (graph/local.py).
 
 All algorithms take an ``edges`` DataFrame (src:long, dst:long
 [, weight:double]) and return vertex-keyed DataFrames.  Deterministic
@@ -23,6 +24,7 @@ import itertools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.graph import local
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
 
@@ -55,27 +57,40 @@ def pagerank(
     Returns (vid, rank) with sum(rank) == N convention (reference uses the
     1/N-normalized variant scaled by N; ranks are comparable by ratio).
 
-    Scale: one shuffle (a window over src) gives every edge its share
-    w / Σw of its source's out-weight; the share frame is cached and
+    Every edge carries the share w / Σw of its source's out-weight, ranks
+    start at 1.0, and each superstep spreads the dangling mass (n − the
+    rank that flowed along an edge) evenly over the n vertices.
+
+    Small graphs: an edge frame of at most ``local._DRIVER_EDGES_MAX``
+    rows (200k) is collected once and iterated as numpy CSR arrays on the
+    driver (``graph/local.py``); the result is a ``LocalRelation``.  Two
+    kinds of input keep the loop below although they fit: a null endpoint
+    or weight, and a source whose out-weight is zero -- the kernel would
+    not reproduce the loop's null-vid row or its DIVIDE_BY_ZERO.
+
+    Scale: above the bound the loop is unchanged.  One shuffle (a window
+    over src) gives every edge its share; the share frame is cached and
     filled by the first superstep, which needs no join because every rank
     starts at 1.0.  There is no separate vertex frame: a superstep groups
     its messages by vid together with a zero row per edge source, so its
     frame holds every vertex (a dangling one is some edge's dst) and its
-    one action returns sum(c) and count(*).  n and the dangling mass
-    (n − sum(c), spread evenly) thus come from the superstep itself, and
-    nothing is counted before the loop.  The zero rows come from the
-    share frame, not the previous ranks: ranks already feed the join, and
-    a second reference would double the plan every superstep until the
-    next truncation.  Like a repartition by src, the window puts all
-    out-edges of one source in one task.
+    one action returns sum(c) and count(*).  n and the dangling mass thus
+    come from the superstep itself, and nothing is counted before the
+    loop.  The zero rows come from the share frame, not the previous
+    ranks: ranks already feed the join, and a second reference would
+    double the plan every superstep until the next truncation.  Like a
+    repartition by src, the window puts all out-edges of one source in
+    one task.
     """
     if iterations <= 0:
         return _vertices_of(edges).withColumn("rank", F.lit(1.0))
-    w = (
-        F.col("weight").cast("double")
-        if weighted and "weight" in edges.columns
-        else F.lit(1.0)
-    )
+    weighted = weighted and "weight" in edges.columns
+    w = F.col("weight").cast("double") if weighted else F.lit(1.0)
+    csr = local.csr_of(edges.select("src", "dst", *([w] if weighted else [])))
+    if csr is not None and csr.complete:
+        rows = local.pagerank(csr, iterations, damping)
+        if rows is not None:
+            return local_df(edges.sparkSession, rows, "vid long, rank double")
     e = edges.select(
         "src", "dst", (w / F.sum(w).over(Window.partitionBy("src"))).alias("__share")
     ).cache()

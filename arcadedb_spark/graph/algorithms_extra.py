@@ -336,7 +336,7 @@ def max_flow(
             reached = bfs.carry(stepped)
             if found or not grew:
                 break
-        bfs.finish(reached)
+        bfs.release()
         if not found:
             break
         path_edges = [(int(found[j]), int(found[j + 1])) for j in range(len(found) - 1)]
@@ -357,7 +357,7 @@ def max_flow(
             stepped.join(F.broadcast(delta), ["src", "dst"], "left")
             .select("src", "dst", (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"))
         )
-    rounds.finish(res)
+    rounds.release()
     verts.unpersist()
     return local_df(
         spark, [(total, source, sink)], "max_flow double, source_id long, sink_id long"

@@ -206,7 +206,7 @@ def vote_rank(edges: DataFrame, k: int = 10) -> DataFrame:
                 (F.col("__won") | (F.col("vid") == w)).alias("__won"),
             )
         )
-    ss.finish(state)
+    ss.release()
     nbr.unpersist()
     adj.unpersist()
     return local_df(spark, elected or [], "vid long, rank int")
@@ -249,7 +249,7 @@ def influence_maximization(edges: DataFrame, k: int = 5) -> DataFrame:
                 (F.col("__won") | (F.col("vid") == w)).alias("__won"),
             )
         )
-    ss.finish(state)
+    ss.release()
     adj.unpersist()
     return local_df(spark, chosen or [], "vid long, rank int, marginal_gain double")
 

@@ -376,7 +376,7 @@ class GraphTraversal:
                 if not live:
                     break
             else:
-                ss.finish(hops.limit(0))  # release; nothing to pin
+                ss.release()
                 raise ValueError(
                     f"repeat().until() exceeded {_REPEAT_CAP} iterations"
                 )

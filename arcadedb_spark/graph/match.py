@@ -390,7 +390,7 @@ def _expand(
                     ),
                 )
                 if not probe.isEmpty():
-                    ss.finish(paths.limit(0))  # release; nothing to pin
+                    ss.release()
                     one.unpersist()
                     base.unpersist()
                     raise TranslateError(

@@ -5,7 +5,10 @@ mode, MATCH/Cypher var-length expansion, Gremlin ``repeat().until()``
 and the ``path.*`` procedures.  Two loops keep their own truncation
 (``tests/test_plans.py::KEPT_TRUNCATING_LOOPS``): ``algorithms_more.mst``
 and ``algorithms_extra4.min_spanning_arborescence`` write per-round
-outputs that a later union or unwind pass re-reads.
+outputs that a later union or unwind pass re-reads.  PageRank and
+TRAVERSE on an edge frame of at most 200k rows run no loop here: they
+iterate the driver's CSR arrays (``graph/local.py``); above that bound
+their loops are unchanged.
 
 A superstep is one DataFrame plan.  What each loop used to repeat by hand
 lives here instead:
@@ -19,7 +22,10 @@ lives here instead:
    supersteps, counted from superstep 1 (``lineage.py`` says why that is
    a parquet round trip);
 5. pin the result with ``truncate_plan()`` unless it already is the
-   frame the last truncation returned, then release what is still cached.
+   frame the last truncation returned, then release what is still cached
+   -- or, where nobody reads a result frame (the loop's answer is already
+   on the driver, or the loop raises), only release: ``release()`` writes
+   nothing.
 
 A loop drives it like this::
 
@@ -31,6 +37,7 @@ A loop drives it like this::
         if not changed:
             break
     state = ss.finish(state)                           # 5
+    # or ss.release(), when ``state`` is not read
 
 Persistence goes through ``DataFrame.persist/unpersist/truncate_plan`` so
 wrappers of those methods (the benchmark's tracer) see every call.
@@ -87,7 +94,7 @@ class Supersteps:
         metrics = seen.get
         row = Row(**{n: metrics[n] for n in names})
         if self.level is None:
-            self._release()
+            self.release()
         else:
             self.frontier, self._newest = frame, metrics["level"]
         self._cached.append(frame)
@@ -100,7 +107,7 @@ class Supersteps:
         if self.n % CHECKPOINT_EVERY:
             return state
         self._pinned = state.truncate_plan()
-        self._release()
+        self.release()
         if self.level is not None:
             self.frontier = self._pinned.filter(
                 F.col(self.level) == F.lit(self._newest)
@@ -112,10 +119,12 @@ class Supersteps:
         no superstep ran, then release every cached frame."""
         if self.n and result is not self._pinned:
             result = result.truncate_plan()
-        self._release()
+        self.release()
         return result
 
-    def _release(self) -> None:
+    def release(self) -> None:
+        """Release every cached frame without pinning anything: the end of
+        a loop whose carried state nobody reads."""
         for f in self._cached:
             f.unpersist()
         self._cached = []

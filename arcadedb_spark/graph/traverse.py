@@ -11,18 +11,24 @@ distributed engine — we execute BFS regardless of STRATEGY (documented
 deviation; result *sets* are identical, only row order differs, and
 TRAVERSE result order is undefined without ORDER BY anyway).
 
-Execution strategy — the 100-TB design question here is frontier size,
-not graph size:
+Execution strategy — chosen by observable sizes:
 
-- **Driver-frontier mode** (the common case): a bounded-depth traversal
-  from point roots touches a frontier that is minuscule next to the edge
-  set.  A per-hop distributed join costs 3-4 shuffle stages of pure
-  scheduler/AQE latency on a few thousand rows.  Instead the frontier and
-  visited set live as driver-side hash sets (8 MB per million vids) and
-  each hop is ONE job: a (semi-join|isin)-filtered scan of the cached
-  edge frame reduced by map-side-combined ``collect_set`` — the shuffle
-  carries only distinct neighbor ids, never raw edges, so a celebrity
-  vertex cannot blow up the collect.
+- **Driver-frontier mode** (bounded-depth traversal from point roots):
+  the frontier and visited set live as driver-side hash sets (8 MB per
+  million vids), and a hop takes the frontier's distinct out-neighbours
+  from one of two sources:
+
+  - the CSR kernel: an edge frame of at most ``local._DRIVER_EDGES_MAX``
+    rows (200k) is collected once into numpy CSR arrays
+    (``graph/local.py``, memoized per analyzed edge plan), and a hop is
+    an array lookup -- no job, nothing cached;
+  - larger edge sets: ONE job per hop, a (semi-join|isin)-filtered scan
+    of the edge frame reduced by map-side-combined ``collect_set`` -- the
+    shuffle carries only distinct neighbor ids, never raw edges, so a
+    celebrity vertex cannot blow up the collect.
+
+  A WHILE predicate filters each hop's new vertices through the
+  expression compiler on a one-partition frame.
 - **Distributed mode**: the moment the frontier outgrows
   ``_DRIVER_FRONTIER_MAX`` (or the roots already do), state spills to
   DataFrames and the classic frontier-join loop takes over on the shared
@@ -31,13 +37,22 @@ not graph size:
   and fully populates the cache), distinct+anti against visited, and the
   visited set is truncated on the driver's ``CHECKPOINT_EVERY`` cadence
   so Catalyst never sees an exponentially growing iterative plan.
+
+The per-hop job and the distributed loop read the edge frame every hop:
+they cache it for their loop and release it afterwards (a frame the
+caller cached stays cached), so a call leaves the session's
+CacheManager as it found it.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.graph import local
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
@@ -54,56 +69,21 @@ _DRIVER_FRONTIER_MAX = 200_000
 # source and recompile per hop.  Above it, the per-row linear array scan
 # loses to a broadcast semi-join on an Arrow-built frame.
 _ARRAY_FILTER_MAX = 256
-# edge sets at or below this row count are collected once (Arrow) and
-# walked entirely driver-side — zero jobs per hop instead of one
-# collect_set job each.  Bounded exactly like _DRIVER_FRONTIER_MAX
-# (200k × 16 B ≈ 3 MB of longs); the probe is a limit() count, which
-# short-circuits after a couple of partitions on a 100-TB edge set, and
-# any overflow falls back to the per-hop frontier loop unchanged.
-_DRIVER_EDGES_MAX = 200_000
 
 
-# input-file bytes above which the edge frame cannot plausibly hold
-# ≤ _DRIVER_EDGES_MAX rows (200k (long,long) pairs are a few MB of
-# parquet even inside a wide table) — past it the probe job is skipped
-# outright, so a 100-TB edge set never ships 200k rows just to learn it
-# must fall back
-_DRIVER_EDGES_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _edges_obviously_large(edges: DataFrame) -> bool:
-    """File-listing-only size gate (no Spark job)."""
-    from arcadedb_spark.parallel import _input_file_info
-
+@contextmanager
+def _cached(edges: DataFrame):
+    """``edges`` cached for a loop that reads it every hop, and released
+    after it -- unless the caller had it cached already."""
+    level = edges.storageLevel
+    if level.useMemory or level.useDisk:
+        yield
+        return
+    edges.cache()
     try:
-        files, sizes = _input_file_info(edges)
-    except Exception:
-        return False
-    if sizes is not None:
-        return sum(sizes) > _DRIVER_EDGES_MAX_BYTES
-    # non-stat-able storage: many files ⇒ certainly not a 200k-row frame
-    return len(files) > 64
-
-
-def _try_collect_adjacency(edges: DataFrame) -> "dict[int, list[int]] | None":
-    """Adjacency dict of a small edge frame, or ``None`` if it exceeds
-    ``_DRIVER_EDGES_MAX`` (a file-size pre-gate skips the probe job
-    entirely on clearly-large inputs)."""
-    if _edges_obviously_large(edges):
-        return None
-    try:
-        pdf = edges.limit(_DRIVER_EDGES_MAX + 1).toPandas()
-        if len(pdf) > _DRIVER_EDGES_MAX:
-            return None
-        # null endpoints join to nothing in the distributed loop — drop
-        # them here so both paths agree (and int() can't throw on NaN)
-        pdf = pdf.dropna(subset=["__from", "__to"])
-        adj: dict[int, list[int]] = {}
-        for s, d in zip(pdf["__from"], pdf["__to"]):
-            adj.setdefault(int(s), []).append(int(d))
-        return adj
-    except Exception:
-        return None
+        yield
+    finally:
+        edges.unpersist()
 
 
 def _direction_edges(db, projections) -> DataFrame:
@@ -197,60 +177,42 @@ def traverse(
     depth = first-visit hop count (roots at depth 0).
     """
     params = params or {}
-    # the edge frame is read every hop — cache it once (for derived edge
-    # sets like INTERACTED the derivation is itself a query)
-    edges = edges.cache()
     # raw limit+collect (no distinct — dedup is a driver-side set insert;
     # a pre-collect distinct() would cost a shuffle just to count)
     root_rows = roots.select("vid").limit(_DRIVER_FRONTIER_MAX + 1).collect()
-    if len(root_rows) <= _DRIVER_FRONTIER_MAX:
-        root_vids = [r["vid"] for r in root_rows]
-        if while_ is None:
-            # small-graph fast path: one bounded collect, then the whole
-            # walk runs in driver memory — no per-hop jobs at all.  WHILE
-            # predicates keep the per-hop path (they are compiled by the
-            # expression compiler against a frame per hop).
-            adj = _try_collect_adjacency(edges)
-            if adj is not None:
-                visited: dict[int, int] = {int(v): 0 for v in root_vids}
-                frontier = set(visited)
-                for depth in range(1, max_depth + 1):
-                    if not frontier:
-                        break
-                    nxt = {
-                        int(n)
-                        for v in frontier
-                        for n in adj.get(v, ())
-                        if int(n) not in visited
-                    }
-                    for v in nxt:
-                        visited[v] = depth
-                    frontier = nxt
-
-                return local_df(
-                    db.spark, list(visited.items()), "struct<vid:bigint,depth:int>"
-                )
+    driver_roots = len(root_rows) <= _DRIVER_FRONTIER_MAX
+    root_vids = [r["vid"] for r in root_rows]
+    csr = local.csr_of(edges.select("__from", "__to")) if driver_roots else None
+    if csr is not None:
         result = _traverse_driver(
-            db, root_vids, edges, max_depth, while_, params
+            db, root_vids, partial(local.neighbors, csr), max_depth, while_, params
         )
         if result is not None:
             return result
-    # roots too large, or the driver loop spilled: distributed BFS
-    return _traverse_distributed(db, roots, edges, max_depth, while_, params)
+    with _cached(edges):
+        if driver_roots and csr is None:
+            result = _traverse_driver(
+                db, root_vids, partial(_expand_driver, edges), max_depth, while_,
+                params,
+            )
+            if result is not None:
+                return result
+        # roots too large, or the driver loop spilled: distributed BFS
+        return _traverse_distributed(db, roots, edges, max_depth, while_, params)
 
 
-def _traverse_driver(db, root_vids, edges, max_depth, while_, params):
-    """Driver-frontier BFS; returns the (vid, depth) frame, or ``None``
-    if the frontier outgrew ``_DRIVER_FRONTIER_MAX`` mid-walk (the
-    caller restarts distributed — bounded rework: at most one extra
+def _traverse_driver(db, root_vids, expand, max_depth, while_, params):
+    """Driver-frontier BFS, ``expand(frontier)`` giving a hop's distinct
+    out-neighbours; returns the (vid, depth) frame, or ``None`` if the
+    frontier outgrew ``_DRIVER_FRONTIER_MAX`` mid-walk (the caller
+    restarts distributed — bounded rework: at most one extra
     sub-threshold prefix of the walk)."""
     visited: dict[int, int] = {int(v): 0 for v in root_vids}
     frontier = set(visited)
     for depth in range(1, max_depth + 1):
         if not frontier:
             break
-        neighbors = _expand_driver(edges, frontier)
-        nxt = [int(v) for v in neighbors if int(v) not in visited]
+        nxt = [int(v) for v in expand(frontier) if int(v) not in visited]
         if while_ is not None:
             nxt = _while_keep(
                 db, params, [(v, depth) for v in nxt], while_

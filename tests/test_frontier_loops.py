@@ -4,9 +4,8 @@ TRAVERSE's distributed mode, Cypher var-length MATCH, Gremlin
 ``repeat().until()`` and the ``path.*`` procedures run on the superstep
 driver (graph/superstep.py), which releases every frame a loop cached: a
 call plus a ``collect()`` leaves the session's CacheManager as it found
-it.  TRAVERSE's own ``edges.cache()`` is the one documented exception
-(the edge frame is reused across calls), so that test caches the edge
-frame itself before counting.
+it.  TRAVERSE's per-hop and distributed paths cache the edge frame for
+their loop and release it after; its CSR kernel caches nothing.
 """
 
 from __future__ import annotations
@@ -63,21 +62,45 @@ def test_traverse_distributed_releases_its_frames(
     roots = names.filter(F.col("name").isin("a", "b", "c")).select("vid")
     edges = g.edges("LINK").select(
         F.col("src").alias("__from"), F.col("dst").alias("__to")
-    ).cache()
+    )
     # three roots > 2: the walk starts in the distributed loop
     monkeypatch.setattr(tv, "_DRIVER_FRONTIER_MAX", 2)
-    try:
-        rows = _bounded(
-            cdb.spark,
-            lambda: tv.traverse(cdb, roots, edges, max_depth=5, while_=while_)
-            .join(names, "vid")
-            .collect(),
-        )
-    finally:
-        edges.unpersist()
+    rows = _bounded(
+        cdb.spark,
+        lambda: tv.traverse(cdb, roots, edges, max_depth=5, while_=while_)
+        .join(names, "vid")
+        .collect(),
+    )
     assert {(r["name"], r["depth"]) for r in rows} == {
         ("a", 0), ("b", 0), ("c", 0), *reached,
     }
+
+
+@pytest.mark.parametrize(
+    "path, direction, reached",
+    # one edge projection per path that no earlier read cached (the
+    # fixture's MATCH caches the out-projection)
+    [("csr", "in", 3), ("per_hop", "both", 6), ("distributed", "in('LINK'), out", 6)],
+)
+def test_traverse_releases_what_it_caches(cdb, monkeypatch, path, direction, reached):
+    import arcadedb_spark.graph.local as local
+    import arcadedb_spark.graph.traverse as tv
+    from arcadedb_spark.sql.parser import parse
+
+    projections = parse(f"TRAVERSE {direction}('LINK') FROM P").projections
+    edges = tv._direction_edges(cdb, projections)
+    g = cdb.graph()
+    roots = g.vertices("P").filter(F.col("name") == "a").select("vid")
+    if path != "csr":
+        monkeypatch.setattr(local, "_memo", [])
+        monkeypatch.setattr(local, "_DRIVER_EDGES_MAX", 0)
+    if path == "distributed":
+        monkeypatch.setattr(tv, "_DRIVER_FRONTIER_MAX", 0)
+    rows = _bounded(
+        cdb.spark,
+        lambda: tv.traverse(cdb, roots, edges, max_depth=2).collect(),
+    )
+    assert len(rows) == reached
 
 
 def test_cypher_var_length_releases_its_frames(cdb):

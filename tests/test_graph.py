@@ -648,11 +648,12 @@ def test_gremlin_fold_unfold_simplepath_aggregates(db):
 
 
 def test_traverse_adjacency_fast_path_matches_per_hop(db, monkeypatch):
-    """The small-graph adjacency fast path (one bounded collect, walk in
-    driver memory) must produce identical (vid, depth) sets as the
-    per-hop frontier loop it short-circuits."""
+    """The small-graph CSR kernel (one bounded collect, walk in driver
+    memory) must produce identical (vid, depth) sets as the per-hop
+    frontier loop it short-circuits."""
     from pyspark.sql import functions as F
 
+    import arcadedb_spark.graph.local as local
     import arcadedb_spark.graph.traverse as tv
 
     g = db.graph()
@@ -665,7 +666,8 @@ def test_traverse_adjacency_fast_path_matches_per_hop(db, monkeypatch):
         for r in tv.traverse(db, roots, edges, max_depth=2).collect()
     }
     # force the probe to overflow: the per-hop driver-frontier loop runs
-    monkeypatch.setattr(tv, "_DRIVER_EDGES_MAX", 1)
+    monkeypatch.setattr(local, "_memo", [])
+    monkeypatch.setattr(local, "_DRIVER_EDGES_MAX", 1)
     slow = {
         (r["vid"], r["depth"])
         for r in tv.traverse(db, roots, edges, max_depth=2).collect()
@@ -673,22 +675,39 @@ def test_traverse_adjacency_fast_path_matches_per_hop(db, monkeypatch):
     assert fast == slow and len(fast) > 4
 
 
-def test_traverse_adjacency_probe_skipped_on_large_input(db, monkeypatch):
-    """A frame whose input files already exceed the driver-edge byte
-    bound must skip the 200k-row probe collect entirely (no job)."""
+def _probe_skipped(db, monkeypatch, cached):
     from pyspark.sql import functions as F
 
-    import arcadedb_spark.graph.traverse as tv
+    import arcadedb_spark.graph.local as local
 
     g = db.graph()
     edges = g.edges("PLACED").select(
         F.col("src").alias("__from"), F.col("dst").alias("__to")
     )
+    if cached:
+        edges.cache().count()
     # flag the input as huge and make any collect attempt an error
-    monkeypatch.setattr(tv, "_DRIVER_EDGES_MAX_BYTES", 0)
+    monkeypatch.setattr(local, "_memo", [])
+    monkeypatch.setattr(local, "_DRIVER_EDGES_MAX_BYTES", 0)
     monkeypatch.setattr(
         type(edges),
-        "toPandas",
+        "toArrow",
         lambda self: (_ for _ in ()).throw(AssertionError("probe job ran")),
     )
-    assert tv._try_collect_adjacency(edges) is None
+    try:
+        assert local.csr_of(edges) is None
+    finally:
+        if cached:
+            edges.unpersist()
+
+
+def test_traverse_adjacency_probe_skipped_on_large_input(db, monkeypatch):
+    """A frame whose inputs already exceed the driver-edge byte bound
+    must skip the 200k-row probe collect entirely (no job)."""
+    _probe_skipped(db, monkeypatch, cached=False)
+
+
+def test_traverse_adjacency_probe_skipped_on_large_cached_input(db, monkeypatch):
+    """The same over cached data, as a stored type reads after a write:
+    the plan lists no input files, and the gate reads the cached size."""
+    _probe_skipped(db, monkeypatch, cached=True)

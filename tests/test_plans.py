@@ -292,6 +292,27 @@ def test_python_rows_reach_spark_only_through_local_df():
     assert not offenders, f"createDataFrame/parallelize outside local_df: {offenders}"
 
 
+def test_edge_frames_reach_the_driver_only_through_graph_local():
+    """``graph/local.py`` owns the engine's one bounded collect of a whole
+    frame to the driver (``toPandas`` / ``toArrow``): its size gate and
+    ``limit`` probe bound what a collect ships, and its memo keeps the
+    arrays per plan."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark")
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel == os.path.join("graph", "local.py"):
+            continue
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Attribute) and node.attr in ("toPandas", "toArrow"):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"toPandas/toArrow outside graph/local.py: {offenders}"
+
+
 def test_stored_state_has_one_writer():
     """``catalog.store`` owns the cache-and-compact policy of every write:
     the write paths in sql/commands.py, kv.py and triggers.py neither

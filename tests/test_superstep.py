@@ -13,7 +13,9 @@ from arcadedb_spark.graph import algorithms_extra as X
 from arcadedb_spark.graph import algorithms_extra2 as X2
 from arcadedb_spark.graph import algorithms_extra3 as X3
 from arcadedb_spark.graph import algorithms_more as M
+from arcadedb_spark.graph import local
 from arcadedb_spark.graph.superstep import CHECKPOINT_EVERY, Supersteps
+from arcadedb_spark.session import in_driver
 
 
 def _persisted(spark) -> set:
@@ -208,15 +210,25 @@ def no_probes(monkeypatch):
 
 @pytest.mark.parametrize("weighted", [False, True])
 @pytest.mark.parametrize("iterations", [0, 1, 2, 7])
-def test_pagerank_matches_power_iteration(spark, no_probes, iterations, weighted):
+def test_pagerank_matches_power_iteration(
+    spark, no_probes, monkeypatch, iterations, weighted
+):
+    """On the driver's CSR kernel, and with the bound lowered below the
+    graph, on the superstep loop."""
     e = spark.createDataFrame(_PR_EDGES, "src long, dst long, weight double")
-    pr = A.pagerank(e, iterations=iterations, weighted=weighted)
-    assert no_probes["stray"] == []  # no action outside the supersteps
-    got = {r["vid"]: r["rank"] for r in pr.collect()}
     expected = _pagerank_reference(_PR_EDGES, iterations, weighted)
-    assert got.keys() == expected.keys()
-    for v, rank in expected.items():
-        assert got[v] == pytest.approx(rank, abs=1e-9), v
+    for kernel in (True, False):
+        if not kernel:
+            monkeypatch.setattr(local, "_memo", [])
+            monkeypatch.setattr(local, "_DRIVER_EDGES_MAX", 0)
+            no_probes["stray"].clear()  # the kernel pass's own collect
+        pr = A.pagerank(e, iterations=iterations, weighted=weighted)
+        assert no_probes["stray"] == []  # no action outside the supersteps
+        assert in_driver(pr) == (kernel and iterations > 0)
+        got = {r["vid"]: r["rank"] for r in pr.collect()}
+        assert got.keys() == expected.keys()
+        for v, rank in expected.items():
+            assert got[v] == pytest.approx(rank, abs=1e-9), v
 
 
 @pytest.mark.parametrize("iterations", [0, 3])
