@@ -24,6 +24,7 @@ import itertools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.caching import bounded_cache
 from arcadedb_spark.graph import local
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
@@ -91,33 +92,33 @@ def pagerank(
         rows = local.pagerank(csr, iterations, damping)
         if rows is not None:
             return local_df(edges.sparkSession, rows, "vid long, rank double")
-    e = edges.select(
-        "src", "dst", (w / F.sum(w).over(Window.partitionBy("src"))).alias("__share")
-    ).cache()
-    zero = e.select(F.col("src").alias("vid"), F.lit(0.0).alias("c"))
-    msgs = e.select(F.col("dst").alias("vid"), F.col("__share").alias("c"))
-    ss = Supersteps()
-    for i in range(iterations):
-        if i:
-            msgs = e.join(ranks, e["src"] == ranks["vid"]).select(
-                F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c")
-            )
-        stepped = zero.unionByName(msgs).groupBy("vid").agg(F.sum("c").alias("c"))
-        flowed, n = ss.step(stepped, F.sum("c"), F.count(F.lit(1)))
-        # total rank is kept at n: what did not flow along an edge sat on
-        # dangling vertices and is spread evenly
-        spread = (n - (flowed or 0.0)) / n if n else 0.0
-        ranks = ss.carry(
-            stepped.select(
-                "vid",
-                (F.lit(1.0 - damping) + F.lit(damping) * (F.col("c") + F.lit(spread))).alias(
-                    "rank"
-                ),
+    with Supersteps() as ss:
+        e = ss.cache(
+            edges.select(
+                "src", "dst", (w / F.sum(w).over(Window.partitionBy("src"))).alias("__share")
             )
         )
-    ranks = ss.finish(ranks)
-    e.unpersist()
-    return ranks
+        zero = e.select(F.col("src").alias("vid"), F.lit(0.0).alias("c"))
+        msgs = e.select(F.col("dst").alias("vid"), F.col("__share").alias("c"))
+        for i in range(iterations):
+            if i:
+                msgs = e.join(ranks, e["src"] == ranks["vid"]).select(
+                    F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c")
+                )
+            stepped = zero.unionByName(msgs).groupBy("vid").agg(F.sum("c").alias("c"))
+            flowed, n = ss.step(stepped, F.sum("c"), F.count(F.lit(1)))
+            # total rank is kept at n: what did not flow along an edge sat on
+            # dangling vertices and is spread evenly
+            spread = (n - (flowed or 0.0)) / n if n else 0.0
+            ranks = ss.carry(
+                stepped.select(
+                    "vid",
+                    (F.lit(1.0 - damping) + F.lit(damping) * (F.col("c") + F.lit(spread))).alias(
+                        "rank"
+                    ),
+                )
+            )
+        return ss.finish(ranks)
 
 
 def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
@@ -127,36 +128,30 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
 
     Scale: O(diameter) supersteps of join+min; for graphs with giant
     diameter the large-star/small-star variant would halve rounds — the
-    fixture graphs converge in <10.
+    fixture graphs converge in <10.  A superstep reads the carried
+    components once: the self rows of the adjacency bring a vertex's own
+    component into the group of its neighbours' (``_with_self_rows``).
     """
-    und = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().repartition("src").cache()
     comp = _vertices_of(edges).withColumn("component", F.col("vid"))
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        neigh_min = (
-            und.join(comp, und["src"] == comp["vid"], "inner")
-            .select(F.col("dst").alias("vid"), F.col("component"))
-            .groupBy("vid")
-            .agg(F.min("component").alias("nc"))
-        )
-        # Carry the change flag in the frame (nc < component ⟺ least() picks
-        # nc) so convergence needs no extra self-join.
-        stepped = comp.join(neigh_min, "vid", "left").select(
-            "vid",
-            F.least(F.col("component"), F.coalesce(F.col("nc"), F.col("component"))).alias(
-                "component"
-            ),
-            (F.col("nc") < F.col("component")).alias("__chg"),
-        )
-        changed = ss.step(stepped, F.max("__chg"))[0]
-        comp = ss.carry(stepped.select("vid", "component"))
-        if not changed:
-            break
-    comp = ss.finish(comp)
-    und.unpersist()
-    return comp
+    with Supersteps() as ss:
+        nbr = ss.cache(_with_self_rows(_undirected_adj(edges), comp).repartition("n"))
+        for _ in range(max_iterations):
+            # the change flag rides in the frame (the least component is a
+            # neighbour's), so convergence needs no extra self-join
+            stepped = (
+                nbr.join(comp, nbr["n"] == comp["vid"])
+                .groupBy(F.col("v").alias("vid"))
+                .agg(
+                    F.min("component").alias("component"),
+                    F.max(F.when(F.col("__self"), F.col("component"))).alias("__own"),
+                )
+                .select("vid", "component", (F.col("component") < F.col("__own")).alias("__chg"))
+            )
+            changed = ss.step(stepped, F.max("__chg"))[0]
+            comp = ss.carry(stepped.select("vid", "component"))
+            if not changed:
+                break
+        return ss.finish(comp)
 
 
 def shortest_paths(
@@ -171,31 +166,31 @@ def shortest_paths(
         spark, [(v, v, 0) for v in landmarks], "vid long, landmark long, distance int"
     )
     frontier = dist
-    # traverse edges BACKWARD so distance is vid→landmark
-    back = edges.select(F.col("dst").alias("from"), F.col("src").alias("to")).distinct().cache()
-    ss = Supersteps(level="distance")
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(back, frontier["vid"] == back["from"], "inner")
-            .select(F.col("to").alias("vid"), "landmark")
-            .distinct()
-            .withColumn("distance", F.lit(depth))
+    with Supersteps(level="distance") as ss:
+        # traverse edges BACKWARD so distance is vid→landmark
+        back = ss.cache(
+            edges.select(F.col("dst").alias("from"), F.col("src").alias("to")).distinct()
         )
-        seen = dist.select(
-            F.col("vid").alias("__v2"), F.col("landmark").alias("__l2")
-        )
-        nxt = nxt.join(
-            seen,
-            (nxt["vid"] == seen["__v2"]) & (nxt["landmark"] == seen["__l2"]),
-            "left_anti",
-        )
-        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-            break
-        dist = ss.carry(dist.unionByName(nxt))
-        frontier = ss.frontier
-    dist = ss.finish(dist)
-    back.unpersist()
-    return dist
+        for depth in range(1, max_depth + 1):
+            nxt = (
+                frontier.join(back, frontier["vid"] == back["from"], "inner")
+                .select(F.col("to").alias("vid"), "landmark")
+                .distinct()
+                .withColumn("distance", F.lit(depth))
+            )
+            seen = dist.select(
+                F.col("vid").alias("__v2"), F.col("landmark").alias("__l2")
+            )
+            nxt = nxt.join(
+                seen,
+                (nxt["vid"] == seen["__v2"]) & (nxt["landmark"] == seen["__l2"]),
+                "left_anti",
+            )
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
+                break
+            dist = ss.carry(dist.unionByName(nxt))
+            frontier = ss.frontier
+        return ss.finish(dist)
 
 
 def dijkstra_sssp(
@@ -211,33 +206,31 @@ def dijkstra_sssp(
     ) if "weight" in edges.columns else edges.select(
         "src", "dst", F.lit(1.0).alias("w")
     )
-    e = e.cache()
     spark = edges.sparkSession
     dist = local_df(spark, [(source, 0.0)], "vid long, distance double")
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        relaxed = (
-            e.join(dist, e["src"] == dist["vid"], "inner")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.min(F.col("distance") + F.col("w")).alias("__rd"))
-        )
-        # full-outer merge carries the improvement flag, so convergence
-        # needs no second join
-        stepped = dist.join(relaxed, "vid", "full").select(
-            "vid",
-            F.least(
-                F.coalesce(F.col("distance"), F.col("__rd")),
-                F.coalesce(F.col("__rd"), F.col("distance")),
-            ).alias("distance"),
-            (F.col("distance").isNull() | (F.col("__rd") < F.col("distance"))).alias("__chg"),
-        )
-        improved = ss.step(stepped, F.max("__chg"))[0]
-        dist = ss.carry(stepped.select("vid", "distance"))
-        if not improved:
-            break
-    dist = ss.finish(dist)
-    e.unpersist()
-    return dist
+    with Supersteps() as ss:
+        e = ss.cache(e)
+        for _ in range(max_iterations):
+            relaxed = (
+                e.join(dist, e["src"] == dist["vid"], "inner")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.min(F.col("distance") + F.col("w")).alias("__rd"))
+            )
+            # full-outer merge carries the improvement flag, so convergence
+            # needs no second join
+            stepped = dist.join(relaxed, "vid", "full").select(
+                "vid",
+                F.least(
+                    F.coalesce(F.col("distance"), F.col("__rd")),
+                    F.coalesce(F.col("__rd"), F.col("distance")),
+                ).alias("distance"),
+                (F.col("distance").isNull() | (F.col("__rd") < F.col("distance"))).alias("__chg"),
+            )
+            improved = ss.step(stepped, F.max("__chg"))[0]
+            dist = ss.carry(stepped.select("vid", "distance"))
+            if not improved:
+                break
+        return ss.finish(dist)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -267,7 +260,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             .alias("e")
         )
         .select("e.u", "e.v")
-    ).cache()
+    )
+    e1 = bounded_cache(e1)  # the returned plan reads it three times
     # wedges: u→v, u→w (v<w by orientation total order) closed by v→w
     w1 = e1.alias("x")
     w2 = e1.alias("y")
@@ -293,40 +287,43 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """Community detection by synchronous label propagation
     (AlgoLabelPropagation.java parity; ties break to the smaller label for
-    determinism).  Returns (vid, label)."""
-    und = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition("src").cache()
+    determinism).  Returns (vid, label).
+
+    Every edge sends its label both ways (a self-loop twice to its own
+    vertex), and each of several parallel edges counts.  A superstep reads the
+    carried labels once: the self rows of the adjacency bring a vertex's
+    own label into the group of its neighbours' (``_with_self_rows``)."""
     labels = _vertices_of(edges).withColumn("label", F.col("vid"))
-    ss = Supersteps()
-    for _ in range(iterations):
-        counts = (
-            und.join(labels, und["src"] == labels["vid"], "inner")
-            .select(F.col("dst").alias("vid"), "label")
-            .groupBy("vid", "label")
-            .agg(F.count("*").alias("n"))
-        )
-        # most-frequent label per vertex via max(struct(n, −label)) — hash
-        # aggregate with map-side combine instead of a window sort; ties
-        # break to the smaller label exactly as (desc n, asc label) did
-        best = (
-            counts.groupBy("vid")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("n"), (-F.col("label")).alias("__neg"), F.col("label")
-                    )
-                ).alias("__m")
+    adj = edges.select(F.col("dst").alias("v"), F.col("src").alias("n")).unionByName(
+        edges.select(F.col("src").alias("v"), F.col("dst").alias("n"))
+    ).filter(F.col("v").isNotNull() & F.col("n").isNotNull())
+    nb = ~F.col("__self")
+    with Supersteps() as ss:
+        nbr = ss.cache(_with_self_rows(adj, labels).repartition("n"))
+        for _ in range(iterations):
+            counts = (
+                nbr.join(labels, nbr["n"] == labels["vid"])
+                .groupBy("v", "label")
+                .agg(F.count(F.when(nb, 1)).alias("n"), F.max("__self").alias("__own"))
             )
-            .select("vid", F.col("__m.label").alias("new_label"))
-        )
-        labels = ss.carry(
-            labels.join(best, "vid", "left")
-            .select("vid", F.coalesce("new_label", "label").alias("label"))
-        )
-    labels = ss.finish(labels)
-    und.unpersist()
-    return labels
+            # most-frequent neighbour label per vertex via max(struct(n,
+            # −label)) — hash aggregate with map-side combine instead of a
+            # window sort; ties break to the smaller label exactly as (desc
+            # n, asc label) did
+            labels = ss.carry(
+                counts.groupBy(F.col("v").alias("vid"))
+                .agg(
+                    F.max(
+                        F.when(
+                            F.col("n") > 0,
+                            F.struct("n", (-F.col("label")).alias("__neg"), "label"),
+                        )
+                    ).alias("__m"),
+                    F.max(F.when(F.col("__own"), F.col("label"))).alias("__cur"),
+                )
+                .select("vid", F.coalesce("__m.label", "__cur").alias("label"))
+            )
+        return ss.finish(labels)
 
 
 def degree_centrality(edges: DataFrame, direction: str = "both") -> DataFrame:
@@ -417,47 +414,44 @@ def adamic_adar(edges: DataFrame) -> DataFrame:
 def k_core(edges: DataFrame, k: int, max_iterations: int = 50) -> DataFrame:
     """Vertices of the k-core (AlgoKCore.java parity): iteratively peel
     vertices with degree < k until fixpoint.  Returns (vid,)."""
-    adj = _undirected_adj(edges).cache()
-    alive = adj.select("v").distinct()
-    # one count up front; per iteration only the NEW frame is counted (the
-    # previous count is remembered), halving the actions per peel round
-    n_alive = alive.count()
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        cur = adj.join(alive.withColumnRenamed("v", "n"), "n", "left_semi").join(
-            alive, "v", "left_semi"
-        )
-        deg = cur.groupBy("v").agg(F.count("*").alias("d"))
-        nxt = deg.filter(F.col("d") >= k).select("v")
-        n_next = ss.step(nxt, F.count(F.lit(1)))[0]
-        alive = ss.carry(nxt)
-        if n_next == n_alive:
-            break
-        n_alive = n_next
-    alive = ss.finish(alive)
-    adj.unpersist()
+    with Supersteps() as ss:
+        adj = ss.cache(_undirected_adj(edges))
+        alive = adj.select("v").distinct()
+        # one count up front; per iteration only the NEW frame is counted (the
+        # previous count is remembered), halving the actions per peel round
+        n_alive = alive.count()
+        for _ in range(max_iterations):
+            cur = adj.join(alive.withColumnRenamed("v", "n"), "n", "left_semi").join(
+                alive, "v", "left_semi"
+            )
+            deg = cur.groupBy("v").agg(F.count("*").alias("d"))
+            nxt = deg.filter(F.col("d") >= k).select("v")
+            n_next = ss.step(nxt, F.count(F.lit(1)))[0]
+            alive = ss.carry(nxt)
+            if n_next == n_alive:
+                break
+            n_alive = n_next
+        alive = ss.finish(alive)
     return alive.select(F.col("v").alias("vid"))
 
 
 def eigenvector_centrality(edges: DataFrame, iterations: int = 20) -> DataFrame:
     """Power-iteration eigenvector centrality (AlgoEigenvector.java parity:
     normalized so max = 1).  Returns (vid, centrality)."""
-    verts = _vertices_of(edges).cache()
-    e = edges.select("src", "dst").distinct().repartition("dst").cache()
-    x = verts.withColumn("x", F.lit(1.0))
-    ss = Supersteps()
-    for _ in range(iterations):
-        nxt = (
-            e.join(x, e["src"] == x["vid"], "inner")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.sum("x").alias("x"))
-        )
-        nxt = verts.join(nxt, "vid", "left").fillna(0.0, ["x"])
-        norm = ss.step(nxt, F.max("x"))[0] or 1.0
-        x = ss.carry(nxt.select("vid", (F.col("x") / F.lit(norm)).alias("x")))
-    x = ss.finish(x)
-    e.unpersist()
-    verts.unpersist()
+    with Supersteps() as ss:
+        verts = ss.cache(_vertices_of(edges))
+        e = ss.cache(edges.select("src", "dst").distinct().repartition("dst"))
+        x = verts.withColumn("x", F.lit(1.0))
+        for _ in range(iterations):
+            nxt = (
+                e.join(x, e["src"] == x["vid"], "inner")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.sum("x").alias("x"))
+            )
+            nxt = verts.join(nxt, "vid", "left").fillna(0.0, ["x"])
+            norm = ss.step(nxt, F.max("x"))[0] or 1.0
+            x = ss.carry(nxt.select("vid", (F.col("x") / F.lit(norm)).alias("x")))
+        x = ss.finish(x)
     return x.select("vid", F.col("x").alias("centrality"))
 
 
@@ -466,26 +460,24 @@ def katz_centrality(
 ) -> DataFrame:
     """Katz centrality x = α·Aᵀx + β (AlgoKatz.java parity).
     Returns (vid, centrality)."""
-    verts = _vertices_of(edges).cache()
-    e = edges.select("src", "dst").distinct().repartition("dst").cache()
-    x = verts.withColumn("x", F.lit(beta))
-    ss = Supersteps()
-    for _ in range(iterations):
-        nxt = (
-            e.join(x, e["src"] == x["vid"], "inner")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.sum("x").alias("s"))
-        )
-        x = ss.carry(
-            verts.join(nxt, "vid", "left")
-            .select(
-                "vid",
-                (F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(beta)).alias("x"),
+    with Supersteps() as ss:
+        verts = ss.cache(_vertices_of(edges))
+        e = ss.cache(edges.select("src", "dst").distinct().repartition("dst"))
+        x = verts.withColumn("x", F.lit(beta))
+        for _ in range(iterations):
+            nxt = (
+                e.join(x, e["src"] == x["vid"], "inner")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.sum("x").alias("s"))
             )
-        )
-    x = ss.finish(x)  # detach from the caches before releasing them
-    e.unpersist()
-    verts.unpersist()
+            x = ss.carry(
+                verts.join(nxt, "vid", "left")
+                .select(
+                    "vid",
+                    (F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0)) + F.lit(beta)).alias("x"),
+                )
+            )
+        x = ss.finish(x)  # detach from the caches before they go
     return x.select("vid", F.col("x").alias("centrality"))
 
 
@@ -556,85 +548,80 @@ def strongly_connected_components(
                 "before the fixed point; the components would be partial"
             )
 
-    e_all = edges.select("src", "dst").distinct().cache()
-    remaining = _vertices_of(edges).persist()
-    n_remaining = remaining.count()
     spark = edges.sparkSession
     assigned = local_df(spark, [], "vid long, component long")
-    rounds = 0
-    while n_remaining:
-        _cap("max_outer", max_outer, rounds)
-        rounds += 1
-        e = (
-            e_all.join(remaining.withColumnRenamed("vid", "src"), "src", "left_semi")
-            .join(remaining.withColumnRenamed("vid", "dst"), "dst", "left_semi")
-            .persist()
-        )
-        # 1) forward max-color propagation to fixpoint; the flag
-        # (nc > color) replaces a new-vs-old convergence self-join.
-        color = remaining.withColumn("color", F.col("vid"))
-        ss = Supersteps()
-        for step in itertools.count():
-            _cap("max_inner", max_inner, step)
-            prop = (
-                e.join(color, e["src"] == color["vid"], "inner")
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.max("color").alias("nc"))
+    # the rounds' stepped frame is the remaining vertex set: each round's
+    # count of it releases the one before
+    with Supersteps() as rounds:
+        e_all = rounds.cache(edges.select("src", "dst").distinct())
+        remaining = _vertices_of(edges)
+        n_remaining = rounds.step(remaining, F.count(F.lit(1)))[0]
+        done = 0
+        while n_remaining:
+            _cap("max_outer", max_outer, done)
+            done += 1
+            with Supersteps() as fwd:
+                e = fwd.cache(
+                    e_all.join(remaining.withColumnRenamed("vid", "src"), "src", "left_semi")
+                    .join(remaining.withColumnRenamed("vid", "dst"), "dst", "left_semi")
+                )
+                # 1) forward max-color propagation to fixpoint; the flag
+                # (nc > color) replaces a new-vs-old convergence self-join.
+                color = remaining.withColumn("color", F.col("vid"))
+                for step in itertools.count():
+                    _cap("max_inner", max_inner, step)
+                    prop = (
+                        e.join(color, e["src"] == color["vid"], "inner")
+                        .groupBy(F.col("dst").alias("vid"))
+                        .agg(F.max("color").alias("nc"))
+                    )
+                    stepped = color.join(prop, "vid", "left").select(
+                        "vid",
+                        F.greatest(F.col("color"), F.coalesce(F.col("nc"), F.col("color"))).alias(
+                            "color"
+                        ),
+                        (F.col("nc") > F.col("color")).alias("__chg"),
+                    )
+                    changed = fwd.step(stepped, F.max("__chg"))[0]
+                    color = fwd.carry(stepped.select("vid", "color"))
+                    if not changed:
+                        break
+                # the backward phase probes `color` every level
+                color = fwd.finish(color)
+                # 2) backward reachability from each color root, within the color
+                scc = frontier = color.filter(F.col("vid") == F.col("color")).select(
+                    "vid", "color", F.lit(0).alias("level")
+                )
+                back = e.select(F.col("dst").alias("from"), F.col("src").alias("to"))
+                with Supersteps(level="level") as bwd:
+                    for level in itertools.count(1):
+                        _cap("max_inner", max_inner, level - 1)
+                        nxt = (
+                            frontier.join(back, frontier["vid"] == back["from"], "inner")
+                            .select(F.col("to").alias("vid"), "color")
+                            .distinct()
+                        )
+                        # stay within the same color and don't revisit
+                        nxt = nxt.join(
+                            color.withColumnRenamed("color", "c2"), "vid"
+                        ).filter(F.col("color") == F.col("c2")).select("vid", "color")
+                        nxt = nxt.join(scc.select("vid"), "vid", "left_anti").withColumn(
+                            "level", F.lit(level)
+                        )
+                        if bwd.step(nxt, F.count(F.lit(1)))[0] == 0:
+                            break
+                        scc = bwd.carry(scc.unionByName(nxt))
+                        frontier = bwd.frontier
+                    scc = bwd.finish(scc)
+            # accumulate lazily: per-round results are truncated frames already,
+            # so the union stays a cheap scan-union (the old per-round
+            # truncate_plan of `assigned` rewrote the full accumulated set
+            # every round)
+            assigned = assigned.unionByName(
+                scc.select("vid", F.col("color").alias("component"))
             )
-            stepped = color.join(prop, "vid", "left").select(
-                "vid",
-                F.greatest(F.col("color"), F.coalesce(F.col("nc"), F.col("color"))).alias(
-                    "color"
-                ),
-                (F.col("nc") > F.col("color")).alias("__chg"),
-            )
-            changed = ss.step(stepped, F.max("__chg"))[0]
-            color = ss.carry(stepped.select("vid", "color"))
-            if not changed:
-                break
-        # the backward phase probes `color` every level
-        color = ss.finish(color)
-        # 2) backward reachability from each color root, within the color
-        scc = frontier = color.filter(F.col("vid") == F.col("color")).select(
-            "vid", "color", F.lit(0).alias("level")
-        )
-        back = e.select(F.col("dst").alias("from"), F.col("src").alias("to"))
-        ss = Supersteps(level="level")
-        for level in itertools.count(1):
-            _cap("max_inner", max_inner, level - 1)
-            nxt = (
-                frontier.join(back, frontier["vid"] == back["from"], "inner")
-                .select(F.col("to").alias("vid"), "color")
-                .distinct()
-            )
-            # stay within the same color and don't revisit
-            nxt = nxt.join(
-                color.withColumnRenamed("color", "c2"), "vid"
-            ).filter(F.col("color") == F.col("c2")).select("vid", "color")
-            nxt = nxt.join(scc.select("vid"), "vid", "left_anti").withColumn(
-                "level", F.lit(level)
-            )
-            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-                break
-            scc = ss.carry(scc.unionByName(nxt))
-            frontier = ss.frontier
-        # accumulate lazily: per-round results are truncated frames already,
-        # so the union stays a cheap scan-union (the old per-round
-        # truncate_plan of `assigned` rewrote the full accumulated set
-        # every round)
-        scc = ss.finish(scc)
-        assigned = assigned.unionByName(
-            scc.select("vid", F.col("color").alias("component"))
-        )
-        remaining_next = remaining.join(
-            scc.select("vid"), "vid", "left_anti"
-        ).persist()
-        n_remaining = remaining_next.count()
-        remaining.unpersist()
-        remaining = remaining_next
-        e.unpersist()
-    remaining.unpersist()
-    e_all.unpersist()
+            remaining = remaining.join(scc.select("vid"), "vid", "left_anti")
+            n_remaining = rounds.step(remaining, F.count(F.lit(1)))[0]
     return assigned
 
 
@@ -651,12 +638,6 @@ def fastrp_embeddings(
     from xxhash64(vid, dim_index) — no RNG state to distribute.
     Returns (vid, embedding: array<double>)."""
     verts = _vertices_of(edges)
-    nbr = _with_self_rows(
-        edges.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-        .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-        .distinct(),
-        verts,
-    ).cache()
 
     # sparse signed init: hash → {-1, 0, +1} with p(±1) = 1/4 each
     def _init_col(i: int):
@@ -672,30 +653,39 @@ def fastrp_embeddings(
     # the carried state: (vid, acc, emb)
     state = verts.select("vid", acc0.alias("acc"), x0.alias("emb"))
     nb = ~F.col("__self")
-    ss = Supersteps()
-    for it in range(1, iterations + 1):
-        w = weights[it] if it < len(weights) else 1.0
-        # neighbor mean: sum over in-neighbors / degree
-        x = (
-            nbr.join(state, nbr["n"] == state["vid"])
-            .groupBy(F.col("v").alias("vid"))
-            .agg(
-                F.max(F.when(~nb, F.col("acc"))).alias("acc"),
-                F.count(F.when(nb, 1)).alias("d"),
-                F.array(
-                    *[F.sum(F.when(nb, F.element_at("emb", i + 1))) for i in range(dim)]
-                ).alias("s"),
-            )
-            # every vertex has a neighbour: it comes from an edge
-            .withColumn("emb", F.transform("s", lambda s: s / F.col("d")))
-        )
-        state = ss.carry(
-            x.select(
-                "vid", F.zip_with("acc", "emb", lambda a, b: a + b * F.lit(w)).alias("acc"), "emb"
+    with Supersteps() as ss:
+        nbr = ss.cache(
+            _with_self_rows(
+                edges.select(F.col("src").alias("v"), F.col("dst").alias("n"))
+                .unionByName(edges.select(F.col("dst").alias("v"), F.col("src").alias("n")))
+                .distinct(),
+                verts,
             )
         )
-    acc = ss.finish(state)
-    nbr.unpersist()
+        for it in range(1, iterations + 1):
+            w = weights[it] if it < len(weights) else 1.0
+            # neighbor mean: sum over in-neighbors / degree
+            x = (
+                nbr.join(state, nbr["n"] == state["vid"])
+                .groupBy(F.col("v").alias("vid"))
+                .agg(
+                    F.max(F.when(~nb, F.col("acc"))).alias("acc"),
+                    F.count(F.when(nb, 1)).alias("d"),
+                    F.array(
+                        *[F.sum(F.when(nb, F.element_at("emb", i + 1))) for i in range(dim)]
+                    ).alias("s"),
+                )
+                # every vertex has a neighbour: it comes from an edge
+                .withColumn("emb", F.transform("s", lambda s: s / F.col("d")))
+            )
+            state = ss.carry(
+                x.select(
+                    "vid",
+                    F.zip_with("acc", "emb", lambda a, b: a + b * F.lit(w)).alias("acc"),
+                    "emb",
+                )
+            )
+        acc = ss.finish(state)
     # L2 normalize
     norm = F.sqrt(F.aggregate("acc", F.lit(0.0), lambda s, v: s + v * v))
     return acc.select(
@@ -724,7 +714,6 @@ def random_walks(
     w = Window.partitionBy("src").orderBy("dst")
     indexed = adj.withColumn("__i", F.row_number().over(w) - 1)
     degs = adj.groupBy("src").agg(F.count("*").alias("__deg"))
-    indexed = indexed.join(degs, "src").repartition("src").cache()
 
     verts = _vertices_of(edges)
     walks = verts.crossJoin(
@@ -736,26 +725,26 @@ def random_walks(
         F.array(F.col("vid")).alias("path"),
         F.col("vid").alias("cur"),
     )
-    ss = Supersteps()
-    for step in range(walk_length):
-        choice = F.pmod(
-            F.xxhash64(F.col("cur"), F.col("walk_id"), F.lit(step), F.lit(seed)),
-            F.col("__deg"),
-        )
-        walks = ss.carry(
-            walks.join(indexed, walks["cur"] == indexed["src"], "left")
-            .filter((F.col("__i").isNull()) | (F.col("__i") == choice))
-            .select(
-                "start", "walk_id",
-                F.when(
-                    F.col("dst").isNotNull(),
-                    F.concat(F.col("path"), F.array(F.col("dst"))),
-                ).otherwise(F.col("path")).alias("path"),
-                F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
+    with Supersteps() as ss:
+        indexed = ss.cache(indexed.join(degs, "src").repartition("src"))
+        for step in range(walk_length):
+            choice = F.pmod(
+                F.xxhash64(F.col("cur"), F.col("walk_id"), F.lit(step), F.lit(seed)),
+                F.col("__deg"),
             )
-        )
-    walks = ss.finish(walks)
-    indexed.unpersist()
+            walks = ss.carry(
+                walks.join(indexed, walks["cur"] == indexed["src"], "left")
+                .filter((F.col("__i").isNull()) | (F.col("__i") == choice))
+                .select(
+                    "start", "walk_id",
+                    F.when(
+                        F.col("dst").isNotNull(),
+                        F.concat(F.col("path"), F.array(F.col("dst"))),
+                    ).otherwise(F.col("path")).alias("path"),
+                    F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
+                )
+            )
+        walks = ss.finish(walks)
     return walks.select("start", "walk_id", "path")
 
 
@@ -777,68 +766,71 @@ def betweenness_centrality(
     filtered on ``dist``: a superstep reads levels d+1 and d only.
     Returns (vid, betweenness).
     """
-    e = edges.select("src", "dst").distinct().cache()
     spark = edges.sparkSession
-    if sources is None:
-        sources = [r[0] for r in _vertices_of(edges).limit(10).collect()]
-
-    state = local_df(
-        spark,
-        [(s, s, 0, 1.0) for s in sources],
-        "source long, vid long, dist int, sigma double",
-    )
-    # forward: a superstep sends the newest level's sigma along its
-    # out-edges; a vertex keeps its (dist, sigma) once reached
-    nbr = _with_self_rows(
-        e.select(F.col("dst").alias("v"), F.col("src").alias("n")), _vertices_of(e)
-    ).cache()
     own = F.col("__self")
-    fwd = Supersteps()
-    deepest = 0
-    for depth in range(1, max_depth + 1):
-        stepped = (
-            nbr.join(state, (nbr["n"] == state["vid"]) & (own | (state["dist"] == depth - 1)))
-            .groupBy("source", F.col("v").alias("vid"))
-            .agg(
-                F.min(F.when(own, F.col("dist")).otherwise(depth)).alias("dist"),
-                F.max(F.when(own, F.col("sigma"))).alias("__own"),
-                F.sum(F.when(~own, F.col("sigma"))).alias("__msg"),
-            )
-            .select("source", "vid", "dist", F.coalesce("__own", "__msg").alias("sigma"))
-        )
-        grew = fwd.step(stepped, F.count(F.when(F.col("dist") == depth, 1)))[0]
-        state = fwd.carry(stepped)
-        if not grew:
-            break
-        deepest = depth
-    state = fwd.finish(state)
-    nbr.unpersist()
+    with Supersteps() as scope:
+        e = scope.cache(edges.select("src", "dst").distinct())
+        if sources is None:
+            sources = [r[0] for r in _vertices_of(edges).limit(10).collect()]
 
-    # backward, deepest level first: delta(v) = σ(v) · Σ_{w: succ}
-    # (1 + δ(w)) / σ(w); level d+1 sends its terms to its in-neighbours
-    # and level d sums them.  Level 0 (the sources) is not accumulated.
-    frontier = state.filter(F.col("dist") == deepest).withColumn("delta", F.lit(0.0))
-    acc = frontier
-    bwd = Supersteps(level="dist")
-    for d in range(deepest - 1, 0, -1):
-        terms = (
-            frontier.join(e, frontier["vid"] == e["dst"])
-            .groupBy("source", F.col("src").alias("vid"))
-            .agg(F.sum((1.0 + F.col("delta")) / F.col("sigma")).alias("__t"))
+        state = local_df(
+            spark,
+            [(s, s, 0, 1.0) for s in sources],
+            "source long, vid long, dist int, sigma double",
         )
-        level = (
-            state.filter(F.col("dist") == d)
-            .join(terms, ["source", "vid"], "left")
-            .select(
-                "source", "vid", "dist", "sigma",
-                (F.col("sigma") * F.coalesce("__t", F.lit(0.0))).alias("delta"),
+        # forward: a superstep sends the newest level's sigma along its
+        # out-edges; a vertex keeps its (dist, sigma) once reached
+        deepest = 0
+        with Supersteps() as fwd:
+            nbr = fwd.cache(
+                _with_self_rows(
+                    e.select(F.col("dst").alias("v"), F.col("src").alias("n")), _vertices_of(e)
+                )
             )
-        )
-        bwd.step(level)
-        acc = bwd.carry(acc.unionByName(level))
-        frontier = bwd.frontier
-    acc = bwd.finish(acc)
-    e.unpersist()
+            for depth in range(1, max_depth + 1):
+                stepped = (
+                    nbr.join(
+                        state, (nbr["n"] == state["vid"]) & (own | (state["dist"] == depth - 1))
+                    )
+                    .groupBy("source", F.col("v").alias("vid"))
+                    .agg(
+                        F.min(F.when(own, F.col("dist")).otherwise(depth)).alias("dist"),
+                        F.max(F.when(own, F.col("sigma"))).alias("__own"),
+                        F.sum(F.when(~own, F.col("sigma"))).alias("__msg"),
+                    )
+                    .select("source", "vid", "dist", F.coalesce("__own", "__msg").alias("sigma"))
+                )
+                grew = fwd.step(stepped, F.count(F.when(F.col("dist") == depth, 1)))[0]
+                state = fwd.carry(stepped)
+                if not grew:
+                    break
+                deepest = depth
+            state = fwd.finish(state)
+
+        # backward, deepest level first: delta(v) = σ(v) · Σ_{w: succ}
+        # (1 + δ(w)) / σ(w); level d+1 sends its terms to its in-neighbours
+        # and level d sums them.  Level 0 (the sources) is not accumulated.
+        frontier = state.filter(F.col("dist") == deepest).withColumn("delta", F.lit(0.0))
+        acc = frontier
+        with Supersteps(level="dist") as bwd:
+            for d in range(deepest - 1, 0, -1):
+                terms = (
+                    frontier.join(e, frontier["vid"] == e["dst"])
+                    .groupBy("source", F.col("src").alias("vid"))
+                    .agg(F.sum((1.0 + F.col("delta")) / F.col("sigma")).alias("__t"))
+                )
+                level = (
+                    state.filter(F.col("dist") == d)
+                    .join(terms, ["source", "vid"], "left")
+                    .select(
+                        "source", "vid", "dist", "sigma",
+                        (F.col("sigma") * F.coalesce("__t", F.lit(0.0))).alias("delta"),
+                    )
+                )
+                bwd.step(level)
+                acc = bwd.carry(acc.unionByName(level))
+                frontier = bwd.frontier
+            acc = bwd.finish(acc)
     bc = acc.groupBy("vid").agg(F.sum("delta").alias("betweenness"))
     return _vertices_of(edges).join(bc, "vid", "left").fillna(0.0, ["betweenness"])
 
@@ -897,67 +889,67 @@ def _local_moving(
     Every vertex of ``edges`` gets a community, one with only self-loops
     its own.  Returns (vid, community).
     """
-    # pinned, so that each superstep's plan adds a scan of it, not its build
-    nbr = _with_self_rows(_undirected_adj(edges), _vertices_of(edges)).truncate_plan().cache()
-    comm = (
-        nbr.groupBy("v")
-        .agg(F.count(F.when(~F.col("__self"), 1)).alias("k"))
-        .select(F.col("v").alias("vid"), F.col("v").alias("community"), "k")
-    )
-    m2 = float(nbr.filter(~F.col("__self")).count())  # 2m
-    if m2 == 0:
-        nbr.unpersist()
-        return comm.select("vid", "community")
     by_c, by_v = Window.partitionBy("community"), Window.partitionBy("v")
 
     def own(c):
         return F.max(F.when(F.col("__own"), c)).over(by_v)
 
-    ss = Supersteps()
-    still = 0
-    for i in range(1, max_iterations + 1):
-        tot = comm.withColumn("tot", F.sum("k").over(by_c))
-        rows = (
-            nbr.join(tot, nbr["n"] == tot["vid"])
-            .groupBy("v", F.col("community").alias("nc"))
-            .agg(
-                F.count(F.when(~F.col("__self"), 1)).alias("w"),
-                F.max("tot").alias("tot"),
-                F.max("__self").alias("__own"),
-                F.max(F.when(F.col("__self"), F.col("k"))).alias("__k"),
+    with Supersteps() as ss:
+        # pinned, so that each superstep's plan adds a scan of it, not its build
+        nbr = ss.cache(
+            _with_self_rows(_undirected_adj(edges), _vertices_of(edges)).truncate_plan()
+        )
+        comm = (
+            nbr.groupBy("v")
+            .agg(F.count(F.when(~F.col("__self"), 1)).alias("k"))
+            .select(F.col("v").alias("vid"), F.col("v").alias("community"), "k")
+        )
+        m2 = float(nbr.filter(~F.col("__self")).count())  # 2m
+        if m2 == 0:
+            return comm.select("vid", "community")
+        still = 0
+        for i in range(1, max_iterations + 1):
+            tot = comm.withColumn("tot", F.sum("k").over(by_c))
+            rows = (
+                nbr.join(tot, nbr["n"] == tot["vid"])
+                .groupBy("v", F.col("community").alias("nc"))
+                .agg(
+                    F.count(F.when(~F.col("__self"), 1)).alias("w"),
+                    F.max("tot").alias("tot"),
+                    F.max("__self").alias("__own"),
+                    F.max(F.when(F.col("__self"), F.col("k"))).alias("__k"),
+                )
             )
-        )
-        cand = rows.select(
-            "v", "nc", "w", "tot",
-            own(F.col("nc")).alias("community"),
-            own(F.col("w")).alias("w_cur"),
-            own(F.col("tot")).alias("tot_cur"),
-            F.max("__k").over(by_v).alias("k"),
-        ).withColumn("gain", gain(m2))
-        # best candidate per vertex via max(struct(gain, −nc)): a hash
-        # aggregate on the window's partitioning, no sort; (gain desc,
-        # nc asc) by the lexicographic struct order
-        best = cand.groupBy(F.col("v").alias("vid")).agg(
-            F.max(F.struct("gain", (-F.col("nc")).alias("__negnc"), "nc")).alias("__m"),
-            F.max("community").alias("community"),
-            F.max("k").alias("k"),
-        )
-        move = (F.col("__m.gain") > 0) & (F.col("__m.nc") != F.col("community"))
-        if gate is not None:
-            move = move & gate(i)
-        stepped = best.select(
-            "vid",
-            F.when(move, F.col("__m.nc")).otherwise(F.col("community")).alias("community"),
-            "k",
-            move.alias("__moved"),
-        )
-        moved = ss.step(stepped, F.max("__moved"))[0]
-        comm = ss.carry(stepped.drop("__moved"))
-        still = 0 if moved else still + 1
-        if still >= quiet:
-            break
-    comm = ss.finish(comm)
-    nbr.unpersist()
+            cand = rows.select(
+                "v", "nc", "w", "tot",
+                own(F.col("nc")).alias("community"),
+                own(F.col("w")).alias("w_cur"),
+                own(F.col("tot")).alias("tot_cur"),
+                F.max("__k").over(by_v).alias("k"),
+            ).withColumn("gain", gain(m2))
+            # best candidate per vertex via max(struct(gain, −nc)): a hash
+            # aggregate on the window's partitioning, no sort; (gain desc,
+            # nc asc) by the lexicographic struct order
+            best = cand.groupBy(F.col("v").alias("vid")).agg(
+                F.max(F.struct("gain", (-F.col("nc")).alias("__negnc"), "nc")).alias("__m"),
+                F.max("community").alias("community"),
+                F.max("k").alias("k"),
+            )
+            move = (F.col("__m.gain") > 0) & (F.col("__m.nc") != F.col("community"))
+            if gate is not None:
+                move = move & gate(i)
+            stepped = best.select(
+                "vid",
+                F.when(move, F.col("__m.nc")).otherwise(F.col("community")).alias("community"),
+                "k",
+                move.alias("__moved"),
+            )
+            moved = ss.step(stepped, F.max("__moved"))[0]
+            comm = ss.carry(stepped.drop("__moved"))
+            still = 0 if moved else still + 1
+            if still >= quiet:
+                break
+        comm = ss.finish(comm)
     return comm.select("vid", "community")
 
 

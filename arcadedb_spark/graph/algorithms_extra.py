@@ -117,7 +117,6 @@ def astar(
     optimality argument for admissible h).  Returns one row
     (path array<long>, weight double), empty if unreachable.
     """
-    e = _weighted(edges).cache()
     spark = edges.sparkSession
     # label frame; __chg marks the labels the last superstep improved,
     # which are the frontier the next one expands
@@ -128,42 +127,42 @@ def astar(
     )
     bound = 0.0 if source == target else None  # best-known target distance
     h = heuristic.select("vid", "h") if heuristic is not None else None
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        frontier = best.filter("__chg")
-        exp = (
-            frontier.join(e, frontier["vid"] == e["src"], "inner")
-            .filter(~F.array_contains("path", F.col("dst")))
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("distance") + F.col("w")).alias("distance"),
-                F.concat("path", F.array(F.col("dst"))).alias("path"),
-            )
-        )
-        if bound is not None:
-            if h is not None:
-                exp = (
-                    exp.join(h, "vid", "left")
-                    .filter(
-                        F.col("distance") + F.coalesce(F.col("h"), F.lit(0.0))
-                        < F.lit(bound)
-                    )
-                    .drop("h")
+    with Supersteps() as ss:
+        e = ss.cache(_weighted(edges))
+        for _ in range(max_iterations):
+            frontier = best.filter("__chg")
+            exp = (
+                frontier.join(e, frontier["vid"] == e["src"], "inner")
+                .filter(~F.array_contains("path", F.col("dst")))
+                .select(
+                    F.col("dst").alias("vid"),
+                    (F.col("distance") + F.col("w")).alias("distance"),
+                    F.concat("path", F.array(F.col("dst"))).alias("path"),
                 )
-            else:
-                exp = exp.filter(F.col("distance") < F.lit(bound))
-        stepped = _relax(best, exp, "path")
-        # one action: the improvement flag and the next pruning bound
-        changed, bound = ss.step(
-            stepped,
-            F.max("__chg"),
-            F.min(F.when(F.col("vid") == target, F.col("distance"))),
-        )
-        best = ss.carry(stepped)
-        if not changed:
-            break
-    best = ss.finish(best)
-    e.unpersist()
+            )
+            if bound is not None:
+                if h is not None:
+                    exp = (
+                        exp.join(h, "vid", "left")
+                        .filter(
+                            F.col("distance") + F.coalesce(F.col("h"), F.lit(0.0))
+                            < F.lit(bound)
+                        )
+                        .drop("h")
+                    )
+                else:
+                    exp = exp.filter(F.col("distance") < F.lit(bound))
+            stepped = _relax(best, exp, "path")
+            # one action: the improvement flag and the next pruning bound
+            changed, bound = ss.step(
+                stepped,
+                F.max("__chg"),
+                F.min(F.when(F.col("vid") == target, F.col("distance"))),
+            )
+            best = ss.carry(stepped)
+            if not changed:
+                break
+        best = ss.finish(best)
     return best.filter(F.col("vid") == target).select(
         "path", F.col("distance").alias("weight")
     )
@@ -211,7 +210,6 @@ def k_shortest_paths(
     data-parallel formulation and returns the same k best simple paths
     when max_depth covers them).  Returns (path, weight, rank).
     """
-    e = _weighted(edges).cache()
     spark = edges.sparkSession
     # __chg marks the labels added by the last superstep (the frontier);
     # an expansion adds one hop, so it never repeats a kept (vid, path)
@@ -220,33 +218,33 @@ def k_shortest_paths(
         [(source, 0.0, [source], True)],
         "vid long, weight double, path array<long>, __chg boolean",
     )
-    ss = Supersteps()
-    for _ in range(max_depth):
-        frontier = state.filter("__chg")
-        exp = (
-            frontier.join(e, frontier["vid"] == e["src"], "inner")
-            .filter(~F.array_contains("path", F.col("dst")))
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("weight") + F.col("w")).alias("weight"),
-                F.concat("path", F.array(F.col("dst"))).alias("path"),
+    with Supersteps() as ss:
+        e = ss.cache(_weighted(edges))
+        for _ in range(max_depth):
+            frontier = state.filter("__chg")
+            exp = (
+                frontier.join(e, frontier["vid"] == e["src"], "inner")
+                .filter(~F.array_contains("path", F.col("dst")))
+                .select(
+                    F.col("dst").alias("vid"),
+                    (F.col("weight") + F.col("w")).alias("weight"),
+                    F.concat("path", F.array(F.col("dst"))).alias("path"),
+                )
             )
-        )
-        merged = state.withColumn("__chg", F.lit(False)).unionByName(
-            exp.dropDuplicates(["vid", "path"]).withColumn("__chg", F.lit(True))
-        )
-        w = Window.partitionBy("vid").orderBy(F.asc("weight"), F.asc("path"))
-        kept = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-        changed = ss.step(kept, F.max("__chg"))[0]
-        state = ss.carry(kept)
-        if not changed:
-            break
-    state = ss.finish(state)
-    e.unpersist()
+            merged = state.withColumn("__chg", F.lit(False)).unionByName(
+                exp.dropDuplicates(["vid", "path"]).withColumn("__chg", F.lit(True))
+            )
+            w = Window.partitionBy("vid").orderBy(F.asc("weight"), F.asc("path"))
+            kept = (
+                merged.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") <= k)
+                .drop("__rn")
+            )
+            changed = ss.step(kept, F.max("__chg"))[0]
+            state = ss.carry(kept)
+            if not changed:
+                break
+        state = ss.finish(state)
     # bounded-window ok: at most k candidate paths reach the target
     w_rank = Window.orderBy(F.asc("weight"), F.asc("path"))
     return (
@@ -298,67 +296,68 @@ def max_flow(
         .agg(F.sum("cap").alias("cap"))
         .truncate_plan()
     )
-    # one self row per vertex keeps a reached vertex's own row in its group
-    verts = res.select(F.col("src").alias("vid")).distinct().cache()
     own = F.col("__self")
     total = 0.0
-    rounds = Supersteps()
-    for _ in range(max_augmentations):
-        # BFS shortest augmenting path in the residual graph, one row per
-        # reached vertex: a superstep extends the newest level along the
-        # live edges and keeps each vertex's first (depth, path)
-        live = res.filter(F.col("cap") > 0)
-        nbr = _with_self_rows(
-            live.select(F.col("dst").alias("v"), F.col("src").alias("n")), verts
-        )
-        reached = local_df(
-            spark, [(source, 0, [source])], "vid long, depth int, path array<long>"
-        )
-        bfs = Supersteps()
-        found = None
-        for depth in range(1, max_depth + 1):
-            hop = F.struct(F.lit(depth).alias("depth"), F.concat("path", F.array("v")).alias("path"))
-            stepped = (
-                nbr.join(
-                    reached,
-                    (nbr["n"] == reached["vid"]) & (own | (reached["depth"] == depth - 1)),
-                )
-                .groupBy(F.col("v").alias("vid"))
-                .agg(F.min(F.when(own, F.struct("depth", "path")).otherwise(hop)).alias("m"))
-                .select("vid", "m.depth", "m.path")
+    with Supersteps() as rounds:
+        # one self row per vertex keeps a reached vertex's own row in its group
+        verts = rounds.cache(res.select(F.col("src").alias("vid")).distinct())
+        for _ in range(max_augmentations):
+            # BFS shortest augmenting path in the residual graph, one row per
+            # reached vertex: a superstep extends the newest level along the
+            # live edges and keeps each vertex's first (depth, path)
+            live = res.filter(F.col("cap") > 0)
+            nbr = _with_self_rows(
+                live.select(F.col("dst").alias("v"), F.col("src").alias("n")), verts
             )
-            new = F.col("depth") == depth
-            found, grew = bfs.step(
-                stepped,
-                F.max(F.when(new & (F.col("vid") == sink), F.col("path"))),
-                F.count(F.when(new, 1)),
+            reached = local_df(
+                spark, [(source, 0, [source])], "vid long, depth int, path array<long>"
             )
-            reached = bfs.carry(stepped)
-            if found or not grew:
+            found = None
+            with Supersteps() as bfs:
+                for depth in range(1, max_depth + 1):
+                    hop = F.struct(
+                        F.lit(depth).alias("depth"), F.concat("path", F.array("v")).alias("path")
+                    )
+                    stepped = (
+                        nbr.join(
+                            reached,
+                            (nbr["n"] == reached["vid"]) & (own | (reached["depth"] == depth - 1)),
+                        )
+                        .groupBy(F.col("v").alias("vid"))
+                        .agg(
+                            F.min(F.when(own, F.struct("depth", "path")).otherwise(hop)).alias("m")
+                        )
+                        .select("vid", "m.depth", "m.path")
+                    )
+                    new = F.col("depth") == depth
+                    found, grew = bfs.step(
+                        stepped,
+                        F.max(F.when(new & (F.col("vid") == sink), F.col("path"))),
+                        F.count(F.when(new, 1)),
+                    )
+                    reached = bfs.carry(stepped)
+                    if found or not grew:
+                        break
+            if not found:
                 break
-        bfs.release()
-        if not found:
-            break
-        path_edges = [(int(found[j]), int(found[j + 1])) for j in range(len(found) - 1)]
-        pe = local_df(spark, path_edges, "src long, dst long")
-        # every path edge's cap with its bottleneck, in one superstep
-        stepped = res.join(
-            F.broadcast(pe.withColumn("__on", F.lit(True))), ["src", "dst"], "left"
-        )
-        bottleneck = rounds.step(stepped, F.min(F.when(F.col("__on"), F.col("cap"))))[0]
-        if not bottleneck or bottleneck <= 0:
-            break
-        total += float(bottleneck)
-        delta = pe.withColumn("d", F.lit(-float(bottleneck))).unionByName(
-            pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            .withColumn("d", F.lit(float(bottleneck)))
-        )
-        res = rounds.carry(
-            stepped.join(F.broadcast(delta), ["src", "dst"], "left")
-            .select("src", "dst", (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"))
-        )
-    rounds.release()
-    verts.unpersist()
+            path_edges = [(int(found[j]), int(found[j + 1])) for j in range(len(found) - 1)]
+            pe = local_df(spark, path_edges, "src long, dst long")
+            # every path edge's cap with its bottleneck, in one superstep
+            stepped = res.join(
+                F.broadcast(pe.withColumn("__on", F.lit(True))), ["src", "dst"], "left"
+            )
+            bottleneck = rounds.step(stepped, F.min(F.when(F.col("__on"), F.col("cap"))))[0]
+            if not bottleneck or bottleneck <= 0:
+                break
+            total += float(bottleneck)
+            delta = pe.withColumn("d", F.lit(-float(bottleneck))).unionByName(
+                pe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                .withColumn("d", F.lit(float(bottleneck)))
+            )
+            res = rounds.carry(
+                stepped.join(F.broadcast(delta), ["src", "dst"], "left")
+                .select("src", "dst", (F.col("cap") + F.coalesce("d", F.lit(0.0))).alias("cap"))
+            )
     return local_df(
         spark, [(total, source, sink)], "max_flow double, source_id long, sink_id long"
     )
@@ -386,44 +385,43 @@ def maximal_cliques(
     truncated — raise it explicitly for clique-dense graphs).
     Returns (clique array<long> ascending, size int).
     """
-    adj = _undirected_adj(edges).cache()
-    # the carried state holds the newest level's cliques and the maximal
-    # cliques of the levels before; a superstep tests the newest level,
-    # keeps its maximal cliques and appends the next level
-    state = _undirected_pairs(edges).select(F.array("a", "b").alias("clique"))
-    ss = Supersteps()
-    for size in range(2, max_size):
-        newest = F.size("clique") == size
-        # (clique, n): members adjacent to n; n extends the clique when
-        # all ``size`` members are, and grows it when n > its last member
-        hits = (
-            state.select("clique", F.explode_outer(F.when(newest, F.col("clique"))).alias("m"))
-            .join(adj, F.col("m") == adj["v"], "left")
-            .groupBy("clique", "n")
-            .agg(F.count("v").alias("hits"))
-        )
-        extends = (F.col("hits") == size) & ~F.array_contains("clique", F.col("n"))
-        stepped = hits.groupBy("clique").agg(
-            F.max(extends).alias("__ext"),
-            F.collect_list(
-                F.when(extends & (F.col("n") > F.element_at("clique", -1)), F.col("n"))
-            ).alias("__up"),
-        )
-        grown = ss.step(stepped, F.sum(F.size("__up")))[0]
-        state = ss.carry(
-            stepped.select(
-                F.explode(
-                    F.concat(
-                        F.filter(F.array("clique"), lambda c: ~F.col("__ext")),
-                        F.transform("__up", lambda w: F.concat("clique", F.array(w))),
-                    )
-                ).alias("clique")
+    with Supersteps() as ss:
+        adj = ss.cache(_undirected_adj(edges))
+        # the carried state holds the newest level's cliques and the maximal
+        # cliques of the levels before; a superstep tests the newest level,
+        # keeps its maximal cliques and appends the next level
+        state = _undirected_pairs(edges).select(F.array("a", "b").alias("clique"))
+        for size in range(2, max_size):
+            newest = F.size("clique") == size
+            # (clique, n): members adjacent to n; n extends the clique when
+            # all ``size`` members are, and grows it when n > its last member
+            hits = (
+                state.select("clique", F.explode_outer(F.when(newest, F.col("clique"))).alias("m"))
+                .join(adj, F.col("m") == adj["v"], "left")
+                .groupBy("clique", "n")
+                .agg(F.count("v").alias("hits"))
             )
-        )
-        if not grown:
-            break
-    state = ss.finish(state)
-    adj.unpersist()
+            extends = (F.col("hits") == size) & ~F.array_contains("clique", F.col("n"))
+            stepped = hits.groupBy("clique").agg(
+                F.max(extends).alias("__ext"),
+                F.collect_list(
+                    F.when(extends & (F.col("n") > F.element_at("clique", -1)), F.col("n"))
+                ).alias("__up"),
+            )
+            grown = ss.step(stepped, F.sum(F.size("__up")))[0]
+            state = ss.carry(
+                stepped.select(
+                    F.explode(
+                        F.concat(
+                            F.filter(F.array("clique"), lambda c: ~F.col("__ext")),
+                            F.transform("__up", lambda w: F.concat("clique", F.array(w))),
+                        )
+                    ).alias("clique")
+                )
+            )
+            if not grown:
+                break
+        state = ss.finish(state)
     # a level the loop never tested (the one at max_size) is emitted
     # unconditionally
     return state.filter(F.size("clique") >= min_size).select(

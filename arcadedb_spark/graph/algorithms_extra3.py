@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.caching import bounded_cache
 from arcadedb_spark.graph.algorithms import _undirected_adj, connected_components
 from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
@@ -70,50 +71,49 @@ def bellman_ford_path(
     relaxation round that still improves any distance flags a negative
     cycle (the classic V-th-round test), in which case path/weight are
     null."""
-    e = _weighted(edges).cache()
-    spark = edges.sparkSession
-    best = local_df(
-        spark,
-        [(source, 0.0, [source], True)],
-        "vid long, distance double, path array<long>, __chg boolean",
-    )
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        frontier = best.filter("__chg")
-        exp = (
-            frontier.join(e, frontier["vid"] == e["src"], "inner")
-            .filter(~F.array_contains("path", F.col("dst")))
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("distance") + F.col("w")).alias("distance"),
-                F.concat("path", F.array(F.col("dst"))).alias("path"),
+    with Supersteps() as ss:
+        e = ss.cache(_weighted(edges))
+        spark = edges.sparkSession
+        best = local_df(
+            spark,
+            [(source, 0.0, [source], True)],
+            "vid long, distance double, path array<long>, __chg boolean",
+        )
+        for _ in range(max_iterations):
+            frontier = best.filter("__chg")
+            exp = (
+                frontier.join(e, frontier["vid"] == e["src"], "inner")
+                .filter(~F.array_contains("path", F.col("dst")))
+                .select(
+                    F.col("dst").alias("vid"),
+                    (F.col("distance") + F.col("w")).alias("distance"),
+                    F.concat("path", F.array(F.col("dst"))).alias("path"),
+                )
             )
+            stepped = _relax(best, exp, "path")
+            changed = ss.step(stepped, F.max("__chg"))[0]
+            best = ss.carry(stepped)
+            if not changed:
+                break
+        # `best` feeds the V-th-round test and the hit below
+        best = ss.finish(best)
+        # V-th-round improvement test (unrestricted by the simple-path filter)
+        improved = (
+            best.join(e, best["vid"] == e["src"], "inner")
+            .join(
+                best.select(F.col("vid").alias("dvid"),
+                            F.col("distance").alias("ddist")),
+                F.col("dst") == F.col("dvid"),
+                "left",
+            )
+            .filter(
+                F.col("ddist").isNull()
+                | (F.col("distance") + F.col("w") < F.col("ddist") - F.lit(1e-12))
+            )
+            .limit(1)
+            .count()
         )
-        stepped = _relax(best, exp, "path")
-        changed = ss.step(stepped, F.max("__chg"))[0]
-        best = ss.carry(stepped)
-        if not changed:
-            break
-    # `best` feeds the V-th-round test and the hit below
-    best = ss.finish(best)
-    # V-th-round improvement test (unrestricted by the simple-path filter)
-    improved = (
-        best.join(e, best["vid"] == e["src"], "inner")
-        .join(
-            best.select(F.col("vid").alias("dvid"),
-                        F.col("distance").alias("ddist")),
-            F.col("dst") == F.col("dvid"),
-            "left",
-        )
-        .filter(
-            F.col("ddist").isNull()
-            | (F.col("distance") + F.col("w") < F.col("ddist") - F.lit(1e-12))
-        )
-        .limit(1)
-        .count()
-    )
     neg = improved > 0
-    e.unpersist()  # the lazy `hit` below reads only the truncated `best`
     hit = best.filter(F.col("vid") == target)
     if neg:
         return local_df(
@@ -139,29 +139,28 @@ def _bfs_forest(edges: DataFrame, max_depth: int = 64):
     Returns (tree, levels, depth): tree = (vid, parent, level) for
     non-root vertices, levels = (vid, level) for all, depth = max level
     reached.  O(diameter) supersteps, frontier-parallel."""
-    adj = _undirected_adj(edges).cache()
-    comp = connected_components(edges)
-    visited = frontier = comp.filter(F.col("vid") == F.col("component")).select(
-        "vid", F.lit(0).alias("level"), F.lit(None).cast("long").alias("parent")
-    )
-    depth = 0
-    ss = Supersteps(level="level")
-    for lvl in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(adj, frontier["vid"] == adj["v"], "inner")
-            .groupBy(F.col("n").alias("vid"))
-            .agg(F.min("v").alias("parent"))
-            .join(visited.select("vid"), "vid", "left_anti")
-            .withColumn("level", F.lit(lvl))
-            .select("vid", "level", "parent")
+    with Supersteps(level="level") as ss:
+        adj = ss.cache(_undirected_adj(edges))
+        comp = connected_components(edges)
+        visited = frontier = comp.filter(F.col("vid") == F.col("component")).select(
+            "vid", F.lit(0).alias("level"), F.lit(None).cast("long").alias("parent")
         )
-        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-            break
-        depth = lvl
-        visited = ss.carry(visited.unionByName(nxt))
-        frontier = ss.frontier
-    visited = ss.finish(visited)
-    adj.unpersist()
+        depth = 0
+        for lvl in range(1, max_depth + 1):
+            nxt = (
+                frontier.join(adj, frontier["vid"] == adj["v"], "inner")
+                .groupBy(F.col("n").alias("vid"))
+                .agg(F.min("v").alias("parent"))
+                .join(visited.select("vid"), "vid", "left_anti")
+                .withColumn("level", F.lit(lvl))
+                .select("vid", "level", "parent")
+            )
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
+                break
+            depth = lvl
+            visited = ss.carry(visited.unionByName(nxt))
+            frontier = ss.frontier
+        visited = ss.finish(visited)
     return visited.filter(F.col("parent").isNotNull()), visited, depth
 
 
@@ -216,25 +215,24 @@ def bridges(edges: DataFrame, max_depth: int = 64) -> DataFrame:
     base = levels.select("vid").join(t, "vid", "left").select(
         "vid", F.coalesce("t", F.lit(0)).alias("t")
     ).truncate_plan()
-    child_parent = tree.select(F.col("vid"), F.col("parent")).cache()
-    # S_{i+1}(v) = T(v) XOR bit_xor over children c of S_i(c);
-    # after `depth` rounds S(v) = XOR of T over v's whole subtree.
-    s = base
-    ss = Supersteps()
-    for _ in range(depth):
-        contrib = (
-            s.join(child_parent, "vid")
-            .groupBy(F.col("parent").alias("vid"))
-            .agg(F.expr("bit_xor(t)").alias("cs"))
-        )
-        s = ss.carry(
-            base.join(contrib, "vid", "left").select(
-                "vid",
-                F.col("t").bitwiseXOR(F.coalesce("cs", F.lit(0))).alias("t"),
+    with Supersteps() as ss:
+        child_parent = ss.cache(tree.select(F.col("vid"), F.col("parent")))
+        # S_{i+1}(v) = T(v) XOR bit_xor over children c of S_i(c);
+        # after `depth` rounds S(v) = XOR of T over v's whole subtree.
+        s = base
+        for _ in range(depth):
+            contrib = (
+                s.join(child_parent, "vid")
+                .groupBy(F.col("parent").alias("vid"))
+                .agg(F.expr("bit_xor(t)").alias("cs"))
             )
-        )
-    s = ss.finish(s)
-    child_parent.unpersist()
+            s = ss.carry(
+                base.join(contrib, "vid", "left").select(
+                    "vid",
+                    F.col("t").bitwiseXOR(F.coalesce("cs", F.lit(0))).alias("t"),
+                )
+            )
+        s = ss.finish(s)
     subtree_xor = s.select("vid", F.col("t").alias("s"))
     return (
         tree.join(subtree_xor, "vid")
@@ -266,7 +264,7 @@ def knn_similarity(
         adj = edges.select(F.col("dst").alias("v"), F.col("src").alias("n"))
     else:
         adj = _undirected_adj(edges)
-    adj = adj.distinct().cache()
+    adj = bounded_cache(adj.distinct())  # the returned plan reads it three times
     deg = adj.groupBy("v").agg(F.count("*").alias("d"))
     x = adj.select(F.col("v").alias("a"), "n")
     y = adj.select(F.col("v").alias("b"), "n")

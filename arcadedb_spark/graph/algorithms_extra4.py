@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from arcadedb_spark.caching import bounded_cache
 from arcadedb_spark.graph.algorithms import _undirected_adj, _with_self_rows
 from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
@@ -53,37 +54,36 @@ def hashgnn(
         if direction == "out"
         else edges.select(F.col("dst").alias("v"), F.col("src").alias("n"))
     )
-    adj = adj.cache()
-    verts = adj.select(F.col("v").alias("vid")).distinct()
-    sig = verts.select(
-        "vid",
-        F.array(
-            *[F.xxhash64("vid", F.lit(seed), F.lit(i)) for i in range(per_round)]
-        ).alias("sig"),
-    )
-    # carried frame: the current sketch plus every round's sketch so far
-    state = sig.withColumn("acc", F.col("sig"))
-    ss = Supersteps()
-    for r in range(1, iterations):
-        neigh = adj.join(state, adj["n"] == state["vid"], "inner").select(
-            F.col("v").alias("vid"), "sig", F.lit(None).cast("array<long>").alias("acc")
-        )
-        mins = state.unionByName(neigh).groupBy("vid").agg(
-            F.aggregate(
-                F.collect_list("sig"),
-                F.array_repeat(F.lit(_MAX_LONG), per_round),
-                lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
+    with Supersteps() as ss:
+        adj = ss.cache(adj)
+        verts = adj.select(F.col("v").alias("vid")).distinct()
+        sig = verts.select(
+            "vid",
+            F.array(
+                *[F.xxhash64("vid", F.lit(seed), F.lit(i)) for i in range(per_round)]
             ).alias("sig"),
-            F.first("acc", ignorenulls=True).alias("acc"),
         )
-        # re-mix so round r+1's minhash space is independent of round r's
-        state = ss.carry(
-            mins.withColumn(
-                "sig", F.transform("sig", lambda x: F.xxhash64(x, F.lit(seed + r)))
-            ).withColumn("acc", F.concat("acc", "sig"))
-        )
-    out = ss.finish(state)
-    adj.unpersist()
+        # carried frame: the current sketch plus every round's sketch so far
+        state = sig.withColumn("acc", F.col("sig"))
+        for r in range(1, iterations):
+            neigh = adj.join(state, adj["n"] == state["vid"], "inner").select(
+                F.col("v").alias("vid"), "sig", F.lit(None).cast("array<long>").alias("acc")
+            )
+            mins = state.unionByName(neigh).groupBy("vid").agg(
+                F.aggregate(
+                    F.collect_list("sig"),
+                    F.array_repeat(F.lit(_MAX_LONG), per_round),
+                    lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
+                ).alias("sig"),
+                F.first("acc", ignorenulls=True).alias("acc"),
+            )
+            # re-mix so round r+1's minhash space is independent of round r's
+            state = ss.carry(
+                mins.withColumn(
+                    "sig", F.transform("sig", lambda x: F.xxhash64(x, F.lit(seed + r)))
+                ).withColumn("acc", F.concat("acc", "sig"))
+            )
+        out = ss.finish(state)
     floats = F.transform(
         "acc", lambda x: (x % 1000003).cast("double") / F.lit(1000003.0)
         * F.lit(2.0) - F.lit(1.0)
@@ -146,40 +146,38 @@ def graphsage(
     linear projection + ReLU (Arrow-batched, the matrix is rebuilt from
     the seed in each executor), and L2-normalises.  Captures multi-hop
     structural similarity deterministically for a fixed seed."""
-    adj = _undirected_adj(edges).cache()
-    deg = adj.groupBy(F.col("v").alias("vid")).agg(F.count("*").alias("d"))
-    noise = [
-        (F.xxhash64("vid", F.lit(seed), F.lit(i)) % 1000003).cast("double")
-        / F.lit(1000003.0) * F.lit(2.0) - F.lit(1.0)
-        for i in range(dim - 1)
-    ]
-    h = deg.select("vid", F.array(F.log1p("d"), *noise).alias("h"))
-    nbr = _with_self_rows(adj, deg).cache()
-    nb = ~F.col("__self")
-    ss = Supersteps()
-    for layer in range(layers):
-        folded = (
-            nbr.join(h, nbr["n"] == h["vid"], "inner")
-            .groupBy(F.col("v").alias("vid"))
-            .agg(
-                F.max(F.when(F.col("__self"), F.col("h"))).alias("h"),
-                F.aggregate(
-                    F.collect_list(F.when(nb, F.col("h"))),
-                    F.array_repeat(F.lit(0.0), dim),
-                    lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-                ).alias("s"),
-                F.count(F.when(nb, 1)).alias("n"),
+    with Supersteps() as ss:
+        adj = ss.cache(_undirected_adj(edges))
+        deg = adj.groupBy(F.col("v").alias("vid")).agg(F.count("*").alias("d"))
+        noise = [
+            (F.xxhash64("vid", F.lit(seed), F.lit(i)) % 1000003).cast("double")
+            / F.lit(1000003.0) * F.lit(2.0) - F.lit(1.0)
+            for i in range(dim - 1)
+        ]
+        h = deg.select("vid", F.array(F.log1p("d"), *noise).alias("h"))
+        nbr = ss.cache(_with_self_rows(adj, deg))
+        nb = ~F.col("__self")
+        for layer in range(layers):
+            folded = (
+                nbr.join(h, nbr["n"] == h["vid"], "inner")
+                .groupBy(F.col("v").alias("vid"))
+                .agg(
+                    F.max(F.when(F.col("__self"), F.col("h"))).alias("h"),
+                    F.aggregate(
+                        F.collect_list(F.when(nb, F.col("h"))),
+                        F.array_repeat(F.lit(0.0), dim),
+                        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
+                    ).alias("s"),
+                    F.count(F.when(nb, 1)).alias("n"),
+                )
             )
-        )
-        combined = folded.select(
-            "vid",
-            F.concat("h", F.transform("s", lambda x: x / F.col("n"))).alias("x"),
-        )
-        proj = _sage_project_udf(2 * dim, dim, seed + layer)
-        h = ss.carry(combined.select("vid", proj("x").alias("h")))
-    h = ss.finish(h)
-    nbr.unpersist()
-    adj.unpersist()
+            combined = folded.select(
+                "vid",
+                F.concat("h", F.transform("s", lambda x: x / F.col("n"))).alias("x"),
+            )
+            proj = _sage_project_udf(2 * dim, dim, seed + layer)
+            h = ss.carry(combined.select("vid", proj("x").alias("h")))
+        h = ss.finish(h)
     return h.select(F.col("vid").alias("node"), F.col("h").alias("embedding"))
 
 
@@ -204,9 +202,8 @@ def hierarchical_clustering(
     from arcadedb_spark.graph.algorithms_extra3 import knn_similarity
     from arcadedb_spark.graph.algorithms_more import mst
 
-    verts = _undirected_adj(edges).select(
-        F.col("v").alias("vid")
-    ).distinct().cache()
+    # the returned plan reads the vertex list
+    verts = bounded_cache(_undirected_adj(edges).select(F.col("v").alias("vid")).distinct())
     n_verts = verts.count()
     sim = (
         knn_similarity(edges, k=n_verts, direction="both")
@@ -217,18 +214,18 @@ def hierarchical_clustering(
             (-F.col("similarity")).alias("weight"),
         )
     )
-    tree = mst(sim).select(
-        "a", "b", (-F.col("weight")).alias("similarity")
-    ).cache()
-    n_tree = tree.count()
-    base_comps = n_verts - n_tree  # forest components before any cut
-    cut = max(0, min(num_clusters, n_verts) - base_comps)
-    keep = tree.orderBy(F.desc("similarity"), F.asc("a"), F.asc("b")).limit(
-        max(0, n_tree - cut)
-    )
-    comp = connected_components(
-        keep.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
+    with Supersteps() as scope:
+        tree = scope.cache(mst(sim).select("a", "b", (-F.col("weight")).alias("similarity")))
+        n_tree = tree.count()
+        base_comps = n_verts - n_tree  # forest components before any cut
+        cut = max(0, min(num_clusters, n_verts) - base_comps)
+        keep = tree.orderBy(F.desc("similarity"), F.asc("a"), F.asc("b")).limit(
+            max(0, n_tree - cut)
+        )
+        # pinned by its loop, so the returned plan does not read `tree`
+        comp = connected_components(
+            keep.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        )
     return (
         verts.join(comp, "vid", "left")
         .select(
@@ -249,35 +246,32 @@ def _sssp_parents(
     """Label-correcting SSSP keeping the predecessor: (vid, distance,
     parent).  Undirected (Steiner trees are an undirected notion)."""
     e = _weighted(edges)
-    und = e.unionByName(
-        e.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
+    with Supersteps() as ss:
+        und = ss.cache(
+            e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
         )
-    ).cache()
-    spark = edges.sparkSession
-    best = local_df(
-        spark,
-        [(source, 0.0, None, True)],
-        "vid long, distance double, parent long, __chg boolean",
-    )
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        frontier = best.filter("__chg")
-        relaxed = (
-            frontier.join(und, frontier["vid"] == und["src"], "inner")
-            .select(
-                F.col("dst").alias("vid"),
-                (F.col("distance") + F.col("w")).alias("distance"),
-                F.col("src").alias("parent"),
+        spark = edges.sparkSession
+        best = local_df(
+            spark,
+            [(source, 0.0, None, True)],
+            "vid long, distance double, parent long, __chg boolean",
+        )
+        for _ in range(max_iterations):
+            frontier = best.filter("__chg")
+            relaxed = (
+                frontier.join(und, frontier["vid"] == und["src"], "inner")
+                .select(
+                    F.col("dst").alias("vid"),
+                    (F.col("distance") + F.col("w")).alias("distance"),
+                    F.col("src").alias("parent"),
+                )
             )
-        )
-        stepped = _relax(best, relaxed, "parent")
-        changed = ss.step(stepped, F.max("__chg"))[0]
-        best = ss.carry(stepped)
-        if not changed:
-            break
-    best = ss.finish(best)  # detach before releasing the caches
-    und.unpersist()
+            stepped = _relax(best, relaxed, "parent")
+            changed = ss.step(stepped, F.max("__chg"))[0]
+            best = ss.carry(stepped)
+            if not changed:
+                break
+        best = ss.finish(best)  # detach before the caches go
     return best.drop("__chg")
 
 
@@ -346,29 +340,29 @@ def steiner_tree(
         "terminal long, cur long, segs array<struct<lo:long,hi:long>>",
     )
     pmap = allp.select("terminal", F.col("vid").alias("cur"), "parent")
-    ss = Supersteps()
-    for _ in range(max_iterations * len(terminals)):
-        stepped = walkers.join(pmap, ["terminal", "cur"], "left").select(
-            "terminal",
-            F.col("parent").alias("cur"),
-            F.when(
-                F.col("parent").isNotNull(),
-                F.array_append(
-                    "segs",
-                    F.struct(
-                        F.least("parent", "cur").alias("lo"),
-                        F.greatest("parent", "cur").alias("hi"),
+    with Supersteps() as ss:
+        for _ in range(max_iterations * len(terminals)):
+            stepped = walkers.join(pmap, ["terminal", "cur"], "left").select(
+                "terminal",
+                F.col("parent").alias("cur"),
+                F.when(
+                    F.col("parent").isNotNull(),
+                    F.array_append(
+                        "segs",
+                        F.struct(
+                            F.least("parent", "cur").alias("lo"),
+                            F.greatest("parent", "cur").alias("hi"),
+                        ),
                     ),
-                ),
+                )
+                .otherwise(F.col("segs"))
+                .alias("segs"),
             )
-            .otherwise(F.col("segs"))
-            .alias("segs"),
-        )
-        walking = ss.step(stepped, F.count("cur"))[0]
-        walkers = ss.carry(stepped)
-        if not walking:
-            break
-    walkers = ss.finish(walkers)
+            walking = ss.step(stepped, F.count("cur"))[0]
+            walkers = ss.carry(stepped)
+            if not walking:
+                break
+        walkers = ss.finish(walkers)
     ew = _weighted(edges).select(
         F.least("src", "dst").alias("lo"),
         F.greatest("src", "dst").alias("hi"),
@@ -381,25 +375,25 @@ def steiner_tree(
     )
     # 5. iteratively prune non-terminal leaves: an edge goes when one of
     # its ends has degree 1 and is no terminal
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        ends = sub.select("lo", "hi", "w", F.explode(F.array("lo", "hi")).alias("vid"))
-        stepped = (
-            ends.select(
-                "lo", "hi", "w",
-                (
-                    (F.count(F.lit(1)).over(Window.partitionBy("vid")) == 1)
-                    & ~F.col("vid").isin(terminals)
-                ).alias("__leaf"),
+    with Supersteps() as ss:
+        for _ in range(max_iterations):
+            ends = sub.select("lo", "hi", "w", F.explode(F.array("lo", "hi")).alias("vid"))
+            stepped = (
+                ends.select(
+                    "lo", "hi", "w",
+                    (
+                        (F.count(F.lit(1)).over(Window.partitionBy("vid")) == 1)
+                        & ~F.col("vid").isin(terminals)
+                    ).alias("__leaf"),
+                )
+                .groupBy("lo", "hi", "w")
+                .agg(F.max("__leaf").alias("__leaf"))
             )
-            .groupBy("lo", "hi", "w")
-            .agg(F.max("__leaf").alias("__leaf"))
-        )
-        pruned = ss.step(stepped, F.max("__leaf"))[0]
-        sub = ss.carry(stepped.filter(~F.col("__leaf")).drop("__leaf"))
-        if not pruned:
-            break
-    sub = ss.finish(sub)
+            pruned = ss.step(stepped, F.max("__leaf"))[0]
+            sub = ss.carry(stepped.filter(~F.col("__leaf")).drop("__leaf"))
+            if not pruned:
+                break
+        sub = ss.finish(sub)
     total = sub.agg(F.sum("w")).collect()[0][0] or 0.0
     return sub.select(
         F.col("lo").alias("source"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from arcadedb_spark.caching import bounded_cache
 from arcadedb_spark.graph.algorithms import (
     _undirected_adj,
     _undirected_pairs,
@@ -45,7 +46,7 @@ def harmonic_centrality(
     n−1 like the reference default).  Landmark-sampled by default
     (64 landmarks — exact for graphs under 64 vertices); ``exact=True``
     opts in to all-vertices landmarks.  Returns (vid, harmonic)."""
-    verts = _vertices_of(edges).cache()
+    verts = bounded_cache(_vertices_of(edges))  # the returned plan reads it
     if landmarks is None:
         landmarks = default_landmarks(edges, exact=exact)
     n = len(landmarks)
@@ -108,34 +109,33 @@ def topological_layers(edges: DataFrame, max_iterations: int = 100) -> DataFrame
     layers are its parallel refinement: any layer-respecting order is
     valid).  Vertices on cycles never peel and are absent from the
     result.  Returns (vid, layer)."""
-    e = edges.select("src", "dst").distinct().cache()
-    # one carried frame: (vid, layer), layer null until the vertex peels
-    state = _vertices_of(edges).withColumn("layer", F.lit(None).cast("int"))
-    ss = Supersteps()
-    for layer in range(max_iterations):
-        # vertices still holding an in-edge from an unpeeled source
-        blocked = (
-            e.join(
-                state.filter(F.col("layer").isNull()).select(F.col("vid").alias("src")),
-                "src",
-                "left_semi",
+    with Supersteps() as ss:
+        e = ss.cache(edges.select("src", "dst").distinct())
+        # one carried frame: (vid, layer), layer null until the vertex peels
+        state = _vertices_of(edges).withColumn("layer", F.lit(None).cast("int"))
+        for layer in range(max_iterations):
+            # vertices still holding an in-edge from an unpeeled source
+            blocked = (
+                e.join(
+                    state.filter(F.col("layer").isNull()).select(F.col("vid").alias("src")),
+                    "src",
+                    "left_semi",
+                )
+                .select(F.col("dst").alias("vid"))
+                .distinct()
+                .withColumn("__in", F.lit(True))
             )
-            .select(F.col("dst").alias("vid"))
-            .distinct()
-            .withColumn("__in", F.lit(True))
-        )
-        stepped = state.join(blocked, "vid", "left").select(
-            "vid",
-            F.when(F.col("layer").isNull() & F.col("__in").isNull(), F.lit(layer))
-            .otherwise(F.col("layer"))
-            .alias("layer"),
-        )
-        peeled = ss.step(stepped, F.count(F.when(F.col("layer") == layer, 1)))[0]
-        state = ss.carry(stepped)
-        if peeled == 0:
-            break
-    state = ss.finish(state)
-    e.unpersist()
+            stepped = state.join(blocked, "vid", "left").select(
+                "vid",
+                F.when(F.col("layer").isNull() & F.col("__in").isNull(), F.lit(layer))
+                .otherwise(F.col("layer"))
+                .alias("layer"),
+            )
+            peeled = ss.step(stepped, F.count(F.when(F.col("layer") == layer, 1)))[0]
+            state = ss.carry(stepped)
+            if peeled == 0:
+                break
+        state = ss.finish(state)
     return state.filter(F.col("layer").isNotNull())
 
 
@@ -147,7 +147,8 @@ def topological_sort(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
     a broadcast per-layer offset — layer counts are one row per layer, so
     no global single-partition sort (an unpartitioned Window funnels every
     vertex through one task)."""
-    layers = topological_layers(edges, max_iterations).cache()
+    # the returned plan reads it twice
+    layers = bounded_cache(topological_layers(edges, max_iterations))
     counts = layers.groupBy("layer").agg(F.count("*").alias("__n"))
     # cumulative offsets over the tiny per-layer frame (rows = #layers).
     # Constant-valued non-foldable partition key keeps the intended
@@ -191,28 +192,27 @@ def longest_path_dag(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
     (AlgoLongestPathDAG.java) by iterative max-relaxation — O(longest
     path) supersteps.  Returns (vid, length)."""
     verts = _vertices_of(edges)
-    e = edges.select("src", "dst").distinct().cache()
-    dist = verts.withColumn("length", F.lit(0))
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        relaxed = (
-            e.join(dist, e["src"] == dist["vid"], "inner")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg((F.max("length") + 1).alias("nl"))
-        )
-        stepped = dist.join(relaxed, "vid", "left").select(
-            "vid",
-            F.greatest(F.col("length"), F.coalesce(F.col("nl"), F.col("length"))).alias(
-                "length"
-            ),
-            (F.col("nl") > F.col("length")).alias("__chg"),
-        )
-        changed = ss.step(stepped, F.max("__chg"))[0]
-        dist = ss.carry(stepped.select("vid", "length"))
-        if not changed:
-            break
-    dist = ss.finish(dist)
-    e.unpersist()
+    with Supersteps() as ss:
+        e = ss.cache(edges.select("src", "dst").distinct())
+        dist = verts.withColumn("length", F.lit(0))
+        for _ in range(max_iterations):
+            relaxed = (
+                e.join(dist, e["src"] == dist["vid"], "inner")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg((F.max("length") + 1).alias("nl"))
+            )
+            stepped = dist.join(relaxed, "vid", "left").select(
+                "vid",
+                F.greatest(F.col("length"), F.coalesce(F.col("nl"), F.col("length"))).alias(
+                    "length"
+                ),
+                (F.col("nl") > F.col("length")).alias("__chg"),
+            )
+            changed = ss.step(stepped, F.max("__chg"))[0]
+            dist = ss.carry(stepped.select("vid", "length"))
+            if not changed:
+                break
+        dist = ss.finish(dist)
     return dist
 
 
@@ -245,7 +245,7 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
 def graph_summary(edges: DataFrame) -> DataFrame:
     """One-row structural summary (AlgoGraphSummary.java): vertex/edge
     counts, density, degree min/avg/max."""
-    und = _undirected_pairs(edges).cache()
+    und = bounded_cache(_undirected_pairs(edges))  # the returned plan reads it twice
     deg = (
         und.select(F.col("a").alias("vid"))
         .unionByName(und.select(F.col("b").alias("vid")))
@@ -280,33 +280,34 @@ def assortativity(edges: DataFrame) -> float:
 def rich_club_coefficient(edges: DataFrame, k: int) -> float:
     """φ(k) = 2·E_k / (N_k·(N_k−1)) over vertices with degree > k
     (AlgoRichClub.java)."""
-    und = _undirected_pairs(edges).cache()
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("d"))
-    )
-    rich = deg.filter(F.col("d") > k).select("v").cache()
-    nk = rich.count()
-    if nk < 2:
-        return 0.0
-    ek = (
-        und.join(rich.withColumnRenamed("v", "a"), "a", "left_semi")
-        .join(rich.withColumnRenamed("v", "b"), "b", "left_semi")
-        .count()
-    )
+    with Supersteps() as scope:
+        und = scope.cache(_undirected_pairs(edges))
+        deg = (
+            und.select(F.col("a").alias("v"))
+            .unionByName(und.select(F.col("b").alias("v")))
+            .groupBy("v")
+            .agg(F.count("*").alias("d"))
+        )
+        rich = scope.cache(deg.filter(F.col("d") > k).select("v"))
+        nk = rich.count()
+        if nk < 2:
+            return 0.0
+        ek = (
+            und.join(rich.withColumnRenamed("v", "a"), "a", "left_semi")
+            .join(rich.withColumnRenamed("v", "b"), "b", "left_semi")
+            .count()
+        )
     return 2.0 * ek / (nk * (nk - 1))
 
 
 def conductance(edges: DataFrame, communities: DataFrame) -> DataFrame:
     """Per-community conductance = cut / min(vol, 2m − vol)
     (AlgoConductance.java).  ``communities`` = (vid, community)."""
-    und = _undirected_pairs(edges).cache()
+    und = bounded_cache(_undirected_pairs(edges))  # the returned plan reads it twice
     m = und.count()
     ca = communities.select(F.col("vid").alias("a"), F.col("community").alias("__ca"))
     cb = communities.select(F.col("vid").alias("b"), F.col("community").alias("__cb"))
-    tagged = und.join(ca, "a").join(cb, "b").cache()
+    tagged = und.join(ca, "a").join(cb, "b")
     cut = (
         tagged.filter(F.col("__ca") != F.col("__cb"))
         .select(F.explode(F.array("__ca", "__cb")).alias("c"))
@@ -348,25 +349,24 @@ def bipartite_check(edges: DataFrame, max_depth: int = 20) -> bool:
     Roots stay distributed (vid == component id from
     ``connected_components``) — no driver-side component list, so it
     scales to graphs with arbitrarily many components."""
-    adj = _undirected_adj(edges).cache()
-    comp = connected_components(edges)
-    seen = frontier = comp.filter(F.col("vid") == F.col("component")).select(
-        "vid", F.lit(0).alias("depth")
-    )
-    ss = Supersteps(level="depth")
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(adj, frontier["vid"] == adj["v"], "inner")
-            .select(F.col("n").alias("vid"), F.lit(depth).alias("depth"))
-            .distinct()
-            .join(seen, "vid", "left_anti")
+    with Supersteps(level="depth") as ss:
+        adj = ss.cache(_undirected_adj(edges))
+        comp = connected_components(edges)
+        seen = frontier = comp.filter(F.col("vid") == F.col("component")).select(
+            "vid", F.lit(0).alias("depth")
         )
-        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-            break
-        seen = ss.carry(seen.unionByName(nxt))
-        frontier = ss.frontier
-    color = ss.finish(seen).select("vid", (F.col("depth") % 2).alias("color"))
-    adj.unpersist()
+        for depth in range(1, max_depth + 1):
+            nxt = (
+                frontier.join(adj, frontier["vid"] == adj["v"], "inner")
+                .select(F.col("n").alias("vid"), F.lit(depth).alias("depth"))
+                .distinct()
+                .join(seen, "vid", "left_anti")
+            )
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
+                break
+            seen = ss.carry(seen.unionByName(nxt))
+            frontier = ss.frontier
+        color = ss.finish(seen).select("vid", (F.col("depth") % 2).alias("color"))
     e = edges.select("src", "dst")
     bad = (
         e.join(color.withColumnRenamed("vid", "src").withColumnRenamed("color", "cs"), "src")
@@ -447,45 +447,45 @@ def personalized_pagerank(
     """PageRank with teleport restricted to ``sources``
     (AlgoPersonalizedPageRank.java).  Returns (vid, rank); Σ rank = 1."""
     spark = edges.sparkSession
-    verts = _vertices_of(edges).cache()
-    outd = edges.groupBy("src").agg(F.count("*").alias("__outd"))
-    e = edges.join(outd, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("__outd")).alias("__share")
-    ).cache()
-    src_df = local_df(spark, [(s,) for s in sources], "vid long")
-    teleport = verts.join(src_df, "vid", "left_semi").withColumn(
-        "t", F.lit(1.0 / len(sources))
-    )
-    ranks = teleport.select("vid", F.col("t").alias("rank"))
-    ranks = verts.join(ranks, "vid", "left").fillna(0.0, ["rank"])
-    ss = Supersteps()
-    for _ in range(iterations):
-        contribs = (
-            e.join(ranks, e["src"] == ranks["vid"], "inner")
-            .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
-            .groupBy("vid")
-            .agg(F.sum("c").alias("c"))
-        )
-        flowed = ss.step(contribs, F.sum("c"))[0] or 0.0
-        dangling = 1.0 - flowed  # total rank mass is 1
-        ranks = ss.carry(
-            verts.join(contribs, "vid", "left")
-            .join(teleport.select("vid", "t"), "vid", "left")
-            .select(
-                "vid",
-                (
-                    F.lit(1.0 - damping) * F.coalesce(F.col("t"), F.lit(0.0))
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.lit(dangling) * F.coalesce(F.col("t"), F.lit(0.0))
-                    )
-                ).alias("rank"),
+    with Supersteps() as ss:
+        verts = ss.cache(_vertices_of(edges))
+        outd = edges.groupBy("src").agg(F.count("*").alias("__outd"))
+        e = ss.cache(
+            edges.join(outd, "src").select(
+                "src", "dst", (F.lit(1.0) / F.col("__outd")).alias("__share")
             )
         )
-    ranks = ss.finish(ranks)
-    e.unpersist()
-    verts.unpersist()
+        src_df = local_df(spark, [(s,) for s in sources], "vid long")
+        teleport = verts.join(src_df, "vid", "left_semi").withColumn(
+            "t", F.lit(1.0 / len(sources))
+        )
+        ranks = teleport.select("vid", F.col("t").alias("rank"))
+        ranks = verts.join(ranks, "vid", "left").fillna(0.0, ["rank"])
+        for _ in range(iterations):
+            contribs = (
+                e.join(ranks, e["src"] == ranks["vid"], "inner")
+                .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
+                .groupBy("vid")
+                .agg(F.sum("c").alias("c"))
+            )
+            flowed = ss.step(contribs, F.sum("c"))[0] or 0.0
+            dangling = 1.0 - flowed  # total rank mass is 1
+            ranks = ss.carry(
+                verts.join(contribs, "vid", "left")
+                .join(teleport.select("vid", "t"), "vid", "left")
+                .select(
+                    "vid",
+                    (
+                        F.lit(1.0 - damping) * F.coalesce(F.col("t"), F.lit(0.0))
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("c"), F.lit(0.0))
+                            + F.lit(dangling) * F.coalesce(F.col("t"), F.lit(0.0))
+                        )
+                    ).alias("rank"),
+                )
+            )
+        ranks = ss.finish(ranks)
     return ranks
 
 
@@ -505,82 +505,79 @@ def article_rank(
             F.struct(F.col("dst").alias("vid"), F.lit(0).alias("d")),
         )
     ).alias("o")
-    verts = (
-        edges.select(out)
-        .groupBy(F.col("o.vid").alias("vid"))
-        .agg(F.sum("o.d").alias("__outd"))
-        .cache()
-    )
-    dang = F.col("__outd") == 0
-    n, n_dang, m = verts.agg(
-        F.count(F.lit(1)), F.count(F.when(dang, 1)), F.sum("__outd")
-    ).collect()[0]
-    avg_out = m / n if n else 1.0
-    e = edges.join(verts, edges["src"] == verts["vid"]).select(
-        "src", "dst",
-        (F.lit(1.0) / (F.col("__outd") + F.lit(avg_out))).alias("__share"),
-    ).cache()
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    dangling = n_dang / n  # rank mass on dangling vertices
-    ss = Supersteps()
-    for _ in range(iterations):
-        contribs = (
-            e.join(ranks, e["src"] == ranks["vid"], "inner")
-            .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
-            .groupBy("vid")
-            .agg(F.sum("c").alias("c"))
+    with Supersteps() as ss:
+        verts = ss.cache(
+            edges.select(out)
+            .groupBy(F.col("o.vid").alias("vid"))
+            .agg(F.sum("o.d").alias("__outd"))
         )
-        stepped = verts.join(contribs, "vid", "left").select(
-            "vid",
-            "__outd",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
-            ).alias("rank"),
+        dang = F.col("__outd") == 0
+        n, n_dang, m = verts.agg(
+            F.count(F.lit(1)), F.count(F.when(dang, 1)), F.sum("__outd")
+        ).collect()[0]
+        avg_out = m / n if n else 1.0
+        e = ss.cache(
+            edges.join(verts, edges["src"] == verts["vid"]).select(
+                "src", "dst",
+                (F.lit(1.0) / (F.col("__outd") + F.lit(avg_out))).alias("__share"),
+            )
         )
-        dangling = ss.step(stepped, F.sum(F.when(dang, F.col("rank"))))[0] or 0.0
-        ranks = ss.carry(stepped)
-    ranks = ss.finish(ranks).select("vid", "rank")
-    e.unpersist()
-    verts.unpersist()
+        ranks = verts.withColumn("rank", F.lit(1.0 / n))
+        dangling = n_dang / n  # rank mass on dangling vertices
+        for _ in range(iterations):
+            contribs = (
+                e.join(ranks, e["src"] == ranks["vid"], "inner")
+                .select(F.col("dst").alias("vid"), (F.col("rank") * F.col("__share")).alias("c"))
+                .groupBy("vid")
+                .agg(F.sum("c").alias("c"))
+            )
+            stepped = verts.join(contribs, "vid", "left").select(
+                "vid",
+                "__outd",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
+                ).alias("rank"),
+            )
+            dangling = ss.step(stepped, F.sum(F.when(dang, F.col("rank"))))[0] or 0.0
+            ranks = ss.carry(stepped)
+        ranks = ss.finish(ranks).select("vid", "rank")
     return ranks
 
 
 def hits(edges: DataFrame, iterations: int = 20) -> DataFrame:
     """HITS hub/authority power iteration, max-normalized per step
     (AlgoHITS.java).  Returns (vid, hub, authority)."""
-    verts = _vertices_of(edges).cache()
-    e = edges.select("src", "dst").distinct().cache()
-    out = verts.select("vid", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
-    ss = Supersteps()
-    for _ in range(iterations):
-        # authority(v) = Σ hub(u) over u→v, then hub(v) = Σ authority(w)
-        # over v→w, in one superstep: max-normalizing authority before the
-        # hub sums would only rescale them, and hub is max-normalized anyway
-        auth = (
-            e.join(out, e["src"] == out["vid"], "inner")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.sum("hub").alias("authority"))
-        )
-        auth = verts.join(auth, "vid", "left").fillna(0.0, ["authority"])
-        hub = (
-            e.join(auth, e["dst"] == auth["vid"], "inner")
-            .groupBy(F.col("src").alias("vid"))
-            .agg(F.sum("authority").alias("hub"))
-        )
-        stepped = auth.join(hub, "vid", "left").fillna(0.0, ["hub"])
-        amax, hmax = ss.step(stepped, F.max("authority"), F.max("hub"))
-        out = ss.carry(
-            stepped.select(
-                "vid",
-                (F.col("hub") / F.lit(hmax or 1.0)).alias("hub"),
-                (F.col("authority") / F.lit(amax or 1.0)).alias("authority"),
+    with Supersteps() as ss:
+        verts = ss.cache(_vertices_of(edges))
+        e = ss.cache(edges.select("src", "dst").distinct())
+        out = verts.select("vid", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
+        for _ in range(iterations):
+            # authority(v) = Σ hub(u) over u→v, then hub(v) = Σ authority(w)
+            # over v→w, in one superstep: max-normalizing authority before the
+            # hub sums would only rescale them, and hub is max-normalized anyway
+            auth = (
+                e.join(out, e["src"] == out["vid"], "inner")
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.sum("hub").alias("authority"))
             )
-        )
-    out = ss.finish(out)
-    e.unpersist()
-    verts.unpersist()
+            auth = verts.join(auth, "vid", "left").fillna(0.0, ["authority"])
+            hub = (
+                e.join(auth, e["dst"] == auth["vid"], "inner")
+                .groupBy(F.col("src").alias("vid"))
+                .agg(F.sum("authority").alias("hub"))
+            )
+            stepped = auth.join(hub, "vid", "left").fillna(0.0, ["hub"])
+            amax, hmax = ss.step(stepped, F.max("authority"), F.max("hub"))
+            out = ss.carry(
+                stepped.select(
+                    "vid",
+                    (F.col("hub") / F.lit(hmax or 1.0)).alias("hub"),
+                    (F.col("authority") / F.lit(amax or 1.0)).alias("authority"),
+                )
+            )
+        out = ss.finish(out)
     return out
 
 
@@ -594,32 +591,31 @@ def k_truss(edges: DataFrame, k: int, max_iterations: int = 30) -> DataFrame:
     than k−2 triangles (AlgoKTruss.java computes the full decomposition;
     this is the membership query for one k — run over k=3..k_max for the
     decomposition).  Returns undirected surviving edges (a, b)."""
-    und = _undirected_pairs(edges).cache()
-    cur = und
-    n_cur = und.count()
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        # support(a,b) = |N(a) ∩ N(b)| within the current edges; neighbor
-        # sets are one degree-bounded groupBy, so `cur` appears three times
-        # in the superstep plan instead of six (the plan nests per step)
-        nbrs = (
-            cur.select(F.explode(F.array(F.array("a", "b"), F.array("b", "a"))).alias("p"))
-            .groupBy(F.col("p")[0].alias("v"))
-            .agg(F.collect_set(F.col("p")[1]).alias("nb"))
-        )
-        nxt = (
-            cur.join(nbrs.select(F.col("v").alias("a"), F.col("nb").alias("na")), "a")
-            .join(nbrs.select(F.col("v").alias("b"), F.col("nb").alias("nbb")), "b")
-            .filter(F.size(F.array_intersect("na", "nbb")) >= k - 2)
-            .select("a", "b")
-        )
-        n_next = ss.step(nxt, F.count(F.lit(1)))[0]
-        cur = ss.carry(nxt)
-        if n_next == n_cur:
-            break
-        n_cur = n_next
-    cur = ss.finish(cur)
-    und.unpersist()
+    with Supersteps() as ss:
+        und = ss.cache(_undirected_pairs(edges))
+        cur = und
+        n_cur = und.count()
+        for _ in range(max_iterations):
+            # support(a,b) = |N(a) ∩ N(b)| within the current edges; neighbor
+            # sets are one degree-bounded groupBy, so `cur` appears three times
+            # in the superstep plan instead of six (the plan nests per step)
+            nbrs = (
+                cur.select(F.explode(F.array(F.array("a", "b"), F.array("b", "a"))).alias("p"))
+                .groupBy(F.col("p")[0].alias("v"))
+                .agg(F.collect_set(F.col("p")[1]).alias("nb"))
+            )
+            nxt = (
+                cur.join(nbrs.select(F.col("v").alias("a"), F.col("nb").alias("na")), "a")
+                .join(nbrs.select(F.col("v").alias("b"), F.col("nb").alias("nbb")), "b")
+                .filter(F.size(F.array_intersect("na", "nbb")) >= k - 2)
+                .select("a", "b")
+            )
+            n_next = ss.step(nxt, F.count(F.lit(1)))[0]
+            cur = ss.carry(nxt)
+            if n_next == n_cur:
+                break
+            n_cur = n_next
+        cur = ss.finish(cur)
     return cur
 
 
@@ -630,65 +626,63 @@ def mst(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
     merge by hash-min propagation.  Returns chosen edges
     (a, b, weight)."""
     w = F.coalesce(F.col("weight"), F.lit(1.0)) if "weight" in edges.columns else F.lit(1.0)
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            w.alias("weight"),
+    with Supersteps() as ss:
+        und = ss.cache(
+            edges.select(
+                F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"),
+                w.alias("weight"),
+            )
+            .filter(F.col("a") != F.col("b"))
+            .groupBy("a", "b")
+            .agg(F.min("weight").alias("weight"))
         )
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.min("weight").alias("weight"))
-        .cache()
-    )
-    # vertices read off the cached edge frame, not the (maybe costly) input
-    comp = (
-        und.select(F.col("a").alias("vid"))
-        .unionByName(und.select(F.col("b").alias("vid")))
-        .distinct()
-        .withColumn("component", F.col("vid"))
-    )
-    spark = edges.sparkSession
-    chosen = local_df(spark, [], "a long, b long, weight double")
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        ca = comp.select(F.col("vid").alias("a"), F.col("component").alias("__ca"))
-        cb = comp.select(F.col("vid").alias("b"), F.col("component").alias("__cb"))
-        cross = und.join(ca, "a").join(cb, "b").filter(F.col("__ca") != F.col("__cb"))
-        if ss.step(cross, F.count(F.lit(1)))[0] == 0:
-            break
-        # lightest outgoing edge per component (either endpoint side)
-        per_comp = cross.select(
-            F.explode(F.array("__ca", "__cb")).alias("c"), "a", "b", "weight"
-        )
-        wmin = Window.partitionBy("c").orderBy(
-            F.asc("weight"), F.asc("a"), F.asc("b")
-        )
-        picks = (
-            per_comp.withColumn("__rn", F.row_number().over(wmin))
-            .filter(F.col("__rn") == 1)
-            .select("a", "b")
+        # vertices read off the cached edge frame, not the (maybe costly) input
+        comp = (
+            und.select(F.col("a").alias("vid"))
+            .unionByName(und.select(F.col("b").alias("vid")))
             .distinct()
+            .withColumn("component", F.col("vid"))
         )
-        # the round's output, one row per merging component: pinned, since
-        # `chosen` keeps it after the cross-edge frame is released
-        picked = cross.join(picks, ["a", "b"], "left_semi").truncate_plan()
-        # a picked edge joins two components, so no edge is picked twice
-        chosen = chosen.unionByName(picked.select("a", "b", "weight"))
-        # merge the components the picks connect: min-id WCC over the
-        # component graph (a truncated frame, so comp grows one join a round)
-        merged = connected_components(
-            picked.select(F.col("__ca").alias("src"), F.col("__cb").alias("dst"))
-        )
-        comp = ss.carry(
-            comp.join(
-                merged.select(F.col("vid").alias("component"), F.col("component").alias("__m")),
-                "component",
-                "left",
-            ).select("vid", F.coalesce("__m", "component").alias("component"))
-        )
-    chosen = ss.finish(chosen)
-    und.unpersist()
+        spark = edges.sparkSession
+        chosen = local_df(spark, [], "a long, b long, weight double")
+        for _ in range(max_iterations):
+            ca = comp.select(F.col("vid").alias("a"), F.col("component").alias("__ca"))
+            cb = comp.select(F.col("vid").alias("b"), F.col("component").alias("__cb"))
+            cross = und.join(ca, "a").join(cb, "b").filter(F.col("__ca") != F.col("__cb"))
+            if ss.step(cross, F.count(F.lit(1)))[0] == 0:
+                break
+            # lightest outgoing edge per component (either endpoint side)
+            per_comp = cross.select(
+                F.explode(F.array("__ca", "__cb")).alias("c"), "a", "b", "weight"
+            )
+            wmin = Window.partitionBy("c").orderBy(
+                F.asc("weight"), F.asc("a"), F.asc("b")
+            )
+            picks = (
+                per_comp.withColumn("__rn", F.row_number().over(wmin))
+                .filter(F.col("__rn") == 1)
+                .select("a", "b")
+                .distinct()
+            )
+            # the round's output, one row per merging component: pinned, since
+            # `chosen` keeps it after the cross-edge frame is released
+            picked = cross.join(picks, ["a", "b"], "left_semi").truncate_plan()
+            # a picked edge joins two components, so no edge is picked twice
+            chosen = chosen.unionByName(picked.select("a", "b", "weight"))
+            # merge the components the picks connect: min-id WCC over the
+            # component graph (a truncated frame, so comp grows one join a round)
+            merged = connected_components(
+                picked.select(F.col("__ca").alias("src"), F.col("__cb").alias("dst"))
+            )
+            comp = ss.carry(
+                comp.join(
+                    merged.select(F.col("vid").alias("component"), F.col("component").alias("__m")),
+                    "component",
+                    "left",
+                ).select("vid", F.coalesce("__m", "component").alias("component"))
+            )
+        chosen = ss.finish(chosen)
     return chosen
 
 
@@ -709,40 +703,39 @@ def slpa(
     the most frequent heard label; memory counts thresholded at the end
     give overlapping communities.  Returns (vid, label).
     """
-    und = _undirected_adj(edges).repartition("v").cache()
-    # memory: (vid, label, cnt), initialized with each node's own label
-    memory = _vertices_of(edges).select(
-        "vid", F.col("vid").alias("label"), F.lit(1).alias("cnt")
-    )
-    ss = Supersteps()
-    for it in range(1, iterations + 1):
-        # speaker's label: most frequent in memory, hash-jittered tie order
-        wsp = Window.partitionBy("vid").orderBy(
-            F.desc("cnt"),
-            F.asc(F.xxhash64(F.col("label"), F.lit(seed + it))),
+    with Supersteps() as ss:
+        und = ss.cache(_undirected_adj(edges).repartition("v"))
+        # memory: (vid, label, cnt), initialized with each node's own label
+        memory = _vertices_of(edges).select(
+            "vid", F.col("vid").alias("label"), F.lit(1).alias("cnt")
         )
-        speak = (
-            memory.withColumn("__rn", F.row_number().over(wsp))
-            .filter(F.col("__rn") == 1)
-            .select(F.col("vid").alias("n"), F.col("label").alias("heard"))
-        )
-        # listener: most frequent heard label this round
-        heard = und.join(speak, "n").groupBy(
-            F.col("v").alias("vid"), F.col("heard").alias("label")
-        ).agg(F.count("*").alias("h"))
-        wl = Window.partitionBy("vid").orderBy(F.desc("h"), F.asc("label"))
-        accepted = (
-            heard.withColumn("__rn", F.row_number().over(wl))
-            .filter(F.col("__rn") == 1)
-            .select("vid", "label", F.lit(1).alias("cnt"))
-        )
-        memory = ss.carry(
-            memory.unionByName(accepted)
-            .groupBy("vid", "label")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    memory = ss.finish(memory)
-    und.unpersist()
+        for it in range(1, iterations + 1):
+            # speaker's label: most frequent in memory, hash-jittered tie order
+            wsp = Window.partitionBy("vid").orderBy(
+                F.desc("cnt"),
+                F.asc(F.xxhash64(F.col("label"), F.lit(seed + it))),
+            )
+            speak = (
+                memory.withColumn("__rn", F.row_number().over(wsp))
+                .filter(F.col("__rn") == 1)
+                .select(F.col("vid").alias("n"), F.col("label").alias("heard"))
+            )
+            # listener: most frequent heard label this round
+            heard = und.join(speak, "n").groupBy(
+                F.col("v").alias("vid"), F.col("heard").alias("label")
+            ).agg(F.count("*").alias("h"))
+            wl = Window.partitionBy("vid").orderBy(F.desc("h"), F.asc("label"))
+            accepted = (
+                heard.withColumn("__rn", F.row_number().over(wl))
+                .filter(F.col("__rn") == 1)
+                .select("vid", "label", F.lit(1).alias("cnt"))
+            )
+            memory = ss.carry(
+                memory.unionByName(accepted)
+                .groupBy("vid", "label")
+                .agg(F.sum("cnt").alias("cnt"))
+            )
+        memory = ss.finish(memory)
     totals = memory.groupBy("vid").agg(F.sum("cnt").alias("tot"))
     return (
         memory.join(totals, "vid")
@@ -761,39 +754,40 @@ def simrank(
     similarity) — use on moderate graphs or pre-filtered vertex subsets;
     the reference's per-pair query does the same recursion memoized.
     Returns (a, b, similarity) for a ≤ b with similarity > 0."""
-    inn = edges.select(F.col("dst").alias("v"), F.col("src").alias("n")).distinct().cache()
-    ind = inn.groupBy("v").agg(F.count("*").alias("ind"))
-    verts = _vertices_of(edges)
-    sim = verts.select(
-        F.col("vid").alias("a"), F.col("vid").alias("b"), F.lit(1.0).alias("s")
-    )
-    ss = Supersteps()
-    for _ in range(iterations):
-        # expand: a pair (u,v) with sim s contributes to every (a,b) with
-        # u ∈ I(a), v ∈ I(b) — two joins against the in-neighbor lists
-        fa = inn.select(F.col("v").alias("ta"), F.col("n").alias("a"))
-        fb = inn.select(F.col("v").alias("tb"), F.col("n").alias("b"))
-        contrib = (
-            sim.join(fa, sim["a"] == fa["a"])
-            .join(fb, sim["b"] == fb["b"])
-            .groupBy(F.col("ta").alias("a"), F.col("tb").alias("b"))
-            .agg(F.sum("s").alias("acc"))
+    with Supersteps() as ss:
+        inn = ss.cache(
+            edges.select(F.col("dst").alias("v"), F.col("src").alias("n")).distinct()
         )
-        new_sim = (
-            contrib.join(ind.withColumnRenamed("v", "a").withColumnRenamed("ind", "ia"), "a")
-            .join(ind.withColumnRenamed("v", "b").withColumnRenamed("ind", "ib"), "b")
-            .select(
-                "a", "b",
-                (F.lit(decay) * F.col("acc") / (F.col("ia") * F.col("ib"))).alias("s"),
-            )
-            .filter(F.col("a") != F.col("b"))
-        )
-        diag = verts.select(
+        ind = inn.groupBy("v").agg(F.count("*").alias("ind"))
+        verts = _vertices_of(edges)
+        sim = verts.select(
             F.col("vid").alias("a"), F.col("vid").alias("b"), F.lit(1.0).alias("s")
         )
-        sim = ss.carry(new_sim.unionByName(diag))
-    sim = ss.finish(sim)
-    inn.unpersist()
+        for _ in range(iterations):
+            # expand: a pair (u,v) with sim s contributes to every (a,b) with
+            # u ∈ I(a), v ∈ I(b) — two joins against the in-neighbor lists
+            fa = inn.select(F.col("v").alias("ta"), F.col("n").alias("a"))
+            fb = inn.select(F.col("v").alias("tb"), F.col("n").alias("b"))
+            contrib = (
+                sim.join(fa, sim["a"] == fa["a"])
+                .join(fb, sim["b"] == fb["b"])
+                .groupBy(F.col("ta").alias("a"), F.col("tb").alias("b"))
+                .agg(F.sum("s").alias("acc"))
+            )
+            new_sim = (
+                contrib.join(ind.withColumnRenamed("v", "a").withColumnRenamed("ind", "ia"), "a")
+                .join(ind.withColumnRenamed("v", "b").withColumnRenamed("ind", "ib"), "b")
+                .select(
+                    "a", "b",
+                    (F.lit(decay) * F.col("acc") / (F.col("ia") * F.col("ib"))).alias("s"),
+                )
+                .filter(F.col("a") != F.col("b"))
+            )
+            diag = verts.select(
+                F.col("vid").alias("a"), F.col("vid").alias("b"), F.lit(1.0).alias("s")
+            )
+            sim = ss.carry(new_sim.unionByName(diag))
+        sim = ss.finish(sim)
     return (
         sim.filter((F.col("a") < F.col("b")) & (F.col("s") > 0))
         .select("a", "b", F.col("s").alias("similarity"))

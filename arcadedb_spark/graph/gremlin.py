@@ -337,53 +337,52 @@ class GraphTraversal:
         else:
             if until is None:
                 raise ValueError("repeat() needs times= or until=")
-            ss = Supersteps(level="__it")
-            hops = None  # every iteration's flagged traversers, tagged __it
-            for i in range(_REPEAT_CAP):
-                hopped = sub(cur)
-                # TinkerPop until(pred): a traverser STOPS when the
-                # predicate traversal yields anything for it — existence
-                # keyed by source vid for every sub shape (a filter sub
-                # passes ⇔ it yields the traverser itself; a moving sub's
-                # hopped frame must never be emitted as the stopped
-                # traversers, and a column-set heuristic would misfire on
-                # same-schema hops like a Customer→Customer edge)
-                tagged = hopped._wrap(
-                    hopped._df.withColumn("__usrc", F.col("vid")),
-                    hopped._label,
-                )
-                u2 = until(tagged)
-                u2df = u2._df if isinstance(u2, GraphTraversal) else u2
-                produced = (
-                    u2df.select(F.col("__usrc").alias("vid"))
-                    .distinct()
-                    .withColumn("__stop", F.lit(True))
-                )
-                # a left join to the distinct stop keys keeps bag
-                # multiplicity; the stop decision is per vertex, so
-                # duplicates stop together
-                flagged = hopped._df.join(produced, "vid", "left").select(
-                    *[F.col(f"`{c}`") for c in hopped._df.columns],
-                    F.col("__stop").isNotNull().alias("__stop"),
-                    F.lit(i).alias("__it"),
-                )
-                live = ss.step(flagged, F.count(F.when(~F.col("__stop"), 1)))[0]
-                hops = ss.carry(flagged if hops is None else hops.unionByName(
-                    flagged, allowMissingColumns=True
-                ))
-                continuing = ss.frontier.filter(~F.col("__stop")).drop("__stop", "__it")
-                cur = hopped._wrap(continuing, hopped._label)
-                if not live:
-                    break
-            else:
-                ss.release()
-                raise ValueError(
-                    f"repeat().until() exceeded {_REPEAT_CAP} iterations"
-                )
-            hops = ss.finish(hops)
-            if not emit:
-                hops = hops.filter(F.col("__stop"))
-            out_frames.append(hops.drop("__stop", "__it"))
+            with Supersteps(level="__it") as ss:
+                hops = None  # every iteration's flagged traversers, tagged __it
+                for i in range(_REPEAT_CAP):
+                    hopped = sub(cur)
+                    # TinkerPop until(pred): a traverser STOPS when the
+                    # predicate traversal yields anything for it — existence
+                    # keyed by source vid for every sub shape (a filter sub
+                    # passes ⇔ it yields the traverser itself; a moving sub's
+                    # hopped frame must never be emitted as the stopped
+                    # traversers, and a column-set heuristic would misfire on
+                    # same-schema hops like a Customer→Customer edge)
+                    tagged = hopped._wrap(
+                        hopped._df.withColumn("__usrc", F.col("vid")),
+                        hopped._label,
+                    )
+                    u2 = until(tagged)
+                    u2df = u2._df if isinstance(u2, GraphTraversal) else u2
+                    produced = (
+                        u2df.select(F.col("__usrc").alias("vid"))
+                        .distinct()
+                        .withColumn("__stop", F.lit(True))
+                    )
+                    # a left join to the distinct stop keys keeps bag
+                    # multiplicity; the stop decision is per vertex, so
+                    # duplicates stop together
+                    flagged = hopped._df.join(produced, "vid", "left").select(
+                        *[F.col(f"`{c}`") for c in hopped._df.columns],
+                        F.col("__stop").isNotNull().alias("__stop"),
+                        F.lit(i).alias("__it"),
+                    )
+                    live = ss.step(flagged, F.count(F.when(~F.col("__stop"), 1)))[0]
+                    hops = ss.carry(flagged if hops is None else hops.unionByName(
+                        flagged, allowMissingColumns=True
+                    ))
+                    continuing = ss.frontier.filter(~F.col("__stop")).drop("__stop", "__it")
+                    cur = hopped._wrap(continuing, hopped._label)
+                    if not live:
+                        break
+                else:
+                    raise ValueError(
+                        f"repeat().until() exceeded {_REPEAT_CAP} iterations"
+                    )
+                hops = ss.finish(hops)
+                if not emit:
+                    hops = hops.filter(F.col("__stop"))
+                out_frames.append(hops.drop("__stop", "__it"))
         res = out_frames[0]
         for fr in out_frames[1:]:
             res = res.unionByName(fr, allowMissingColumns=True)

@@ -296,117 +296,114 @@ def _expand(
         base = bparts[0]
         for fr in bparts[1:]:
             base = base.unionByName(fr)
-        base = base.cache()
-        unbounded = step.max_hops < 0
-        selected = []
-        rel_t = ArrayType(StructType(list(e.schema.fields)))
-        if step.min_hops == 0:
-            av = g.all_vertices_full()
-            if av is None:
-                ids = local_df(db.spark, [], "vid long")
-            else:
-                ids = av.select("vid")
-            selected.append(
-                ids.select(
-                    F.col("vid").alias("__from"),
-                    F.col("vid").alias("__to"),
-                    F.array(F.col("vid")).alias(vname),
-                    F.array().cast(rel_t).alias(rname),
-                    F.array().cast("array<long>").alias(iname),
-                    F.array().cast("array<string>").alias(dname),
-                )
-            )
-        if unbounded or step.max_hops >= 1:
-            # paths start at the bound vertices only: `__from` never
-            # changes along a path, and the closing join keeps no other
-            starts = current.select(F.col(f"{from_alias}.vid").alias("__from"))
-            one = base.join(starts.distinct(), "__from", "left_semi").select(
-                "__from",
-                "__to",
-                F.array(F.col("__from"), F.col("__to")).alias(vname),
-                F.array(F.col("__rel")).alias(rname),
-                F.array(F.col("__eid")).alias(iname),
-                F.array(F.col("__dir")).alias(dname),
-                F.lit(1).alias("__hop"),
-            ).cache()
-            # every hop's paths, tagged with the hop; the frontier is the
-            # newest hop
-            frontier = paths = one
-            ss = Supersteps(level="__hop")
-            h = 1
-            # unbounded (*) expansion superstep cap: edge-uniqueness bounds
-            # path length by |E|, but pathological graphs could need huge
-            # hop counts — configurable, and hitting it with a live
-            # frontier is an ERROR (silent truncation would drop paths)
-            cap = int(
-                db.spark.conf.get("arcadedb.match.maxVarLengthHops", "100")
-            )
-            drained = False
-            # WALK mode (rel_unique=False, bounded): edges may repeat —
-            # drop the anti-reuse conjunct; termination comes from the
-            # explicit max-hop bound (PathMode.java WALK)
-            join_cond = F.col("r.__to") == F.col("s.__from")
-            if rel_unique or unbounded:
-                join_cond = join_cond & ~F.array_contains(
-                    F.col(f"r.{iname}"), F.col("s.__eid")
-                )
-            while (unbounded or h < step.max_hops) and h < cap:
-                h += 1
-                frontier = (
-                    frontier.alias("r")
-                    .join(base.alias("s"), join_cond)
-                    .select(
-                        F.col("r.__from").alias("__from"),
-                        F.col("s.__to").alias("__to"),
-                        F.concat(
-                            F.col(f"r.{vname}"), F.array(F.col("s.__to"))
-                        ).alias(vname),
-                        F.concat(
-                            F.col(f"r.{rname}"), F.array(F.col("s.__rel"))
-                        ).alias(rname),
-                        F.concat(
-                            F.col(f"r.{iname}"), F.array(F.col("s.__eid"))
-                        ).alias(iname),
-                        F.concat(
-                            F.col(f"r.{dname}"), F.array(F.col("s.__dir"))
-                        ).alias(dname),
-                        F.lit(h).alias("__hop"),
+        with Supersteps(level="__hop") as ss:
+            base = ss.cache(base)
+            unbounded = step.max_hops < 0
+            selected = []
+            rel_t = ArrayType(StructType(list(e.schema.fields)))
+            if step.min_hops == 0:
+                av = g.all_vertices_full()
+                if av is None:
+                    ids = local_df(db.spark, [], "vid long")
+                else:
+                    ids = av.select("vid")
+                selected.append(
+                    ids.select(
+                        F.col("vid").alias("__from"),
+                        F.col("vid").alias("__to"),
+                        F.array(F.col("vid")).alias(vname),
+                        F.array().cast(rel_t).alias(rname),
+                        F.array().cast("array<long>").alias(iname),
+                        F.array().cast("array<string>").alias(dname),
                     )
                 )
-                if ss.step(frontier, F.count(F.lit(1)))[0] == 0:
-                    drained = True
-                    break
-                paths = ss.carry(paths.unionByName(frontier))
-                frontier = ss.frontier
-            if unbounded and not drained and h >= cap:
-                # probe one more expansion: only a LIVE frontier means
-                # paths were actually dropped (a longest path of exactly
-                # `cap` hops is complete, not truncated)
-                probe = frontier.alias("r").join(
-                    base.alias("s"),
-                    (F.col("r.__to") == F.col("s.__from"))
-                    & ~F.array_contains(
+            if unbounded or step.max_hops >= 1:
+                # paths start at the bound vertices only: `__from` never
+                # changes along a path, and the closing join keeps no other
+                starts = current.select(F.col(f"{from_alias}.vid").alias("__from"))
+                one = ss.cache(
+                    base.join(starts.distinct(), "__from", "left_semi").select(
+                        "__from",
+                        "__to",
+                        F.array(F.col("__from"), F.col("__to")).alias(vname),
+                        F.array(F.col("__rel")).alias(rname),
+                        F.array(F.col("__eid")).alias(iname),
+                        F.array(F.col("__dir")).alias(dname),
+                        F.lit(1).alias("__hop"),
+                    )
+                )
+                # every hop's paths, tagged with the hop; the frontier is the
+                # newest hop
+                frontier = paths = one
+                h = 1
+                # unbounded (*) expansion superstep cap: edge-uniqueness bounds
+                # path length by |E|, but pathological graphs could need huge
+                # hop counts — configurable, and hitting it with a live
+                # frontier is an ERROR (silent truncation would drop paths)
+                cap = int(
+                    db.spark.conf.get("arcadedb.match.maxVarLengthHops", "100")
+                )
+                drained = False
+                # WALK mode (rel_unique=False, bounded): edges may repeat —
+                # drop the anti-reuse conjunct; termination comes from the
+                # explicit max-hop bound (PathMode.java WALK)
+                join_cond = F.col("r.__to") == F.col("s.__from")
+                if rel_unique or unbounded:
+                    join_cond = join_cond & ~F.array_contains(
                         F.col(f"r.{iname}"), F.col("s.__eid")
-                    ),
-                )
-                if not probe.isEmpty():
-                    ss.release()
-                    one.unpersist()
-                    base.unpersist()
-                    raise TranslateError(
-                        f"unbounded var-length expansion exceeded {cap} "
-                        "hops with paths still growing — results would "
-                        "be truncated; raise "
-                        "arcadedb.match.maxVarLengthHops or bound the "
-                        "pattern (*..n)"
                     )
-            paths = ss.finish(paths)
-            one.unpersist()
-            selected.append(
-                paths.filter(F.col("__hop") >= max(step.min_hops, 1))
-                .drop("__hop")
-            )
-        base.unpersist()
+                while (unbounded or h < step.max_hops) and h < cap:
+                    h += 1
+                    frontier = (
+                        frontier.alias("r")
+                        .join(base.alias("s"), join_cond)
+                        .select(
+                            F.col("r.__from").alias("__from"),
+                            F.col("s.__to").alias("__to"),
+                            F.concat(
+                                F.col(f"r.{vname}"), F.array(F.col("s.__to"))
+                            ).alias(vname),
+                            F.concat(
+                                F.col(f"r.{rname}"), F.array(F.col("s.__rel"))
+                            ).alias(rname),
+                            F.concat(
+                                F.col(f"r.{iname}"), F.array(F.col("s.__eid"))
+                            ).alias(iname),
+                            F.concat(
+                                F.col(f"r.{dname}"), F.array(F.col("s.__dir"))
+                            ).alias(dname),
+                            F.lit(h).alias("__hop"),
+                        )
+                    )
+                    if ss.step(frontier, F.count(F.lit(1)))[0] == 0:
+                        drained = True
+                        break
+                    paths = ss.carry(paths.unionByName(frontier))
+                    frontier = ss.frontier
+                if unbounded and not drained and h >= cap:
+                    # probe one more expansion: only a LIVE frontier means
+                    # paths were actually dropped (a longest path of exactly
+                    # `cap` hops is complete, not truncated)
+                    probe = frontier.alias("r").join(
+                        base.alias("s"),
+                        (F.col("r.__to") == F.col("s.__from"))
+                        & ~F.array_contains(
+                            F.col(f"r.{iname}"), F.col("s.__eid")
+                        ),
+                    )
+                    if not probe.isEmpty():
+                        raise TranslateError(
+                            f"unbounded var-length expansion exceeded {cap} "
+                            "hops with paths still growing — results would "
+                            "be truncated; raise "
+                            "arcadedb.match.maxVarLengthHops or bound the "
+                            "pattern (*..n)"
+                        )
+                paths = ss.finish(paths)
+                selected.append(
+                    paths.filter(F.col("__hop") >= max(step.min_hops, 1))
+                    .drop("__hop")
+                )
         if not selected:
             edge = local_df(
                 db.spark,

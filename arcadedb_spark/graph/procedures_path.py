@@ -118,47 +118,46 @@ def _paths_bfs(db, starts, rel_types, labels, min_d, max_d,
             und = und.join(
                 allowed.withColumnRenamed("vid", "dst"), "dst", "left_semi"
             )
-    und = und.distinct().cache()
-    roots = starts.select("__start", F.array(F.col("__start")).alias("vids"))
-    frontier = roots.withColumn("__last", F.col("__start"))
-    # every hop's paths, tagged with the hop: the frontier is the newest
-    # hop and, when spanning, the (start, node) pairs seen so far are all
-    # of them (a path never returns to its start: `vids` holds it)
-    paths = None
-    ss = Supersteps(level="__depth")
-    for depth in range(1, max_d + 1):
-        nxt = (
-            frontier.join(und, frontier["__last"] == und["src"])
-            .filter(~F.array_contains(F.col("vids"), F.col("dst")))
-            .select(
-                "__start",
-                F.concat(F.col("vids"), F.array(F.col("dst"))).alias("vids"),
-                F.col("dst").alias("__last"),
-            )
-        )
-        if spanning:
-            # first arrival wins, one path per (start, node); the pick is
-            # deterministic (min path signature) where the reference's
-            # queue order is incidental
-            if paths is not None:
-                nxt = nxt.join(
-                    paths.select("__start", "__last"),
-                    ["__start", "__last"], "left_anti",
-                )
+    with Supersteps(level="__depth") as ss:
+        und = ss.cache(und.distinct())
+        roots = starts.select("__start", F.array(F.col("__start")).alias("vids"))
+        frontier = roots.withColumn("__last", F.col("__start"))
+        # every hop's paths, tagged with the hop: the frontier is the newest
+        # hop and, when spanning, the (start, node) pairs seen so far are all
+        # of them (a path never returns to its start: `vids` holds it)
+        paths = None
+        for depth in range(1, max_d + 1):
             nxt = (
-                nxt.groupBy("__start", "__last")
-                .agg(F.min_by("vids", F.concat_ws(",", F.transform(
-                    "vids", lambda x: F.lpad(x.cast("string"), 20, "0")
-                ))).alias("vids"))
-                .select("__start", "vids", "__last")
+                frontier.join(und, frontier["__last"] == und["src"])
+                .filter(~F.array_contains(F.col("vids"), F.col("dst")))
+                .select(
+                    "__start",
+                    F.concat(F.col("vids"), F.array(F.col("dst"))).alias("vids"),
+                    F.col("dst").alias("__last"),
+                )
             )
-        nxt = nxt.withColumn("__depth", F.lit(depth))
-        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-            break
-        paths = ss.carry(nxt if paths is None else paths.unionByName(nxt))
-        frontier = ss.frontier
-    paths = ss.finish(paths)
-    und.unpersist()
+            if spanning:
+                # first arrival wins, one path per (start, node); the pick is
+                # deterministic (min path signature) where the reference's
+                # queue order is incidental
+                if paths is not None:
+                    nxt = nxt.join(
+                        paths.select("__start", "__last"),
+                        ["__start", "__last"], "left_anti",
+                    )
+                nxt = (
+                    nxt.groupBy("__start", "__last")
+                    .agg(F.min_by("vids", F.concat_ws(",", F.transform(
+                        "vids", lambda x: F.lpad(x.cast("string"), 20, "0")
+                    ))).alias("vids"))
+                    .select("__start", "vids", "__last")
+                )
+            nxt = nxt.withColumn("__depth", F.lit(depth))
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
+                break
+            paths = ss.carry(nxt if paths is None else paths.unionByName(nxt))
+            frontier = ss.frontier
+        paths = ss.finish(paths)
     out = roots if min_d <= 0 else roots.limit(0)
     if paths is not None:
         out = out.unionByName(
@@ -261,26 +260,24 @@ def _reachable(db, starts, rel_types, labels, max_d) -> DataFrame:
             und = und.join(
                 allowed.withColumnRenamed("vid", "dst"), "dst", "left_semi"
             )
-    und = und.distinct().cache()
-    frontier = seen = roots = starts.select(
-        "__start", F.col("__start").alias("v"), F.lit(0).alias("__depth")
-    ).cache()
-    ss = Supersteps(level="__depth")
-    for depth in range(1, max_d + 1):
-        nxt = (
-            frontier.join(und, frontier["v"] == und["src"])
-            .select("__start", F.col("dst").alias("v"))
-            .distinct()
-            .join(seen, ["__start", "v"], "left_anti")
-            .withColumn("__depth", F.lit(depth))
+    with Supersteps(level="__depth") as ss:
+        und = ss.cache(und.distinct())
+        frontier = seen = ss.cache(
+            starts.select("__start", F.col("__start").alias("v"), F.lit(0).alias("__depth"))
         )
-        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-            break
-        seen = ss.carry(seen.unionByName(nxt))
-        frontier = ss.frontier
-    seen = ss.finish(seen).drop("__depth")
-    roots.unpersist()
-    und.unpersist()
+        for depth in range(1, max_d + 1):
+            nxt = (
+                frontier.join(und, frontier["v"] == und["src"])
+                .select("__start", F.col("dst").alias("v"))
+                .distinct()
+                .join(seen, ["__start", "v"], "left_anti")
+                .withColumn("__depth", F.lit(depth))
+            )
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
+                break
+            seen = ss.carry(seen.unionByName(nxt))
+            frontier = ss.frontier
+        seen = ss.finish(seen).drop("__depth")
     return seen
 
 

@@ -22,22 +22,35 @@ lives here instead:
    supersteps, counted from superstep 1 (``lineage.py`` says why that is
    a parquet round trip);
 5. pin the result with ``truncate_plan()`` unless it already is the
-   frame the last truncation returned, then release what is still cached
-   -- or, where nobody reads a result frame (the loop's answer is already
-   on the driver, or the loop raises), only release: ``release()`` writes
-   nothing.
+   frame the last truncation returned.
+
+A ``Supersteps`` is a context manager that owns every cache taken in its
+block: the inputs the loop caches through ``ss.cache(frame)`` (the edge
+or adjacency frames every superstep reads) and the stepped frames.
+Leaving the block releases them all, whether it returns or raises, so a
+loop neither releases anything by hand nor leaks on a failed superstep.
+A loop whose carried state nobody reads (its answer is already on the
+driver) simply leaves the block without ``finish``.  One rule keeps the
+caller's caches the caller's: ``ss.cache`` of a frame whose plan equals
+one already cached persists nothing, and leaving the block leaves that
+entry alone -- the caller's cache serves the loop and stays theirs.
 
 A loop drives it like this::
 
-    ss = Supersteps()
-    for _ in range(max_iterations):
-        stepped = ...                                  # one superstep plan
-        changed = ss.step(stepped, F.max("__chg"))[0]  # 1-3
-        state = ss.carry(stepped.select(...))          # 4
-        if not changed:
-            break
-    state = ss.finish(state)                           # 5
-    # or ss.release(), when ``state`` is not read
+    with Supersteps() as ss:
+        edges = ss.cache(edges)                            # an input
+        for _ in range(max_iterations):
+            stepped = ...                                  # one superstep plan
+            changed = ss.step(stepped, F.max("__chg"))[0]  # 1-3
+            state = ss.carry(stepped.select(...))          # 4
+            if not changed:
+                break
+        state = ss.finish(state)                           # 5
+    # every cache taken in the block is released here
+
+A block with no loop at all is how a function scopes caches it reads only
+before it returns; a cache that the returned lazy plan reads belongs to
+``caching.bounded_cache`` instead.
 
 Persistence goes through ``DataFrame.persist/unpersist/truncate_plan`` so
 wrappers of those methods (the benchmark's tracer) see every call.
@@ -52,7 +65,8 @@ from arcadedb_spark.lineage import CHECKPOINT_EVERY
 
 
 class Supersteps:
-    """Cache and lineage bookkeeping of one superstep loop.
+    """Cache and lineage bookkeeping of one superstep loop, used as a
+    context manager: leaving the block releases every cache it took.
 
     By default the carried state is derived from the latest frame alone
     (ranks from contributions, labels from a flagged merge), so a step
@@ -74,14 +88,31 @@ class Supersteps:
         self.level = level
         self.frontier: DataFrame | None = None  # the newest level
         self._newest = None  # max(level) of the last stepped frame
-        self._cached: list[DataFrame] = []
+        self._inputs: list[DataFrame] = []  # what ``cache`` persisted
+        self._cached: list[DataFrame] = []  # stepped frames
         self._pinned: DataFrame | None = None  # what the last truncation returned
+
+    def __enter__(self) -> "Supersteps":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._release()
+        for f in self._inputs:
+            f.unpersist()
+        self._inputs = []
+
+    def cache(self, frame: DataFrame) -> DataFrame:
+        """Persist the loop input ``frame`` until the block ends and return
+        it.  If an equal plan is already cached, persist nothing: that
+        entry serves the loop and is not released with the block."""
+        _hold(frame, self._inputs)
+        return frame
 
     def step(self, frame: DataFrame, *aggregates) -> Row:
         """Persist ``frame`` and return the row of ``aggregates`` computed
         on it -- the superstep's one Spark action.  A loop without a
         per-superstep scalar skips ``step`` and only calls ``carry``."""
-        frame.persist()
+        _hold(frame, self._cached)  # before the write, which may raise
         # the aggregates are observed metrics of a no-op write, so the job
         # that fills the cache computes them: ``frame.agg(...)`` would add
         # a shuffle stage, which AQE runs as a job of its own
@@ -94,10 +125,12 @@ class Supersteps:
         metrics = seen.get
         row = Row(**{n: metrics[n] for n in names})
         if self.level is None:
-            self.release()
+            for f in self._cached:
+                if f is not frame:
+                    f.unpersist()
+            self._cached = [f for f in self._cached if f is frame]
         else:
             self.frontier, self._newest = frame, metrics["level"]
-        self._cached.append(frame)
         return row
 
     def carry(self, state: DataFrame) -> DataFrame:
@@ -107,7 +140,7 @@ class Supersteps:
         if self.n % CHECKPOINT_EVERY:
             return state
         self._pinned = state.truncate_plan()
-        self.release()
+        self._release()
         if self.level is not None:
             self.frontier = self._pinned.filter(
                 F.col(self.level) == F.lit(self._newest)
@@ -116,15 +149,22 @@ class Supersteps:
 
     def finish(self, result: DataFrame) -> DataFrame:
         """Pin ``result`` unless it is already the last truncated state or
-        no superstep ran, then release every cached frame."""
+        no superstep ran; the caches go when the block ends."""
         if self.n and result is not self._pinned:
             result = result.truncate_plan()
-        self.release()
         return result
 
-    def release(self) -> None:
-        """Release every cached frame without pinning anything: the end of
-        a loop whose carried state nobody reads."""
+    def _release(self) -> None:
+        """Release the cached stepped frames."""
         for f in self._cached:
             f.unpersist()
         self._cached = []
+
+
+def _hold(frame: DataFrame, held: list[DataFrame]) -> None:
+    """Persist ``frame`` and add it to ``held``, unless an equal plan is
+    already cached: that entry is someone else's and stays theirs."""
+    level = frame.storageLevel
+    if not (level.useMemory or level.useDisk):
+        frame.persist()
+        held.append(frame)

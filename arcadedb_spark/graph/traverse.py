@@ -39,14 +39,14 @@ Execution strategy — chosen by observable sizes:
   so Catalyst never sees an exponentially growing iterative plan.
 
 The per-hop job and the distributed loop read the edge frame every hop:
-they cache it for their loop and release it afterwards (a frame the
-caller cached stays cached), so a call leaves the session's
+they take its cache from one ``Supersteps`` scope, which releases it when
+the call returns or raises (an equal plan the caller cached serves the
+loop and stays the caller's), so a call leaves the session's
 CacheManager as it found it.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import partial
 
 from pyspark.sql import DataFrame
@@ -69,21 +69,6 @@ _DRIVER_FRONTIER_MAX = 200_000
 # source and recompile per hop.  Above it, the per-row linear array scan
 # loses to a broadcast semi-join on an Arrow-built frame.
 _ARRAY_FILTER_MAX = 256
-
-
-@contextmanager
-def _cached(edges: DataFrame):
-    """``edges`` cached for a loop that reads it every hop, and released
-    after it -- unless the caller had it cached already."""
-    level = edges.storageLevel
-    if level.useMemory or level.useDisk:
-        yield
-        return
-    edges.cache()
-    try:
-        yield
-    finally:
-        edges.unpersist()
 
 
 def _direction_edges(db, projections) -> DataFrame:
@@ -189,7 +174,9 @@ def traverse(
         )
         if result is not None:
             return result
-    with _cached(edges):
+    # the per-hop job and the distributed loop read the edges every hop
+    with Supersteps() as scope:
+        edges = scope.cache(edges)
         if driver_roots and csr is None:
             result = _traverse_driver(
                 db, root_vids, partial(_expand_driver, edges), max_depth, while_,
@@ -236,23 +223,23 @@ def _traverse_distributed(db, roots, edges, max_depth, while_, params):
     visited = frontier = roots.select("vid").distinct().withColumn(
         "depth", F.lit(0)
     )
-    ss = Supersteps(level="depth")
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier["vid"] == edges["__from"], "inner")
-            .select(F.col("__to").alias("vid"))
-            .distinct()
-        )
-        nxt = nxt.join(visited.select("vid"), "vid", "left_anti").withColumn(
-            "depth", F.lit(depth)
-        )
-        if while_ is not None:
-            nxt = nxt.filter(keep)
-        if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-            break
-        visited = ss.carry(visited.unionByName(nxt))
-        frontier = ss.frontier
-    return ss.finish(visited)
+    with Supersteps(level="depth") as ss:
+        for depth in range(1, max_depth + 1):
+            nxt = (
+                frontier.join(edges, frontier["vid"] == edges["__from"], "inner")
+                .select(F.col("__to").alias("vid"))
+                .distinct()
+            )
+            nxt = nxt.join(visited.select("vid"), "vid", "left_anti").withColumn(
+                "depth", F.lit(depth)
+            )
+            if while_ is not None:
+                nxt = nxt.filter(keep)
+            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
+                break
+            visited = ss.carry(visited.unionByName(nxt))
+            frontier = ss.frontier
+        return ss.finish(visited)
 
 
 def translate_traverse(db, stmt: ast.TraverseStmt, params: dict) -> DataFrame:

@@ -236,6 +236,71 @@ def test_level_loops_all_have_a_plan_size_guard():
     assert not flags, f"accumulating= at: {flags}"
 
 
+def test_supersteps_scope_every_cache_of_the_graph_loops():
+    """A ``Supersteps`` owns every cache taken in its ``with`` block and
+    releases it when the block returns or raises: every ``Supersteps(...)``
+    in the package is a ``with`` item, and the loop modules cache only
+    through one (``ss.cache(frame)``) -- no ``.cache()``, ``.persist()`` or
+    hand-written ``.unpersist()`` that a raising superstep would skip.  A
+    cache the returned plan reads goes through ``caching.bounded_cache``."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark")
+    graph = os.path.join(root, "graph")
+    loop_modules = {"traverse", "match", "gremlin", "procedures_path", "algorithms",
+                    "algorithms_more", "algorithms_extra", "algorithms_extra2",
+                    "algorithms_extra3", "algorithms_extra4"}
+    bare, private = [], []
+
+    def is_supersteps(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "Supersteps"
+        )
+
+    def visit(node, rel, scopes, in_with):
+        for child in ast.iter_child_nodes(node):
+            names = scopes
+            if isinstance(child, ast.With):
+                names = scopes | {
+                    item.optional_vars.id
+                    for item in child.items
+                    if is_supersteps(item.context_expr)
+                    and isinstance(item.optional_vars, ast.Name)
+                }
+            if is_supersteps(child) and child not in in_with:
+                bare.append(f"{rel}:{child.lineno}")
+            if (
+                rel in loop_modules
+                and isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("cache", "persist", "unpersist")
+                and not (
+                    child.func.attr == "cache"
+                    and isinstance(child.func.value, ast.Name)
+                    and child.func.value.id in names
+                )
+            ):
+                private.append(f"{rel}:{child.lineno}")
+            visit(child, rel, names, in_with)
+
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        tree = ast.parse(open(path).read())
+        in_with = {
+            item.context_expr
+            for node in ast.walk(tree)
+            if isinstance(node, ast.With)
+            for item in node.items
+        }
+        rel = os.path.relpath(path, graph)[: -len(".py")]
+        visit(tree, rel, frozenset(), in_with)
+    assert not bare, f"Supersteps(...) outside a with statement at: {bare}"
+    assert not private, f"a cache outside a Supersteps scope at: {private}"
+
+
 def test_algorithms_fire_no_discarded_count_probes():
     """A ``<frame>.count()`` statement whose result is thrown away (the
     ``e.count()  # materialize once`` pattern) costs a Spark job that does

@@ -1,17 +1,21 @@
 """Superstep driver (graph/superstep.py): cache bound, one action per
 superstep, truncation cadence, early stop, no cache left behind by the
-algorithms built on it, and bounded plans in every level-driven loop."""
+algorithms built on it -- on success, on failure, and outside any loop --
+and bounded plans in every level-driven loop."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import cache_entries
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark import caching
 from arcadedb_spark.graph import algorithms as A
 from arcadedb_spark.graph import algorithms_extra as X
 from arcadedb_spark.graph import algorithms_extra2 as X2
 from arcadedb_spark.graph import algorithms_extra3 as X3
+from arcadedb_spark.graph import algorithms_extra4 as X4
 from arcadedb_spark.graph import algorithms_more as M
 from arcadedb_spark.graph import local
 from arcadedb_spark.graph.superstep import CHECKPOINT_EVERY, Supersteps
@@ -44,24 +48,24 @@ def _countdown(spark, start, max_iter, probe=None):
     state = spark.createDataFrame(
         [(v, start(v)) for v in range(8)], "vid long, x long"
     ).coalesce(1)
-    ss = Supersteps()
-    for _ in range(max_iter):
-        if probe:
-            probe("begin", ss)
-        stepped = state.select(
-            "vid",
-            F.greatest(F.col("x") - 1, F.lit(0)).alias("x"),
-            (F.col("x") > 0).alias("__chg"),
-        )
-        changed = ss.step(stepped, F.max("__chg"))[0]
-        if probe:
-            probe("step", ss)
-        state = ss.carry(stepped.select("vid", "x"))
-        if probe:
-            probe("carry", ss)
-        if not changed:
-            break
-    return ss, ss.finish(state)
+    with Supersteps() as ss:
+        for _ in range(max_iter):
+            if probe:
+                probe("begin", ss)
+            stepped = state.select(
+                "vid",
+                F.greatest(F.col("x") - 1, F.lit(0)).alias("x"),
+                (F.col("x") > 0).alias("__chg"),
+            )
+            changed = ss.step(stepped, F.max("__chg"))[0]
+            if probe:
+                probe("step", ss)
+            state = ss.carry(stepped.select("vid", "x"))
+            if probe:
+                probe("carry", ss)
+            if not changed:
+                break
+        return ss, ss.finish(state)
 
 
 def test_one_frame_cached_and_all_released(spark):
@@ -123,6 +127,7 @@ def test_stops_when_converged(spark):
     assert out.agg(F.max("x")).collect()[0][0] == 0
 
 
+# at least one loop of each algorithms module
 _ALGORITHMS = {
     "pagerank": lambda e: A.pagerank(e, iterations=2),
     "connected_components": A.connected_components,
@@ -132,11 +137,21 @@ _ALGORITHMS = {
     "k_shortest_paths": lambda e: X.k_shortest_paths(e, 0, 3, k=2, max_depth=3),
     "all_simple_paths": lambda e: X2.all_simple_paths(e, 0, 3, max_depth=3),
     "bellman_ford_path": lambda e: X3.bellman_ford_path(e, 0, 3, max_iterations=4),
+    "hashgnn": lambda e: X4.hashgnn(e, dim=4, iterations=2),
+    "hits": lambda e: M.hits(e, iterations=2),
 }
 
 
+@pytest.fixture
+def loop_path(monkeypatch):
+    """PageRank and TRAVERSE run their superstep loops, not the driver's
+    CSR kernel."""
+    monkeypatch.setattr(local, "_memo", [])
+    monkeypatch.setattr(local, "_DRIVER_EDGES_MAX", 0)
+
+
 @pytest.mark.parametrize("name", list(_ALGORITHMS))
-def test_algorithms_release_their_caches(spark, name):
+def test_algorithms_release_their_caches(spark, loop_path, name):
     e = spark.createDataFrame(
         [(0, 1, 1.0), (1, 2, 1.0), (0, 2, 3.0), (2, 3, 1.0), (1, 3, 4.0), (3, 0, 2.0)],
         "src long, dst long, weight double",
@@ -144,6 +159,101 @@ def test_algorithms_release_their_caches(spark, name):
     base = _persisted(spark)
     assert _ALGORITHMS[name](e).collect()
     assert not _persisted(spark) - base
+
+
+def _var_length_over_cap(spark, db, monkeypatch):
+    spark.conf.set("arcadedb.match.maxVarLengthHops", "3")
+    try:
+        return _cypher(db, "MATCH (a:N {i:0})-[:NEXT*]->(b) RETURN b.i AS i").collect()
+    finally:
+        spark.conf.unset("arcadedb.match.maxVarLengthHops")
+
+
+def _repeat_over_cap(spark, db, monkeypatch):
+    from arcadedb_spark.graph import gremlin
+
+    monkeypatch.setattr(gremlin, "_REPEAT_CAP", 3)
+    return db.query(
+        f"g.V('N').has('i', 0).repeat(out('NEXT')).until(has('i', {LEVELS}))"
+        ".values('i')",
+        language="gremlin",
+    ).collect()
+
+
+# loops that raise part-way: (run, the error it raises)
+RAISING_LOOPS = {
+    # DIVIDE_BY_ZERO in the first superstep: 0's out-weights sum to 0
+    "pagerank": (
+        lambda spark, db, mp: A.pagerank(
+            spark.createDataFrame(
+                [(0, 1, 0.0), (1, 2, 1.0), (2, 0, 1.0)], "src long, dst long, weight double"
+            ),
+            iterations=2,
+            weighted=True,
+        ).collect(),
+        "DIVIDE_BY_ZERO",
+    ),
+    # the forward colouring of a 6-cycle needs 5 supersteps
+    "strongly_connected_components": (
+        lambda spark, db, mp: A.strongly_connected_components(_cycle(spark, 6), max_inner=2),
+        "max_inner=2",
+    ),
+    "match._expand": (_var_length_over_cap, "exceeded 3 hops"),
+    "gremlin.GraphTraversal.repeat": (_repeat_over_cap, "exceeded 3 iterations"),
+}
+
+
+@pytest.mark.parametrize("name", list(RAISING_LOOPS))
+def test_raising_loops_release_their_caches(spark, chain_db, loop_path, monkeypatch, name):
+    run, error = RAISING_LOOPS[name]
+    before = cache_entries(spark)
+    with pytest.raises(Exception, match=error):
+        run(spark, chain_db, monkeypatch)
+    assert cache_entries(spark) == before
+
+
+def _edge_set(spark, shift):
+    """A triangle 0-1-2 with a source 5 before it and a tail 3-4 after it;
+    ``shift`` renumbers it, so two sets share no plan."""
+    rows = [(5, 0), (0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (1, 3)]
+    return spark.createDataFrame(
+        [(s + shift, d + shift, 1.0) for s, d in rows], "src long, dst long, weight double"
+    )
+
+
+def _halves(e):
+    """Communities of ``e``: its vertices split by parity."""
+    v = A._vertices_of(e)
+    return v.select("vid", (F.col("vid") % 2).alias("community"))
+
+
+# algorithms outside any loop that cache: a cache read only before the
+# call returns goes with a ``Supersteps`` scope, one the returned plan
+# reads with ``caching.bounded_cache``
+NON_LOOP_CACHES = {
+    "triangle_count": A.triangle_count,
+    "harmonic_centrality": M.harmonic_centrality,
+    "graph_summary": M.graph_summary,
+    "rich_club_coefficient": lambda e: M.rich_club_coefficient(e, 1),
+    "modularity_score": lambda e: X2.modularity_score(e, _halves(e)),
+    "knn_similarity": lambda e: X3.knn_similarity(e, k=2),
+    "hierarchical_clustering": lambda e: X4.hierarchical_clustering(e, num_clusters=2),
+    "topological_sort": M.topological_sort,
+    "conductance": lambda e: M.conductance(e, _halves(e)),
+}
+
+
+@pytest.mark.parametrize("name", list(NON_LOOP_CACHES))
+def test_non_loop_algorithms_stay_within_the_cache_bound(spark, monkeypatch, name):
+    """Two calls on distinct graphs, with the operator-cache bound at one
+    entry, leave at most one entry more than they found."""
+    monkeypatch.setattr(caching, "_MAX_DEFAULT", 1)
+    before = cache_entries(spark)
+    outs = [NON_LOOP_CACHES[name](_edge_set(spark, shift)) for shift in (0, 100)]
+    assert cache_entries(spark) <= before + 1
+    for out in outs:  # an evicted cache only costs a recompute
+        if isinstance(out, DataFrame):
+            assert out.collect()
 
 
 # 0..5 with a duplicate edge (0→1 twice) and a dangling vertex (5)
@@ -406,6 +516,43 @@ def test_local_moving_plans_stay_bounded(spark, stepped_leaves, name):
     assert len(growth) == 1, leaves
     later = leaves[CHECKPOINT_EVERY:]
     assert all(b <= a for a, b in zip(leaves, later)), leaves
+
+
+@pytest.fixture
+def carried_leaves(monkeypatch):
+    """Analyzed-plan leaf counts of the state each ``carry`` receives, one
+    list per driver."""
+    series = []
+    carry = Supersteps.carry
+
+    def recording(self, state):
+        if not hasattr(self, "_carried"):
+            self._carried = []
+            series.append(self._carried)
+        self._carried.append(state._jdf.queryExecution().analyzed().collectLeaves().size())
+        return carry(self, state)
+
+    monkeypatch.setattr(Supersteps, "carry", recording)
+    return series
+
+
+@pytest.mark.parametrize("name", ["connected_components", "label_propagation"])
+def test_self_row_loops_read_their_state_once(spark, carried_leaves, name):
+    """Connected components and label propagation read the carried state
+    once per superstep, through the self rows of the adjacency: within a
+    truncation window the state's plan grows by the same number of leaves
+    each superstep (it doubled while a superstep read the state twice)."""
+    chain = _chain(spark, LEVELS)
+    if name == "connected_components":
+        out = A.connected_components(chain)  # LEVELS + 1 supersteps
+    else:
+        out = A.label_propagation(chain, iterations=LEVELS)
+    assert len(out.collect()) == LEVELS + 1
+    leaves = carried_leaves[0]
+    assert len(leaves) >= LEVELS, leaves
+    windows = [leaves[i : i + CHECKPOINT_EVERY] for i in range(0, len(leaves), CHECKPOINT_EVERY)]
+    growth = {b - a for w in windows for a, b in zip(w, w[1:])}
+    assert len(growth) == 1, leaves
 
 
 # Long BFS loops finish: before the frontier was re-read from the

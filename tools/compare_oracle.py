@@ -2,8 +2,9 @@
 
 Runs every ``queries()`` entry and its ``oracle_sql()`` twin, compares
 row count, sorted column names, and the order-insensitive multiset of
-row values, and prints each query's wall seconds and Spark job count
-(one job group per query) on its line.  Usage:
+row values, and prints each query's wall seconds, Spark job count (one
+job group per query) and CacheManager entry delta on its line -- a query
+that leaves a cached plan behind shows ``+N cached``.  Usage:
 python tools/compare_oracle.py [sf_dir] [name ...]
 """
 
@@ -36,6 +37,14 @@ def rowset(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def cache_entries(spark) -> int:
+    """Entries in the session's CacheManager (cached query plans)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return int(field.get(cm).size())
+
+
 def main() -> int:
     import duckdb
 
@@ -64,6 +73,7 @@ def main() -> int:
             continue
         group = f"oracle-{name}"
         sc.setJobGroup(group, group)
+        cached = cache_entries(spark)
         t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
@@ -74,7 +84,8 @@ def main() -> int:
             error = f"{type(e).__name__}: {str(e)[:200]}"
         cost = (
             f"{time.perf_counter() - t0:.2f}s "
-            f"{len(sc.statusTracker().getJobIdsForGroup(group))} jobs"
+            f"{len(sc.statusTracker().getJobIdsForGroup(group))} jobs "
+            f"{cache_entries(spark) - cached:+d} cached"
         )
         sc._jsc.clearJobGroup()
         if error is not None:
