@@ -161,36 +161,13 @@ def shortest_paths(
     (GraphFrames.shortestPaths semantics; AlgoBFS/SQLFunctionShortestPath
     parity for hop counts).  Returns (vid, landmark, distance).
     """
-    spark = edges.sparkSession
-    dist = local_df(
-        spark, [(v, v, 0) for v in landmarks], "vid long, landmark long, distance int"
+    seeds = local_df(
+        edges.sparkSession, [(v, v) for v in landmarks], "landmark long, vid long"
     )
-    frontier = dist
-    with Supersteps(level="distance") as ss:
-        # traverse edges BACKWARD so distance is vid→landmark
-        back = ss.cache(
-            edges.select(F.col("dst").alias("from"), F.col("src").alias("to")).distinct()
-        )
-        for depth in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(back, frontier["vid"] == back["from"], "inner")
-                .select(F.col("to").alias("vid"), "landmark")
-                .distinct()
-                .withColumn("distance", F.lit(depth))
-            )
-            seen = dist.select(
-                F.col("vid").alias("__v2"), F.col("landmark").alias("__l2")
-            )
-            nxt = nxt.join(
-                seen,
-                (nxt["vid"] == seen["__v2"]) & (nxt["landmark"] == seen["__l2"]),
-                "left_anti",
-            )
-            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-                break
-            dist = ss.carry(dist.unionByName(nxt))
-            frontier = ss.frontier
-        return ss.finish(dist)
+    # traverse edges BACKWARD so distance is vid→landmark
+    back = edges.select(F.col("src").alias("v"), F.col("dst").alias("n")).distinct()
+    dist, _ = bfs(back, seeds, keys=("landmark",), max_depth=max_depth)
+    return dist.select("vid", "landmark", F.col("depth").alias("distance"))
 
 
 def dijkstra_sssp(
@@ -375,6 +352,52 @@ def _with_self_rows(adj: DataFrame, verts: DataFrame) -> DataFrame:
     return adj.withColumn("__self", F.lit(False)).unionByName(
         verts.select(F.col("vid").alias("v"), F.col("vid").alias("n"), F.lit(True).alias("__self"))
     )
+
+
+def bfs(
+    adj: DataFrame,
+    seeds: DataFrame,
+    keys: tuple[str, ...] = (),
+    max_depth: int | None = None,
+    keep=None,
+) -> tuple[DataFrame, int]:
+    """Multi-source BFS along ``adj`` (v, n), a hop from n to v, from the
+    ``seeds`` (*keys, vid) of each key.  Returns the pinned frame of one
+    (*keys, vid, depth) row per vertex reached, depth being the hops from
+    the nearest seed of its key, and the deepest level reached.
+
+    A superstep joins the carried rows once to the self rows of ``adj``
+    (``_with_self_rows``): a vertex keeps its own row or takes a hop from
+    a row at depth d − 1, and min(depth) per (keys, vertex) is its new
+    row, so the state never holds a union of levels.  ``keep``, a
+    predicate on (vid, depth), filters the hop rows only (TRAVERSE's
+    WHILE).  The count of rows at depth d is the stop test: the BFS runs
+    to its fixed point unless ``max_depth`` levels stop it first."""
+    state = seeds.select(*keys, "vid").distinct().withColumn("depth", F.lit(0))
+    # a seed without edges keeps its row through its self row
+    verts = adj.select(F.col("v").alias("vid")).unionByName(seeds.select("vid")).distinct()
+    own = F.col("__self")
+    reached = 0
+    with Supersteps() as ss:
+        nbr = ss.cache(_with_self_rows(adj, verts))
+        for depth in itertools.count(1) if max_depth is None else range(1, max_depth + 1):
+            hops = nbr.join(
+                state, (nbr["n"] == state["vid"]) & (own | (state["depth"] == depth - 1))
+            ).select(
+                *keys,
+                F.col("v").alias("vid"),
+                F.when(own, F.col("depth")).otherwise(F.lit(depth)).alias("depth"),
+                own,
+            )
+            if keep is not None:
+                hops = hops.filter(own | keep)
+            stepped = hops.groupBy(*keys, "vid").agg(F.min("depth").alias("depth"))
+            grew = ss.step(stepped, F.count(F.when(F.col("depth") == depth, 1)))[0]
+            state = ss.carry(stepped)
+            if not grew:
+                break
+            reached = depth
+        return ss.finish(state), reached
 
 
 def jaccard_similarity(edges: DataFrame) -> DataFrame:
@@ -586,33 +609,18 @@ def strongly_connected_components(
                     color = fwd.carry(stepped.select("vid", "color"))
                     if not changed:
                         break
-                # the backward phase probes `color` every level
+                # the backward phase reads `color` three times
                 color = fwd.finish(color)
                 # 2) backward reachability from each color root, within the color
-                scc = frontier = color.filter(F.col("vid") == F.col("color")).select(
-                    "vid", "color", F.lit(0).alias("level")
+                back = (
+                    e.join(color.select(F.col("vid").alias("src"), "color"), "src")
+                    .join(color.select(F.col("vid").alias("dst"), F.col("color").alias("c2")), "dst")
+                    .filter(F.col("color") == F.col("c2"))
+                    .select(F.col("src").alias("v"), F.col("dst").alias("n"))
                 )
-                back = e.select(F.col("dst").alias("from"), F.col("src").alias("to"))
-                with Supersteps(level="level") as bwd:
-                    for level in itertools.count(1):
-                        _cap("max_inner", max_inner, level - 1)
-                        nxt = (
-                            frontier.join(back, frontier["vid"] == back["from"], "inner")
-                            .select(F.col("to").alias("vid"), "color")
-                            .distinct()
-                        )
-                        # stay within the same color and don't revisit
-                        nxt = nxt.join(
-                            color.withColumnRenamed("color", "c2"), "vid"
-                        ).filter(F.col("color") == F.col("c2")).select("vid", "color")
-                        nxt = nxt.join(scc.select("vid"), "vid", "left_anti").withColumn(
-                            "level", F.lit(level)
-                        )
-                        if bwd.step(nxt, F.count(F.lit(1)))[0] == 0:
-                            break
-                        scc = bwd.carry(scc.unionByName(nxt))
-                        frontier = bwd.frontier
-                    scc = bwd.finish(scc)
+                roots = color.filter(F.col("vid") == F.col("color"))
+                scc, depth = bfs(back, roots, keys=("color",), max_depth=max_inner)
+                _cap("max_inner", max_inner, depth)
             # accumulate lazily: per-round results are truncated frames already,
             # so the union stays a cheap scan-union (the old per-round
             # truncate_plan of `assigned` rewrote the full accumulated set

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arcadedb_spark.caching import bounded_cache
-from arcadedb_spark.graph.algorithms import _undirected_adj, connected_components
+from arcadedb_spark.graph.algorithms import _undirected_adj, bfs, connected_components
 from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
@@ -133,38 +133,28 @@ def bellman_ford_path(
 # ---------------------------------------------------------------------------
 
 
-def _bfs_forest(edges: DataFrame, max_depth: int = 64):
+def _bfs_forest(edges: DataFrame):
     """BFS spanning forest from each component's min-vid root.
 
-    Returns (tree, levels, depth): tree = (vid, parent, level) for
-    non-root vertices, levels = (vid, level) for all, depth = max level
-    reached.  O(diameter) supersteps, frontier-parallel."""
-    with Supersteps(level="level") as ss:
-        adj = ss.cache(_undirected_adj(edges))
-        comp = connected_components(edges)
-        visited = frontier = comp.filter(F.col("vid") == F.col("component")).select(
-            "vid", F.lit(0).alias("level"), F.lit(None).cast("long").alias("parent")
-        )
-        depth = 0
-        for lvl in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(adj, frontier["vid"] == adj["v"], "inner")
-                .groupBy(F.col("n").alias("vid"))
-                .agg(F.min("v").alias("parent"))
-                .join(visited.select("vid"), "vid", "left_anti")
-                .withColumn("level", F.lit(lvl))
-                .select("vid", "level", "parent")
-            )
-            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-                break
-            depth = lvl
-            visited = ss.carry(visited.unionByName(nxt))
-            frontier = ss.frontier
-        visited = ss.finish(visited)
-    return visited.filter(F.col("parent").isNotNull()), visited, depth
+    Returns (tree, levels, depth): tree = (vid, depth, parent) for
+    non-root vertices, the parent being the least neighbour one level
+    up; levels = (vid, depth) for all; depth = the deepest level.
+    O(diameter) supersteps, frontier-parallel (``bfs``)."""
+    adj = _undirected_adj(edges)
+    roots = connected_components(edges).filter(F.col("vid") == F.col("component"))
+    levels, depth = bfs(adj, roots)
+    up = levels.select(F.col("vid").alias("n"), (F.col("depth") + 1).alias("depth"))
+    tree = (
+        levels.join(adj.withColumnRenamed("v", "vid"), "vid")
+        .join(up, ["n", "depth"])
+        .groupBy("vid", "depth")
+        .agg(F.min("n").alias("parent"))
+    )
+    # bridges reads the tree four times
+    return tree.truncate_plan(), levels, depth
 
 
-def bridges(edges: DataFrame, max_depth: int = 64) -> DataFrame:
+def bridges(edges: DataFrame) -> DataFrame:
     """algo.bridges() — YIELD (source, target), fully distributed.
 
     Replaces the reference's sequential Tarjan DFS (AlgoBridges.java)
@@ -179,7 +169,7 @@ def bridges(edges: DataFrame, max_depth: int = 64) -> DataFrame:
     Cost: one WCC + one BFS + `depth` bounded-width XOR sweeps — every
     step an equi-join + groupBy, no driver-side state."""
     spark = edges.sparkSession
-    tree, levels, depth = _bfs_forest(edges, max_depth=max_depth)
+    tree, levels, depth = _bfs_forest(edges)
     inst = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
@@ -452,9 +442,7 @@ def biconnected_components(
 # ---------------------------------------------------------------------------
 
 
-def bipartite_matching(
-    edges: DataFrame, max_edges: int = 2_000_000, max_depth: int = 64
-) -> DataFrame:
+def bipartite_matching(edges: DataFrame, max_edges: int = 2_000_000) -> DataFrame:
     """algo.bipartiteMatching() — YIELD (node1, node2, matchingSize).
 
     The 2-coloring runs distributed (BFS parity, as bipartite_check);
@@ -466,7 +454,7 @@ def bipartite_matching(
 
     spark = edges.sparkSession
     empty = local_df(spark, [], "node1 long, node2 long, matchingSize int")
-    if not bipartite_check(edges, max_depth=max_depth):
+    if not bipartite_check(edges):
         return empty
     pairs = _capped_edge_list(edges, max_edges, "algo.bipartiteMatching")
     # rebuild the two sides by BFS parity on the driver copy (cheap: the
@@ -495,7 +483,7 @@ def bipartite_matching(
     match_l: dict = {}
     match_r: dict = {}
 
-    def bfs():
+    def bfs_layers():
         dist = {}
         queue = []
         for u in left:
@@ -536,7 +524,7 @@ def bipartite_matching(
     sys.setrecursionlimit(max(old_limit, len(color) + 1000))
     try:
         while True:
-            dist, found = bfs()
+            dist, found = bfs_layers()
             if not found:
                 break
             for u in left:

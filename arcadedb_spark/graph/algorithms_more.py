@@ -21,6 +21,7 @@ from arcadedb_spark.graph.algorithms import (
     _undirected_adj,
     _undirected_pairs,
     _vertices_of,
+    bfs,
     connected_components,
     default_landmarks,
     shortest_paths,
@@ -342,31 +343,16 @@ def conductance(edges: DataFrame, communities: DataFrame) -> DataFrame:
     )
 
 
-def bipartite_check(edges: DataFrame, max_depth: int = 20) -> bool:
+def bipartite_check(edges: DataFrame) -> bool:
     """2-colorability: BFS-parity color from each component's min-vid
     root, then look for a same-color edge (AlgoBipartiteCheck.java).
 
     Roots stay distributed (vid == component id from
     ``connected_components``) — no driver-side component list, so it
     scales to graphs with arbitrarily many components."""
-    with Supersteps(level="depth") as ss:
-        adj = ss.cache(_undirected_adj(edges))
-        comp = connected_components(edges)
-        seen = frontier = comp.filter(F.col("vid") == F.col("component")).select(
-            "vid", F.lit(0).alias("depth")
-        )
-        for depth in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(adj, frontier["vid"] == adj["v"], "inner")
-                .select(F.col("n").alias("vid"), F.lit(depth).alias("depth"))
-                .distinct()
-                .join(seen, "vid", "left_anti")
-            )
-            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-                break
-            seen = ss.carry(seen.unionByName(nxt))
-            frontier = ss.frontier
-        color = ss.finish(seen).select("vid", (F.col("depth") % 2).alias("color"))
+    roots = connected_components(edges).filter(F.col("vid") == F.col("component"))
+    levels, _ = bfs(_undirected_adj(edges), roots)
+    color = levels.select("vid", (F.col("depth") % 2).alias("color"))
     e = edges.select("src", "dst")
     bad = (
         e.join(color.withColumnRenamed("vid", "src").withColumnRenamed("color", "cs"), "src")

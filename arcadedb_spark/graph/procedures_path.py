@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arcadedb_spark.graph.algorithms import bfs
 from arcadedb_spark.graph.procedures import PROCEDURES, procedure
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
@@ -260,25 +261,10 @@ def _reachable(db, starts, rel_types, labels, max_d) -> DataFrame:
             und = und.join(
                 allowed.withColumnRenamed("vid", "dst"), "dst", "left_semi"
             )
-    with Supersteps(level="__depth") as ss:
-        und = ss.cache(und.distinct())
-        frontier = seen = ss.cache(
-            starts.select("__start", F.col("__start").alias("v"), F.lit(0).alias("__depth"))
-        )
-        for depth in range(1, max_d + 1):
-            nxt = (
-                frontier.join(und, frontier["v"] == und["src"])
-                .select("__start", F.col("dst").alias("v"))
-                .distinct()
-                .join(seen, ["__start", "v"], "left_anti")
-                .withColumn("__depth", F.lit(depth))
-            )
-            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-                break
-            seen = ss.carry(seen.unionByName(nxt))
-            frontier = ss.frontier
-        seen = ss.finish(seen).drop("__depth")
-    return seen
+    adj = und.select(F.col("dst").alias("v"), F.col("src").alias("n")).distinct()
+    seeds = starts.select("__start", F.col("__start").alias("vid"))
+    seen, _ = bfs(adj, seeds, keys=("__start",), max_depth=max_d)
+    return seen.select("__start", F.col("vid").alias("v"))
 
 
 def _node_struct_frame(db, vids: DataFrame, vcol: str = "v") -> DataFrame:

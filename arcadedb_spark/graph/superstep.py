@@ -10,6 +10,17 @@ TRAVERSE on an edge frame of at most 200k rows run no loop here: they
 iterate the driver's CSR arrays (``graph/local.py``); above that bound
 their loops are unchanged.
 
+Two kinds of frontier loop run here.  A BFS -- shortest paths, the
+backward pass of SCC, the spanning forest behind bridges, bipartite
+colouring, TRAVERSE's distributed mode, ``path.subgraphNodes`` -- calls
+``algorithms.bfs``: a plain ``Supersteps`` that carries one row per
+reached vertex and reads it once per superstep through the self rows of
+the adjacency, so its plan grows by a constant per superstep.  The loops
+that carry paths -- ``all_simple_paths``, ``path.expand``, var-length
+MATCH, Gremlin ``repeat().until()``, betweenness' backward pass -- keep a
+union of levels tagged in a ``level`` column: a level reads the one
+before it, never the whole union.
+
 A superstep is one DataFrame plan.  What each loop used to repeat by hand
 lives here instead:
 
@@ -72,15 +83,14 @@ class Supersteps:
     (ranks from contributions, labels from a flagged merge), so a step
     releases the frame before it.
 
-    With ``level="<col>"`` the state is a union of levels (BFS levels,
-    path hops) tagged in that column, each stepped frame is the next level,
-    and frames stay cached until ``carry`` truncates the union.  The next
-    step expands ``frontier``, the newest level.  A truncation cuts the
-    union's lineage, not the stepped frame's: each level anti-joins the
-    union that holds the level before, so a frontier kept as that frame
-    would double its plan per level.  After a truncation ``frontier`` is
-    the truncated union's rows at the newest level, a value ``step``
-    observes in its own job.
+    With ``level="<col>"`` the state is a union of levels (path hops)
+    tagged in that column, each stepped frame is the next level, and
+    frames stay cached until ``carry`` truncates the union.  The next step
+    expands ``frontier``, the newest level.  A truncation cuts the union's
+    lineage, not the stepped frame's: a frontier kept as that frame would
+    carry the plan of every level before it.  After a truncation
+    ``frontier`` is the truncated union's rows at the newest level, a
+    value ``step`` observes in its own job.
     """
 
     def __init__(self, level: str | None = None) -> None:

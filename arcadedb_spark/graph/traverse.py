@@ -31,12 +31,14 @@ Execution strategy — chosen by observable sizes:
   expression compiler on a one-partition frame.
 - **Distributed mode**: the moment the frontier outgrows
   ``_DRIVER_FRONTIER_MAX`` (or the roots already do), state spills to
-  DataFrames and the classic frontier-join loop takes over on the shared
-  superstep driver (``graph/superstep.py``): each hop is one persisted
-  frame whose ``count`` is its one action (it both decides termination
-  and fully populates the cache), distinct+anti against visited, and the
-  visited set is truncated on the driver's ``CHECKPOINT_EVERY`` cadence
-  so Catalyst never sees an exponentially growing iterative plan.
+  DataFrames and the engine's one BFS (``algorithms.bfs``) takes over on
+  the shared superstep driver (``graph/superstep.py``): it carries one
+  (vid, depth) row per reached vertex, each hop is one persisted frame
+  that keeps a vertex's first depth, the count of its new rows is its one
+  action (it both decides termination and fully populates the cache), a
+  WHILE predicate filters the hop rows, and the state is truncated on the
+  driver's ``CHECKPOINT_EVERY`` cadence so Catalyst never sees a growing
+  iterative plan.
 
 The per-hop job and the distributed loop read the edge frame every hop:
 they take its cache from one ``Supersteps`` scope, which releases it when
@@ -53,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arcadedb_spark.graph import local
+from arcadedb_spark.graph.algorithms import bfs
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
 from arcadedb_spark.sql import ast
@@ -215,31 +218,14 @@ def _traverse_driver(db, root_vids, expand, max_depth, while_, params):
 
 
 def _traverse_distributed(db, roots, edges, max_depth, while_, params):
+    keep = None
     if while_ is not None:
         # WHILE with $depth bound (grammar SQLParser.g4:223-230)
         ctx = Ctx(db=db, params=params, columns=("vid", "depth"))
         ctx.vars["depth"] = VarBinding("col", col=F.col("depth"))
         keep = ExprCompiler(ctx).compile(while_)
-    visited = frontier = roots.select("vid").distinct().withColumn(
-        "depth", F.lit(0)
-    )
-    with Supersteps(level="depth") as ss:
-        for depth in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(edges, frontier["vid"] == edges["__from"], "inner")
-                .select(F.col("__to").alias("vid"))
-                .distinct()
-            )
-            nxt = nxt.join(visited.select("vid"), "vid", "left_anti").withColumn(
-                "depth", F.lit(depth)
-            )
-            if while_ is not None:
-                nxt = nxt.filter(keep)
-            if ss.step(nxt, F.count(F.lit(1)))[0] == 0:
-                break
-            visited = ss.carry(visited.unionByName(nxt))
-            frontier = ss.frontier
-        return ss.finish(visited)
+    adj = edges.select(F.col("__to").alias("v"), F.col("__from").alias("n"))
+    return bfs(adj, roots, max_depth=max_depth, keep=keep)[0]
 
 
 def translate_traverse(db, stmt: ast.TraverseStmt, params: dict) -> DataFrame:

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 @pytest.fixture()
 def cdb(spark):
-    """a→b→c→d→e→f→a over LINK, plus the chord a→d."""
+    """a→b→c→d→e→f→a over LINK, plus the chord a→d, and z without edges."""
     from arcadedb_spark.database import Database
 
     db = Database(spark)
@@ -25,7 +25,7 @@ def cdb(spark):
         "CREATE (a:P {name:'a'})-[:LINK]->(:P {name:'b'})-[:LINK]->"
         "(:P {name:'c'})-[:LINK]->(d:P {name:'d'})-[:LINK]->"
         "(:P {name:'e'})-[:LINK]->(:P {name:'f'})-[:LINK]->(a), "
-        "(a)-[:LINK]->(d)",
+        "(a)-[:LINK]->(d), (:P {name:'z'})",
         language="cypher",
     ).collect()
     # graph-level frames a first read may cache are not the loop's
@@ -59,11 +59,11 @@ def test_traverse_distributed_releases_its_frames(
         while_ = parse(f"TRAVERSE out('LINK') FROM P WHILE {while_}").while_
     g = cdb.graph()
     names = g.vertices("P").select("vid", "name")
-    roots = names.filter(F.col("name").isin("a", "b", "c")).select("vid")
+    roots = names.filter(F.col("name").isin("a", "b", "c", "z")).select("vid")
     edges = g.edges("LINK").select(
         F.col("src").alias("__from"), F.col("dst").alias("__to")
     )
-    # three roots > 2: the walk starts in the distributed loop
+    # four roots > 2: the walk starts in the distributed loop
     monkeypatch.setattr(tv, "_DRIVER_FRONTIER_MAX", 2)
     rows = _bounded(
         cdb.spark,
@@ -72,7 +72,7 @@ def test_traverse_distributed_releases_its_frames(
         .collect(),
     )
     assert {(r["name"], r["depth"]) for r in rows} == {
-        ("a", 0), ("b", 0), ("c", 0), *reached,
+        ("a", 0), ("b", 0), ("c", 0), ("z", 0), *reached,
     }
 
 

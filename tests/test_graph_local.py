@@ -130,7 +130,7 @@ def test_traverse_csr_equals_per_hop(ring, monkeypatch, depth, direction):
 
 def test_traverse_while_runs_on_the_csr(ring, monkeypatch, spark):
     """A WHILE traversal walks the CSR too: no job reads the edges per
-    hop, and it reaches what the per-hop path reaches."""
+    hop, and it reaches what the per-hop and distributed paths reach."""
     from arcadedb_spark.sql.parser import parse
 
     g = ring.graph()
@@ -153,6 +153,8 @@ def test_traverse_while_runs_on_the_csr(ring, monkeypatch, spark):
     per_hop, jobs = spark_jobs(spark, walk)
     assert csr == per_hop and jobs > 0
     assert sorted(d for _, d in csr) == [0, 1, 2]
+    monkeypatch.setattr(tv, "_DRIVER_FRONTIER_MAX", 0)
+    assert walk() == csr  # the distributed BFS
 
 
 def test_edge_memo_keeps_its_bound(spark):

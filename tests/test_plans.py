@@ -236,6 +236,40 @@ def test_level_loops_all_have_a_plan_size_guard():
     assert not flags, f"accumulating= at: {flags}"
 
 
+def test_bfs_callers_all_have_a_plan_size_guard():
+    """Every caller of ``algorithms.bfs`` in the package has a case in the
+    BFS plan-size guard (``tests/test_superstep.py::BFS_LOOPS``, keyed by
+    module and enclosing function)."""
+    import ast
+    import glob
+    import os
+
+    from test_superstep import BFS_LOOPS
+
+    root = os.path.join(os.path.dirname(__file__), "..", "arcadedb_spark")
+    sites = set()
+
+    def visit(node, scope, module):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                inner = [*scope, child.name]
+            if isinstance(child, ast.Call):
+                func = child.func
+                name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+                if name == "bfs":
+                    sites.add(".".join([module, *scope]))
+            visit(child, inner, module)
+
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        module = os.path.basename(path)[: -len(".py")]
+        visit(ast.parse(open(path).read()), [], module)
+    assert sites == set(BFS_LOOPS), (
+        f"unguarded: {sorted(sites - set(BFS_LOOPS))}, "
+        f"stale: {sorted(set(BFS_LOOPS) - sites)}"
+    )
+
+
 def test_supersteps_scope_every_cache_of_the_graph_loops():
     """A ``Supersteps`` owns every cache taken in its ``with`` block and
     releases it when the block returns or raises: every ``Supersteps(...)``

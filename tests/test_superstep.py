@@ -1,7 +1,7 @@
 """Superstep driver (graph/superstep.py): cache bound, one action per
 superstep, truncation cadence, early stop, no cache left behind by the
 algorithms built on it -- on success, on failure, and outside any loop --
-and bounded plans in every level-driven loop."""
+and bounded plans in every level-driven loop and every BFS."""
 
 from __future__ import annotations
 
@@ -400,11 +400,33 @@ def _cypher(db, text):
 # graph/ (tests/test_plans.py checks that none is missing); each runs at
 # least LEVELS supersteps on a chain or cycle
 LEVEL_LOOPS = {
-    "algorithms.shortest_paths": lambda spark, db: A.shortest_paths(
-        _chain(spark, LEVELS), [LEVELS], max_depth=LEVELS
-    ),
     "algorithms.betweenness_centrality": lambda spark, db: A.betweenness_centrality(
         _chain(spark, LEVELS + 1), sources=[0], max_depth=LEVELS + 1
+    ),
+    "algorithms_extra2.all_simple_paths": lambda spark, db: X2.all_simple_paths(
+        _chain(spark, LEVELS), 0, LEVELS, max_depth=LEVELS
+    ),
+    "procedures_path._paths_bfs": lambda spark, db: _cypher(
+        db,
+        "MATCH (a:N {i:0}) CALL path.expand(a, 'NEXT', null, 1, "
+        f"{LEVELS}) YIELD path RETURN length(path) AS l",
+    ),
+    "match._expand": lambda spark, db: _cypher(
+        db, f"MATCH (a:N {{i:0}})-[:NEXT*1..{LEVELS + 1}]->(b) RETURN b.i AS i"
+    ),
+    "gremlin.GraphTraversal.repeat": lambda spark, db: db.query(
+        f"g.V('N').has('i', 0).repeat(out('NEXT')).until(has('i', {LEVELS}))"
+        ".values('i')",
+        language="gremlin",
+    ),
+}
+
+# one case per function that calls ``algorithms.bfs`` (tests/test_plans.py
+# checks that none is missing); each runs at least LEVELS BFS supersteps,
+# and the BFS is the last superstep driver each case starts
+BFS_LOOPS = {
+    "algorithms.shortest_paths": lambda spark, db: A.shortest_paths(
+        _chain(spark, LEVELS), [LEVELS], max_depth=LEVELS
     ),
     "algorithms.strongly_connected_components": lambda spark, db: (
         A.strongly_connected_components(_cycle(spark, LEVELS + 1))
@@ -415,28 +437,12 @@ LEVEL_LOOPS = {
     "algorithms_more.bipartite_check": lambda spark, db: M.bipartite_check(
         _chain(spark, LEVELS)
     ),
-    "algorithms_extra2.all_simple_paths": lambda spark, db: X2.all_simple_paths(
-        _chain(spark, LEVELS), 0, LEVELS, max_depth=LEVELS
-    ),
-    "procedures_path._paths_bfs": lambda spark, db: _cypher(
-        db,
-        "MATCH (a:N {i:0}) CALL path.expand(a, 'NEXT', null, 1, "
-        f"{LEVELS}) YIELD path RETURN length(path) AS l",
-    ),
     "procedures_path._reachable": lambda spark, db: _cypher(
         db,
         "MATCH (a:N {i:0}) CALL path.subgraphNodes(a, {relationshipFilter: "
         f"'NEXT', maxLevel: {LEVELS}}}) YIELD node RETURN node.i AS i",
     ),
-    "match._expand": lambda spark, db: _cypher(
-        db, f"MATCH (a:N {{i:0}})-[:NEXT*1..{LEVELS + 1}]->(b) RETURN b.i AS i"
-    ),
     "traverse._traverse_distributed": lambda spark, db: _traverse_chain(db),
-    "gremlin.GraphTraversal.repeat": lambda spark, db: db.query(
-        f"g.V('N').has('i', 0).repeat(out('NEXT')).until(has('i', {LEVELS}))"
-        ".values('i')",
-        language="gremlin",
-    ),
 }
 
 
@@ -487,6 +493,25 @@ def test_level_loops_keep_their_plans_bounded(spark, chain_db, plan_leaves, name
     for leaves in plan_leaves:
         later = leaves[CHECKPOINT_EVERY:]
         assert all(b <= a for a, b in zip(leaves, later)), leaves
+
+
+@pytest.mark.parametrize("name", list(BFS_LOOPS))
+def test_bfs_plans_grow_by_a_constant(spark, chain_db, stepped_leaves, name):
+    """A BFS superstep reads the per-vertex state once, through the self
+    rows of the adjacency: within a truncation window the stepped frame's
+    plan grows by the same number of leaves each superstep (it grew ~2.6x
+    per level while each level anti-joined the union of the levels before
+    it), and the driver's cadence cuts it back."""
+    out = BFS_LOOPS[name](spark, chain_db)
+    if isinstance(out, DataFrame):
+        assert out.collect()
+    leaves = stepped_leaves[-1]
+    assert len(leaves) >= LEVELS, leaves
+    windows = [leaves[i : i + CHECKPOINT_EVERY] for i in range(0, len(leaves), CHECKPOINT_EVERY)]
+    growth = {b - a for w in windows for a, b in zip(w, w[1:])}
+    assert len(growth) == 1, leaves
+    later = leaves[CHECKPOINT_EVERY:]
+    assert all(b <= a for a, b in zip(leaves, later)), leaves
 
 
 def _swapping_edge(spark):
@@ -557,13 +582,16 @@ def test_self_row_loops_read_their_state_once(spark, carried_leaves, name):
 
 # Long BFS loops finish: before the frontier was re-read from the
 # truncated state, each of these doubled its plan per level and ran out
-# of driver heap well short of 32 levels.
+# of driver heap well short of 32 levels.  And they run to their fixed
+# point: bridges' spanning forest used to stop at 64 levels and
+# bipartite_check's colouring at 20, and the vertices beyond got no tree
+# edge or colour while an answer still came back.
 
 
 @pytest.mark.slow
 def test_bridges_on_a_long_chain(spark):
-    got = {(r["source"], r["target"]) for r in X3.bridges(_chain(spark, 32)).collect()}
-    assert got == {(v, v + 1) for v in range(32)}
+    got = {(r["source"], r["target"]) for r in X3.bridges(_chain(spark, 70)).collect()}
+    assert got == {(v, v + 1) for v in range(70)}
 
 
 def test_scc_raises_on_a_reached_cap(spark):
@@ -586,11 +614,14 @@ def test_scc_on_a_long_cycle_and_chain(spark):
 def test_bipartite_check_on_long_cycles(spark):
     assert M.bipartite_check(_cycle(spark, 32)) is True
     assert M.bipartite_check(_cycle(spark, 31)) is False
+    # the vertices of a 43-cycle lie up to 21 hops from its root
+    assert M.bipartite_check(_cycle(spark, 43)) is False
 
 
 @pytest.mark.slow
 def test_shortest_paths_on_a_long_chain(spark):
-    d = A.shortest_paths(_chain(spark, 32), [32], max_depth=40)
-    assert {(r["vid"], r["distance"]) for r in d.collect()} == {
-        (v, 32 - v) for v in range(33)
+    # landmark 99 has no edges: it keeps its own row
+    d = A.shortest_paths(_chain(spark, 32), [32, 99], max_depth=40)
+    assert {(r["vid"], r["landmark"], r["distance"]) for r in d.collect()} == {
+        *((v, 32, 32 - v) for v in range(33)), (99, 99, 0)
     }
