@@ -170,44 +170,14 @@ def shortest_paths(
     return dist.select("vid", "landmark", F.col("depth").alias("distance"))
 
 
-def dijkstra_sssp(
-    edges: DataFrame, source: int, max_iterations: int = 30
-) -> DataFrame:
-    """Single-source weighted shortest paths by Bellman-Ford-style
-    relaxation (SQLFunctionDijkstra/BellmanFord parity — same distances;
-    the label-correcting DataFrame form is the scalable expression).
-    Returns (vid, distance).
+def dijkstra_sssp(edges: DataFrame, source: int) -> DataFrame:
+    """Single-source weighted shortest paths by label-correcting
+    relaxation (``relax``; SQLFunctionDijkstra/BellmanFord parity — same
+    distances, and negative edges are allowed).  Returns (vid, distance);
+    raises ``ValueError`` on a negative cycle reachable from ``source``.
     """
-    e = edges.select(
-        "src", "dst", F.coalesce(F.col("weight"), F.lit(1.0)).alias("w")
-    ) if "weight" in edges.columns else edges.select(
-        "src", "dst", F.lit(1.0).alias("w")
-    )
-    spark = edges.sparkSession
-    dist = local_df(spark, [(source, 0.0)], "vid long, distance double")
-    with Supersteps() as ss:
-        e = ss.cache(e)
-        for _ in range(max_iterations):
-            relaxed = (
-                e.join(dist, e["src"] == dist["vid"], "inner")
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.min(F.col("distance") + F.col("w")).alias("__rd"))
-            )
-            # full-outer merge carries the improvement flag, so convergence
-            # needs no second join
-            stepped = dist.join(relaxed, "vid", "full").select(
-                "vid",
-                F.least(
-                    F.coalesce(F.col("distance"), F.col("__rd")),
-                    F.coalesce(F.col("__rd"), F.col("distance")),
-                ).alias("distance"),
-                (F.col("distance").isNull() | (F.col("__rd") < F.col("distance"))).alias("__chg"),
-            )
-            improved = ss.step(stepped, F.max("__chg"))[0]
-            dist = ss.carry(stepped.select("vid", "distance"))
-            if not improved:
-                break
-        return ss.finish(dist)
+    seeds = local_df(edges.sparkSession, [(source,)], "vid long")
+    return relax(_weighted_adj(edges), seeds).select("vid", "distance")
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -345,12 +315,14 @@ def _undirected_adj(edges: DataFrame) -> DataFrame:
 
 
 def _with_self_rows(adj: DataFrame, verts: DataFrame) -> DataFrame:
-    """``adj`` (v, n) plus one (v, v) row per vertex of ``verts`` (vid),
-    flagged ``__self``.  Joined to a per-vertex state on ``n`` and grouped
-    by ``v``, the self row brings a vertex's own state into the group of
-    its neighbours' rows, so a superstep reads the state once."""
+    """``adj`` (v, n, ...) plus one (v, v) row per vertex of ``verts``
+    (vid), flagged ``__self``; adj's other columns (a weight) are null in
+    the self rows.  Joined to a per-vertex state on ``n`` and grouped by
+    ``v``, the self row brings a vertex's own state into the group of its
+    neighbours' rows, so a superstep reads the state once."""
     return adj.withColumn("__self", F.lit(False)).unionByName(
-        verts.select(F.col("vid").alias("v"), F.col("vid").alias("n"), F.lit(True).alias("__self"))
+        verts.select(F.col("vid").alias("v"), F.col("vid").alias("n"), F.lit(True).alias("__self")),
+        allowMissingColumns=True,
     )
 
 
@@ -398,6 +370,110 @@ def bfs(
                 break
             reached = depth
         return ss.finish(state), reached
+
+
+def _weighted(edges: DataFrame) -> DataFrame:
+    """(src, dst, w): the ``weight`` column, 1.0 where it is null or absent."""
+    w = F.coalesce(F.col("weight"), F.lit(1.0)) if "weight" in edges.columns else F.lit(1.0)
+    return edges.select("src", "dst", w.alias("w"))
+
+
+def _weighted_adj(edges: DataFrame) -> DataFrame:
+    """(v, n, w): a hop from n = src to v = dst of weight w."""
+    return _weighted(edges).select(F.col("dst").alias("v"), F.col("src").alias("n"), "w")
+
+
+def relax(
+    wadj: DataFrame,
+    seeds: DataFrame,
+    tie: str | None = None,
+    keys: tuple[str, ...] = (),
+    target: int | None = None,
+    h: DataFrame | None = None,
+) -> DataFrame:
+    """Label-correcting shortest paths along ``wadj`` (v, n, w), a hop
+    from n to v of weight w, from the ``seeds`` (*keys, vid) of each key.
+    Returns the pinned frame of one (*keys, vid, distance[, tie]) row per
+    vertex reached, distance being the least from a seed of its key.
+
+    ``tie`` labels the route: ``"path"`` the vertices from the seed (a hop
+    drops a vertex already on it, so paths are simple) or ``"parent"`` the
+    vertex before.  A superstep joins the carried labels once to the self
+    rows of ``wadj`` (``_with_self_rows``): a vertex keeps its own label,
+    and a label that the last superstep improved (``__chg``) sends a hop.
+    A hop replaces a label only with a strictly smaller distance, and the
+    least (distance, tie) of the hops wins, so a parent's label settled
+    before its child's and parents never close a cycle (on zero-weight
+    edges, a label that took a tied hop could).
+
+    With ``target``, hops whose distance plus the heuristic ``h`` (vid, h;
+    0 where absent) is not below the target's distance are dropped (A*);
+    that distance is observed in the step's one job.
+
+    The loop runs to its fixed point.  An improvement in superstep k is a
+    k-hop walk; without a negative cycle it is a simple path through k + 1
+    reached vertices, so a superstep that improves a label while the
+    state holds at most k rows proves a negative cycle and raises
+    ``ValueError``.  Path labels are simple, so a ``"path"`` tie never
+    raises and stops within |V| supersteps."""
+    own = F.col("__self")
+    # the tie's label at a seed, and a hop's from the label it extends
+    seed_tie, hop_tie = {
+        None: (None, None),
+        "path": (F.array("vid"), F.concat("path", F.array("v"))),
+        "parent": (F.lit(None).cast("long"), F.col("n")),
+    }[tie]
+    ties = [tie] if tie else []
+    state = seeds.select(
+        *keys,
+        "vid",
+        F.lit(0.0).alias("distance"),
+        F.lit(True).alias("__chg"),
+        *[seed_tie.alias(t) for t in ties],
+    )
+    # a seed without edges keeps its row through its self row
+    verts = wadj.select(F.col("v").alias("vid")).unionByName(seeds.select("vid")).distinct()
+    nbr = _with_self_rows(wadj, verts)
+    if h is not None:
+        nbr = nbr.join(h.select(F.col("vid").alias("v"), "h"), "v", "left")
+    bound = None  # the target's distance
+    with Supersteps() as ss:
+        nbr = ss.cache(nbr)
+        for k in itertools.count(1):
+            hops = nbr.join(state, (nbr["n"] == state["vid"]) & (own | state["__chg"]))
+            if tie == "path":
+                hops = hops.filter(own | ~F.array_contains("path", F.col("v")))
+            if bound is not None:
+                g = F.col("distance") + F.col("w")
+                if h is not None:
+                    g = g + F.coalesce("h", F.lit(0.0))
+                hops = hops.filter(own | (g < F.lit(bound)))
+            stepped = (
+                hops.select(
+                    *keys,
+                    F.col("v").alias("vid"),
+                    F.struct(
+                        F.when(own, F.col("distance")).otherwise(F.col("distance") + F.col("w")).alias("distance"),
+                        (~own).alias("__chg"),  # own rows win ties
+                        *[F.when(own, F.col(t)).otherwise(hop_tie).alias(t) for t in ties],
+                    ).alias("__b"),
+                )
+                .groupBy(*keys, "vid")
+                .agg(F.min("__b").alias("__b"))
+                .select(*keys, "vid", "__b.*")
+            )
+            observed = [F.max("__chg"), F.count(F.lit(1))]
+            if target is not None:
+                observed.append(F.min(F.when(F.col("vid") == target, F.col("distance"))))
+            changed, rows, *seen = ss.step(stepped, *observed)
+            if changed and rows <= k:
+                raise ValueError("negative cycle reachable from the source")
+            state = ss.carry(stepped)
+            if seen:
+                bound = seen[0]
+            if not changed:
+                break
+        return ss.finish(state).drop("__chg")
 
 
 def jaccard_similarity(edges: DataFrame) -> DataFrame:

@@ -18,19 +18,14 @@ from arcadedb_spark.graph.algorithms import (
     _local_moving,
     _undirected_adj,
     _undirected_pairs,
+    _weighted,
+    _weighted_adj,
     _with_self_rows,
     connected_components,
+    relax,
 )
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
-
-
-def _weighted(edges: DataFrame) -> DataFrame:
-    if "weight" in edges.columns:
-        return edges.select(
-            "src", "dst", F.coalesce(F.col("weight"), F.lit(1.0)).alias("w")
-        )
-    return edges.select("src", "dst", F.lit(1.0).alias("w"))
 
 
 # ---------------------------------------------------------------------------
@@ -103,88 +98,26 @@ def astar(
     source: int,
     target: int,
     heuristic: DataFrame | None = None,
-    max_iterations: int = 30,
 ) -> DataFrame:
     """A* shortest path (AlgoAStar.java — yields (path, weight); the
     reference's heuristic is geographic great-circle distance; here any
     admissible per-vertex heuristic DataFrame (vid, h) is accepted,
     defaulting to h=0 ≡ Dijkstra).
 
-    Distributed form: label-correcting frontier relaxation where the
-    heuristic prunes expansions with g + h ≥ best-known target distance —
+    Distributed form: ``relax`` with path labels, where the heuristic
+    prunes hops with g + h ≥ best-known target distance —
     the frontier-parallel equivalent of A*'s priority queue (a strict
     best-first queue is inherently sequential; pruning preserves the
-    optimality argument for admissible h).  Returns one row
-    (path array<long>, weight double), empty if unreachable.
+    optimality argument for admissible h).  That distance is observed in
+    each superstep's one job, and the loop runs until no label improves.
+    Returns one row (path array<long>, weight double), empty if
+    unreachable.
     """
-    spark = edges.sparkSession
-    # label frame; __chg marks the labels the last superstep improved,
-    # which are the frontier the next one expands
-    best = local_df(
-        spark,
-        [(source, 0.0, [source], True)],
-        "vid long, distance double, path array<long>, __chg boolean",
-    )
-    bound = 0.0 if source == target else None  # best-known target distance
+    seeds = local_df(edges.sparkSession, [(source,)], "vid long")
     h = heuristic.select("vid", "h") if heuristic is not None else None
-    with Supersteps() as ss:
-        e = ss.cache(_weighted(edges))
-        for _ in range(max_iterations):
-            frontier = best.filter("__chg")
-            exp = (
-                frontier.join(e, frontier["vid"] == e["src"], "inner")
-                .filter(~F.array_contains("path", F.col("dst")))
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("distance") + F.col("w")).alias("distance"),
-                    F.concat("path", F.array(F.col("dst"))).alias("path"),
-                )
-            )
-            if bound is not None:
-                if h is not None:
-                    exp = (
-                        exp.join(h, "vid", "left")
-                        .filter(
-                            F.col("distance") + F.coalesce(F.col("h"), F.lit(0.0))
-                            < F.lit(bound)
-                        )
-                        .drop("h")
-                    )
-                else:
-                    exp = exp.filter(F.col("distance") < F.lit(bound))
-            stepped = _relax(best, exp, "path")
-            # one action: the improvement flag and the next pruning bound
-            changed, bound = ss.step(
-                stepped,
-                F.max("__chg"),
-                F.min(F.when(F.col("vid") == target, F.col("distance"))),
-            )
-            best = ss.carry(stepped)
-            if not changed:
-                break
-        best = ss.finish(best)
+    best = relax(_weighted_adj(edges), seeds, tie="path", target=target, h=h)
     return best.filter(F.col("vid") == target).select(
         "path", F.col("distance").alias("weight")
-    )
-
-
-def _relax(best: DataFrame, exp: DataFrame, tie: str) -> DataFrame:
-    """Merge candidate labels ``exp`` (vid, distance, ``tie``) into the
-    label frame ``best``: per vertex the least (distance, ``tie``) wins,
-    and ``__chg`` flags the vertices whose distance strictly improved (or
-    that had no label), i.e. the next frontier."""
-    merged = best.select("vid", "distance", tie, F.col("distance").alias("__old")).unionByName(
-        exp.select("vid", "distance", tie, F.lit(None).cast("double").alias("__old"))
-    )
-    return (
-        merged.groupBy("vid")
-        .agg(F.min(F.struct("distance", tie)).alias("__b"), F.min("__old").alias("__old"))
-        .select(
-            "vid",
-            "__b.distance",
-            f"__b.{tie}",
-            (F.col("__old").isNull() | (F.col("__b.distance") < F.col("__old"))).alias("__chg"),
-        )
     )
 
 
@@ -218,23 +151,26 @@ def k_shortest_paths(
         [(source, 0.0, [source], True)],
         "vid long, weight double, path array<long>, __chg boolean",
     )
+    wadj = _weighted_adj(edges)
+    verts = wadj.select(F.col("v").alias("vid")).unionByName(state.select("vid")).distinct()
+    own = F.col("__self")
+    w = Window.partitionBy("vid").orderBy(F.asc("weight"), F.asc("path"))
     with Supersteps() as ss:
-        e = ss.cache(_weighted(edges))
+        # a superstep reads the labels once: own rows carry every kept
+        # label, hop rows extend the frontier's
+        nbr = ss.cache(_with_self_rows(wadj, verts))
         for _ in range(max_depth):
-            frontier = state.filter("__chg")
-            exp = (
-                frontier.join(e, frontier["vid"] == e["src"], "inner")
-                .filter(~F.array_contains("path", F.col("dst")))
+            merged = (
+                nbr.join(state, (nbr["n"] == state["vid"]) & (own | state["__chg"]))
+                .filter(own | ~F.array_contains("path", F.col("v")))
                 .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("weight") + F.col("w")).alias("weight"),
-                    F.concat("path", F.array(F.col("dst"))).alias("path"),
+                    F.col("v").alias("vid"),
+                    F.when(own, F.col("weight")).otherwise(F.col("weight") + F.col("w")).alias("weight"),
+                    F.when(own, F.col("path")).otherwise(F.concat("path", F.array("v"))).alias("path"),
+                    (~own).alias("__chg"),
                 )
+                .dropDuplicates(["vid", "path"])
             )
-            merged = state.withColumn("__chg", F.lit(False)).unionByName(
-                exp.dropDuplicates(["vid", "path"]).withColumn("__chg", F.lit(True))
-            )
-            w = Window.partitionBy("vid").orderBy(F.asc("weight"), F.asc("path"))
             kept = (
                 merged.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= k)

@@ -24,8 +24,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arcadedb_spark.caching import bounded_cache
-from arcadedb_spark.graph.algorithms import _undirected_adj, bfs, connected_components
-from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
+from arcadedb_spark.graph.algorithms import (
+    _undirected_adj,
+    _weighted,
+    _weighted_adj,
+    bfs,
+    connected_components,
+    relax,
+)
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
 
@@ -47,72 +53,46 @@ def _capped_edge_list(edges: DataFrame, max_edges: int, what: str):
 # ---------------------------------------------------------------------------
 
 
-def dijkstra_path(
-    edges: DataFrame, source: int, target: int, max_iterations: int = 30
-) -> DataFrame:
+def dijkstra_path(edges: DataFrame, source: int, target: int) -> DataFrame:
     """algo.dijkstra(start, end) — YIELD (path, weight).
 
     Dijkstra with non-negative weights is A* with h=0; reuse the
     frontier-parallel label-correcting kernel (AlgoDijkstra.java)."""
     from arcadedb_spark.graph.algorithms_extra import astar
 
-    return astar(edges, source, target, heuristic=None,
-                 max_iterations=max_iterations)
+    return astar(edges, source, target, heuristic=None)
 
 
-def bellman_ford_path(
-    edges: DataFrame, source: int, target: int, max_iterations: int = 30
-) -> DataFrame:
+def bellman_ford_path(edges: DataFrame, source: int, target: int) -> DataFrame:
     """algo.bellmanford(start, end) — YIELD (path, weight, negativeCycle).
 
     Label-correcting relaxation that admits negative edge weights
-    (AlgoBellmanFord.java).  Shortest walks are simple when no negative
-    cycle exists, so the frontier drops re-visits; a final unrestricted
+    (AlgoBellmanFord.java): ``relax`` with path labels.  Shortest walks
+    are simple when no negative cycle exists, so a hop drops re-visits
+    and the loop stops within |V| supersteps; a final unrestricted
     relaxation round that still improves any distance flags a negative
     cycle (the classic V-th-round test), in which case path/weight are
     null."""
-    with Supersteps() as ss:
-        e = ss.cache(_weighted(edges))
-        spark = edges.sparkSession
-        best = local_df(
-            spark,
-            [(source, 0.0, [source], True)],
-            "vid long, distance double, path array<long>, __chg boolean",
+    spark = edges.sparkSession
+    seeds = local_df(spark, [(source,)], "vid long")
+    best = relax(_weighted_adj(edges), seeds, tie="path")
+    e = _weighted(edges)
+    # V-th-round improvement test (unrestricted by the simple-path filter)
+    improved = (
+        best.join(e, best["vid"] == e["src"], "inner")
+        .join(
+            best.select(F.col("vid").alias("dvid"),
+                        F.col("distance").alias("ddist")),
+            F.col("dst") == F.col("dvid"),
+            "left",
         )
-        for _ in range(max_iterations):
-            frontier = best.filter("__chg")
-            exp = (
-                frontier.join(e, frontier["vid"] == e["src"], "inner")
-                .filter(~F.array_contains("path", F.col("dst")))
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("distance") + F.col("w")).alias("distance"),
-                    F.concat("path", F.array(F.col("dst"))).alias("path"),
-                )
-            )
-            stepped = _relax(best, exp, "path")
-            changed = ss.step(stepped, F.max("__chg"))[0]
-            best = ss.carry(stepped)
-            if not changed:
-                break
-        # `best` feeds the V-th-round test and the hit below
-        best = ss.finish(best)
-        # V-th-round improvement test (unrestricted by the simple-path filter)
-        improved = (
-            best.join(e, best["vid"] == e["src"], "inner")
-            .join(
-                best.select(F.col("vid").alias("dvid"),
-                            F.col("distance").alias("ddist")),
-                F.col("dst") == F.col("dvid"),
-                "left",
-            )
-            .filter(
-                F.col("ddist").isNull()
-                | (F.col("distance") + F.col("w") < F.col("ddist") - F.lit(1e-12))
-            )
-            .limit(1)
-            .count()
+        .filter(
+            F.col("ddist").isNull()
+            | (F.col("distance") + F.col("w") < F.col("ddist") - F.lit(1e-12))
         )
+        .limit(1)
+        .count()
+    )
     neg = improved > 0
     hit = best.filter(F.col("vid") == target)
     if neg:

@@ -16,8 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
 from arcadedb_spark.caching import bounded_cache
-from arcadedb_spark.graph.algorithms import _undirected_adj, _with_self_rows
-from arcadedb_spark.graph.algorithms_extra import _relax, _weighted
+from arcadedb_spark.graph.algorithms import _undirected_adj, _weighted, _with_self_rows, relax
 from arcadedb_spark.graph.superstep import Supersteps
 from arcadedb_spark.session import local_df
 
@@ -240,53 +239,21 @@ def hierarchical_clustering(
 # ---------------------------------------------------------------------------
 
 
-def _sssp_parents(
-    edges: DataFrame, source: int, max_iterations: int = 30
-) -> DataFrame:
-    """Label-correcting SSSP keeping the predecessor: (vid, distance,
-    parent).  Undirected (Steiner trees are an undirected notion)."""
-    e = _weighted(edges)
-    with Supersteps() as ss:
-        und = ss.cache(
-            e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
-        )
-        spark = edges.sparkSession
-        best = local_df(
-            spark,
-            [(source, 0.0, None, True)],
-            "vid long, distance double, parent long, __chg boolean",
-        )
-        for _ in range(max_iterations):
-            frontier = best.filter("__chg")
-            relaxed = (
-                frontier.join(und, frontier["vid"] == und["src"], "inner")
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("distance") + F.col("w")).alias("distance"),
-                    F.col("src").alias("parent"),
-                )
-            )
-            stepped = _relax(best, relaxed, "parent")
-            changed = ss.step(stepped, F.max("__chg"))[0]
-            best = ss.carry(stepped)
-            if not changed:
-                break
-        best = ss.finish(best)  # detach before the caches go
-    return best.drop("__chg")
-
-
-def steiner_tree(
-    edges: DataFrame, terminals: list[int], max_iterations: int = 30
-) -> DataFrame:
+def steiner_tree(edges: DataFrame, terminals: list[int]) -> DataFrame:
     """algo.steinerTree(terminals) — YIELD (source, target, weight,
     totalWeight): KMB 2(1−1/t)-approximation (AlgoSteinerTree.java).
 
-    SSSP from each terminal (t is user-supplied and small — the SSSPs
-    themselves are distributed); the t×t metric closure and its MST are
-    driver-side (t² scalars); path expansion walks predecessor chains,
-    one walker row per MST edge collecting the segments it passes; leaf
-    pruning flags edges with a degree-1 non-terminal end.  Both are
-    ``Supersteps`` loops whose stop test is an observed aggregate."""
+    One ``relax`` over the undirected edges, keyed by terminal, gives
+    every terminal's distances and predecessors (t is user-supplied and
+    small; the SSSP is distributed and raises ``ValueError`` on a
+    negative edge, which is a negative cycle when undirected); the t×t
+    metric closure and its MST are driver-side (t² scalars); path
+    expansion walks predecessor chains, one walker row per MST edge
+    collecting the segments it passes; leaf pruning flags edges with a
+    degree-1 non-terminal end.  Both are ``Supersteps`` loops whose stop
+    test is an observed aggregate, and both run to their natural stop:
+    predecessor chains end at their terminal, and each pruning round
+    removes an edge."""
     spark = edges.sparkSession
     empty = local_df(
         spark, [], "source long, target long, weight double, totalWeight double"
@@ -294,17 +261,13 @@ def steiner_tree(
     terminals = sorted(set(int(t) for t in terminals))
     if len(terminals) < 2:
         return empty
-    # 1. SSSP per terminal, tagged
-    maps = []
-    for t in terminals:
-        maps.append(
-            _sssp_parents(edges, t, max_iterations=max_iterations)
-            .withColumn("terminal", F.lit(t))
-        )
-    allp = maps[0]
-    for m in maps[1:]:
-        allp = allp.unionByName(m)
-    allp = allp.truncate_plan()
+    # 1. SSSP from every terminal (Steiner trees are an undirected notion)
+    e = _weighted(edges)
+    und = e.select(F.col("dst").alias("v"), F.col("src").alias("n"), "w").unionByName(
+        e.select(F.col("src").alias("v"), F.col("dst").alias("n"), "w")
+    )
+    seeds = local_df(spark, [(t, t) for t in terminals], "terminal long, vid long")
+    allp = relax(und, seeds, tie="parent", keys=("terminal",))
     # 2. metric closure on terminals (t² rows → driver)
     closure = {
         (r["terminal"], r["vid"]): r["distance"]
@@ -341,7 +304,7 @@ def steiner_tree(
     )
     pmap = allp.select("terminal", F.col("vid").alias("cur"), "parent")
     with Supersteps() as ss:
-        for _ in range(max_iterations * len(terminals)):
+        while True:
             stepped = walkers.join(pmap, ["terminal", "cur"], "left").select(
                 "terminal",
                 F.col("parent").alias("cur"),
@@ -363,7 +326,7 @@ def steiner_tree(
             if not walking:
                 break
         walkers = ss.finish(walkers)
-    ew = _weighted(edges).select(
+    ew = e.select(
         F.least("src", "dst").alias("lo"),
         F.greatest("src", "dst").alias("hi"),
         "w",
@@ -376,7 +339,7 @@ def steiner_tree(
     # 5. iteratively prune non-terminal leaves: an edge goes when one of
     # its ends has degree 1 and is no terminal
     with Supersteps() as ss:
-        for _ in range(max_iterations):
+        while True:
             ends = sub.select("lo", "hi", "w", F.explode(F.array("lo", "hi")).alias("vid"))
             stepped = (
                 ends.select(

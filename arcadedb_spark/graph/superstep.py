@@ -10,16 +10,21 @@ TRAVERSE on an edge frame of at most 200k rows run no loop here: they
 iterate the driver's CSR arrays (``graph/local.py``); above that bound
 their loops are unchanged.
 
-Two kinds of frontier loop run here.  A BFS -- shortest paths, the
+Three kinds of frontier loop run here.  A BFS -- shortest paths, the
 backward pass of SCC, the spanning forest behind bridges, bipartite
 colouring, TRAVERSE's distributed mode, ``path.subgraphNodes`` -- calls
 ``algorithms.bfs``: a plain ``Supersteps`` that carries one row per
 reached vertex and reads it once per superstep through the self rows of
-the adjacency, so its plan grows by a constant per superstep.  The loops
-that carry paths -- ``all_simple_paths``, ``path.expand``, var-length
-MATCH, Gremlin ``repeat().until()``, betweenness' backward pass -- keep a
-union of levels tagged in a ``level`` column: a level reads the one
-before it, never the whole union.
+the adjacency, so its plan grows by a constant per superstep.  A
+weighted shortest-path search -- ``dijkstra_sssp``, A* (and
+``dijkstra_path``), Bellman-Ford, Steiner's per-terminal distances --
+calls ``algorithms.relax``, the same shape over a weighted adjacency: one
+label per reached vertex, hops only from the labels the last superstep
+improved, and it runs to its fixed point or raises on a negative cycle.
+The loops that carry paths -- ``all_simple_paths``, ``path.expand``,
+var-length MATCH, Gremlin ``repeat().until()``, betweenness' backward
+pass -- keep a union of levels tagged in a ``level`` column: a level
+reads the one before it, never the whole union.
 
 A superstep is one DataFrame plan.  What each loop used to repeat by hand
 lives here instead:

@@ -92,6 +92,19 @@ def test_steiner_tree_star(spark):
     assert rows[0]["totalWeight"] == 3.0
 
 
+def test_steiner_tree_zero_weight_tie(spark):
+    # 1 and 2 both lie at distance 1 from terminal 5 and share a 0-weight
+    # edge: a tie must not make each the other's predecessor, or the path
+    # from terminal 9 (behind 1) back to 5 never arrives
+    e = spark.createDataFrame(
+        [(5, 1, 1.0), (5, 2, 1.0), (1, 2, 0.0), (1, 9, 1.0)],
+        "src long, dst long, weight double",
+    )
+    rows = steiner_tree(e, [5, 9]).collect()
+    assert {(r["source"], r["target"]) for r in rows} == {(1, 5), (1, 9)}
+    assert {r["totalWeight"] for r in rows} == {2.0}
+
+
 def test_steiner_tree_unreachable(spark):
     e = spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, weight double")
     assert steiner_tree(e, [0, 5]).count() == 0

@@ -1,9 +1,12 @@
 """Superstep driver (graph/superstep.py): cache bound, one action per
 superstep, truncation cadence, early stop, no cache left behind by the
 algorithms built on it -- on success, on failure, and outside any loop --
-and bounded plans in every level-driven loop and every BFS."""
+and bounded plans in every level-driven loop, every BFS and every
+shortest-path relaxation."""
 
 from __future__ import annotations
+
+import sys
 
 import pytest
 from conftest import cache_entries
@@ -136,7 +139,7 @@ _ALGORITHMS = {
     "astar": lambda e: X.astar(e, 0, 3),
     "k_shortest_paths": lambda e: X.k_shortest_paths(e, 0, 3, k=2, max_depth=3),
     "all_simple_paths": lambda e: X2.all_simple_paths(e, 0, 3, max_depth=3),
-    "bellman_ford_path": lambda e: X3.bellman_ford_path(e, 0, 3, max_iterations=4),
+    "bellman_ford_path": lambda e: X3.bellman_ford_path(e, 0, 3),
     "hashgnn": lambda e: X4.hashgnn(e, dim=4, iterations=2),
     "hits": lambda e: M.hits(e, iterations=2),
 }
@@ -197,6 +200,27 @@ RAISING_LOOPS = {
     "strongly_connected_components": (
         lambda spark, db, mp: A.strongly_connected_components(_cycle(spark, 6), max_inner=2),
         "max_inner=2",
+    ),
+    # the 3-cycle 0 → 1 → 2 → 0 weighs -1: superstep 3 improves a label
+    # while 3 rows are reached
+    "dijkstra_sssp": (
+        lambda spark, db, mp: A.dijkstra_sssp(
+            spark.createDataFrame(
+                [(0, 1, 1.0), (1, 2, -3.0), (2, 0, 1.0)], "src long, dst long, weight double"
+            ),
+            0,
+        ),
+        "negative cycle",
+    ),
+    # an undirected negative edge is a negative cycle
+    "steiner_tree": (
+        lambda spark, db, mp: X4.steiner_tree(
+            spark.createDataFrame(
+                [(0, 1, 1.0), (1, 2, -1.0)], "src long, dst long, weight double"
+            ),
+            [0, 2],
+        ),
+        "negative cycle",
     ),
     "match._expand": (_var_length_over_cap, "exceeded 3 hops"),
     "gremlin.GraphTraversal.repeat": (_repeat_over_cap, "exceeded 3 iterations"),
@@ -421,10 +445,11 @@ LEVEL_LOOPS = {
     ),
 }
 
-# one case per function that calls ``algorithms.bfs`` (tests/test_plans.py
-# checks that none is missing); each runs at least LEVELS BFS supersteps,
-# and the BFS is the last superstep driver each case starts
-BFS_LOOPS = {
+# one case per function that calls ``algorithms.bfs`` or ``algorithms.relax``,
+# plus k_shortest_paths' own top-k loop (tests/test_plans.py checks that
+# none is missing); each runs at least LEVELS supersteps of its BFS or
+# relaxation
+FRONTIER_LOOPS = {
     "algorithms.shortest_paths": lambda spark, db: A.shortest_paths(
         _chain(spark, LEVELS), [LEVELS], max_depth=LEVELS
     ),
@@ -443,12 +468,33 @@ BFS_LOOPS = {
         f"'NEXT', maxLevel: {LEVELS}}}) YIELD node RETURN node.i AS i",
     ),
     "traverse._traverse_distributed": lambda spark, db: _traverse_chain(db),
+    "algorithms.dijkstra_sssp": lambda spark, db: A.dijkstra_sssp(_chain(spark, LEVELS), 0),
+    "algorithms_extra.astar": lambda spark, db: X.astar(_chain(spark, LEVELS), 0, LEVELS),
+    "algorithms_extra3.bellman_ford_path": lambda spark, db: X3.bellman_ford_path(
+        _chain(spark, LEVELS), 0, LEVELS
+    ),
+    "algorithms_extra4.steiner_tree": lambda spark, db: X4.steiner_tree(
+        _chain(spark, LEVELS), [0, LEVELS]
+    ),
+    "algorithms_extra.k_shortest_paths": lambda spark, db: X.k_shortest_paths(
+        _chain(spark, LEVELS), 0, LEVELS, k=2, max_depth=LEVELS + 1
+    ),
 }
+
+# the functions whose ``Supersteps`` the FRONTIER_LOOPS guard measures
+FRONTIER_STEPPERS = {"bfs", "relax", "k_shortest_paths"}
+
+
+class _Leaves(list):
+    """Leaf counts of one driver's stepped frames; ``loop`` names the
+    function that steps it."""
+
+    loop = ""
 
 
 def _record_leaves(monkeypatch, wanted):
     """Analyzed-plan leaf counts of the frames each ``wanted`` driver
-    steps, one list per driver.  A step whose plan has more leaves than
+    steps, one ``_Leaves`` per driver.  A step whose plan has more leaves than
     the one CHECKPOINT_EVERY supersteps before it fails at once, so a plan
     that doubles per superstep stops its loop instead of exhausting the
     heap."""
@@ -458,7 +504,8 @@ def _record_leaves(monkeypatch, wanted):
     def recording(self, frame, *aggregates):
         if wanted(self):
             if not hasattr(self, "_leaves"):
-                self._leaves = []
+                self._leaves = _Leaves()
+                self._leaves.loop = sys._getframe(1).f_code.co_name
                 series.append(self._leaves)
             leaves = self._leaves
             leaves.append(
@@ -495,17 +542,21 @@ def test_level_loops_keep_their_plans_bounded(spark, chain_db, plan_leaves, name
         assert all(b <= a for a, b in zip(leaves, later)), leaves
 
 
-@pytest.mark.parametrize("name", list(BFS_LOOPS))
+@pytest.mark.parametrize("name", list(FRONTIER_LOOPS))
 def test_bfs_plans_grow_by_a_constant(spark, chain_db, stepped_leaves, name):
-    """A BFS superstep reads the per-vertex state once, through the self
-    rows of the adjacency: within a truncation window the stepped frame's
-    plan grows by the same number of leaves each superstep (it grew ~2.6x
-    per level while each level anti-joined the union of the levels before
-    it), and the driver's cadence cuts it back."""
-    out = BFS_LOOPS[name](spark, chain_db)
+    """A BFS or relaxation superstep reads the per-vertex state once,
+    through the self rows of the adjacency: within a truncation window the
+    stepped frame's plan grows by the same number of leaves each superstep
+    (a BFS grew ~2.6x per level while each level anti-joined the union of
+    the levels before it; a relaxation doubled while it read its labels
+    for the frontier and again for the merge), and the driver's cadence
+    cuts it back."""
+    out = FRONTIER_LOOPS[name](spark, chain_db)
     if isinstance(out, DataFrame):
         assert out.collect()
-    leaves = stepped_leaves[-1]
+    frontier = [s for s in stepped_leaves if s.loop in FRONTIER_STEPPERS]
+    assert frontier, {s.loop: list(s) for s in stepped_leaves}
+    leaves = frontier[-1]
     assert len(leaves) >= LEVELS, leaves
     windows = [leaves[i : i + CHECKPOINT_EVERY] for i in range(0, len(leaves), CHECKPOINT_EVERY)]
     growth = {b - a for w in windows for a, b in zip(w, w[1:])}
@@ -625,3 +676,49 @@ def test_shortest_paths_on_a_long_chain(spark):
     assert {(r["vid"], r["landmark"], r["distance"]) for r in d.collect()} == {
         *((v, 32, 32 - v) for v in range(33)), (99, 99, 0)
     }
+
+
+# Long shortest-path loops run to their fixed point: dijkstra_sssp, A*,
+# Bellman-Ford and Steiner's per-terminal SSSP used to stop after 30
+# supersteps, and on a 40-edge chain they lost the vertices beyond,
+# called 40 unreachable from 0 or flagged a negative cycle.
+
+
+@pytest.mark.slow
+def test_dijkstra_sssp_on_a_long_chain(spark):
+    d = A.dijkstra_sssp(_chain(spark, 40), 0)
+    assert {(r["vid"], r["distance"]) for r in d.collect()} == {(v, float(v)) for v in range(41)}
+
+
+@pytest.mark.slow
+def test_astar_on_a_long_chain(spark):
+    rows = X.astar(_chain(spark, 40), 0, 40).collect()
+    assert [(r["path"], r["weight"]) for r in rows] == [(list(range(41)), 40.0)]
+
+
+@pytest.mark.slow
+def test_bellman_ford_path_on_a_long_chain(spark):
+    rows = X3.bellman_ford_path(_chain(spark, 40), 0, 40).collect()
+    assert [(r["path"], r["weight"], r["negativeCycle"]) for r in rows] == [
+        (list(range(41)), 40.0, False)
+    ]
+
+
+@pytest.mark.slow
+def test_keyed_relax_on_a_long_chain(spark):
+    # Steiner's SSSP: both terminals of an undirected chain, one relax
+    hops = A._weighted_adj(_chain(spark, 40))
+    und = hops.unionByName(hops.select(F.col("n").alias("v"), F.col("v").alias("n"), "w"))
+    seeds = spark.createDataFrame([(0, 0), (40, 40)], "terminal long, vid long")
+    got = A.relax(und, seeds, tie="parent", keys=("terminal",)).collect()
+    assert {(r["terminal"], r["vid"], r["distance"], r["parent"]) for r in got} == {
+        *((0, v, float(v), v - 1 if v else None) for v in range(41)),
+        *((40, v, float(40 - v), v + 1 if v < 40 else None) for v in range(41)),
+    }
+
+
+@pytest.mark.slow
+def test_steiner_tree_on_a_long_chain(spark):
+    rows = X4.steiner_tree(_chain(spark, 40), [0, 40]).collect()
+    assert {(r["source"], r["target"]) for r in rows} == {(v, v + 1) for v in range(40)}
+    assert {r["totalWeight"] for r in rows} == {40.0}
